@@ -214,6 +214,19 @@ def _host_cpu_jiffies() -> dict[str, int]:
         return {"steal": 0, "busy": 0, "total": 0}
 
 
+def rerun_median(name, timings, reruns, run_once, flagged, regressions) -> None:
+    """Two more runs of ``name``: its recorded time becomes the median of
+    the three (all three kept in ``reruns``), and the regression gate is
+    re-checked on that median, so a flag stands or appears only on it."""
+    runs = [timings[name], run_once(name), run_once(name)]
+    reruns[name] = runs
+    timings[name] = statistics.median(runs)
+    flag = flagged(name, timings[name])
+    if flag is not None:
+        flag["runs"] = runs
+        regressions[name] = flag
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -332,11 +345,14 @@ def main() -> None:
     except (json.JSONDecodeError, OSError, subprocess.SubprocessError):
         prior = {}
 
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    prior_same_sf = prior.get("sf") == sf_val
+
     def flagged(n: str, t_now: float) -> dict[str, float] | None:
         # >1.5x slowdowns that also cost >0.3s absolute — sub-second
         # jitter at suite scale is noise, a 1.5x on a multi-second query
         # is rot (r2 shipped a 2.3x CC regression nobody caught in-round)
-        t_old = prior.get("queries", {}).get(n)
+        t_old = prior.get("queries", {}).get(n) if prior_same_sf else None
         if t_old and t_now > 1.5 * t_old and t_now - t_old > 0.3:
             return {"prior": t_old, "now": t_now, "ratio": round(t_now / t_old, 2)}
         return None
@@ -348,18 +364,13 @@ def main() -> None:
     # the median still clears the gate.
     regressions: dict[str, dict[str, float]] = {}
     reruns: dict[str, list[float]] = {}
-    if prior.get("sf") == (float(sf) if sf.replace(".", "").isdigit() else sf):
-        for n in names:
-            flag = flagged(n, timings[n])
-            if flag is None:
-                continue
-            runs = [timings[n], run_once(n), run_once(n)]
-            reruns[n] = runs
-            timings[n] = statistics.median(runs)
-            flag = flagged(n, timings[n])
-            if flag is not None:
-                flag["runs"] = runs
-                regressions[n] = flag
+
+    def rerun(n: str) -> None:
+        rerun_median(n, timings, reruns, run_once, flagged, regressions)
+
+    for n in names:
+        if flagged(n, timings[n]) is not None:
+            rerun(n)
 
     # Top-10 medians (r13, VERDICT r12 ask #2): the 10 slowest queries
     # define the printed one-line summary AND most of PERF's per-query
@@ -369,14 +380,14 @@ def main() -> None:
     # untouched code). Every top-10 query now gets TWO more runs and
     # records the median; the raw runs stay in rerun_medians so the
     # single-shot numbers remain committed evidence. Queries already
-    # median-ed by the regression gate are not re-run.
+    # median-ed by the regression gate are not re-run. The gate is
+    # re-checked on each median: a fast single shot whose median is slow
+    # is a regression too.
     for n, _ in sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[
         :10
     ]:
         if n not in reruns:
-            runs = [timings[n], run_once(n), run_once(n)]
-            reruns[n] = runs
-            timings[n] = statistics.median(runs)
+            rerun(n)
 
     # Cross-round drift (VERDICT r4): the per-round gate compares only
     # against HEAD, so a sub-gate slowdown each round ratchets invisibly
@@ -399,7 +410,6 @@ def main() -> None:
             history = json.loads(blob.stdout).get("rounds", [])
     except (json.JSONDecodeError, OSError, subprocess.SubprocessError):
         history = []
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     drift_vs_oldest: dict[str, dict[str, float]] = {}
     same_sf = [h for h in history if h.get("sf") == sf_val]
     if same_sf:
@@ -416,9 +426,7 @@ def main() -> None:
             t_old = oldest.get("queries", {}).get(n)
             if t_old and timings[n] > 1.5 * t_old and timings[n] - t_old > 0.3:
                 if n not in reruns:
-                    runs = [timings[n], run_once(n), run_once(n)]
-                    reruns[n] = runs
-                    timings[n] = statistics.median(runs)
+                    rerun(n)
         for n in names:
             t_old = oldest.get("queries", {}).get(n)
             t_now = timings[n]

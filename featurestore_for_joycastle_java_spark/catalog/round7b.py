@@ -2752,12 +2752,10 @@ def layout_file_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     take literal paths and oracles must stay SF-independent; the
     footer route (``parquet_file_metadata``) was verified equivalent
     once at sf0.01 during development."""
-    import os
-
     out = None
     for t in ("orders", "customer", "lineitem"):
         d = (
-            spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
+            load_table(spark, sf_dir, t)
             .select(F.col("_metadata.file_name").alias("file_name"))
             .groupBy("file_name")
             .agg(F.count(F.lit(1)).alias("n_rows"))

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from featurestore_for_joycastle_java_spark.registry import query
+from featurestore_for_joycastle_java_spark.session import thread_target
 from featurestore_for_joycastle_java_spark.sources import load_table
 
 
@@ -389,8 +390,6 @@ def sim_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every count — and the returned booleans — is identical.
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
-
     brute = (
         brute_force_topk_arrow(e, q, k=5).select("query_id", "vec_id").cache()
     )
@@ -405,7 +404,7 @@ def sim_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             return ann.join(brute, ["query_id", "vec_id"]).count()
 
         probe_ns = (2, 4, 8)
-        target = inheritable_thread_target(spark)(hits_for)
+        target = thread_target(spark, hits_for)
         with ThreadPoolExecutor(max_workers=3) as pool:
             hit_counts = list(pool.map(target, probe_ns))
         recalls = {

@@ -85,10 +85,14 @@ def _pagerank_loop(
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    # nodes participates in every iteration's left join — materialize it
-    # once instead of re-deriving the union+distinct five times
+    # nodes feeds every iteration's zero rows — materialize it once
+    # instead of re-deriving the union+distinct five times
     nodes = nodes.localCheckpoint(eager=True)
     r = nodes.select("node", F.lit(SCALE).cast("bigint").alias("r"))
+    # one zero contribution per node keeps no-in-edge nodes at the
+    # teleport floor inside the round's one groupBy; a left join of the
+    # sums back onto nodes would add a broadcast (and its job) per round
+    zeros = nodes.select("node", F.lit(0).cast("bigint").alias("c"))
     floor_term = (SCALE * (100 - damping_pct)) // 100
     for _ in range(iterations):
         contrib = ed.join(
@@ -97,15 +101,14 @@ def _pagerank_loop(
             F.col("dst").alias("node"),
             F.expr("r DIV deg").alias("c"),
         )
-        insum = contrib.groupBy("node").agg(F.sum("c").alias("insum"))
-        # left join keeps no-in-edge nodes at the teleport floor
-        r = nodes.join(insum, "node", "left").select(
+        insum = contrib.unionByName(zeros).groupBy("node").agg(
+            F.sum("c").alias("insum")
+        )
+        r = insum.select(
             "node",
             (
                 F.lit(floor_term).cast("bigint")
-                + F.expr(
-                    f"({damping_pct} * coalesce(insum, 0L)) DIV 100"
-                )
+                + F.expr(f"({damping_pct} * insum) DIV 100")
             ).alias("r"),
         )
         # truncate lineage per round (the CC-loop pattern): without this

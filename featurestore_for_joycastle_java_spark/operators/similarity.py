@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from featurestore_for_joycastle_java_spark.session import thread_target
+
 
 def as_double(col) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -94,6 +96,8 @@ def brute_force_topk_arrow(
     benched surface stays :func:`brute_force_topk`). NULL query or
     corpus vectors score null, as the fold does; NULL vector *elements*
     and ragged dims are refused loudly (the ``gram_cells`` contract)."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
     q_rows = queries.select(
         F.col(query_id_col), as_double(F.col(vec_col)).alias("__qv")
     ).collect()
@@ -107,13 +111,16 @@ def brute_force_topk_arrow(
     d = dims.pop() if dims else None
     qid_type = dict(queries.dtypes)[query_id_col]
     id_type = dict(corpus.dtypes)[id_col]
+    # the declared Arrow type of the query ids: pa.array would infer int64
+    # for any integer ids and mismatch an int/smallint output column
+    qid_arrow = to_arrow_type(queries.schema[query_id_col].dataType)
 
     def _score(batches):
         import numpy as np
         import pyarrow as pa
 
         nq = len(qids)
-        qid_arr = pa.array(qids)
+        qid_arr = pa.array(qids, type=qid_arrow)
         qmask = np.array([v is not None for v in qvecs], dtype=bool)
         if d is not None and qmask.any():
             qm = np.asarray(
@@ -1534,8 +1541,8 @@ def pq_codebooks(
     the fits are driver-latency-bound, so wider overlap keeps paying
     until every fit is in flight). Each fit keeps its own seed
     (``seed + s``) and its own input slice, so concurrency changes
-    nothing about what any fit computes. Worker threads are wrapped in
-    ``pyspark.inheritable_thread_target`` so the caller's job group /
+    nothing about what any fit computes. Worker threads are wrapped by
+    ``session.thread_target`` so the caller's job group /
     scheduler-pool local properties propagate under pinned-thread mode
     (ADVICE r12: cancellation of the k-means jobs must not escape the
     caller's job group). The unit-normalized corpus is cached ONCE
@@ -1546,7 +1553,6 @@ def pq_codebooks(
     local relation, independent of the cache)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -1571,7 +1577,7 @@ def pq_codebooks(
                 for c, ctr in enumerate(model.clusterCenters())
             ]
 
-        fit_target = inheritable_thread_target(corpus.sparkSession)(fit_one)
+        fit_target = thread_target(corpus.sparkSession, fit_one)
         with ThreadPoolExecutor(max_workers=min(m, 16)) as pool:
             rows = [
                 r for per_sub in pool.map(fit_target, range(m)) for r in per_sub

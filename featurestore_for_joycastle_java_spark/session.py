@@ -7,6 +7,7 @@ Arrow for any Python exchange) while remaining correct on ``local[*]``.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -57,3 +58,16 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def thread_target(spark: SparkSession, fn: Callable) -> Callable:
+    """``fn`` made fit to run in a pool thread against ``spark``: it carries
+    the caller's local properties and tags (job group, scheduler pool) into
+    the thread. ``inheritable_thread_target(session)`` returns a decorator
+    only under pinned-thread mode; with ``PYSPARK_PIN_THREAD=false`` it
+    returns the session itself (PySpark ties no Python thread to a JVM
+    thread, so it has nothing to carry), and ``fn`` runs as it is."""
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    return fn if wrap is spark else wrap(fn)

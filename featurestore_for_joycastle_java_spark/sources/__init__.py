@@ -10,34 +10,77 @@ reference has none, but the engine needs them — fixtures are parquet).
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from featurestore_for_joycastle_java_spark.schemas import TABLE_NAMES
 
+#: session -> {(absolute path, st_mtime_ns, st_size): inferred schema}.
+#: Weak keys: a dropped session takes its schemas with it, and a
+#: ``newSession()`` (which may carry other parquet confs) infers again. The
+#: stat fields make a file rewritten at the same path infer again.
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    (session, file). Inference launches one footer-merge job; reads that
+    pass the cached schema launch none. Two threads that miss together both
+    infer and store the same schema, so a race costs a job, never a wrong
+    schema. Callers set the nanosAsLong conf first, as :func:`load_table`
+    does."""
+    st = os.stat(path)
+    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(spark, {}).get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        with _SCHEMAS_LOCK:
+            _SCHEMAS.setdefault(spark, {})[key] = schema
+    return schema
+
+
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """``events.ts`` as a session-local µs timestamp, whatever the fixture
+    generation stored: timestamp[ns] parquet arrives as long nanos (under
+    the nanosAsLong legacy conf) → convert to µs; timestamp[us] with
+    isAdjustedToUTC=false arrives as TIMESTAMP_NTZ → cast to TIMESTAMP
+    (session tz is pinned UTC, so the instant is unchanged and matches
+    DuckDB's naive read). Schema-level fixup either way, no data shuffle."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, TimestampNTZType
+
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table. Parquet scan → column pruning and predicate
-    pushdown are free once the caller selects/filters (Catalyst pushes them
-    into the scan; verify with .explain → PushedFilters/ReadSchema).
+    """Read one fixture table. The schema is inferred once per session and
+    file (:func:`parquet_schema`); every call after that is an explicit-
+    schema read that launches no job. Each call still builds a fresh
+    relation with fresh attribute ids, so a query may load one table twice
+    and self-join it; no data is cached. Parquet scan → column pruning and
+    predicate pushdown are free once the caller selects/filters (Catalyst
+    pushes them into the scan; verify with .explain →
+    PushedFilters/ReadSchema).
 
-    ``events.ts`` normalization (fixture generations differ): timestamp[ns]
-    parquet arrives as long nanos (via the nanosAsLong legacy conf set in
-    the session factory) → convert to a µs timestamp; timestamp[us] with
-    isAdjustedToUTC=false arrives as TIMESTAMP_NTZ → cast to session-local
-    TIMESTAMP (session tz is pinned UTC, so the instant is unchanged and
-    matches DuckDB's naive read). Schema-level fixup either way, no data
-    shuffle."""
+    The nanosAsLong legacy conf is set on every call, not only in the
+    session factory: a session built elsewhere must still read
+    timestamp[ns] ``events.ts`` as long nanos, which
+    :func:`normalize_events_ts` then converts."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType, TimestampNTZType
-
-        if isinstance(df.schema["ts"].dataType, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = normalize_events_ts(df)
     return df
 
 

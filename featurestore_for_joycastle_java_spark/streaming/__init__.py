@@ -32,17 +32,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from featurestore_for_joycastle_java_spark.operators.relational import exact_sum
 
 from featurestore_for_joycastle_java_spark.schemas import EVENTS
+from featurestore_for_joycastle_java_spark.sources import (
+    normalize_events_ts,
+    parquet_schema,
+)
 
 
 #: dir-of-symlinks cache: Spark's file stream source requires a DIRECTORY,
 #: fixtures are single read-only files — bridge with a tempdir symlink.
 _STREAM_DIRS: dict[str, str] = {}
-
-#: per-path cache of the sniffed events-ts type: the footer read is a
-#: driver-side batch job, so pay it once per fixture path, not once per
-#: stream construction (fixture files are immutable within a round; a
-#: regenerated fixture lands under a fresh process anyway)
-_TS_TYPES: dict[str, object] = {}
 
 
 def _as_stream_dir(file_path: str) -> str:
@@ -64,29 +62,16 @@ def file_stream_source(
 
     The fixture's ts varies by generation — timestamp[ns] (read as long
     under nanosAsLong) or timestamp[us]/isAdjustedToUTC=false (read as
-    TIMESTAMP_NTZ). A one-off batch footer read picks the matching stream
-    schema, then ts is normalized to a session-local timestamp exactly
-    like sources.load_table does for batch."""
-    from pyspark.sql.types import LongType
-
+    TIMESTAMP_NTZ). The stream reads with the file's schema, inferred once
+    per session and file by ``sources.parquet_schema`` (the same cache
+    ``load_table`` uses), then ts is normalized to a session-local
+    timestamp exactly like ``load_table`` does for batch."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
-    if path not in _TS_TYPES:
-        _TS_TYPES[path] = spark.read.parquet(path).schema["ts"].dataType
-    ts_type = _TS_TYPES[path]
-    ts_is_long = isinstance(ts_type, LongType)
-    ts_ddl = "long" if ts_is_long else ts_type.simpleString()
-    schema = (
-        f"event_id long, ts {ts_ddl}, user_id long, event_type string, "
-        "value double, props string"
-    )
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(parquet_schema(spark, path))
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(_as_stream_dir(path))
-    if ts_is_long:
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return normalize_events_ts(reader.parquet(_as_stream_dir(path)))
 
 
 def drain_to_memory(

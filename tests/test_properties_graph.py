@@ -319,3 +319,55 @@ def test_power_iteration_matches_bigint_replay(spark, rows):
             break
         vec = [tdiv(r * 10**6, mx) for r in raw]
     assert got == {i + 1: vec[i] for i in range(d)}
+
+
+def test_pagerank_int_union_form_matches_left_join_form(spark, sf_dir):
+    """The loop sums each round's contributions together with one zero row
+    per node (union + groupBy). Pinned against the earlier form, which
+    left-joined the contribution sums back onto the node list and
+    coalesced the no-in-edge nodes to 0, on the trade graph of
+    ``graph_pagerank_int``."""
+    from pyspark.sql import functions as F
+
+    from featurestore_for_joycastle_java_spark.operators.graph import (
+        SCALE,
+        pagerank_int,
+    )
+    from featurestore_for_joycastle_java_spark.sources import load_table
+
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    eraw = (
+        o.join(li, o.o_orderkey == li.l_orderkey)
+        .select(
+            (F.col("o_custkey") * 2).alias("src"),
+            (F.col("l_suppkey") * 2 + 1).alias("dst"),
+        )
+        .distinct()
+    )
+    # plus one source-only node, so a node with no in-edges is ranked too
+    e = eraw.union(eraw.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    e = e.union(spark.createDataFrame([(-2, 1)], "src long, dst long"))
+
+    ed = e.join(e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), "src")
+    nodes = e.select(F.col("src").alias("node")).union(e.select("dst")).distinct()
+    r = nodes.select("node", F.lit(SCALE).cast("bigint").alias("r"))
+    for _ in range(5):
+        insum = (
+            ed.join(r, ed.src == r.node)
+            .select(F.col("dst").alias("node"), F.expr("r DIV deg").alias("c"))
+            .groupBy("node")
+            .agg(F.sum("c").alias("insum"))
+        )
+        r = nodes.join(insum, "node", "left").select(
+            "node",
+            (
+                F.lit((SCALE * 15) // 100).cast("bigint")
+                + F.expr("(85 * coalesce(insum, 0L)) DIV 100")
+            ).alias("r"),
+        ).localCheckpoint(eager=True)
+
+    want = sorted(map(tuple, r.collect()))
+    got = sorted(map(tuple, pagerank_int(e, iterations=5).collect()))
+    assert len(got) > 100 and got == want
+    assert dict(want)[-2] == (SCALE * 15) // 100

@@ -221,3 +221,23 @@ def test_kmeans_fit_sample_bounded_training(spark, sf_dir):
     # the lowest id within any cell can never be dropped (no smaller id)
     low = min(rows, key=lambda r: r["vec_id"])
     assert low["survivor"]
+
+
+def test_brute_force_topk_arrow_keeps_declared_query_id_type(spark, sf_dir):
+    """The Arrow kernel emits query ids in the declared column type, so
+    int and string ids run and rank exactly as the HOF form does."""
+    from featurestore_for_joycastle_java_spark.operators.similarity import (
+        brute_force_topk_arrow,
+    )
+
+    e = _corpus(spark, sf_dir)
+    for ddl, ids in (
+        ("int", F.col("vec_id").cast("int")),
+        ("string", F.concat(F.lit("q"), F.col("vec_id").cast("string"))),
+    ):
+        q = e.filter(F.col("vec_id") < 6).select(ids.alias("query_id"), "embedding")
+        got = brute_force_topk_arrow(e, q, k=3)
+        assert dict(got.dtypes)["query_id"] == ddl
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, brute_force_topk(e, q, k=3).collect())
+        )
