@@ -35,6 +35,7 @@ from featurestore_for_joycastle_java_spark.operators.graph import (
     label_propagation,
     pagerank_int,
 )
+from featurestore_for_joycastle_java_spark.operators.iterate import fixpoint
 from featurestore_for_joycastle_java_spark.operators.ranks import (
     global_row_number,
 )
@@ -112,15 +113,12 @@ def sim_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned self-equi-join on vec_id + ONE combine-friendly
     aggregate to d² = 4096 cells (corpus-size-independent). The three
     iterations then touch d² × d rows — driver-trivial but kept
-    declarative, with a 1-row broadcast max frame and a per-round
-    localCheckpoint exactly like ``operators/graph.py``'s loops. On a
+    declarative, with a 1-row broadcast max frame, run through the
+    engine's one fixpoint loop (``operators/iterate.py``). On a
     1000-executor run the Gram partials combine per-partition and the
     eigen-iteration costs nothing."""
-    # r12 opt: the full d×d Gram build runs through
-    # operators/gram.py::gram_cells (per-task NumPy int64 matmul
-    # partials, exact Python-int accumulation — identical integers to
-    # the previous posexplode self-join; guide §4.2). Measured
-    # interleaved A/B at sf0.1: 4.32 → 2.09 s for the whole query.
+    # the d×d Gram build runs through operators/gram.py::gram_cells
+    # (per-task NumPy int64 matmul partials, exact Python-int accumulation)
     from featurestore_for_joycastle_java_spark.operators.gram import (
         gram_cells,
     )
@@ -135,7 +133,8 @@ def sim_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = cells.select(F.col("i").alias("node")).distinct().select(
         "node", F.lit(1000000).cast("decimal(38,0)").alias("v")
     )
-    for _ in range(3):
+
+    def step(v: DataFrame) -> DataFrame:
         raw = (
             cells.join(v, cells.j == v.node)
             .groupBy("i")
@@ -155,20 +154,18 @@ def sim_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(1).cast("decimal(38,0)"),
             ).alias("m")
         )
-        v = (
-            raw.crossJoin(F.broadcast(m))
-            .select(
-                F.col("i").alias("node"),
-                F.when(
-                    F.col("raw") >= 0,
-                    F.expr("(raw * 1000000) DIV m"),
-                )
-                .otherwise(-F.expr("((-raw) * 1000000) DIV m"))
-                .cast("decimal(38,0)")
-                .alias("v"),
+        return raw.crossJoin(F.broadcast(m)).select(
+            F.col("i").alias("node"),
+            F.when(
+                F.col("raw") >= 0,
+                F.expr("(raw * 1000000) DIV m"),
             )
-            .localCheckpoint(eager=True)
+            .otherwise(-F.expr("((-raw) * 1000000) DIV m"))
+            .cast("decimal(38,0)")
+            .alias("v"),
         )
+
+    v, _ = fixpoint("sim_power_iteration_pc1", v, step, max_rounds=3)
     return v.select(
         F.col("node").alias("dim"), F.col("v").cast("bigint").alias("pc1_micro")
     )

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from featurestore_for_joycastle_java_spark.operators.iterate import fixpoint
 from featurestore_for_joycastle_java_spark.registry import query
 from featurestore_for_joycastle_java_spark.sources import load_table
 
@@ -442,7 +443,8 @@ def feature_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = ev.select(F.col("event_type").alias("state")).distinct()
     st = st.localCheckpoint(eager=True)
     p = st.select("state", F.lit(1000000).cast("bigint").alias("p"))
-    for _ in range(3):
+
+    def step(p: DataFrame) -> DataFrame:
         wsum = (
             cr.join(p, cr.a == p.state)
             .select(
@@ -453,19 +455,18 @@ def feature_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("t").cast("bigint").alias("raw"))
         )
         mx = wsum.agg(F.max("raw").alias("mx"))
-        p = (
+        return (
             st.join(wsum, st.state == wsum.state2, "left")
             .crossJoin(F.broadcast(mx))
             .select(
                 "state",
-                F.coalesce(
-                    F.expr("(raw * 1000000) DIV mx"), F.lit(0)
-                )
+                F.coalesce(F.expr("(raw * 1000000) DIV mx"), F.lit(0))
                 .cast("bigint")
                 .alias("p"),
             )
-            .localCheckpoint(eager=True)
         )
+
+    p, _ = fixpoint("feature_markov_stationary", p, step, max_rounds=3)
     return p.select("state", F.col("p").alias("stationary_micro"))
 
 

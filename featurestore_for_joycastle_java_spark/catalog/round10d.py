@@ -264,9 +264,8 @@ def ts_autoperiod(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: BFS depth bound shared by the engine loop and the oracle's recursive
-#: CTE (ADVICE r10: the oracle capped at 30 while the engine ran to
-#: fixpoint, so an eccentricity > 30 under a future fixture would make
-#: the two sides silently diverge — now both stop at the same depth).
+#: CTE, so an eccentricity > 30 under a future fixture truncates both
+#: sides at the same depth instead of making them silently diverge.
 _CLOSENESS_MAX_HOPS = 30
 
 
@@ -327,59 +326,25 @@ def graph_closeness_multi_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     units, where r counts reached nodes and Σd sums hop distances —
     the WF correction keeps disconnected components comparable.
 
-    Loop shape: identical discipline to ``graph_bfs_hops`` (the
-    single-source member of the family): per round one frontier→
-    neighbor join + one left-anti prune against visited, both
-    localCheckpointed; rounds = max eccentricity over the 8 roots
-    (single-digit on dense projection graphs), bounded by the same
-    ``_CLOSENESS_MAX_HOPS`` the oracle's recursive CTE uses so the two
-    sides can never silently diverge on a deeper fixture (ADVICE r10).
-    The oracle replays the same bounded walk as one recursive CTE over
+    The traversal is ``operators.graphs.bfs``, bounded by the same
+    ``_CLOSENESS_MAX_HOPS`` the oracle's recursive CTE uses, so the two
+    sides can never silently diverge on a deeper fixture. The oracle
+    replays the same bounded walk as one recursive CTE over
     (root, node, hops)."""
     from featurestore_for_joycastle_java_spark.operators.graphs import (
+        bfs,
         cosupply_edges,
+        degrees,
     )
 
     e = cosupply_edges(spark, sf_dir).localCheckpoint(eager=True)
-    # r13: session-width hash partitioning (scale-adaptive), not a
-    # hard-coded 32 — see graph_bfs_hops.
-    direct = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .repartition(F.col("src"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = direct.select(F.col("src").alias("node")).distinct()
-    nodes = nodes.localCheckpoint(eager=True)
+    nodes = degrees(e).select(F.col("x").alias("node")).localCheckpoint(eager=True)
     n_nodes = nodes.count()
-    roots = nodes.orderBy("node").limit(8).select(
-        F.col("node").alias("root")
-    )
-    visited = roots.select(
-        "root", F.col("root").alias("node"), F.lit(0).cast("bigint").alias("h")
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    hop = 0
-    while hop < _CLOSENESS_MAX_HOPS:
-        hop += 1
-        # r13: lazy checkpoint materialized by the frontier count (one
-        # job per round, not two) and a plain union over the persisted
-        # per-round RDDs — the graph_bfs_hops discipline.
-        nxt = (
-            frontier.join(direct, frontier.node == direct.src)
-            .select("root", F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("root", "node"), ["root", "node"], "left_anti")
-            .select("root", "node", F.lit(hop).cast("bigint").alias("h"))
-            .localCheckpoint(eager=False)
-        )
-        if nxt.count() == 0:
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt
+    roots = nodes.orderBy("node").limit(8).select(F.col("node").alias("root"))
+    visited = bfs(e, roots, _CLOSENESS_MAX_HOPS)
     agg = visited.groupBy("root").agg(
         (F.count(F.lit(1)) - 1).cast("bigint").alias("n_reached"),
-        F.sum("h").cast("bigint").alias("sum_dist"),
+        F.sum("hops").cast("bigint").alias("sum_dist"),
     )
     return agg.select(
         "root",

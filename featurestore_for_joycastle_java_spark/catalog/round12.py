@@ -61,7 +61,7 @@ SELECT (SELECT COUNT(*) FROM e) AS n_vectors,
 """,
     bench=False,  # recall-verification harness (hierarchical kmeans fit
     # + quadratic ground truth); the operational scaling evidence is
-    # SCALETEST's semdedup two-level curves (tools/scale_curve_r11.py)
+    # semdedup two-level curves in SCALETEST_r11.json
 )
 def dedup_semdedup_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup through the two-level centroid hierarchy (Abbas et al.,

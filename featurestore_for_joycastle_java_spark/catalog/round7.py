@@ -2783,9 +2783,9 @@ def diag_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: BFS depth bound shared by the engine loop and the oracle's recursive
-#: CTE (the graph_closeness_multi_bfs discipline, r11): 30 ≫ the
-#: measured single-digit co-supply diameter, and a deeper future
-#: fixture truncates BOTH sides at the same depth instead of diverging.
+#: CTE: 30 ≫ the measured single-digit co-supply diameter, and a deeper
+#: future fixture truncates BOTH sides at the same depth instead of
+#: diverging.
 _BFS_MAX_HOPS = 30
 
 
@@ -2825,55 +2825,21 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangles, common-neighbors, CC): distances from the minimum-key
     supplier to every reachable node by frontier expansion.
 
-    Loop shape (the Pregel/BSP pattern, same discipline as the CC
-    operator): per round ONE join frontier→neighbors + ONE left-anti
-    prune against the visited set, both localCheckpointed so lineage
-    stays flat; the only driver-side value per round is the 1-row
-    frontier count; rounds = eccentricity of the source (single-digit
-    here — dense projection graphs have tiny diameters). At 100 TB the
-    edge list is hash-partitioned on src once and every round's join
-    reuses that partitioning. The oracle replays the fixpoint as a
-    depth-capped recursive CTE.
+    The traversal is ``operators.graphs.bfs`` with the one root; the
+    oracle replays the fixpoint as a depth-capped recursive CTE.
     """
     from featurestore_for_joycastle_java_spark.operators.graphs import (
+        bfs,
         cosupply_edges,
     )
 
     e = cosupply_edges(spark, sf_dir).localCheckpoint(eager=True)
-    # r13: hash-partition at the session shuffle width (scale-adaptive),
-    # not a hard-coded 32 — the width the loop's joins then reuse.
-    direct = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .repartition(F.col("src"))
-        .localCheckpoint(eager=True)
+    root = e.agg(F.min("u").alias("root"))
+    return (
+        bfs(e, root, _BFS_MAX_HOPS)
+        .select("node", F.col("hops").cast("int"))
+        .orderBy("node")
     )
-    src = e.agg(F.min("u")).collect()[0][0]
-    visited = spark.createDataFrame([(src, 0)], "node long, hops int")
-    visited = visited.localCheckpoint(eager=True)
-    frontier = visited
-    hop = 0
-    while hop < _BFS_MAX_HOPS:
-        hop += 1
-        # r13 (guide §2.4): the frontier count IS the materializing
-        # action of a LAZY checkpoint (the CC-loop discipline) — one job
-        # per round instead of eager-checkpoint + count; and the visited
-        # set stays a plain union of already-persisted per-round RDDs
-        # (depth = eccentricity, single-digit here) instead of paying a
-        # third per-round copy job.
-        nxt = (
-            frontier.join(direct, frontier.node == direct.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .select("node", F.lit(hop).cast("int").alias("hops"))
-            .localCheckpoint(eager=False)
-        )
-        if nxt.count() == 0:
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    return visited.orderBy("node")
 
 
 # --- r7-window head (already driver-verified r7) registers last so the

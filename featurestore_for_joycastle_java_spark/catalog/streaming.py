@@ -6,7 +6,6 @@ DuckDB. Batch/stream equivalence IS the check."""
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -14,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from featurestore_for_joycastle_java_spark import streaming as ST
 from featurestore_for_joycastle_java_spark.operators.relational import exact_sum
 from featurestore_for_joycastle_java_spark.registry import query
+from featurestore_for_joycastle_java_spark.session import narrow_shuffle_width
 
 
 #: Per-trigger progress of the most recent drains, appended by ``_run``
@@ -22,6 +22,9 @@ from featurestore_for_joycastle_java_spark.registry import query
 #: finalization batch, planning) instead of a bare wall-clock delta
 #: (VERDICT r4 "what's wrong" #1). Callers clear it between queries.
 DRAIN_PROGRESS: list[dict] = []
+
+#: upper bound on the shuffle width (state-store instances) of a drain
+DRAIN_WIDTH = 4
 
 
 def _run(spark: SparkSession, stream_df: DataFrame, mode: str) -> DataFrame:
@@ -32,24 +35,16 @@ def _run(spark: SparkSession, stream_df: DataFrame, mode: str) -> DataFrame:
     own Python worker), and unlike batch shuffles AQE cannot coalesce them
     because the partitioning is pinned by the state store. Draining the
     small fixture across the session's 32 partitions spends 4x longer on
-    store/worker setup than on data, so streaming drains run at a narrower
-    width (default 4, env-tunable; r5 measurement on stream_stream_join at
-    sf0.1, warm: 32 state instances at width 8 = 2.7 s vs 16 at width 4 =
-    2.0 s — per-batch state-store commit is the floor, ~45 ms/instance
-    × instances × 2 batches, data cost is a minority). On a real cluster
-    size this to state-volume / executor-memory, not to the batch shuffle
-    width.
+    store/worker setup than on data, so streaming drains run at a width of
+    at most ``DRAIN_WIDTH`` (measured on stream_stream_join at sf0.1, warm:
+    32 state instances at width 8 = 2.7 s vs 16 at width 4 = 2.0 s —
+    per-batch state-store commit is the floor, ~45 ms/instance × instances
+    × 2 batches, data cost is a minority). On a real cluster size this to
+    state-volume / executor-memory, not to the batch shuffle width.
     """
     name = "st_" + uuid.uuid4().hex[:12]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4"),
-    )
-    try:
+    with narrow_shuffle_width(spark, DRAIN_WIDTH):
         q = ST.drain_to_memory(stream_df, name, output_mode=mode)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         import json as _json
 

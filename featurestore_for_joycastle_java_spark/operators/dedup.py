@@ -17,6 +17,10 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from featurestore_for_joycastle_java_spark.operators.iterate import (
+    fixpoint,
+    materialize,
+)
 from featurestore_for_joycastle_java_spark.operators.text import fingerprint, tokens
 
 
@@ -661,82 +665,50 @@ def connected_components(
     the per-round work is fully distributed (this is GraphFrames' CC
     shape without the dependency).
 
-    ``checkpoint_dir``: when set, per-round materialization uses RELIABLE
-    checkpoints (``sparkContext.setCheckpointDir`` + ``df.checkpoint``)
-    instead of ``localCheckpoint`` — on a real cluster a localCheckpoint
-    lives in executor block storage and an executor loss mid-loop kills
-    the lineage-truncated frame; reliable checkpoints survive it at the
-    cost of a distributed-FS write per round. Local mode keeps the
-    (faster) default.
+    ``checkpoint_dir``: when set, the edge list and every round are
+    materialized with RELIABLE checkpoints instead of ``localCheckpoint``
+    (see ``operators.iterate``): a local checkpoint dies with its
+    executor, a reliable one survives it at the cost of a
+    distributed-FS write per round. Local mode keeps the (faster)
+    default.
 
     Raises ``RuntimeError`` if the label propagation has not converged
     after ``max_iter`` rounds of TWO hops each (possible only on a
     path-graph of length > 2·max_iter — near-dup graphs have tiny
     diameter): unconverged labels would silently split components.
 
-    Driver-action budget (r3 — r2's loop ran TWO blocking actions per
-    single-hop round and regressed the bench 2.3×): each round folds TWO
-    propagation hops into one materialization, and the convergence count
-    IS the materializing action (lazy checkpoint + full-scan count of
-    changed labels — one job computes every partition, persists it, and
-    returns the count). Per-round wall time is logged at INFO on
-    ``featurestore_for_joycastle_java_spark.operators.dedup`` so a future
-    regression is attributable to a specific round, not the whole query."""
+    Each round folds two propagation hops into one materialization, and
+    the round's change count is the action that materializes it."""
     import logging
-    import time
-
-    log = logging.getLogger(__name__)
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def ckpt(df: DataFrame) -> DataFrame:
-            # reliable checkpoints have no lazy variant worth the extra
-            # read; eager-write then count is still one FS materialization
-            return df.checkpoint(eager=True)
-
-    else:
-
-        def ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False)
 
     half = edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     # sym must honor checkpoint_dir: every round re-reads it, so a
     # locally-checkpointed sym would void the executor-loss guarantee the
-    # reliable per-round checkpoints provide. EAGER in both modes — round
-    # 1 consumes sym from three stages (comp-distinct + both hops), and a
-    # lazy checkpoint would let concurrent stages each recompute the
-    # (expensive) candidate-pair plan behind it.
+    # reliable per-round checkpoints provide.
     # hash-partition the edge list on src BEFORE checkpointing it: the
     # checkpoint captures the partitioning, so every round's
     # sym⋈labels(src==node) join reuses it instead of re-exchanging the
     # (biggest) edge side each round — labels come out of the previous
     # round's groupBy(node) already hash-partitioned on the same key.
     # One up-front shuffle of |E| buys diameter-many avoided ones.
-    sym_plan = half.union(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).repartition(F.col("src"))
-    sym = (
-        sym_plan.checkpoint(eager=True)
-        if checkpoint_dir is not None
-        else sym_plan.localCheckpoint(eager=False)
+    sym = materialize(
+        half.union(
+            half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).repartition(F.col("src")),
+        eager=False,
+        checkpoint_dir=checkpoint_dir,
     )
-    # The count() IS the eager materialization (it computes and persists
-    # every partition of the lazy local checkpoint — one action, not
-    # checkpoint-then-scan), and the edge count it returns makes
-    # cross-round bench deltas attributable (fixture density vs code —
-    # r3's CC "regression" was confounded by a denser regenerated
-    # fixture). Reliable-checkpoint mode keeps the eager FS write; its
-    # count is a cheap scan of the checkpointed files.
-    # The count IS the eager materialization, and the edge count it logs
-    # makes cross-round bench deltas attributable (fixture density vs
-    # code). A small-graph fast path that pinned AQE off + 8 shuffle
-    # partitions for the loop was measured here and dropped: round times
-    # are dominated by per-round plan compilation, not task count, so it
-    # bought nothing and mutated session-global config.
+    # The count materializes sym before round 1, which reads it from
+    # three stages (comp-distinct and both hops) that would otherwise
+    # each recompute the candidate-pair plan behind it. The edge count it
+    # logs makes cross-run bench deltas attributable (fixture density vs
+    # code).
     n_edges = sym.count() // 2
-    log.info("connected_components edges=%d (undirected)", n_edges)
-    # initial labels need NO checkpoint of their own: depth-1 lineage off
-    # the checkpointed edges (r2 spent a blocking action materializing it)
+    logging.getLogger(__name__).info(
+        "connected_components edges=%d (undirected)", n_edges
+    )
+    # initial labels need no checkpoint of their own: depth-1 lineage off
+    # the checkpointed edges
     comp = (
         sym.select(F.col("src").alias("node"))
         .distinct()
@@ -780,36 +752,28 @@ def connected_components(
             *carried,
         )
 
-    converged = False
-    for rnd in range(max_iter):
-        t0 = time.monotonic()
-        # hop → shortcut → hop per materialized round, snapshotting only
-        # the label BEFORE the final hop (__mid). One aggregation action
-        # materializes the checkpoint AND returns the final hop's change
-        # count — and a zero-change FULL HOP is itself the fixpoint proof
+    def round_(labels: DataFrame) -> DataFrame:
+        # hop → shortcut → hop, snapshotting the label before the final
+        # hop (__mid): a zero-change FULL HOP is itself the fixpoint proof
         # (min-label over every neighborhood moved nothing), so dense
-        # graphs that settle mid-round never pay a separate confirmation
-        # round. The shortcut between the hops compresses label chains
-        # (reach ~2^r, not 2r), cutting the round count — and each round
-        # saved is a saved checkpoint + count action, the per-round fixed
-        # cost that dominates on small graphs. The pre-round snapshot was
-        # measured and dropped: carrying it through both hops cost more
-        # than the logging it bought.
-        h1 = shortcut(hop(comp, []), [])
-        h2 = hop(h1.withColumn("__mid", F.col("comp")), ["__mid"])
-        new_full = ckpt(h2)
-        chg2 = F.sum((F.col("comp") != F.col("__mid")).cast("int"))
-        row = new_full.agg(
-            F.coalesce(chg2, F.lit(0)).alias("chg2"),  # empty graph → 0
-        ).first()
-        comp = new_full.select("node", "comp")
-        log.info(
-            "connected_components round %d: hop2_changed=%d %.3fs",
-            rnd, row["chg2"], time.monotonic() - t0,
-        )
-        if row["chg2"] == 0:
-            converged = True
-            break
+        # graphs that settle mid-round pay no separate confirmation round.
+        # The shortcut compresses label chains (reach ~2^r, not 2r).
+        h1 = shortcut(hop(labels.select("node", "comp"), []), [])
+        return hop(h1.withColumn("__mid", F.col("comp")), ["__mid"])
+
+    def hop2_changed(labels: DataFrame) -> int:
+        chg = F.sum((F.col("comp") != F.col("__mid")).cast("int"))
+        # coalesce: an empty graph sums to null, and has converged
+        return labels.agg(F.coalesce(chg, F.lit(0))).first()[0]
+
+    comp, converged = fixpoint(
+        "connected_components",
+        comp,
+        round_,
+        max_rounds=max_iter,
+        changed=hop2_changed,
+        checkpoint_dir=checkpoint_dir,
+    )
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds; "

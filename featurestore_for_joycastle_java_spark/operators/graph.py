@@ -20,23 +20,50 @@ decimal-exact aggregation queries make.
 Scale shape: one edges frame (cached, hash-partitioned on src), per
 iteration one join (ranks onto edges by src — co-partitioned after the
 first shuffle) + one groupBy dst with map-side combine. k iterations =
-O(k·|E|) total work, the textbook distributed PageRank schedule. Deep
-lineage is bounded by small k (callers with k ≳ 10 should checkpoint,
-as the CC loop does).
+O(k·|E|) total work, the textbook distributed PageRank schedule. Every
+loop here runs through ``operators.iterate.fixpoint``, which cuts the
+lineage each round.
+
+The iteration frames are one row per node or edge, tiny next to any fact
+table, so the loops run at a shuffle width of at most ``LOOP_WIDTH``: the
+session's fact-sized width only adds task scheduling (measured at sf0.1 on
+a 4-core host, session width 32: PageRank 5.02 → 4.51 s and LPA
+9.65 → 7.57 s at width 8).
+Every round materializes inside the scope, so nothing planned under the
+narrow width escapes it. On a real cluster, size this to node count and
+executor memory.
 """
 
 from __future__ import annotations
 
-import os
+import functools
 
 from pyspark.sql import DataFrame, functions as F
+
+from featurestore_for_joycastle_java_spark.operators.iterate import fixpoint
+from featurestore_for_joycastle_java_spark.session import narrow_shuffle_width
 
 __all__ = ["pagerank_int", "hits_int", "label_propagation"]
 
 #: micro-unit scale for integer ranks
 SCALE = 1_000_000
+#: upper bound on the shuffle width of the iteration frames
+LOOP_WIDTH = 8
 
 
+def _narrowed(loop):
+    """``loop(edges, **options)`` run at a shuffle width of at most
+    ``LOOP_WIDTH``."""
+
+    @functools.wraps(loop)
+    def run(edges: DataFrame, **options) -> DataFrame:
+        with narrow_shuffle_width(edges.sparkSession, LOOP_WIDTH):
+            return loop(edges, **options)
+
+    return run
+
+
+@_narrowed
 def pagerank_int(
     edges: DataFrame,
     *,
@@ -54,29 +81,6 @@ def pagerank_int(
     floor. ``damping_pct`` is an integer percentage so the damping step
     stays in integer arithmetic.
     """
-    spark = edges.sparkSession
-    prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-    # Iteration frames are one row per node/edge — tiny relative to any
-    # fact table — so the session's fact-sized shuffle width only adds
-    # task-scheduling overhead here (measured at sf0.1: 32 → 8 halves
-    # the loop's wall clock). Safe to scope to this function: every
-    # iteration materializes INSIDE it (eager localCheckpoint below), so
-    # nothing planned under the narrow width escapes. On a real cluster
-    # size this to node-count / executor-memory, as the streaming drains
-    # do for state stores.
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_GRAPH_SHUFFLE", "8"),
-    )
-    try:
-        return _pagerank_loop(edges, src, dst, iterations, damping_pct)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_width)
-
-
-def _pagerank_loop(
-    edges: DataFrame, src: str, dst: str, iterations: int, damping_pct: int
-) -> DataFrame:
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ed = e.join(deg, "src").cache()
@@ -94,33 +98,28 @@ def _pagerank_loop(
     # sums back onto nodes would add a broadcast (and its job) per round
     zeros = nodes.select("node", F.lit(0).cast("bigint").alias("c"))
     floor_term = (SCALE * (100 - damping_pct)) // 100
-    for _ in range(iterations):
-        contrib = ed.join(
-            r, ed.src == r.node
-        ).select(
+
+    def step(r: DataFrame) -> DataFrame:
+        contrib = ed.join(r, ed.src == r.node).select(
             F.col("dst").alias("node"),
             F.expr("r DIV deg").alias("c"),
         )
         insum = contrib.unionByName(zeros).groupBy("node").agg(
             F.sum("c").alias("insum")
         )
-        r = insum.select(
+        return insum.select(
             "node",
             (
                 F.lit(floor_term).cast("bigint")
                 + F.expr(f"({damping_pct} * insum) DIV 100")
             ).alias("r"),
         )
-        # truncate lineage per round (the CC-loop pattern): without this
-        # each action re-analyzes/re-compiles the whole k-deep join
-        # stack, and planning — not data — dominates (measured at sf0.1
-        # for k=5: 10.2 s no-checkpoint → 6.8 s per-round checkpoint →
-        # ~4 s with width 8); the ranks frame is one small row per node,
-        # so the materialization is cheap at any scale
-        r = r.localCheckpoint(eager=True)
+
+    r, _ = fixpoint("pagerank_int", r, step, max_rounds=iterations)
     return r.select("node", F.col("r").alias("rank_micro"))
 
 
+@_narrowed
 def hits_int(
     edges: DataFrame,
     *,
@@ -150,72 +149,56 @@ def hits_int(
     max degree below ~9e6 — past that, widen to DECIMAL(38,0) before
     the multiply (the oracle's HUGEINT already is).
 
-    Scale shape mirrors pagerank_int: edges cached and joined by src or
-    dst per half-step (co-partitioned after the first shuffle), map-side
-    combined sums, a 1-row broadcast max frame per half-step, and a
-    per-round localCheckpoint to keep lineage flat."""
-    spark = edges.sparkSession
-    prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_GRAPH_SHUFFLE", "8"),
-    )
-    try:
-        return _hits_loop(edges, src, dst, iterations)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_width)
-
-
-def _hits_loop(
-    edges: DataFrame, src: str, dst: str, iterations: int
-) -> DataFrame:
+    Scale shape: the edges are cached and joined by src or dst per
+    half-step, with map-side combined sums; unlike pagerank_int's, the
+    cached edges are not partitioned by the join key, so every half-step
+    re-shuffles them. Each half-step is one round of the fixpoint
+    loop, and its one action brings the raw sums' max back to the driver:
+    that action persists the raw sums, and the next half-step divides by
+    the max as a literal. So every half-step runs inside this call, and
+    no broadcast timeout has to cover a chain of them."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).cache()
-    h = (
+    # the initial hubs as raw sums with max S: normalized, all are S
+    h0 = (
         e.select(F.col("src").alias("node"))
         .distinct()
-        .select("node", F.lit(SCALE).cast("bigint").alias("h"))
+        .select("node", F.lit(SCALE).cast("bigint").alias("raw"))
         .localCheckpoint(eager=True)
     )
-    a = None
-    # r13 (guide §2.4/§2.6): checkpoint the RAW sums lazily and let the
-    # max-broadcast build be the materializing action. The previous shape
-    # checkpointed the NORMALIZED frame eagerly, which executed each
-    # half-step's join+agg TWICE per round (once under the broadcast
-    # build of the max, once under the eager checkpoint — the two
-    # actions share no exchange) and paid two driver jobs per half-step.
-    # Now the broadcast's job computes and persists araw/hraw; the
-    # normalized frame is a shallow crossJoin over the persisted RDD and
-    # needs no checkpoint of its own (lineage stays one hop). Same exact
-    # integer arithmetic, same per-round localCheckpoint lineage
-    # truncation; measured interleaved at sf0.1: 4.68 -> 3.84 s median.
-    for _ in range(iterations):
-        araw = (
-            e.join(h, e.src == h.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("h").cast("bigint").alias("raw"))
-            .localCheckpoint(eager=False)
+    peaks = [SCALE]
+    scores: list[DataFrame] = []  # normalized hubs, authorities, hubs, ...
+
+    def normalize(raw: DataFrame) -> DataFrame:
+        return raw.select(
+            "node", F.expr(f"(raw * {SCALE}) DIV {peaks[-1]}").alias("s")
         )
-        amax = araw.agg(F.max("raw").alias("m"))
-        a = araw.crossJoin(F.broadcast(amax)).select(
-            "node", F.expr(f"(raw * {SCALE}) DIV m").alias("a")
+
+    def half_step(raw: DataFrame) -> DataFrame:
+        scores.append(normalize(raw))
+        # from hubs, sum over out-edges onto dst; from authorities, onto src
+        key, out = ("src", "dst") if len(scores) % 2 else ("dst", "src")
+        s = scores[-1]
+        return (
+            e.join(s, e[key] == s.node)
+            .groupBy(F.col(out).alias("node"))
+            .agg(F.sum("s").cast("bigint").alias("raw"))
         )
-        hraw = (
-            e.join(a, e.dst == a.node)
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("a").cast("bigint").alias("raw"))
-            .localCheckpoint(eager=False)
-        )
-        hmax = hraw.agg(F.max("raw").alias("m"))
-        h = hraw.crossJoin(F.broadcast(hmax)).select(
-            "node", F.expr(f"(raw * {SCALE}) DIV m").alias("h")
-        )
-    hubs = h.select("node", F.lit("hub").alias("side"), F.col("h").alias("score_micro"))
-    auths = a.select(
-        "node", F.lit("authority").alias("side"), F.col("a").alias("score_micro")
+
+    def peak(raw: DataFrame) -> int:
+        # 0 only for an empty (or all-zero) vector, a fixed point
+        peaks.append(raw.agg(F.max("raw")).first()[0] or 0)
+        return peaks[-1]
+
+    hraw, _ = fixpoint(
+        "hits_int", h0, half_step, max_rounds=2 * iterations, changed=peak
     )
+    score = F.col("s").alias("score_micro")
+    hubs = normalize(hraw).select("node", F.lit("hub").alias("side"), score)
+    auths = scores[-1].select("node", F.lit("authority").alias("side"), score)
     return hubs.union(auths)
 
 
+@_narrowed
 def label_propagation(
     edges: DataFrame,
     *,
@@ -246,22 +229,7 @@ def label_propagation(
     aggregate with map-side combine, the argmax-with-tiebreak is a
     second aggregate over it — ``max(struct(count, -label))`` — NOT a
     window, so no per-node sort materializes. k rounds = O(k·|E|), with
-    a per-round localCheckpoint keeping lineage flat."""
-    spark = edges.sparkSession
-    prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_GRAPH_SHUFFLE", "8"),
-    )
-    try:
-        return _lpa_loop(edges, src, dst, iterations)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_width)
-
-
-def _lpa_loop(
-    edges: DataFrame, src: str, dst: str, iterations: int
-) -> DataFrame:
+    a per-round checkpoint keeping lineage flat."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).cache()
     lbl = (
         e.select(F.col("src").alias("node"))
@@ -270,7 +238,8 @@ def _lpa_loop(
         .select("node", F.col("node").cast("bigint").alias("lbl"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(iterations):
+
+    def step(lbl: DataFrame) -> DataFrame:
         freq = (
             e.join(lbl, e.src == lbl.node)
             .groupBy(F.col("dst").alias("n2"), F.col("lbl").alias("l2"))
@@ -279,18 +248,16 @@ def _lpa_loop(
         # argmax by (count DESC, label ASC): labels are non-negative, so
         # max(struct(c, -l2)) picks the highest count, then the smallest
         # label — one aggregate, no window sort
+        best = F.max(F.struct(F.col("c"), (-F.col("l2")).alias("nl")))
         upd = (
             freq.groupBy(F.col("n2").alias("node"))
-            .agg(F.max(F.struct(F.col("c"), (-F.col("l2")).alias("nl"))).alias("m"))
-            .select("node", (-F.col("m.nl")).cast("bigint").alias("lbl"))
+            .agg(best.alias("m"))
+            .select("node", (-F.col("m.nl")).cast("bigint").alias("__new"))
         )
         # nodes with no in-edges keep their previous label
-        lbl = (
-            lbl.join(upd.withColumnRenamed("lbl", "__new"), "node", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("__new"), F.col("lbl")).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
+        return lbl.join(upd, "node", "left").select(
+            "node", F.coalesce(F.col("__new"), F.col("lbl")).alias("lbl")
         )
+
+    lbl, _ = fixpoint("label_propagation", lbl, step, max_rounds=iterations)
     return lbl.select("node", F.col("lbl").alias("label"))

@@ -11,11 +11,14 @@ node-sized and broadcast back onto edges.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from featurestore_for_joycastle_java_spark.operators.iterate import fixpoint
 from featurestore_for_joycastle_java_spark.sources import load_table
 
-__all__ = ["cosupply_edges", "degrees", "triangle_counts", "kcore_edges"]
+__all__ = ["cosupply_edges", "degrees", "triangle_counts", "kcore_edges", "bfs"]
 
 
 def cosupply_edges(
@@ -151,50 +154,90 @@ def kcore_edges(
     columns: ``u``, ``v`` (undirected, u < v, deduped). An empty result
     (graph fully peeled) is a valid converged state.
 
-    Algorithm: iterative peeling with the CC loop discipline — each
-    round computes degrees over surviving edges, drops nodes below k,
-    and restricts edges with two BROADCAST semi-joins (the alive set
-    is node-sized); the surviving edge frame is re-materialized per
-    round via ``localCheckpoint`` (lineage would otherwise grow by two
-    joins per round) and the per-round kill COUNT is the only value
-    that ever reaches the driver. O(peel-depth) rounds, each one
-    degree-aggregate + edge filter over O(|E|) — at 100 TB the same
-    shape as the CC loop, with reliable checkpoints available through
-    the same knob documented there.
+    Algorithm: iterative peeling through ``operators.iterate.fixpoint``.
+    Each round computes degrees over the surviving edges and marks each
+    edge ``keep`` iff both endpoints have degree ≥ k; the alive node set
+    is node-sized and joins back as one broadcast, used for both
+    endpoints. The round's action counts the edges not kept, and the
+    peel has converged when that count is 0: a node below k has at least
+    one edge, so a round that drops no edge kills no node. O(peel-depth)
+    rounds, each one degree aggregate + edge pass over O(|E|).
 
-    ``max_rounds``: optional loud-failure bound (the CC-loop
-    discipline): callers whose ORACLE unrolls the peel to a fixed
-    stage count pass that count, so a fixture deep enough to out-peel
-    the oracle raises here instead of silently diverging from it."""
-    e = edges.localCheckpoint(eager=True)
-    rounds = 0
-    while True:
-        # r13 (guide §2.4): one degree computation per round, not three.
-        # The kill-count action materializes the lazily-checkpointed
-        # degree frame; the two alive-side broadcast builds then scan the
-        # persisted (node-sized) RDD instead of each re-running the
-        # degree aggregate. The old tail's extra e.isEmpty() action is
-        # gone too — a fully-peeled frame terminates through the next
-        # round's n_kill == 0 over empty degrees, identical result.
-        deg = degrees(e).localCheckpoint(eager=False)
-        alive = deg.filter(F.col("d") >= k).select("x")
-        n_kill = deg.filter(F.col("d") < k).count()
-        if n_kill == 0:
-            break
-        rounds += 1
-        if max_rounds is not None and rounds > max_rounds:
-            raise RuntimeError(
-                f"k-core peel still shrinking after {max_rounds} rounds; "
-                "raise the bound (and the oracle's unrolled stage count)"
-            )
-        e = (
-            e.join(
-                F.broadcast(alive.withColumnRenamed("x", "u")), "u", "semi"
-            )
-            .join(
-                F.broadcast(alive.withColumnRenamed("x", "v")), "v", "semi"
-            )
-            .select("u", "v")
-            .localCheckpoint(eager=True)
+    ``max_rounds``: optional loud-failure bound on the peeling rounds:
+    callers whose ORACLE unrolls the peel to a fixed stage count pass
+    that count, so a fixture deep enough to out-peel the oracle raises
+    here instead of silently diverging from it."""
+    start = edges.localCheckpoint(eager=True).withColumn("keep", F.lit(True))
+
+    def peel(marked: DataFrame) -> DataFrame:
+        e = marked.filter("keep").select("u", "v")
+        alive = F.broadcast(degrees(e).filter(F.col("d") >= k).select("x"))
+        a, b = alive.alias("a"), alive.alias("b")
+        keep = F.col("a.x").isNotNull() & F.col("b.x").isNotNull()
+        return (
+            e.join(a, e.u == F.col("a.x"), "left")
+            .join(b, e.v == F.col("b.x"), "left")
+            .select("u", "v", keep.alias("keep"))
         )
-    return e
+
+    # the last round drops nothing and only confirms the fixpoint
+    marked, converged = fixpoint(
+        "kcore_edges",
+        start,
+        peel,
+        max_rounds=None if max_rounds is None else max_rounds + 1,
+        changed=lambda m: m.filter(~F.col("keep")).count(),
+    )
+    if not converged:
+        raise RuntimeError(
+            f"k-core peel still shrinking after {max_rounds} rounds; "
+            "raise the bound (and the oracle's unrolled stage count)"
+        )
+    return marked.select("u", "v")
+
+
+def bfs(edges: DataFrame, roots: DataFrame, max_hops: int) -> DataFrame:
+    """Multi-source BFS hop counts over an undirected (u, v) edge list →
+    (root, node, hops), one row per node reachable from each ``roots.root``
+    within ``max_hops`` hops, the root itself at 0. Single-source BFS is
+    the one-root case.
+
+    The visited set is keyed (root, node), so every frontier expands in
+    the same per-round join: one traversal for all roots (Pregel with a
+    composite vertex state). Per round, one frontier→neighbor join and one
+    anti-join against the visited set; the frontier count is the round's
+    action. Rounds = the largest root eccentricity, capped at
+    ``max_hops`` so an oracle that replays the walk as a depth-capped
+    recursive CTE stops at the same depth. The edge list is
+    hash-partitioned on src once, at the session width, and every round's
+    join reuses that partitioning."""
+    direct = (
+        edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
+        .unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
+        .repartition(F.col("src"))
+        .localCheckpoint(eager=True)
+    )
+    seed = roots.select(
+        "root", F.col("root").alias("node"), F.lit(0).cast("bigint").alias("hops")
+    ).localCheckpoint(eager=True)
+    # the materialized frontiers so far; their union is the visited set,
+    # and round r reaches the nodes at r hops
+    reached: list[DataFrame] = []
+
+    def expand(frontier: DataFrame) -> DataFrame:
+        reached.append(frontier)
+        visited = reduce(DataFrame.unionByName, reached)
+        return (
+            frontier.join(direct, frontier.node == direct.src)
+            .select("root", F.col("dst").alias("node"))
+            .distinct()
+            .join(visited.select("root", "node"), ["root", "node"], "left_anti")
+            .select("root", "node", F.lit(len(reached)).cast("bigint").alias("hops"))
+        )
+
+    last, converged = fixpoint(
+        "bfs", seed, expand, max_rounds=max_hops, changed=lambda f: f.count()
+    )
+    if not converged:
+        reached.append(last)
+    return reduce(DataFrame.unionByName, reached)

@@ -6,8 +6,11 @@ Arrow for any Python exchange) while remaining correct on ``local[*]``.
 
 from __future__ import annotations
 
+import contextlib
 import os
-from typing import Callable
+import threading
+import weakref
+from typing import Callable, Iterator
 
 from pyspark.sql import SparkSession
 
@@ -71,3 +74,34 @@ def thread_target(spark: SparkSession, fn: Callable) -> Callable:
 
     wrap = inheritable_thread_target(spark)
     return fn if wrap is spark else wrap(fn)
+
+
+_SHUFFLE_WIDTH = "spark.sql.shuffle.partitions"
+#: per session: [open narrow_shuffle_width scopes, the width to restore]
+_NARROWED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_NARROWED_LOCK = threading.Lock()
+
+
+@contextlib.contextmanager
+def narrow_shuffle_width(spark: SparkSession, n: int) -> Iterator[None]:
+    """Run the body with the session's shuffle width at most ``n``.
+
+    For work whose shuffled frames are tiny next to the fact tables the
+    session width is sized for (iteration frames, streaming state
+    stores): there a wide shuffle only adds per-task scheduling. The
+    width is session-global, so overlapping scopes from several threads
+    share one count: each narrows to ``min(current width, n)``, and the
+    last one out restores the width the first one found."""
+    with _NARROWED_LOCK:
+        width = spark.conf.get(_SHUFFLE_WIDTH)
+        scope = _NARROWED.setdefault(spark, [0, width])
+        scope[0] += 1
+        spark.conf.set(_SHUFFLE_WIDTH, str(min(int(width), n)))
+    try:
+        yield
+    finally:
+        with _NARROWED_LOCK:
+            scope[0] -= 1
+            if scope[0] == 0:
+                del _NARROWED[spark]
+                spark.conf.set(_SHUFFLE_WIDTH, scope[1])

@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
+import time
 
 import pytest
 
@@ -36,3 +37,30 @@ def spark():
 def sf_dir():
     # override with SPARK_GRAFT_ORACLE_SF_DIR to run parity at sf0.01
     return SF_ORACLE
+
+
+def _jobs_in(spark, group: str, build) -> int:
+    """Number of Spark jobs ``build()`` launches under job group ``group``.
+    The status store fills from the listener bus asynchronously, so a
+    marker job in its own group is awaited after it: the bus is FIFO, so
+    once the marker shows, every earlier job has shown too."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setJobGroup(group + "-marker", "marker")
+    spark.range(1).count()
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + "-marker"):
+        assert time.monotonic() < deadline, "marker job never reached the status store"
+        time.sleep(0.05)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def jobs_in():
+    """``jobs_in(spark, group, build)``: the Spark jobs ``build()`` launches."""
+    return _jobs_in

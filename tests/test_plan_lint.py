@@ -28,8 +28,8 @@ from featurestore_for_joycastle_java_spark.registry import QUERIES
 #: dedicated tests instead.
 _EAGER_CONSTRUCTION_PREFIXES = ("stream_",)
 _EAGER_CONSTRUCTION = {
-    "graph_pagerank_int",  # eager localCheckpoint loop (tests/test_round5c.py)
-    "graph_kcore",  # eager peeling loop (tests/test_round5g.py)
+    "graph_pagerank_int",  # eager fixpoint loop (tests/test_round5c.py)
+    "graph_kcore",  # fixpoint peeling loop (tests/test_round5g.py)
     "dedup_cc_clusters",  # checkpointed CC loop (tests/test_dedup.py)
     "dedup_pipeline_lsh",  # composes the CC loop
     "dedup_pipeline_exact",  # composes the CC loop
@@ -40,7 +40,7 @@ _EAGER_CONSTRUCTION = {
     # eager by design: validates sketch quantiles against the exact CDF,
     # which requires the estimates driver-side before the checks
     "agg_kll_quantile_merge",
-    "graph_bfs_hops",  # eager BFS frontier loop (tests/test_round7.py)  # composes the CC loop
+    "graph_bfs_hops",  # operators.graphs.bfs loop (tests/test_round7.py)
     # eager partitioned scratch write at construction (once per process,
     # atexit-cleaned); its scan shape is plan-gated in tests/test_round5d.py
     "layout_partition_prune",

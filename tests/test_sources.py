@@ -6,7 +6,6 @@ from __future__ import annotations
 import ast
 import os
 import shutil
-import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
@@ -20,27 +19,6 @@ PKG = os.path.join(
 )
 
 
-def _jobs_in(spark, group: str, build) -> int:
-    """Number of Spark jobs ``build()`` launches under job group ``group``.
-    The status store fills from the listener bus asynchronously, so a
-    marker job in its own group is awaited after it: the bus is FIFO, so
-    once the marker shows, every earlier job has shown too."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        build()
-    finally:
-        sc.setJobGroup(group + "-marker", "marker")
-    spark.range(1).count()
-    tracker = sc.statusTracker()
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(group + "-marker"):
-        assert time.monotonic() < deadline, "marker job never reached the status store"
-        time.sleep(0.05)
-    sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(tracker.getJobIdsForGroup(group))
-
-
 def _fixture_copy(tmp_path, sf_dir, name="lineitem"):
     """A private copy of one fixture table, so no other test has inferred it."""
     d = tmp_path / "sf"
@@ -49,19 +27,19 @@ def _fixture_copy(tmp_path, sf_dir, name="lineitem"):
     return str(d)
 
 
-def test_second_load_launches_no_job(spark, sf_dir, tmp_path):
+def test_second_load_launches_no_job(spark, sf_dir, tmp_path, jobs_in):
     d = _fixture_copy(tmp_path, sf_dir)
-    first = _jobs_in(spark, "sources-first", lambda: load_table(spark, d, "lineitem").schema)
-    second = _jobs_in(spark, "sources-second", lambda: load_table(spark, d, "lineitem").schema)
+    first = jobs_in(spark, "sources-first", lambda: load_table(spark, d, "lineitem").schema)
+    second = jobs_in(spark, "sources-second", lambda: load_table(spark, d, "lineitem").schema)
     assert first >= 1, "the first load of a file infers its schema"
     assert second == 0, f"a second load must reuse the schema, launched {second} job(s)"
 
 
-def test_new_session_infers_again(spark, sf_dir, tmp_path):
+def test_new_session_infers_again(spark, sf_dir, tmp_path, jobs_in):
     d = _fixture_copy(tmp_path, sf_dir)
     load_table(spark, d, "lineitem")
     other = spark.newSession()
-    jobs = _jobs_in(other, "sources-new-session", lambda: load_table(other, d, "lineitem").schema)
+    jobs = jobs_in(other, "sources-new-session", lambda: load_table(other, d, "lineitem").schema)
     assert jobs >= 1, "a new session (own parquet confs) must infer for itself"
 
 
