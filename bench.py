@@ -25,172 +25,6 @@ registry.load_catalog()
 
 from featurestore_for_joycastle_java_spark.registry import BENCH_SKIP, QUERIES
 
-#: Measured drift attributions (r7): queries whose cross-round drift gate
-#: fired and was run to ground. Attached to their drift_vs_oldest entries
-#: so the flag carries its explanation instead of re-firing unexplained.
-DRIFT_NOTES = {
-    # Probe (r7, sf0.1, local[32]): build 0.13 s; warm steady-state exec
-    # 0.85-0.95 s across 9 runs == the oldest 0.855 s baseline; a trivial
-    # 1-row Arrow UDTF costs 2.2 s cold vs 0.3 s warm, so the delta is
-    # Python-worker spawn + Arrow-UDTF pipeline init, which in-suite
-    # depends on whether an earlier Python query left a reusable worker.
-    # Conclusive same-code spread: the r6 driver runs recorded 0.413 s
-    # (bench_queries.json) and 1.431 s (bench_history.json) back to back.
-    # Worker-startup scheduling noise, not query rot; fixture unchanged
-    # (documents 500 rows, same schema hash, output 4 667 rows).
-    # Probe (r7 close, sf0.1, local[32]): isolated warm steady-state
-    # feature_rfm 1.98-2.33 s across 5 runs == the oldest 2.29 s
-    # baseline; funnel_conversion 0.49-0.52 s, BETTER than the oldest
-    # 0.64 s. Both flags fired at an identical 1.52x in the same suite
-    # run whose total grew ~16% uniformly (223.5 -> 260.2 s, 238
-    # queries) — suite-level scheduler contention, not query rot.
-    "feature_rfm": "suite contention; isolated warm 1.98-2.33s =="
-    " oldest 2.29s (see comment)",
-    "funnel_conversion": "suite contention; isolated warm 0.49-0.52s"
-    " beats oldest 0.64s (see comment)",
-    "udtf_token_hist": "arrow-udtf worker startup noise; warm exec"
-    " 0.85-0.95s == oldest baseline (see comment)",
-    # Probe (r7b close, sf0.1, local[32]): isolated warm steady-state
-    # 0.94-1.10 s over 5 runs = ratio 1.36 vs the 0.737 s oldest row —
-    # UNDER the 1.5x gate in isolation; the flag only fires with
-    # in-suite scheduler contention stacked on top (same uniform-
-    # slowdown signature as the feature_rfm/funnel_conversion notes).
-    "sql_frontend_ledger": "suite contention; isolated warm 0.94-1.10s"
-    " = 1.36x vs oldest, under the gate (see comment)",
-    # Probe (r9 open, sf0.1, local[32]): isolated warm steady-state
-    # 0.785-0.857 s (first warm run 1.264 s) == the oldest 0.861 s
-    # baseline; the r8 in-suite 1.137/1.163 s rows are the same
-    # uniform-contention signature as feature_rfm — sub-second query at
-    # the suite noise floor, not rot.
-    "eval_chi2_independence": "suite contention; isolated warm"
-    " 0.785-0.857s == oldest 0.861s (see comment)",
-    # Probe (r9 close, sf0.1, local[32]): the 347s suite run flagged six
-    # more sub-3s queries at 1.52-2.55x — the same uniform-contention
-    # signature (suite total itself sat 16% over the 268-296s same-code
-    # band). Isolated warm steady-state, 5 runs each after a warmup:
-    "er_golden_record": "isolated warm 2.14-2.21s sits inside the"
-    " same-code in-suite band 1.45-2.31s (6 rounds); the 1.451s oldest"
-    " row is the band floor, not a baseline the query left",
-    "feature_gini_concentration": "suite contention; isolated warm"
-    " 0.69-0.79s BEATS oldest 0.978s",
-    "feature_lag_matrix": "suite contention; isolated warm 0.52-0.58s"
-    " beats oldest 0.704s",
-    "feature_scd2_lookup": "suite contention; isolated warm 0.50-0.68s"
-    " == oldest 0.559s",
-    "multimodal_decode_features": "arrow-python worker startup noise"
-    " (the udtf_token_hist signature); isolated warm 0.35-0.39s vs"
-    " oldest 0.307s = 1.2x, far under the in-suite 2.55x flag",
-    "profile_events_columns": "suite contention; isolated warm"
-    " 0.40-0.48s beats oldest 0.731s",
-    "join_bloom_prune": "suite contention; isolated warm 1.03-1.43s"
-    " vs oldest 1.326s — under the gate; in-suite same-code band"
-    " 1.33-1.96s across 6 rounds",
-    # Probe (r11 open, sf0.1, local[32], 5.5% steal during the probe —
-    # see WARM_PROBES): isolated warm 0.858-1.363 s, median 1.07 s =
-    # 1.21x the 0.887 s oldest row, under the gate; the 1.6x swing
-    # between identical runs is the r10-documented steal signature on
-    # a sub-1.5s query (plan unchanged across rounds). VERDICT r10
-    # ask #5 closed: noise, not rot.
-    "agg_ratio_to_parent": "steal-era noise; isolated warm"
-    " 0.858-1.363s median 1.07s = 1.21x oldest 0.887s, under the gate"
-    " (r11 probe, see comment)",
-    "stream_quota_enforcement": "suite contention; isolated warm median"
-    " 6.58s (r12 probe, AFTER the 4-field state schema) sits under the"
-    " r11 suite row 7.78s — the added reached-boolean costs nothing"
-    " (see WARM_PROBES)",
-}
-
-#: Isolated-warm attributions for the suite's top cost movers (VERDICT
-#: r8 ask #4) — measured at r9 open, sf0.1, local[32], 5 warm runs after
-#: a warmup. Every isolated range sits UNDER its oldest in-suite row, so
-#: the r8 suite-total movement is scheduler contention, not query rot.
-#: Emitted verbatim into the bench artifact so the numbers are committed
-#: evidence, not transcript anecdotes.
-WARM_PROBES = {
-    "eval_chi2_independence": {
-        "isolated_warm_s": [1.264, 1.016, 0.817, 0.857, 0.785],
-        "oldest_in_suite_s": 0.861,
-        "verdict": "== oldest; in-suite 1.16s was contention",
-        "r10_steal_era_s": [3.203, 2.234, 1.691, 0.817, 0.669],
-        "r10_verdict": "converges to 0.67-0.82s == the r9 band once the"
-        " host stops stealing; see host.steal_pct_of_busy",
-    },
-    "graph_pagerank_int": {
-        "isolated_warm_s": [3.274, 3.172, 3.049, 3.063, 3.032],
-        "oldest_in_suite_s": 5.689,
-        "verdict": "0.54x oldest; the 5.1->7.1s suite rows are"
-        " contention on the 5-iteration job, not regression",
-        "r10_steal_era_s": [7.437, 5.09, 4.882, 4.961, 4.065],
-        "r10_verdict": "1.3-2.5x the r9 isolated band on an IDLE box —"
-        " the hypervisor-steal signature, not code (code unchanged)",
-    },
-    "dedup_cc_clusters": {
-        "isolated_warm_s": [4.265, 4.409, 4.332, 4.29, 4.261],
-        "oldest_in_suite_s": 5.35,
-        "verdict": "0.81x oldest; suite rows 5.4-9.8s are contention",
-        "r10_steal_era_s": [10.061, 12.868, 7.916, 9.455, 7.782],
-        "r10_verdict": "1.8-3.0x the r9 isolated band, 60% swing between"
-        " identical runs — steal, not code (code unchanged)",
-    },
-    "dedup_incremental_batch": {
-        "isolated_warm_s": [2.38, 2.112, 2.162, 1.888, 1.979],
-        "oldest_in_suite_s": 5.339,
-        "verdict": "0.40x oldest (warm runs exclude the once-per-process"
-        " index persist the first suite call pays); no regression",
-        "r10_steal_era_s": [3.293, 4.529, 2.643, 7.206, 5.767],
-        "r10_verdict": "2.7x swing between identical runs — steal, not"
-        " code (code unchanged)",
-    },
-    # r11 probes (VERDICT r10 asks #4/#5): measured at r11 open, sf0.1,
-    # local[32], 5 warm runs after a warmup; steal during the probe
-    # window 5.5% of busy (the r10 steal era continues).
-    "feature_capped_running_sum": {
-        "isolated_warm_s": [3.648, 3.056, 2.556, 2.729, 3.449],
-        "oldest_in_suite_s": 3.73,
-        "verdict": "r11 probe: isolated warm 2.56-3.65s sits AT/UNDER"
-        " the r9 suite row 3.73s — the r10 5.05s row was steal/"
-        "contention, not code (plan unchanged; the 1.4x swing between"
-        " identical runs at 5.5% steal is the documented signature)."
-        " The per-batch Arrow sort suspect is acquitted: the floor run"
-        " (2.56s) includes the identical sort.",
-    },
-    "agg_ratio_to_parent": {
-        "isolated_warm_s": [1.363, 1.069, 1.104, 1.032, 0.858],
-        "oldest_in_suite_s": 0.887,
-        "verdict": "r11 probe: median 1.07s = 1.21x oldest, under the"
-        " 1.5x gate in isolation; rerun medians swinging 0.85-2.03s on"
-        " an unchanged plan are steal-era noise — DRIFT_NOTES now"
-        " carries the attribution so drift_vs_oldest stops re-flagging",
-    },
-    # r12 probe: the quota limiter's state schema gained a dedicated
-    # `reached` boolean this round (ADVICE r11 — every long is a legal
-    # timestamp, no in-domain sentinel is collision-free), so the
-    # schema change was probed the same day it shipped rather than
-    # waiting for a drift flag.
-    "stream_quota_enforcement": {
-        "isolated_warm_s": [7.021, 6.58, 8.069, 6.397, 6.075],
-        "oldest_in_suite_s": 7.78,
-        "verdict": "r12 probe, taken AFTER the 4-field state schema"
-        " landed: isolated warm median 6.58s sits UNDER the r11 suite"
-        " row 7.78s — the extra boolean state field costs nothing"
-        " measurable (3 real micro-batch commits x state instances"
-        " remain the honest fixed floor); the 9.73s r12 suite row is"
-        " in-suite contention (suite total moved 327->349s uniformly"
-        " at 2.75% steal)",
-    },
-}
-
-#: r10 host finding, committed with the probes above: this round's box
-#: reports cumulative /proc/stat STEAL on par with USER time (the
-#: hypervisor runs someone else while this VM wants CPU). Measured
-#: effects vs r9 on UNCHANGED code: uniform ~1.4x median in-suite
-#: inflation across all 289 queries, and 2-3x swings between identical
-#: back-to-back isolated runs on an otherwise idle box. The `host`
-#: block in the artifact (canary_jvm_sum_s + steal_pct_of_busy, added
-#: this round) makes the condition measurable per run; cross-round
-#: suite-total comparisons should be read against it.
-
-
 def _host_cpu_jiffies() -> dict[str, int]:
     """Aggregate jiffies from /proc/stat's first line — notably STEAL
     (time the hypervisor ran someone else while this VM wanted CPU).
@@ -437,8 +271,6 @@ def main() -> None:
                     "now": t_now,
                     "ratio": round(t_now / t_old, 2),
                 }
-                if n in DRIFT_NOTES:
-                    drift_vs_oldest[n]["attribution"] = DRIFT_NOTES[n]
     label = os.environ.get("SPARK_GRAFT_BENCH_LABEL") or time.strftime(
         "%Y-%m-%d"
     )
@@ -508,7 +340,6 @@ def main() -> None:
         "rerun_medians": reruns,
         "stream_metrics": stream_metrics,
         "fixture": fixture,
-        "isolated_warm_probes": WARM_PROBES,
         "host": host,
     }
     with open(out_path, "w") as fh:
@@ -528,28 +359,7 @@ def main() -> None:
                 "n_queries": len(names),
                 "n_skipped_probed": len(skipped_probes),
                 "n_regressions": len(regressions),
-                # UNEXPLAINED drift only: an entry whose DRIFT_NOTES
-                # attribution records a run-to-ground probe verdict
-                # (steal/contention/startup noise, with the isolated
-                # numbers) is explained — the gate exists to surface
-                # moves nobody has looked at, not to re-flag the same
-                # noise every round (VERDICT r10 ask #5). The full
-                # drift dict, attributed entries included, stays in
-                # bench_queries.json::drift_vs_oldest.
-                "n_drift_vs_oldest": len(
-                    [
-                        n
-                        for n, v in drift_vs_oldest.items()
-                        if "attribution" not in v
-                    ]
-                ),
-                "n_drift_attributed": len(
-                    [
-                        n
-                        for n, v in drift_vs_oldest.items()
-                        if "attribution" in v
-                    ]
-                ),
+                "n_drift_vs_oldest": len(drift_vs_oldest),
                 "host": host,
                 "full": "bench_queries.json",
             }

@@ -1,15 +1,19 @@
-"""Feature-store composite queries (SURVEY.md §7.2 M3): point-in-time
-joins, sessionization, daily feature backfill."""
+"""Point-in-time (as-of) join queries (SURVEY.md §7.2 M3): backward and
+forward as-of lookups, tolerance-bounded staleness and the hot-key
+bucketed variant."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from featurestore_for_joycastle_java_spark.catalog.features import (
+    _DAY_US,
+    _events_us,
+)
 from featurestore_for_joycastle_java_spark.operators.asof import (
     asof_join,
-    sessionize,
+    asof_join_bucketed,
 )
-from featurestore_for_joycastle_java_spark.operators.relational import exact_sum
 from featurestore_for_joycastle_java_spark.registry import query
 from featurestore_for_joycastle_java_spark.sources import load_table
 
@@ -96,188 +100,176 @@ def asof_forward_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "sessionize_users",
+    "asof_nearest_error_click",
+    # Neither engine has a native NEAREST as-of: the oracle composes
+    # DuckDB's backward + forward ASOF joins and picks the closer side
+    # (backward wins exact ties) — the same decision rule the Spark
+    # operator applies per row after its dual-window fill.
+    oracle="""
+WITH er AS (
+    SELECT event_id, user_id, epoch_us(ts) AS t
+    FROM events WHERE event_type = 'error'),
+cl AS (
+    SELECT event_id AS click_event_id, user_id, epoch_us(ts) AS t
+    FROM events WHERE event_type = 'click'
+    QUALIFY ROW_NUMBER() OVER (PARTITION BY user_id, epoch_us(ts)
+                               ORDER BY event_id) = 1),
+b AS (
+    SELECT er.event_id, er.user_id, er.t,
+           c.click_event_id AS b_id, c.t AS b_t
+    FROM er ASOF LEFT JOIN cl c
+      ON er.user_id = c.user_id AND er.t >= c.t),
+f AS (
+    SELECT er.event_id, c.click_event_id AS f_id, c.t AS f_t
+    FROM er ASOF LEFT JOIN cl c
+      ON er.user_id = c.user_id AND er.t <= c.t)
+SELECT b.event_id, b.user_id,
+       CASE WHEN b.b_t IS NOT NULL
+                 AND (f.f_t IS NULL OR b.t - b.b_t <= f.f_t - b.t)
+            THEN b.b_id ELSE f.f_id END AS nearest_click_id,
+       CASE WHEN b.b_t IS NOT NULL
+                 AND (f.f_t IS NULL OR b.t - b.b_t <= f.f_t - b.t)
+            THEN b.b_t ELSE f.f_t END AS t_us_matched
+FROM b JOIN f USING (event_id)
+""",
+)
+def asof_nearest_error_click(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Nearest-in-time as-of join: for every error event, the user's
+    temporally closest click in EITHER direction (the diagnostic-context
+    lookup — 'what was the user doing around the failure'). Implemented
+    as ONE shuffle: tagged union windowed ascending and descending over
+    the same user partitioning, then per-row distance arithmetic; see
+    ``operators.asof.asof_join_nearest``."""
+    from featurestore_for_joycastle_java_spark.operators.asof import (
+        asof_join_nearest,
+    )
+
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "t_us", F.unix_micros(F.col("ts"))
+    )
+    errors = ev.filter(F.col("event_type") == "error").select(
+        "event_id", "user_id", "t_us"
+    )
+    # as-of results are UNDEFINED on (key, ts) right-side ties (both
+    # engines pick arbitrarily — the operators module doc requires a
+    # deduplicated right side); keep the min-event_id click per
+    # (user, µs). Dedup via lag over the SAME user_id partitioning the
+    # as-of windows use — ordering (t_us, event_id) makes the first row
+    # of each instant the min event_id, and the shared partitioning
+    # means Catalyst reuses one exchange for dedup + both fills (the
+    # plan gate pins exactly one shuffle).
+    w_user = Window.partitionBy("user_id").orderBy("t_us", "event_id")
+    clicks = (
+        ev.filter(F.col("event_type") == "click")
+        .withColumn("__prev_t", F.lag("t_us").over(w_user))
+        .filter(F.col("__prev_t").isNull() | (F.col("__prev_t") != F.col("t_us")))
+        .select(F.col("event_id").alias("nearest_click_id"), "user_id", "t_us")
+    )
+    out = asof_join_nearest(
+        errors,
+        clicks,
+        on=["user_id"],
+        left_ts="t_us",
+        right_ts="t_us",
+        right_cols=["nearest_click_id"],
+    )
+    return out.select("event_id", "user_id", "nearest_click_id", "t_us_matched")
+
+
+@query(
+    "asof_bucketed_backward",
     oracle="""
 WITH e AS (
-    SELECT user_id, event_id,
-           CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) AS epoch_s
+    SELECT user_id, event_id, event_type, value, epoch_us(ts) AS t
     FROM events),
-flagged AS (
-    SELECT user_id, event_id, epoch_s,
-           CASE WHEN epoch_s - LAG(epoch_s) OVER w > 1800 THEN 1 ELSE 0 END
-               AS is_new
-    FROM e
-    WINDOW w AS (PARTITION BY user_id ORDER BY epoch_s)),
-sessions AS (
-    SELECT user_id, event_id, epoch_s,
-           SUM(is_new) OVER (PARTITION BY user_id ORDER BY epoch_s
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-    FROM flagged)
-SELECT user_id,
-       CAST(session_id AS BIGINT) AS session_id,
-       COUNT(*) AS n_events,
-       CAST(MAX(epoch_s) - MIN(epoch_s) AS BIGINT) AS duration_s
-FROM sessions
-GROUP BY user_id, session_id
+p AS (
+    SELECT user_id, t, MAX_BY(value, event_id) AS purchase_value
+    FROM e WHERE event_type = 'purchase' GROUP BY 1, 2),
+v AS (SELECT event_id, user_id, t FROM e WHERE event_type = 'view')
+SELECT v.event_id, v.user_id, p.purchase_value
+FROM v ASOF LEFT JOIN p ON v.user_id = p.user_id AND v.t >= p.t
 """,
 )
-def sessionize_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-min gap) + per-session rollup —
-    lag + running-sum windows, then one agg; all integer arithmetic."""
-    ev = load_table(spark, sf_dir, "events")
-    sessions = sessionize(ev, ["user_id"], "ts", gap_seconds=1800)
-    epoch = F.unix_timestamp("ts")
-    return (
-        sessions.withColumn("epoch_s", epoch)
-        .groupBy("user_id", "session_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.max("epoch_s") - F.min("epoch_s")).alias("duration_s"),
-        )
+def asof_bucketed_backward(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Backward as-of through the SKEW-MITIGATED path (VERDICT r4 item
+    #6): for every view, the user's latest prior purchase value, with
+    the heavy window partitioned on (user_id, day-bucket) instead of
+    user_id — ``operators.asof.asof_join_bucketed``. Result-identical
+    to the plain as-of (the oracle is a plain DuckDB ASOF join); the
+    skewed-fixture equivalence + plan test lives in
+    tests/test_features.py / test_plans.py. The right side is
+    deduplicated per (user, instant) with ``max_by`` so the as-of
+    winner is defined in both engines."""
+    e = _events_us(spark, sf_dir)
+    p = (
+        e.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id", "t")
+        .agg(F.max_by("value", "event_id").alias("purchase_value"))
     )
+    v = e.filter(F.col("event_type") == "view").select(
+        "event_id", "user_id", "t"
+    )
+    out = asof_join_bucketed(
+        v,
+        p,
+        on=["user_id"],
+        left_ts="t",
+        right_ts="t",
+        right_cols=["purchase_value"],
+        bucket_width=86_400_000_000,  # 1 day in µs
+    )
+    return out.select("event_id", "user_id", "purchase_value")
 
 
 @query(
-    "feature_daily_user",
-    oracle="""
-SELECT user_id,
-       strftime(DATE_TRUNC('day', ts), '%Y-%m-%d') AS day,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(23,6))) AS DOUBLE) AS spend,
-       COUNT(DISTINCT event_type) AS n_event_types
-FROM events
-GROUP BY user_id, DATE_TRUNC('day', ts)
-""",
-)
-def feature_daily_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily per-user feature backfill: the partition-parallel recompute
-    shape — group by (entity, day); in production lands via
-    write.partitionBy(day) so any day range can be recomputed
-    independently and readers prune on day."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            "user_id",
-            F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            exact_sum(F.col("value")).alias("spend"),
-            F.countDistinct("event_type").alias("n_event_types"),
-        )
-    )
-
-
-@query(
-    "feature_gap_fill",
-    oracle="""
-WITH bounds AS (
-    SELECT MIN(CAST(ts AS DATE)) AS d0, MAX(CAST(ts AS DATE)) AS d1 FROM events),
-users AS (SELECT DISTINCT user_id FROM events),
-spine AS (
-    SELECT user_id,
-           CAST(UNNEST(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
-    FROM users, bounds),
-daily AS (
-    SELECT user_id, CAST(ts AS DATE) AS day,
-           CAST(SUM(CAST(value AS DECIMAL(23,6))) AS DOUBLE) AS spend
-    FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-SELECT s.user_id, strftime(s.day, '%Y-%m-%d') AS day,
-       COALESCE(d.spend, 0) AS spend,
-       COALESCE(LAST_VALUE(d.spend IGNORE NULLS) OVER (
-           PARTITION BY s.user_id ORDER BY s.day
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0) AS ffill_spend
-FROM spine s LEFT JOIN daily d USING (user_id, day)
-""",
-)
-def feature_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dense daily feature matrix: per-user date spine (sequence+explode
-    over the global range) left-joined to daily purchase spend, gaps
-    forward-filled with last(ignorenulls) — the training-data export
-    shape. The spine is generated, never materialized as input; the
-    window shuffles once on user_id."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    day = F.to_date("ts")
-    bounds = ev.agg(F.min(day).alias("d0"), F.max(day).alias("d1"))
-    users = ev.select("user_id").distinct()
-    spine = users.crossJoin(F.broadcast(bounds)).select(
-        "user_id",
-        F.explode(F.expr("sequence(d0, d1, interval 1 day)")).alias("day"),
-    )
-    daily = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", day.alias("day"))
-        .agg(
-            exact_sum(F.col("value")).alias("spend")
-        )
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        spine.join(daily, ["user_id", "day"], "left")
-        .select(
-            "user_id",
-            F.date_format("day", "yyyy-MM-dd").alias("day"),
-            F.coalesce("spend", F.lit(0.0)).alias("spend"),
-            F.coalesce(
-                F.last("spend", ignorenulls=True).over(w), F.lit(0.0)
-            ).alias("ffill_spend"),
-        )
-    )
-
-
-@query(
-    "feature_rollup_multires",
-    oracle="""
+    "asof_tolerance_backward",
+    # DuckDB has no ASOF tolerance either — the oracle post-filters the
+    # unbounded ASOF match with the same inclusive age bound, nulling
+    # payload and matched ts together (the operator's atomicity rule).
+    oracle=f"""
 WITH e AS (
-    SELECT event_type, value,
-           DATE_TRUNC('hour', ts)  AS h,
-           DATE_TRUNC('day', ts)   AS d,
-           DATE_TRUNC('month', ts) AS m
-    FROM events)
-SELECT CASE WHEN GROUPING(h) = 0 THEN 'hour'
-            WHEN GROUPING(d) = 0 THEN 'day'
-            ELSE 'month' END AS resolution,
-       strftime(COALESCE(h, d, m), '%Y-%m-%d %H:%M:%S') AS bucket,
-       event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(23,6))) AS DOUBLE) AS sum_value
-FROM e
-GROUP BY GROUPING SETS ((h, event_type), (d, event_type), (m, event_type))
+    SELECT user_id, event_id, event_type, value, epoch_us(ts) AS t
+    FROM events),
+p AS (
+    SELECT user_id, t, MAX_BY(value, event_id) AS recent_purchase_value
+    FROM e WHERE event_type = 'purchase' GROUP BY 1, 2),
+v AS (SELECT event_id, user_id, t FROM e WHERE event_type = 'view')
+SELECT v.event_id, v.user_id,
+       CASE WHEN v.t - p.t <= {2 * _DAY_US}
+            THEN p.recent_purchase_value END AS recent_purchase_value,
+       CASE WHEN v.t - p.t <= {2 * _DAY_US}
+            THEN p.t END AS purchase_t_us
+FROM v ASOF LEFT JOIN p ON v.user_id = p.user_id AND v.t >= p.t
 """,
 )
-def feature_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hypertable-style multi-resolution rollup: hour/day/month continuous
-    aggregates of the event stream in ONE grouping-sets pass — one scan,
-    one shuffle, partial aggregation shared across resolutions (vs three
-    separate jobs re-reading the fact table). GROUPING() disambiguates the
-    levels; the bucket column carries whichever truncation is live.
-
-    At 100 TB this is the precomputed-rollup pattern: land the output
-    partitioned by (resolution, month(bucket)) and dashboards prune to one
-    resolution's partitions."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("v_events_rollup")
-    return spark.sql(
-        """
-        WITH e AS (
-            SELECT event_type, value,
-                   DATE_TRUNC('hour', ts)  AS h,
-                   DATE_TRUNC('day', ts)   AS d,
-                   DATE_TRUNC('month', ts) AS m
-            FROM v_events_rollup)
-        SELECT CASE WHEN GROUPING(h) = 0 THEN 'hour'
-                    WHEN GROUPING(d) = 0 THEN 'day'
-                    ELSE 'month' END AS resolution,
-               DATE_FORMAT(COALESCE(h, d, m), 'yyyy-MM-dd HH:mm:ss') AS bucket,
-               event_type,
-               COUNT(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(23,6))) AS DOUBLE) AS sum_value
-        FROM e
-        GROUP BY GROUPING SETS ((h, event_type), (d, event_type), (m, event_type))
-        """
+def asof_tolerance_backward(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bounded-staleness point-in-time read: for every view, the user's
+    latest prior purchase value — but only if it is at most 2 days old
+    (``asof_join(tolerance=...)``); staler matches are nulled whole.
+    The freshness-SLA contract of a feature-serving read: a model must
+    not consume a feature that stopped being true."""
+    e = _events_us(spark, sf_dir)
+    p = (
+        e.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id", "t")
+        .agg(F.max_by("value", "event_id").alias("recent_purchase_value"))
+    )
+    v = e.filter(F.col("event_type") == "view").select(
+        "event_id", "user_id", "t"
+    )
+    out = asof_join(
+        v,
+        p,
+        on=["user_id"],
+        left_ts="t",
+        right_ts="t",
+        right_cols=["recent_purchase_value"],
+        direction="backward",
+        tolerance=2 * _DAY_US,
+    )
+    return out.select(
+        "event_id",
+        "user_id",
+        "recent_purchase_value",
+        F.col("t_matched").alias("purchase_t_us"),
     )

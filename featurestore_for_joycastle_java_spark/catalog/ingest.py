@@ -1,5 +1,7 @@
-"""Reference-pipeline queries (SURVEY.md §2.1 ops 3-8, 12-13) over the
-fixture ``events`` table (the game_events topic's stand-in, FIXTURES.md)."""
+"""Reference-pipeline queries (SURVEY.md §2.1) over the fixture ``events``
+table (the game_events topic's stand-in, FIXTURES.md): parse, extract,
+completeness filter, projection and demux by event type, plus the Python
+data-source read path."""
 
 from __future__ import annotations
 
@@ -9,9 +11,12 @@ from featurestore_for_joycastle_java_spark.operators.ingest import (
     FIXTURE_EVENT_FIELDS,
     fixture_ingest,
 )
-from featurestore_for_joycastle_java_spark.operators.relational import exact_sum
+from featurestore_for_joycastle_java_spark.operators.relational import (
+    exact_sum,
+)
 from featurestore_for_joycastle_java_spark.registry import query
 from featurestore_for_joycastle_java_spark.sources import load_table
+
 
 # Shared SQL fragment: the fixture pipeline (conditional regex extraction +
 # completeness filter) as the oracle sees it.
@@ -99,3 +104,86 @@ def ingest_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     valid = events.na.drop(subset=FIXTURE_EVENT_FIELDS)
     return valid.agg(F.count(F.lit(1)).alias("n_valid"))
+
+
+@query(
+    "pysource_synthetic_agg",
+    # The source's generation rule is pure integer arithmetic on the row
+    # id (see sources/pydatasource.py::SYNTH_SQL) — the oracle REGENERATES
+    # the whole input in SQL and aggregates it, so the check covers the
+    # connector end to end: partition planning, per-partition generation,
+    # schema, and the aggregation on top.
+    oracle="""
+WITH src AS (
+SELECT i AS event_id,
+       h % 150 AS user_id,
+       (['click', 'error', 'purchase', 'signup', 'view'])
+           [CAST((h // 256) % 5 AS INT) + 1] AS event_type,
+       ((h // 65536) % 10000) / 100.0 AS value
+FROM (SELECT i, (i * 2654435761) % 4294967296 AS h
+      FROM range(20000) t(i))
+)
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
+       CAST(SUM(CAST(value AS DECIMAL(23,6))) AS DOUBLE) AS sum_value
+FROM src GROUP BY 1
+""",
+)
+def pysource_synthetic_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Custom connector door — Spark 4's Python Data Source API: a
+    partition-parallel batch source (``synthetic_events``, 8 independent
+    id-range partitions) read through the normal
+    ``spark.read.format(...)`` path and aggregated. The source's rows
+    derive from Knuth multiplicative hashing of the row id, so the
+    DuckDB oracle regenerates the identical input from ``range(n)`` and
+    the match verifies the CONNECTOR (planning, generation, schema), not
+    just the aggregation. ``sf_dir`` is unused — the source IS the data."""
+    from featurestore_for_joycastle_java_spark.operators.relational import exact_sum
+    from featurestore_for_joycastle_java_spark.sources.pydatasource import (
+        register_synthetic_source,
+    )
+
+    register_synthetic_source(spark)
+    src = (
+        spark.read.format("synthetic_events")
+        .option("rows", 20000)
+        .option("partitions", 8)
+        .load()
+    )
+    return src.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.countDistinct("user_id").alias("n_users"),
+        exact_sum(F.col("value")).alias("sum_value"),
+    )
+
+
+@query(
+    "ingest_variant_props",
+    oracle="""
+SELECT event_id,
+       TRY_CAST(json_extract_string(props, '$.k') AS INT) AS k_int,
+       CASE WHEN TRY_CAST(json_extract_string(props, '$.k') AS INT)
+                 IS NULL THEN 0 ELSE 1 END AS has_k
+FROM events
+""",
+)
+def ingest_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi-structured ingest through Spark 4's VARIANT type:
+    `parse_json` once, then typed `variant_get` path extraction — the
+    open-schema alternative to `from_json`-with-declared-schema
+    (`ingest_json_props`): fields can appear/vanish per row without a
+    schema migration, and the binary variant encoding scans faster than
+    re-parsing JSON text per access. DuckDB mirrors with its JSON
+    extraction; the null-marker column pins the missing-field
+    contract."""
+    ev = load_table(spark, sf_dir, "events")
+    v = ev.select(
+        "event_id", F.parse_json(F.col("props")).alias("v")
+    )
+    k = F.variant_get(F.col("v"), "$.k", "int")
+    return v.select(
+        "event_id",
+        k.alias("k_int"),
+        F.when(k.isNull(), 0).otherwise(1).alias("has_k"),
+    )

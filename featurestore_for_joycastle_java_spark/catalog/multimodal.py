@@ -1,4 +1,4 @@
-"""Multimodal-column queries (north-star §2.3): binary blob stats
+"""Multimodal-column queries (SURVEY.md §2.3): binary blob stats
 (oracle-checked) and the stubbed decode pipeline (rows-only — the decode
 stand-in is Python-side by design)."""
 

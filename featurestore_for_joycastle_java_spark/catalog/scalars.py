@@ -1,6 +1,6 @@
 """Scalar function surface (SURVEY.md §2.2): string / date / math / array /
-conditional expressions — all JVM-side builtins inside whole-stage codegen,
-no Python in any hot path.
+conditional / JSON / map expressions as JVM-side builtins, plus the
+Python UDF, Pandas UDF and UDTF surface.
 
 Cross-engine gotchas encoded in the oracles:
 - DuckDB length/strpos/year/... return BIGINT where Spark returns INT —
@@ -11,13 +11,16 @@ Cross-engine gotchas encoded in the oracles:
   vs half-away rounding can disagree on non-representable midpoints);
 - float array elements are cast to DOUBLE on BOTH sides (exact widening)
   and summed in explicit fixed order, never via list_sum (accumulator type
-  unspecified).
-"""
+  unspecified)."""
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from featurestore_for_joycastle_java_spark.catalog.relational import _views
 from featurestore_for_joycastle_java_spark.registry import query
 from featurestore_for_joycastle_java_spark.sources import load_table
 
@@ -204,4 +207,320 @@ def scalar_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(0)
         .alias("is_urgent"),
+    )
+
+
+@query(
+    "scalar_json_map",
+    oracle="""
+SELECT event_id,
+       CAST(json_extract_string(props, '$.k') AS INT) AS k,
+       to_json(struct_pack(k2 := CAST(json_extract_string(props, '$.k') AS INT) * 2))
+           AS k2_json,
+       (map(['base','double'],
+            [value, value * 2])['double'])[1] AS mapped_double
+FROM events
+""",
+)
+def scalar_json_map(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JSON + map scalar surface: from_json struct extraction, to_json
+    re-serialization (both engines emit compact {"k":v}), map build +
+    key lookup."""
+    ev = load_table(spark, sf_dir, "events")
+    k = F.from_json("props", "k int")["k"]
+    m = F.map_from_arrays(
+        F.array(F.lit("base"), F.lit("double")),
+        F.array(F.col("value"), F.col("value") * 2),
+    )
+    return ev.select(
+        "event_id",
+        k.alias("k"),
+        F.to_json(F.struct((k * 2).alias("k2"))).alias("k2_json"),
+        F.element_at(m, "double").alias("mapped_double"),
+    )
+
+
+@query(
+    "udf_pandas_scalar",
+    oracle="""
+SELECT event_id,
+       value * 0.5 + (user_id % 7) * 1.5 AS engineered_score
+FROM events
+""",
+)
+def udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scalar Pandas UDF (Arrow-vectorized): elementwise feature formula.
+    Exists to exercise the UDF surface — the same formula in pure
+    expressions would be the production choice (see oracle); elementwise
+    IEEE ops make it bit-exact either way."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("double")
+    def engineered(value: pd.Series, user_mod: pd.Series) -> pd.Series:
+        return value * 0.5 + user_mod * 1.5
+
+    ev = load_table(spark, sf_dir, "events")
+    return ev.select(
+        "event_id",
+        engineered(F.col("value"), (F.col("user_id") % 7).cast("double")).alias(
+            "engineered_score"
+        ),
+    )
+
+
+@query(
+    "udf_grouped_agg",
+    oracle="""
+SELECT event_type,
+       COUNT(*) AS n,
+       ROUND(SUM(value * user_id) / SUM(CAST(user_id AS DOUBLE)), 4)
+           AS weighted_mean
+FROM events
+GROUP BY event_type
+""",
+)
+def udf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Grouped-map Pandas UDF (applyInPandas): per-group weighted mean in
+    pandas/numpy. 4dp snap absorbs pandas' pairwise-summation vs SQL's
+    sequential-summation ulps."""
+
+    def wmean(pdf: pd.DataFrame) -> pd.DataFrame:
+        w = pdf["user_id"].astype("float64")
+        return pd.DataFrame(
+            {
+                "event_type": [pdf["event_type"].iloc[0]],
+                "n": [len(pdf)],
+                "weighted_mean": [round((pdf["value"] * w).sum() / w.sum(), 4)],
+            }
+        )
+
+    ev = load_table(spark, sf_dir, "events")
+    return ev.groupBy("event_type").applyInPandas(
+        wmean, "event_type string, n long, weighted_mean double"
+    )
+
+
+@query(
+    "udtf_token_hist",
+    oracle="""
+SELECT doc_id, tok, n
+FROM (SELECT doc_id, tok, COUNT(*) AS n
+      FROM (SELECT doc_id,
+                   UNNEST(list_filter(string_split(lower(text), ' '),
+                                      x -> x <> '')) AS tok
+            FROM documents WHERE doc_id < 200)
+      GROUP BY doc_id, tok)
+""",
+)
+def udtf_token_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Python UDTF surface (Spark 3.5+): per-document token histogram via
+    a lateral table function. ``useArrow=True`` (r4) moves the Python
+    boundary onto Arrow batches — rows still evaluate one ``eval`` call
+    each, but serialization is columnar instead of pickled-per-row, the
+    same 10-100× transfer win as pandas_udf. The production-scale
+    equivalent remains the pure-Catalyst explode in text_token_freq
+    (same oracle family); this registration exists to cover the UDTF
+    door with its fastest available transport."""
+    from pyspark.sql.functions import udtf
+
+    @udtf(returnType="tok string, n long", useArrow=True)
+    class TokenHist:
+        def eval(self, text: str):
+            from collections import Counter
+
+            counts = Counter(t for t in (text or "").lower().split(" ") if t)
+            for tok, n in sorted(counts.items()):
+                yield tok, n
+
+    spark.udtf.register("token_hist", TokenHist)
+    _views(spark, sf_dir, "documents")
+    return spark.sql(
+        """
+        SELECT d.doc_id, t.tok, t.n
+        FROM documents d, LATERAL token_hist(d.text) t
+        WHERE d.doc_id < 200
+        """
+    )
+
+
+@query(
+    "scalar_try_funcs",
+    # Under Spark 4's ANSI-on default, plain CAST/divide THROW on bad
+    # input — the try_* family is the engine-hardening surface ETL needs
+    # (null-on-error, row survives). DuckDB mirrors with TRY_CAST and an
+    # explicit zero guard.
+    oracle="""
+SELECT doc_id,
+       TRY_CAST(lang AS INT) AS lang_int,
+       TRY_CAST(SUBSTR(lang, 1, 1) AS INT) AS first_digit,
+       CASE WHEN n_chars % 7 = 0 THEN NULL
+            ELSE CAST(n_chars AS DOUBLE) / CAST(n_chars % 7 AS DOUBLE)
+       END AS ratio7
+FROM documents
+""",
+)
+def scalar_try_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Error-safe scalar surface: `try_cast` on non-numeric strings and
+    `try_divide` with a zero denominator yield NULL instead of failing
+    the job — load-bearing under Spark 4's ANSI-mode default, where the
+    plain forms THROW and one malformed row would kill a 100 TB ETL.
+    The rows all survive; the NULLs mark the failures for quarantine."""
+    docs = load_table(spark, sf_dir, "documents")
+    # Column.try_cast exists in the DataFrame API; the SQL expression
+    # form covers the function spelling
+    return docs.select(
+        "doc_id",
+        F.col("lang").try_cast("int").alias("lang_int"),
+        F.expr("try_cast(substring(lang, 1, 1) AS INT)").alias(
+            "first_digit"
+        ),
+        F.try_divide(
+            F.col("n_chars").cast("double"),
+            (F.col("n_chars") % 7).cast("double"),
+        ).alias("ratio7"),
+    )
+
+
+# ------------------------------------------------------------- UDF doors
+
+
+@query(
+    "udf_arrow_map",
+    # The oracle replays the same arithmetic in pure SQL: char length
+    # and the split-token count via length-difference — exact integers,
+    # so the Arrow path's results are bit-checkable.
+    oracle="""
+SELECT doc_id,
+       CAST(length(text) AS BIGINT) AS n_chars_udf,
+       CAST(length(text) - length(replace(text, ' ', '')) + 1 AS BIGINT)
+           AS n_words_udf
+FROM documents
+""",
+)
+def udf_arrow_map(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`mapInArrow` door: per-document character and word counts
+    computed in Python over zero-copy Arrow record batches — the
+    fourth Python-execution surface (pandas scalar UDF, grouped-agg
+    UDF, Arrow UDTF, and now raw-Arrow batch map), for transforms that
+    want columnar batch access without a pandas conversion (pandas
+    copies strings into Python objects; `pyarrow.compute` kernels stay
+    in Arrow buffers end-to-end).
+
+    The batch function is a pure function of its batch (no state, no
+    ordering assumption), so partitioning and batch sizing are free to
+    vary — the contract that makes the operator embarrassingly
+    parallel at any scale. Results are verified bit-exactly against a
+    pure-SQL replay, pinning the Arrow path's semantics (UTF-8 char
+    length, separator-count word arithmetic) to the engine's."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in it:
+            text = rb.column(rb.schema.get_field_index("text"))
+            n_chars = pc.cast(pc.utf8_length(text), pa.int64())
+            n_words = pc.cast(
+                pc.add(pc.count_substring(text, pattern=" "), 1), pa.int64()
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(rb.schema.get_field_index("doc_id")),
+                    n_chars,
+                    n_words,
+                ],
+                names=["doc_id", "n_chars_udf", "n_words_udf"],
+            )
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return docs.mapInArrow(
+        batches, "doc_id long, n_chars_udf long, n_words_udf long"
+    )
+
+
+@query(
+    "udtf_table_arg_stats",
+    oracle="""
+SELECT source,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(len(list_filter(string_split(text, ' '), x -> x <> '')))
+            AS BIGINT) AS total_toks
+FROM documents GROUP BY 1
+""",
+)
+def udtf_table_arg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Polymorphic Python UDTF with a TABLE argument (Spark 4:
+    ``f(TABLE(t) PARTITION BY col)``) — the sixth API door next to the
+    scalar pandas UDF, grouped-agg UDF, Arrow lateral UDTF,
+    ``mapInArrow`` and the Python Data Source: Catalyst shuffles the
+    input on the PARTITION BY key and feeds each group to ONE UDTF
+    instance (``eval`` per row, ``terminate`` per group), i.e. the
+    groupBy-apply topology expressed as a SQL table function. The
+    Python body computes per-source doc/token totals — deliberately
+    SQL-replayable so the door itself (partitioning contract, instance
+    lifecycle, row batching) is what the oracle checks. Production use
+    of this door is group-wise Python that SQL can't express (per-group
+    model scoring, sequence alignment); the per-group state here is two
+    counters, so memory is O(1) per instance at any group size."""
+    from pyspark.sql.functions import udtf
+
+    @udtf(returnType="source string, n_docs long, total_toks long")
+    class SourceStats:
+        def __init__(self):
+            self.src = None
+            self.n = 0
+            self.toks = 0
+
+        def eval(self, row):
+            self.src = row["source"]
+            self.n += 1
+            self.toks += len([t for t in row["text"].split(" ") if t])
+
+        def terminate(self):
+            if self.src is not None:
+                yield self.src, self.n, self.toks
+
+    spark.udtf.register("source_stats", SourceStats)
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
+        "__docs_tblarg"
+    )
+    return spark.sql(
+        "SELECT source, n_docs, total_toks "
+        "FROM source_stats(TABLE(__docs_tblarg) PARTITION BY source)"
+    )
+
+
+# --------------------------------------------------- bitwise scalars
+
+
+@query(
+    "scalar_bitwise_funcs",
+    oracle="""
+SELECT o_orderkey,
+       CAST(o_orderkey & 255 AS BIGINT) AS low_byte,
+       CAST(o_orderkey | 4096 AS BIGINT) AS with_flag,
+       CAST(xor(o_orderkey, 21845) AS BIGINT) AS xored,
+       CAST(o_orderkey << 2 AS BIGINT) AS shl2,
+       CAST(o_orderkey >> 3 AS BIGINT) AS shr3,
+       bit_count(o_orderkey) AS popcount
+FROM orders WHERE o_orderkey <= 1000
+""",
+)
+def scalar_bitwise_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bitwise scalar family — AND/OR/XOR, shifts, popcount — the ops
+    behind flag words, bitmap fragments, and hash mixing (`layout_
+    morton_keys` interleaves with exactly these). All integer-exact;
+    completes the scalar-function inventory next to the string / date /
+    math / array / map / json / conditional / try families."""
+    o = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderkey") <= 1000
+    )
+    k = F.col("o_orderkey")
+    return o.select(
+        "o_orderkey",
+        k.bitwiseAND(255).cast("long").alias("low_byte"),
+        k.bitwiseOR(4096).cast("long").alias("with_flag"),
+        k.bitwiseXOR(21845).cast("long").alias("xored"),
+        F.shiftleft(k, 2).cast("long").alias("shl2"),
+        F.shiftright(k, 3).cast("long").alias("shr3"),
+        F.bit_count(k).alias("popcount"),
     )

@@ -68,6 +68,103 @@ def brute_force_topk(
     )
 
 
+#: Most (corpus row, query) pairs one ``brute_force_topk_arrow`` slice
+#: scores and yields: bounds the dense float64 cosine block and the output
+#: RecordBatch (16 bytes of ids and cosine per pair, before Arrow overhead).
+_TOPK_ARROW_MAX_PAIRS = 1 << 18
+
+
+def _topk_arrow_scores(batches, qids, qvecs, qid_arrow, d, id_col, query_id_col):
+    """The ``mapInArrow`` body of :func:`brute_force_topk_arrow`: every
+    (query, corpus row) cosine of ``batches`` as RecordBatches of
+    (query id, corpus id, ``__cos``), each scored from a row slice of at
+    most ``max(1, _TOPK_ARROW_MAX_PAIRS // len(qids))`` corpus rows."""
+    import numpy as np
+    import pyarrow as pa
+
+    nq = len(qids)
+    qid_arr = pa.array(qids, type=qid_arrow)
+    qmask = np.array([v is not None for v in qvecs], dtype=bool)
+    if d is not None and qmask.any():
+        qm = np.asarray(
+            [v for v in qvecs if v is not None], dtype=np.float64
+        )
+        # l2_norm replay: sqrt of the left fold of x*x
+        qn_acc = np.zeros(qm.shape[0])
+        for j in range(d):
+            qn_acc = qn_acc + qm[:, j] * qm[:, j]
+        qn = np.sqrt(qn_acc)
+    step = max(1, _TOPK_ARROW_MAX_PAIRS // max(nq, 1))
+    slices = (
+        batch.slice(start, step)
+        for batch in batches
+        for start in range(0, batch.num_rows, step)
+    )
+    for batch in slices:
+        ids, col = batch.column(0), batch.column(1)
+        n = len(col)
+        if n == 0 or nq == 0:
+            continue
+        if isinstance(col, pa.ChunkedArray):  # defensive
+            col = col.combine_chunks()
+        valid = np.ones(n, dtype=bool)
+        if col.null_count:
+            valid = ~col.is_null().to_numpy(zero_copy_only=False)
+        offs = col.offsets.to_numpy()
+        # the slice's own elements (``values`` is the whole batch's child)
+        vals = col.values.slice(offs[0], offs[-1] - offs[0])
+        if vals.null_count:
+            raise ValueError(
+                "brute_force_topk_arrow: NULL vector elements are "
+                "outside the exact-replay contract"
+            )
+        lens = np.diff(offs)
+        if valid.any() and d is not None and (lens[valid] != d).any():
+            raise ValueError(
+                "brute_force_topk_arrow requires corpus dims == "
+                f"query dims ({d}); saw "
+                f"{sorted(set(lens[valid].tolist()))[:5]}"
+            )
+        # cos matrix (n, nq), None where either side is null
+        cos = np.full((n, nq), np.nan)
+        null_mask = np.zeros((n, nq), dtype=bool)
+        null_mask[~valid, :] = True
+        null_mask[:, ~qmask] = True
+        nv = int(valid.sum())
+        if nv and qmask.any() and d is not None:
+            flat = vals.to_numpy(zero_copy_only=False)
+            starts = (offs[:-1] - offs[0])[valid]
+            take = starts[:, None] + np.arange(d)[None, :]
+            x = flat[take].astype(np.float64)
+            # dot replay: left fold over dims of q_j * c_j
+            dots = np.zeros((nv, qm.shape[0]))
+            cn_acc = np.zeros(nv)
+            for j in range(d):
+                dots = dots + x[:, j, None] * qm[None, :, j]
+                cn_acc = cn_acc + x[:, j] * x[:, j]
+            cn = np.sqrt(cn_acc)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                # cosine replay: dot / (qn * cn) — query norm is the
+                # left factor of the denominator, as in cosine()
+                c_block = dots / (qn[None, :] * cn[:, None])
+            block = np.full((nv, nq), np.nan)
+            block[:, qmask] = c_block
+            cos[valid, :] = block
+        rep = np.repeat(np.arange(n), nq)
+        til = np.tile(np.arange(nq), n)
+        cos_flat = pa.array(
+            cos.reshape(-1), type=pa.float64(), mask=null_mask.reshape(-1)
+        )
+        yield pa.RecordBatch.from_arrays(
+            [
+                qid_arr.take(pa.array(til)),
+                ids.take(pa.array(rep)),
+                cos_flat,
+            ],
+            names=[query_id_col, id_col, "__cos"],
+        )
+
+
 def brute_force_topk_arrow(
     corpus: DataFrame,
     queries: DataFrame,
@@ -91,11 +188,16 @@ def brute_force_topk_arrow(
     double equals the HOF fold's and the rounded ranking is the same
     (pinned in tests/test_opt_r13.py).
 
-    EAGER: ``queries`` is collected at construction (it is the bounded
-    harness query batch — 10..n/50 rows in every caller; the lazy
-    benched surface stays :func:`brute_force_topk`). NULL query or
-    corpus vectors score null, as the fold does; NULL vector *elements*
-    and ragged dims are refused loudly (the ``gram_cells`` contract)."""
+    EAGER: ``queries`` is collected to the driver at construction and
+    shipped to every task, so it must stay small (it is the harness
+    query batch — 10..n/50 rows in every caller; the lazy benched
+    surface stays :func:`brute_force_topk`). What one task holds is
+    bounded on the corpus side only: each Arrow batch is scored in row
+    slices of at most ``_TOPK_ARROW_MAX_PAIRS`` pairs (one corpus row per
+    slice at minimum), so neither the dense cosine block nor an output
+    batch grows with the batch size. NULL query or corpus vectors score
+    null, as the fold does; NULL vector *elements* and ragged dims are
+    refused loudly (the ``gram_cells`` contract)."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     q_rows = queries.select(
@@ -116,83 +218,9 @@ def brute_force_topk_arrow(
     qid_arrow = to_arrow_type(queries.schema[query_id_col].dataType)
 
     def _score(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        nq = len(qids)
-        qid_arr = pa.array(qids, type=qid_arrow)
-        qmask = np.array([v is not None for v in qvecs], dtype=bool)
-        if d is not None and qmask.any():
-            qm = np.asarray(
-                [v for v in qvecs if v is not None], dtype=np.float64
-            )
-            # l2_norm replay: sqrt of the left fold of x*x
-            qn_acc = np.zeros(qm.shape[0])
-            for j in range(d):
-                qn_acc = qn_acc + qm[:, j] * qm[:, j]
-            qn = np.sqrt(qn_acc)
-        for batch in batches:
-            ids, col = batch.column(0), batch.column(1)
-            n = len(col)
-            if n == 0 or nq == 0:
-                continue
-            if isinstance(col, pa.ChunkedArray):  # defensive
-                col = col.combine_chunks()
-            valid = np.ones(n, dtype=bool)
-            if col.null_count:
-                valid = ~col.is_null().to_numpy(zero_copy_only=False)
-            if col.values.null_count:
-                raise ValueError(
-                    "brute_force_topk_arrow: NULL vector elements are "
-                    "outside the exact-replay contract"
-                )
-            offs = col.offsets.to_numpy()
-            lens = np.diff(offs)
-            if valid.any() and d is not None and (lens[valid] != d).any():
-                raise ValueError(
-                    "brute_force_topk_arrow requires corpus dims == "
-                    f"query dims ({d}); saw "
-                    f"{sorted(set(lens[valid].tolist()))[:5]}"
-                )
-            # cos matrix (n, nq), None where either side is null
-            cos = np.full((n, nq), np.nan)
-            null_mask = np.zeros((n, nq), dtype=bool)
-            null_mask[~valid, :] = True
-            null_mask[:, ~qmask] = True
-            nv = int(valid.sum())
-            if nv and qmask.any() and d is not None:
-                flat = col.values.to_numpy(zero_copy_only=False)
-                flat = flat[offs[0] : offs[-1]]
-                starts = (offs[:-1] - offs[0])[valid]
-                take = starts[:, None] + np.arange(d)[None, :]
-                x = flat[take].astype(np.float64)
-                # dot replay: left fold over dims of q_j * c_j
-                dots = np.zeros((nv, qm.shape[0]))
-                cn_acc = np.zeros(nv)
-                for j in range(d):
-                    dots = dots + x[:, j, None] * qm[None, :, j]
-                    cn_acc = cn_acc + x[:, j] * x[:, j]
-                cn = np.sqrt(cn_acc)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    # cosine replay: dot / (qn * cn) — query norm is the
-                    # left factor of the denominator, as in cosine()
-                    c_block = dots / (qn[None, :] * cn[:, None])
-                block = np.full((nv, nq), np.nan)
-                block[:, qmask] = c_block
-                cos[valid, :] = block
-            rep = np.repeat(np.arange(n), nq)
-            til = np.tile(np.arange(nq), n)
-            cos_flat = pa.array(
-                cos.reshape(-1), type=pa.float64(), mask=null_mask.reshape(-1)
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    qid_arr.take(pa.array(til)),
-                    ids.take(pa.array(rep)),
-                    cos_flat,
-                ],
-                names=[query_id_col, id_col, "__cos"],
-            )
+        return _topk_arrow_scores(
+            batches, qids, qvecs, qid_arrow, d, id_col, query_id_col
+        )
 
     scored = corpus.select(F.col(id_col), F.col(vec_col)).mapInArrow(
         _score,

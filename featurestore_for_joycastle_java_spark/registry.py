@@ -13,9 +13,15 @@ SQL.
 from __future__ import annotations
 
 import importlib
-from collections.abc import Callable
+import json
+import pkgutil
+import re
+from collections.abc import Callable, Iterable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from featurestore_for_joycastle_java_spark import catalog
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -26,124 +32,8 @@ ORACLES: dict[str, str] = {}
 #: baselines kept only as correctness oracles for their scalable variants).
 BENCH_SKIP: set[str] = set()
 
-#: Catalog modules; each registers its queries at import time.
-#:
-#: ORDER MATTERS for the driver: its correctness file records the first 50
-#: registered queries only. Policy (r4+): least-recently-driver-verified
-#: rotation — each round leads with the new round module, then the modules
-#: whose latest driver row is oldest, so no query's newest driver row ages
-#: more than a couple of rounds. r3's window covered round3..scalars;
-#: r4's actual window = round4 (grew to 24 queries in-round: every new r4
-#: surface gets a driver row) + asof (6) + ingest (4) + the head of
-#: relational. r5's window (this order) = round5 (7) + round2 (6) +
-#: streaming (7) + multimodal (4) + training (6) + extras (10) +
-#: advanced (10) = 50 — exactly the 43 queries whose latest driver row
-#: was r2, plus the new r5 surface. r6 should lead with round6, then
-#: round5b (5) + round5c (24) — the r5 continuation additions with NO
-#: driver row yet — then fill the remainder from the then-oldest
-#: modules (round4/asof/ingest/relational, last driver rows r4, and
-#: round3/tpch3/tpch/text/dedup/similarity/windows/scalars, last driver
-#: rows r3). r6 did NOT rotate (stall — window re-ran r5's 50), so r7
-#: leads with the never-driver-checked set: round5b (5) + round5c (35)
-#: + round5d (8) = 48, then round7 (new r7 surface; its head fills the
-#: window to 50), then round5e/5f/5g/5h + the round7 tail — the
-#: remaining never-checked queries, queued first for r8 — then the
-#: modules by driver-row age (r4 rows: round4/asof/ingest/relational;
-#: r3 rows: round3..scalars; r6 rows last: round5/round2/streaming/
-#: multimodal/training/extras/advanced). Everything outside the window
-#: stays protected by tests/test_oracle_parity.py and the full
-#: tools/driver_sim.py sweep (215/215 green at sf0.01 AND sf0.1 —
-#: SIM_r*.json).
-#: r8 rotation (EXECUTED at round-8 open): round5e (8) + round5f (6) +
-#: round5g (3) + round5h (3) = 20 lead, then round7 — whose two
-#: r7-driver-verified queries (dedup_incremental_batch, dedup_semdedup)
-#: were moved to register LAST within the module — contributes its 30
-#: never-checked queries as window slots 21-50. The r8 window is thus
-#: exactly the 50 queries that have never had a driver CORRECTNESS row
-#: outside round7b, clearing the pre-round7b debt entirely.
-#: r9 rotation (EXECUTED at round-9 open): round7b moved to the head.
-#: It registers 56 queries (NOT the stale 28 a previous comment
-#: claimed), so the r9 window = its first 50 in registration order —
-#: exactly the 50 production queries, because the six tail
-#: registrations (text_zipf_fit + the five bench=False measurement
-#: harnesses) were split into catalog/round7b_tail.py, which imports
-#: immediately after and keeps the global order byte-identical.
-#: r10 rotation (EXECUTED at round-10 open): the round7b tail (6) +
-#: the then-oldest driver rows — tpch3 (12) + tpch (5) + asof (6) +
-#: ingest (4) + round4 head (17) = 50, exactly the staged plan.
-#: r11 rotation (EXECUTED at round-11 open — VERDICT r10 ask #1
-#: SUPERSEDES the previously-staged r11 plan): the window leads with
-#: ALL 44 queries lacking a driver row — round9 (1) + round10 (14) +
-#: round10b (10) + round10c (7) + round10d (3) + round10e (4) +
-#: round10f (3) + round10g (1) + round11 (1, the freeze-exception
-#: SemDeDup variant, ask #3) — then fills with the oldest (r3-vintage)
-#: rows: round3 (6) = exactly 50. This clears the ENTIRE never-checked
-#: backlog in one window; pinned by tests/test_survey_registry.py::
-#: test_r11_window_is_debt_plus_r3_vintage_fill.
-#: REGISTRY FREEZE (VERDICT r10 ask #2): no new query registrations
-#: until every registered query has a driver row (r12 at the latest);
-#: exceptions are round11's constant-cell-size SemDeDup (r10 ask #3)
-#: and round12's two-level SemDeDup (r11 ask #2 — the second and FINAL
-#: freeze exception; further registrations wait for r14 per r11 ask #7).
-_CATALOG_MODULES = [
-    # r12 window (EXECUTED at round-12 open — the staged plan plus the
-    # r11-ask-#2 freeze exception folded in at the head): round12 (1,
-    # the two-level SemDeDup driver query) + the r3/r4-vintage reorder —
-    # text (6) + dedup (7) + similarity (2) + windows (5) + scalars (5)
-    # + r4-vintage relational (18) + r6-vintage round5's first 6 =
-    # exactly 50. round5's 7th (last-registered) query slips to the r13
-    # fill. Pinned by tests/test_survey_registry.py::
-    # test_r12_window_is_twolevel_plus_stale_modules.
-    "round12",
-    "text",
-    "dedup",
-    "similarity",
-    "windows",
-    "scalars",
-    "relational",
-    "round5",
-    # r13 window (staged — pinned by test_r13_window_arithmetic_holds):
-    # pure reorder of [round2, streaming, multimodal, training, extras,
-    # advanced] to the head = 6+7+4+6+10+10 = 43 r6-vintage rows, plus
-    # a refresh fill of round5's 7th query (outside the r12 window) and
-    # the then-oldest r10 rows (round7b_tail 6) = exactly 50.
-    "round2",
-    "streaming",
-    "multimodal",
-    "training",
-    "extras",
-    "advanced",
-    # r11 window head (EXECUTED r11) — rows refreshed r11.
-    "round9",
-    "round10",
-    "round10b",
-    "round10c",
-    "round10d",
-    "round10e",
-    "round10f",
-    "round10g",
-    "round11",
-    "round3",
-    # r10-window modules (rows refreshed r10) — r13/r14 refresh pool.
-    "round7b_tail",
-    "tpch3",
-    "tpch",
-    "asof",
-    "ingest",
-    "round4",
-    # round7b's 50 production queries — rows refreshed r9.
-    "round7b",
-    # r8-window modules — rows refreshed r8.
-    "round5e",
-    "round5f",
-    "round5g",
-    "round5h",
-    "round7",
-    # r7-window modules — rows refreshed r7.
-    "round5b",
-    "round5c",
-    "round5d",
-]
+#: The repo root, where the driver's ``CORRECTNESS_rN.json`` files live.
+_ROOT = Path(__file__).resolve().parent.parent
 
 
 def query(
@@ -167,15 +57,31 @@ def query(
     return deco
 
 
+def driver_order(names: Iterable[str], root: Path) -> list[str]:
+    """``names`` least recently driver-verified first, ties broken by name.
+
+    A name's round is the highest N of the ``CORRECTNESS_rN.json`` files
+    in ``root`` that list it, and 0 when none does. The driver checks the
+    first 50 registered queries, so this order sends each run to the
+    queries whose last check is oldest. Names listed in the files but
+    absent from ``names`` are ignored."""
+    last: dict[str, int] = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m is None:
+            continue
+        for name in json.loads(path.read_text()):
+            last[name] = max(last.get(name, 0), int(m.group(1)))
+    return sorted(names, key=lambda n: (last.get(n, 0), n))
+
+
 def load_catalog() -> None:
-    """Import every catalog module (idempotent)."""
-    for mod in _CATALOG_MODULES:
-        try:
-            importlib.import_module(
-                f"featurestore_for_joycastle_java_spark.catalog.{mod}"
-            )
-        except ModuleNotFoundError as e:
-            # Catalog modules are added incrementally; only swallow a miss of
-            # the module itself, not of its imports.
-            if mod not in str(e):
-                raise
+    """Import every catalog module (idempotent), then order ``QUERIES``
+    and ``ORACLES`` by :func:`driver_order` over the repo root."""
+    for mod in pkgutil.iter_modules(catalog.__path__):
+        importlib.import_module(f"{catalog.__name__}.{mod.name}")
+    order = driver_order(QUERIES, _ROOT)
+    for table in (QUERIES, ORACLES):
+        ordered = {n: table[n] for n in order if n in table}
+        table.clear()
+        table.update(ordered)

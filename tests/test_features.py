@@ -111,7 +111,7 @@ def test_funnel_requires_stage_order(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from featurestore_for_joycastle_java_spark.catalog.round4 import (
+    from featurestore_for_joycastle_java_spark.catalog.windows import (
         funnel_conversion,
     )
 
@@ -159,7 +159,7 @@ def test_repetition_fold_counts_top_bigram(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from featurestore_for_joycastle_java_spark.catalog.round4 import (
+    from featurestore_for_joycastle_java_spark.catalog.text import (
         text_repetition,
     )
 
@@ -189,7 +189,7 @@ def test_rfm_scores_are_exact_quintiles(spark, sf_dir):
     user never has a worse r_score than a less recent one)."""
     from collections import Counter
 
-    from featurestore_for_joycastle_java_spark.catalog.round4 import feature_rfm
+    from featurestore_for_joycastle_java_spark.catalog.features import feature_rfm
 
     rows = feature_rfm(spark, sf_dir).collect()
     n = len(rows)
@@ -211,7 +211,7 @@ def test_scd2_collapses_runs_and_effective_dates(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from featurestore_for_joycastle_java_spark.catalog.round4 import (
+    from featurestore_for_joycastle_java_spark.catalog.features import (
         feature_scd2_history,
     )
 
@@ -258,7 +258,7 @@ def test_zscore_flags_only_outliers(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from featurestore_for_joycastle_java_spark.catalog.round4 import (
+    from featurestore_for_joycastle_java_spark.catalog.features import (
         feature_anomaly_zscore,
     )
 

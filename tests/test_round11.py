@@ -17,7 +17,7 @@ registry.load_catalog()
 from featurestore_for_joycastle_java_spark.operators.similarity import (
     semdedup_survivors,
 )
-from featurestore_for_joycastle_java_spark.catalog.round11 import _CELL_SIZE
+from featurestore_for_joycastle_java_spark.catalog.dedup import _CELL_SIZE
 from featurestore_for_joycastle_java_spark.registry import QUERIES
 from featurestore_for_joycastle_java_spark.sources import load_table
 

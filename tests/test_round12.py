@@ -9,7 +9,7 @@ from featurestore_for_joycastle_java_spark import registry
 
 registry.load_catalog()
 
-from featurestore_for_joycastle_java_spark.catalog.round12 import _CELL_SIZE
+from featurestore_for_joycastle_java_spark.catalog.dedup import _CELL_SIZE
 from featurestore_for_joycastle_java_spark.registry import QUERIES
 
 

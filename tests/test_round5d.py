@@ -120,7 +120,7 @@ def test_hamming1_mixed_lengths_registered_query(spark, sf_dir, monkeypatch):
     Plus the true positives: last-char substitution at odd length
     ('abcde'/'abcdX', the position a bare interleave would drop) and a
     mid-char substitution ('abXde')."""
-    import featurestore_for_joycastle_java_spark.catalog.round5d as r5d
+    from featurestore_for_joycastle_java_spark.catalog import dedup
 
     df = spark.createDataFrame(
         [
@@ -134,7 +134,7 @@ def test_hamming1_mixed_lengths_registered_query(spark, sf_dir, monkeypatch):
         ],
         "c_custkey long, c_name string",
     )
-    monkeypatch.setattr(r5d, "load_table", lambda _s, _d, _t: df)
+    monkeypatch.setattr(dedup, "load_table", lambda _s, _d, _t: df)
     got = {
         r["c_custkey"]: r["n_ham1"]
         for r in QUERIES["dedup_hamming1_neighbors"](spark, sf_dir).collect()

@@ -18,7 +18,7 @@ from featurestore_for_joycastle_java_spark import registry
 
 registry.load_catalog()
 
-from featurestore_for_joycastle_java_spark.catalog.round5g import _KCORE_K
+from featurestore_for_joycastle_java_spark.catalog.graph import _KCORE_K
 from featurestore_for_joycastle_java_spark.operators.graphs import (
     cosupply_edges,
 )
@@ -78,7 +78,7 @@ def test_kcore_oracle_stage_margin(spark, sf_dir):
     claim the constant's comment makes. If a fixture regeneration ever
     deepens the peel past the margin, this fails BEFORE the driver sees
     an unconverged (wrong) oracle."""
-    from featurestore_for_joycastle_java_spark.catalog.round5g import (
+    from featurestore_for_joycastle_java_spark.catalog.graph import (
         _KCORE_STAGES,
     )
 

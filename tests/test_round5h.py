@@ -16,10 +16,8 @@ from featurestore_for_joycastle_java_spark import registry
 
 registry.load_catalog()
 
-from featurestore_for_joycastle_java_spark.catalog.round5h import (
-    _NDCG_W,
-    _RRF_K,
-)
+from featurestore_for_joycastle_java_spark.catalog.eval import _NDCG_W
+from featurestore_for_joycastle_java_spark.catalog.similarity import _RRF_K
 from featurestore_for_joycastle_java_spark.registry import QUERIES
 from featurestore_for_joycastle_java_spark.sources import load_table
 

@@ -205,7 +205,7 @@ def test_pit_enrich_multibatch_exactly_once(spark, tmp_path):
     from datetime import datetime
 
     from featurestore_for_joycastle_java_spark import streaming as ST
-    from featurestore_for_joycastle_java_spark.catalog.round7 import (
+    from featurestore_for_joycastle_java_spark.catalog.streaming import (
         pit_enrich_stream_sink,
     )
 
@@ -573,12 +573,12 @@ def test_stream_incremental_dedup_two_batches(spark, sf_dir):
     SEPARATE micro-batches (one decisions dir and one index version per
     batch), with the re-crawl batch resolving against the index built
     by the corpus batch — not a one-shot batch job in disguise."""
-    import featurestore_for_joycastle_java_spark.catalog.round7 as r7
+    from featurestore_for_joycastle_java_spark.catalog import streaming
 
     # force a fresh drain for this check (per-process scratch caches)
-    r7._SDEDUP_SCRATCH.pop(sf_dir, None)
+    streaming._SDEDUP_SCRATCH.pop(sf_dir, None)
     out = QUERIES["stream_incremental_dedup"](spark, sf_dir)
-    out_dir = r7._SDEDUP_SCRATCH[sf_dir]
+    out_dir = streaming._SDEDUP_SCRATCH[sf_dir]
     batch_dirs = sorted(
         d for d in os.listdir(out_dir) if d.startswith("b=")
     )
@@ -606,7 +606,7 @@ def test_stream_incremental_dedup_out_of_order(spark, tmp_path):
     query's oracle shape, valid there only because its id scheme makes
     arrival order == id order) would decide the opposite. Drives the
     exact production foreachBatch processor."""
-    from featurestore_for_joycastle_java_spark.catalog.round7 import (
+    from featurestore_for_joycastle_java_spark.catalog.streaming import (
         _incremental_dedup_processor,
     )
 
@@ -704,7 +704,7 @@ def test_profile_single_scan_and_null_accounting(spark, sf_dir):
 
 def test_profile_counts_nulls(spark):
     """Null accounting verified on a hand-built frame with known nulls."""
-    from featurestore_for_joycastle_java_spark.catalog import round7 as R7
+    from featurestore_for_joycastle_java_spark.catalog import quality
 
     src = spark.createDataFrame(
         [(1, None, "A", 5.0, None, "P1"),
@@ -715,11 +715,11 @@ def test_profile_counts_nulls(spark):
     )
     import unittest.mock as mock
     with mock.patch.object(
-        R7, "load_table", lambda spark, sf_dir, name: src
+        quality, "load_table", lambda spark, sf_dir, name: src
     ):
         got = {
             r["column_name"]: r
-            for r in R7.profile_table_stats(spark, "ignored").collect()
+            for r in quality.profile_table_stats(spark, "ignored").collect()
         }
     assert got["o_orderkey"]["n_nulls"] == 1
     assert got["o_custkey"]["n_nulls"] == 1
@@ -736,7 +736,7 @@ def test_profile_distinct_normalizes_signed_zero_and_nan(spark):
     as Spark grouping and DuckDB DISTINCT both treat them) and all NaNs
     equal (one distinct value). Without the +0.0 normalization the keys
     '-0.0'/'0.0' double-count."""
-    from featurestore_for_joycastle_java_spark.catalog import round7 as R7
+    from featurestore_for_joycastle_java_spark.catalog import quality
 
     nan = float("nan")
     src = spark.createDataFrame(
@@ -750,11 +750,11 @@ def test_profile_distinct_normalizes_signed_zero_and_nan(spark):
     )
     import unittest.mock as mock
     with mock.patch.object(
-        R7, "load_table", lambda spark, sf_dir, name: src
+        quality, "load_table", lambda spark, sf_dir, name: src
     ):
         got = {
             r["column_name"]: r
-            for r in R7.profile_table_stats(spark, "ignored").collect()
+            for r in quality.profile_table_stats(spark, "ignored").collect()
         }
     # {0.0, nan, 2.5} — the two zeros collapse, the two NaNs collapse
     assert got["o_totalprice"]["n_distinct"] == 3
@@ -773,7 +773,7 @@ def test_profile_matches_spark_reference_on_random_frames(spark):
     two-level rewrite relies on."""
     import random
 
-    from featurestore_for_joycastle_java_spark.catalog import round7 as R7
+    from featurestore_for_joycastle_java_spark.catalog import quality
 
     rng = random.Random(1742)
     longs = [None, 0, 1, -1, 2**53, 2**53 + 1, -(2**62), 7, 7]
@@ -798,13 +798,13 @@ def test_profile_matches_spark_reference_on_random_frames(spark):
     )
     import unittest.mock as mock
     with mock.patch.object(
-        R7, "load_table", lambda spark, sf_dir, name: src
+        quality, "load_table", lambda spark, sf_dir, name: src
     ):
         got = {
             r["column_name"]: r
-            for r in R7.profile_table_stats(spark, "ignored").collect()
+            for r in quality.profile_table_stats(spark, "ignored").collect()
         }
-    for c, kind in R7._PROFILE_COLS:
+    for c, kind in quality._PROFILE_COLS:
         ref = src.selectExpr(
             "count(*) AS n",
             f"count(*) - count({c}) AS nulls",
@@ -827,7 +827,7 @@ def test_profile_matches_spark_reference_on_random_frames(spark):
 def test_quality_expectations_detects_injected_violations(spark):
     """Each rule fires on a frame with one violation of its kind, and the
     FK rule counts orphan FACT rows (not distinct keys)."""
-    from featurestore_for_joycastle_java_spark.catalog import round7 as R7
+    from featurestore_for_joycastle_java_spark.catalog import quality
 
     orders = spark.createDataFrame(
         [(1, 10, "F", 5.0), (1, None, "X", -1.0),
@@ -839,11 +839,11 @@ def test_quality_expectations_detects_injected_violations(spark):
     tables = {"orders": orders, "customer": cust}
     import unittest.mock as mock
     with mock.patch.object(
-        R7, "load_table", lambda spark, sf_dir, name: tables[name]
+        quality, "load_table", lambda spark, sf_dir, name: tables[name]
     ):
         got = {
             r["rule"]: r
-            for r in R7.quality_expectations(spark, "ignored").collect()
+            for r in quality.quality_expectations(spark, "ignored").collect()
         }
     assert got["completeness_custkey"]["n_violations"] == 1
     assert got["unique_orderkey"]["n_violations"] == 1
@@ -884,7 +884,7 @@ def test_diag_key_skew_math(spark, sf_dir):
 def test_delete_propagation_duplicate_queue_and_null_keys(spark):
     """A duplicated erasure-queue subject must not double-count, and null
     fact keys survive (conservative: never matched by the list)."""
-    from featurestore_for_joycastle_java_spark.catalog import round7 as R7
+    from featurestore_for_joycastle_java_spark.catalog import quality
 
     cust = spark.createDataFrame(
         [(100, "a"), (100, "a2"), (7, "b"), (None, "c")],
@@ -897,11 +897,11 @@ def test_delete_propagation_duplicate_queue_and_null_keys(spark):
     tables = {"customer": cust, "orders": orders}
     import unittest.mock as mock
     with mock.patch.object(
-        R7, "load_table", lambda spark, sf_dir, name: tables[name]
+        quality, "load_table", lambda spark, sf_dir, name: tables[name]
     ):
         got = {
             r["table_name"]: r
-            for r in R7.quality_delete_propagation(spark, "x").collect()
+            for r in quality.quality_delete_propagation(spark, "x").collect()
         }
     # queue = {100} (duplicate collapsed); customer: 2 deleted of 4
     assert got["customer"]["n_before"] == 4
@@ -931,10 +931,10 @@ def test_schema_evolution_fill_null_contract(spark, sf_dir):
     """mergeSchema fill-null: a column absent from a batch reads as null
     exactly for that batch's rows, and per-row provenance confirms it
     (even keys lack o_orderstatus, odd keys lack o_custkey)."""
-    from featurestore_for_joycastle_java_spark.catalog import round7 as R7
+    from featurestore_for_joycastle_java_spark.catalog import layout
 
     QUERIES["layout_schema_evolution"](spark, sf_dir)  # builds scratch
-    root = R7._EVOLVE_SCRATCH[sf_dir]
+    root = layout._EVOLVE_SCRATCH[sf_dir]
     unified = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(root, "b1"), os.path.join(root, "b2")
     )
@@ -950,7 +950,7 @@ def test_schema_evolution_fill_null_contract(spark, sf_dir):
 def test_phrase_match_adjacency_semantics(spark):
     """Phrase = strictly adjacent in order: reversed order and gapped
     pairs don't match; back-to-back overlapping occurrences all count."""
-    from featurestore_for_joycastle_java_spark.catalog import round7 as R7
+    from featurestore_for_joycastle_java_spark.catalog import text
 
     docs = spark.createDataFrame(
         [(1, "a hash join b hash join c"),   # 2 occurrences
@@ -963,11 +963,11 @@ def test_phrase_match_adjacency_semantics(spark):
     )
     import unittest.mock as mock
     with mock.patch.object(
-        R7, "load_table", lambda spark, sf_dir, name: docs
+        text, "load_table", lambda spark, sf_dir, name: docs
     ):
         got = {
             r["doc_id"]: r["n_occurrences"]
-            for r in R7.text_phrase_match(spark, "x").collect()
+            for r in text.text_phrase_match(spark, "x").collect()
         }
     assert got == {1: 2, 4: 1, 5: 1}
 
@@ -975,7 +975,7 @@ def test_phrase_match_adjacency_semantics(spark):
 def test_join_cardinality_prediction_with_dup_keys(spark):
     """The Σ c_A(k)·c_B(k) identity on a fixture with duplicate keys on
     BOTH sides (2×3 fan-out) plus unmatched keys on each side."""
-    from featurestore_for_joycastle_java_spark.catalog import round7 as R7
+    from featurestore_for_joycastle_java_spark.catalog import quality
 
     orders = spark.createDataFrame(
         [(10,), (10,), (20,), (30,)], "o_orderkey long"
@@ -986,9 +986,9 @@ def test_join_cardinality_prediction_with_dup_keys(spark):
     tables = {"orders": orders, "lineitem": li}
     import unittest.mock as mock
     with mock.patch.object(
-        R7, "load_table", lambda spark, sf_dir, name: tables[name]
+        quality, "load_table", lambda spark, sf_dir, name: tables[name]
     ):
-        r = R7.diag_join_cardinality(spark, "x").collect()[0]
+        r = quality.diag_join_cardinality(spark, "x").collect()[0]
     assert r["n_join_predicted"] == 2 * 3 + 1 * 1 == 7
     assert r["n_join_actual"] == 7
     assert r["match_exact"]
@@ -1036,7 +1036,7 @@ def test_observe_metrics_single_job_and_exactness(spark):
     """The observation rides the production action (no second scan of a
     wrong copy): metrics computed on a hand fixture match exact values,
     including rows the production agg itself would not surface."""
-    from featurestore_for_joycastle_java_spark.catalog import round7 as R7
+    from featurestore_for_joycastle_java_spark.catalog import quality
 
     orders = spark.createDataFrame(
         [(1, "F", -5.0), (2, "F", 10.0), (3, "O", 0.0), (4, "P", 2.0)],
@@ -1044,9 +1044,9 @@ def test_observe_metrics_single_job_and_exactness(spark):
     )
     import unittest.mock as mock
     with mock.patch.object(
-        R7, "load_table", lambda spark, sf_dir, name: orders
+        quality, "load_table", lambda spark, sf_dir, name: orders
     ):
-        r = R7.profile_observe_metrics(spark, "x").collect()[0]
+        r = quality.profile_observe_metrics(spark, "x").collect()[0]
     assert r["n_input"] == 4
     assert r["n_nonpositive"] == 2  # -5.0 and 0.0
     assert r["n_status"] == 3
@@ -1058,7 +1058,7 @@ def test_mips_differs_from_cosine_on_nonuniform_norms(spark):
     order != cosine order, and the augmented route returns the MIPS
     order. q=[1,0]: cosine prefers a=[0.9,0] (cos 1.0), MIPS prefers
     b=[3,1] (dot 3.0 vs 0.9)."""
-    from featurestore_for_joycastle_java_spark.catalog import round7 as R7
+    from featurestore_for_joycastle_java_spark.catalog import similarity
 
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0]), (10, [0.9, 0.0]), (11, [3.0, 1.0]),
@@ -1067,9 +1067,9 @@ def test_mips_differs_from_cosine_on_nonuniform_norms(spark):
     )
     import unittest.mock as mock
     with mock.patch.object(
-        R7, "load_table", lambda spark, sf_dir, name: emb
+        similarity, "load_table", lambda spark, sf_dir, name: emb
     ):
-        rows = R7.sim_mips_topk(spark, "x").collect()
+        rows = similarity.sim_mips_topk(spark, "x").collect()
     top = {r["rnk"]: r for r in rows if r["query_id"] == 0}
     assert top[1]["vec_id"] == 11 and abs(top[1]["dot_r"] - 3.0) < 1e-6
     assert top[2]["vec_id"] == 0        # q itself, dot 1.0
@@ -1088,7 +1088,7 @@ def test_quantile_bins_equidepth_and_edge_rule(spark, sf_dir):
     for a, b in zip(rows, rows[1:]):
         assert a["max_price"] < b["min_price"]
 
-    from featurestore_for_joycastle_java_spark.catalog import round7 as R7
+    from featurestore_for_joycastle_java_spark.catalog import features
     # boundary-edge fixture: 10 values 1..10 -> p10..p90 = 1.9,2.8,...,9.1
     # value 5.0 vs median boundary 5.5 etc.; value EXACTLY at a rounded
     # boundary must take the lower bin
@@ -1097,9 +1097,9 @@ def test_quantile_bins_equidepth_and_edge_rule(spark, sf_dir):
     )
     import unittest.mock as mock
     with mock.patch.object(
-        R7, "load_table", lambda spark, sf_dir, name: orders
+        features, "load_table", lambda spark, sf_dir, name: orders
     ):
-        got = {r["bin"]: r for r in R7.feature_quantile_bins(spark, "x").collect()}
+        got = {r["bin"]: r for r in features.feature_quantile_bins(spark, "x").collect()}
     # boundaries: 1.9 2.8 3.7 4.6 5.5 6.4 7.3 8.2 9.1 -> 1 per bin except
     # bin 0 (1.0) and the rest singletons
     assert sum(r["n_orders"] for r in got.values()) == 10
@@ -1126,7 +1126,7 @@ def test_er_chains_resolve_transitively(spark):
     """A linkage CHAIN A~B~C (no direct A~C edge) must land in ONE
     cluster — the reason ER needs components, not pairs. B shares
     acctbal with both A and C; A and C differ in 2 chars (no edge)."""
-    from featurestore_for_joycastle_java_spark.catalog import round7 as R7
+    from featurestore_for_joycastle_java_spark.catalog import dedup
 
     cust = spark.createDataFrame(
         [(100, "Customer#000000100", 1, 50.0),   # A
@@ -1136,11 +1136,11 @@ def test_er_chains_resolve_transitively(spark):
     )
     import unittest.mock as mock
     with mock.patch.object(
-        R7, "load_table", lambda spark, sf_dir, name: cust
+        dedup, "load_table", lambda spark, sf_dir, name: cust
     ):
         rows = {
             r["record_id"]: r
-            for r in R7.er_customer_clusters(spark, "x").collect()
+            for r in dedup.er_customer_clusters(spark, "x").collect()
         }
     # 100 vs 9000: lev('...100','...109')=1, same nation+block BUT
     # different acctbal -> NOT merged (the compound predicate)
@@ -1166,7 +1166,7 @@ def test_theta_algebra_exact_below_saturation(spark):
     difference are EXACT below nominal entries, including a disjoint
     pair (intersection 0 — the case HLL inclusion-exclusion gets
     wrong)."""
-    from featurestore_for_joycastle_java_spark.catalog import round7 as R7
+    from featurestore_for_joycastle_java_spark.catalog import relational
 
     rows = []
     rows += [("click", i) for i in range(0, 100)]
@@ -1177,11 +1177,11 @@ def test_theta_algebra_exact_below_saturation(spark):
     ev = spark.createDataFrame(rows, "event_type string, user_id long")
     import unittest.mock as mock
     with mock.patch.object(
-        R7, "load_table", lambda spark, sf_dir, name: ev
+        relational, "load_table", lambda spark, sf_dir, name: ev
     ):
         got = {
             (r["seg_a"], r["seg_b"]): r
-            for r in R7.agg_theta_audience_overlap(spark, "x").collect()
+            for r in relational.agg_theta_audience_overlap(spark, "x").collect()
         }
     cp = got[("click", "purchase")]
     assert (cp["n_overlap"], cp["n_union"], cp["n_only_a"]) == (50, 120, 50)
@@ -1202,7 +1202,7 @@ def test_kll_merge_tracks_n_exactly(spark, sf_dir):
 def test_table_diff_classification(spark):
     """Diff classes on a hand fixture: removed key, changed value, added
     key, unchanged row — each lands in exactly one class."""
-    from featurestore_for_joycastle_java_spark.catalog import round7 as R7
+    from featurestore_for_joycastle_java_spark.catalog import quality
 
     orders = spark.createDataFrame(
         [(97 * 101, 1.0),   # removed (multiple of 97)
@@ -1213,11 +1213,11 @@ def test_table_diff_classification(spark):
     )
     import unittest.mock as mock
     with mock.patch.object(
-        R7, "load_table", lambda spark, sf_dir, name: orders
+        quality, "load_table", lambda spark, sf_dir, name: orders
     ):
         got = {
             r["change_type"]: r
-            for r in R7.diag_table_diff(spark, "x").collect()
+            for r in quality.diag_table_diff(spark, "x").collect()
         }
     assert got["removed"]["n_rows"] == 1 and got["removed"]["min_key"] == 9797
     assert got["changed"]["n_rows"] == 1 and got["changed"]["min_key"] == 101
@@ -1229,7 +1229,7 @@ def test_bfs_chain_distances_and_unreachable(spark):
     """BFS on a path graph gives exact hop counts; a disconnected
     component is absent from the result. Edges via a synthetic lineitem:
     parts chain suppliers 1-2-3-4; suppliers 8,9 form an island."""
-    from featurestore_for_joycastle_java_spark.catalog import round7 as R7
+    from featurestore_for_joycastle_java_spark.catalog import graph
 
     rows = [
         # (partkey, suppkey, qty): each part links its suppliers
@@ -1249,6 +1249,6 @@ def test_bfs_chain_distances_and_unreachable(spark):
     ):
         got = {
             r["node"]: r["hops"]
-            for r in R7.graph_bfs_hops(spark, "x").collect()
+            for r in graph.graph_bfs_hops(spark, "x").collect()
         }
     assert got == {1: 0, 2: 1, 3: 2, 4: 3}

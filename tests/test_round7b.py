@@ -12,13 +12,16 @@ from datetime import datetime, timezone
 import pyspark.sql.functions as F
 
 from featurestore_for_joycastle_java_spark import registry
-
-# load the catalog in CANONICAL order before importing round7b directly:
-# a bare module import would otherwise register round7b's queries first
-# and scramble the registration order the driver-window tests pin
-registry.load_catalog()
-import featurestore_for_joycastle_java_spark.catalog.round7b as r7b
+from featurestore_for_joycastle_java_spark.catalog import (
+    features,
+    quality,
+    relational,
+    training,
+    windows,
+)
 from featurestore_for_joycastle_java_spark.registry import QUERIES
+
+registry.load_catalog()
 
 
 def _ts(s: int) -> datetime:
@@ -26,10 +29,11 @@ def _ts(s: int) -> datetime:
 
 
 def _inject(monkeypatch, tables: dict):
-    """Serve fixture frames through the module's load_table."""
-    monkeypatch.setattr(
-        r7b, "load_table", lambda _s, _d, name: tables[name]
-    )
+    """Serve fixture frames through the catalog modules' load_table."""
+    for mod in (features, quality, relational, training, windows):
+        monkeypatch.setattr(
+            mod, "load_table", lambda _s, _d, name: tables[name]
+        )
 
 
 # ------------------------------------------------------- interval merge

@@ -86,26 +86,3 @@ def test_semdedup_kmeans_is_bench_skipped():
     sim_ivf_kmeans_recall / sim_knn_loo_accuracy."""
     assert "dedup_semdedup_kmeans" in BENCH_SKIP
 
-
-def test_registry_order_round9_sits_in_refresh_pool():
-    """round9 earned its driver row in the r11 rotation (it led that
-    window with the round10..round10g + round11 debt modules behind
-    it); after the r12 reorder the whole r11-window block sits together
-    in the refresh pool — still contiguous and in r11 order, so
-    CORRECTNESS_r11.json stays interpretable against module order."""
-    assert "dedup_semdedup_kmeans" in QUERIES
-    from featurestore_for_joycastle_java_spark.registry import (
-        _CATALOG_MODULES,
-    )
-
-    debt_mods = [
-        m
-        for m in _CATALOG_MODULES
-        if m.startswith("round10") or m in ("round9", "round11")
-    ]
-    # round9 first, then round10..round10g in order, then round11 —
-    # contiguous in the module list (r11 history block, reordered as a
-    # unit by the r12 rotation)
-    i = _CATALOG_MODULES.index("round9")
-    assert _CATALOG_MODULES[i : i + len(debt_mods)] == debt_mods
-    assert debt_mods[0] == "round9" and debt_mods[-1] == "round11"

@@ -241,3 +241,56 @@ def test_brute_force_topk_arrow_keeps_declared_query_id_type(spark, sf_dir):
         assert sorted(map(tuple, got.collect())) == sorted(
             map(tuple, brute_force_topk(e, q, k=3).collect())
         )
+
+
+def test_topk_arrow_slices_bound_pairs_and_keep_bits(monkeypatch):
+    """The Arrow kernel scores each batch in row slices of at most
+    ``_TOPK_ARROW_MAX_PAIRS`` pairs; slicing changes only how the pairs
+    are batched, never a bit of any emitted cosine. Runs the kernel
+    in-process on pyarrow batches, one of them sliced at an offset."""
+    import numpy as np
+    import pyarrow as pa
+
+    from featurestore_for_joycastle_java_spark.operators import (
+        similarity as S,
+    )
+
+    rng = np.random.default_rng(7)
+    vecs = [rng.standard_normal(4).astype(np.float32).tolist() for _ in range(23)]
+    vecs[5] = None
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(range(23), pa.int64()), pa.array(vecs, pa.list_(pa.float32()))],
+        names=["vec_id", "embedding"],
+    )
+    qvecs = [vecs[0], None, vecs[3]]
+
+    def scores():
+        out = S._topk_arrow_scores(
+            iter([batch.slice(0, 17), batch.slice(17)]),
+            [10, 11, 12],
+            qvecs,
+            pa.int64(),
+            4,
+            "vec_id",
+            "query_id",
+        )
+        return list(out)
+
+    def columns(batches):
+        t = pa.Table.from_batches(batches).combine_chunks()
+        cos = t.column("__cos")
+        bits = cos.fill_null(0.0).to_numpy().view(np.uint64)
+        return (
+            t.column("query_id").to_pylist(),
+            t.column("vec_id").to_pylist(),
+            cos.is_null().to_pylist(),
+            bits.tolist(),
+        )
+
+    whole = scores()
+    assert [b.num_rows for b in whole] == [17 * 3, 6 * 3]
+    monkeypatch.setattr(S, "_TOPK_ARROW_MAX_PAIRS", 7)
+    capped = scores()
+    assert max(b.num_rows for b in capped) <= 7
+    assert len(capped) == 9 + 3
+    assert columns(capped) == columns(whole)

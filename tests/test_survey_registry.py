@@ -1,45 +1,66 @@
-"""SURVEY.md <-> registry pinning (VERDICT r7 ask #4).
+"""Registry layout and SURVEY.md pinning.
 
-The judge reads SURVEY §2 as the coverage checklist, so its query-name
-claims must stay true as the registry evolves: every round7/round7b
-query is listed in its section, every query-prefixed name SURVEY
-mentions is registered (or on the explicit retired/operator-function
-allowlist), and the rotation-bookkeeping notes never go stale again.
-No Spark session needed — pure text vs registry."""
+SURVEY §2 is the coverage checklist, so every registered query is named
+there and every query-like name it mentions is registered (or on the
+explicit retired/operator-function allowlist). The catalog is grouped by
+domain: each query lives in the module its name prefix maps to. The
+driver checks the first 50 registered queries, and the registry orders
+them least recently checked first. No Spark session needed."""
 
 from __future__ import annotations
 
-import importlib
+import json
 import re
 from pathlib import Path
 
-import pytest
-
+import __spark_entry__
 from featurestore_for_joycastle_java_spark import registry
 
 REPO = Path(__file__).resolve().parent.parent
+PKG = "featurestore_for_joycastle_java_spark"
 
-
-def _load_all() -> None:
-    for m in registry._CATALOG_MODULES:
-        importlib.import_module(
-            f"featurestore_for_joycastle_java_spark.catalog.{m}"
-        )
-
-
-def _module_names(module: str) -> set[str]:
-    before = set(registry.QUERIES)
-    _load_all()  # idempotent; guarantees `module` imported
-    src = (
-        REPO
-        / "featurestore_for_joycastle_java_spark"
-        / "catalog"
-        / f"{module}.py"
-    ).read_text()
-    names = set(re.findall(r'@query\(\s*\n?\s*"([a-z0-9_]+)"', src))
-    assert names, f"no @query registrations parsed from {module}.py"
-    assert names <= set(registry.QUERIES) | before
-    return names
+#: Query-name prefix -> the catalog module holding every query with it.
+#: One-query prefixes sit with their nearest domain (``pysource`` with
+#: ingest, ``ps`` with the SQL-text doors, ``er`` with dedup).
+PREFIX_MODULE = {
+    **dict.fromkeys(["ingest", "pysource"], "ingest"),
+    **dict.fromkeys(
+        [
+            "agg",
+            "join",
+            "filter",
+            "sort",
+            "setops",
+            "subquery",
+            "reshape",
+            "split",
+            "formats",
+        ],
+        "relational",
+    ),
+    "tpch": "tpch",
+    **dict.fromkeys(["scalar", "udf", "udtf"], "scalars"),
+    **dict.fromkeys(["sql", "ps"], "sql"),
+    **dict.fromkeys(
+        ["window", "sessionize", "funnel", "retention", "seq", "interval"],
+        "windows",
+    ),
+    "asof": "asof",
+    **dict.fromkeys(
+        ["feature", "scd", "attrib", "assoc", "geo"], "features"
+    ),
+    "ts": "timeseries",
+    **dict.fromkeys(["quality", "profile", "diag"], "quality"),
+    "eval": "eval",
+    "text": "text",
+    **dict.fromkeys(["dedup", "er"], "dedup"),
+    "sim": "similarity",
+    "graph": "graph",
+    "stream": "streaming",
+    "train": "training",
+    "layout": "layout",
+    "multimodal": "multimodal",
+}
 
 
 def _survey_section(start: str, end: str) -> str:
@@ -47,20 +68,10 @@ def _survey_section(start: str, end: str) -> str:
     return s[s.index(start) : s.index(end)]
 
 
-@pytest.mark.parametrize(
-    ("module", "start", "end"),
-    [
-        ("round7", "### 2.12", "### 2.13"),
-        ("round7b", "### 2.13", "## 3. Query lifecycle"),
-        ("round7b_tail", "### 2.13", "## 3. Query lifecycle"),
-    ],
-)
-def test_round_sections_list_every_query(module, start, end):
-    sec = _survey_section(start, end)
-    missing = sorted(
-        n for n in _module_names(module) if f"`{n}`" not in sec
-    )
-    assert not missing, f"SURVEY section for {module} omits: {missing}"
+def test_survey_section2_names_every_query():
+    sec2 = _survey_section("## 2. Operator inventory", "## 3. Query lifecycle")
+    missing = sorted(n for n in registry.QUERIES if f"`{n}`" not in sec2)
+    assert not missing, f"SURVEY §2 omits: {missing}"
 
 
 #: Names SURVEY legitimately mentions that are NOT registered queries:
@@ -76,7 +87,6 @@ _ALLOWED_UNREGISTERED = {
 
 
 def test_survey_query_mentions_are_registered():
-    _load_all()
     sec2 = _survey_section("## 2. Operator inventory", "## 3. Query lifecycle")
     prefixes = {n.split("_")[0] for n in registry.QUERIES}
     mentioned = {
@@ -93,173 +103,74 @@ def test_survey_query_mentions_are_registered():
     )
 
 
-def test_registry_rotation_counts_are_current():
-    """The rotation comment's per-module arithmetic went stale once
-    (r7: 'round7b (28 queries)' vs 56 registered — ADVICE r7). Pin the
-    counts the r8/r9/r10 plan in registry.py relies on."""
-    assert len(_module_names("round7b")) == 50
-    assert len(_module_names("round7b_tail")) == 6
-    assert len(_module_names("round7")) == 32
-    assert len(_module_names("round5e")) == 8
-    assert len(_module_names("round5f")) == 6
-    assert len(_module_names("round5g")) == 3
-    assert len(_module_names("round5h")) == 3
-
-
-#: round7b's six last-registering queries (text_zipf_fit + the five
-#: bench=False measurement harnesses) — outside the r9 window, head of
-#: the r10 window; split into catalog/round7b_tail.py so the r10
-#: rotation is a pure module reorder.
-_ROUND7B_TAIL = [
-    "text_zipf_fit",
-    "sim_matryoshka_prefix",
-    "sim_ivfpq_topk",
-    "train_export_shards",
-    "sim_ivf_nprobe_curve",
-    "sim_knn_loo_accuracy",
-]
-
-
-def _module_names_ordered(module: str) -> list[str]:
-    _load_all()
-    src = (
-        REPO
-        / "featurestore_for_joycastle_java_spark"
-        / "catalog"
-        / f"{module}.py"
-    ).read_text()
-    names = re.findall(r'@query\(\s*\n?\s*"([a-z0-9_]+)"', src)
-    assert names and len(set(names)) == len(names)
-    return names
-
-
-def test_r10_window_was_tail_plus_stale_modules():
-    """r10 rotation (EXECUTED then; superseded by r11): the r10 window
-    was the round7b tail (6) + tpch3 (12) + tpch (5) + asof (6) +
-    ingest (4) + round4's first 17. After the r11 reorder those modules
-    sit in the refresh pool; keep the name list stable so the history
-    in CORRECTNESS_r10.json stays interpretable."""
-    _load_all()
-    r10_window = (
-        _ROUND7B_TAIL
-        + _module_names_ordered("tpch3")
-        + _module_names_ordered("tpch")
-        + _module_names_ordered("asof")
-        + _module_names_ordered("ingest")
-        + _module_names_ordered("round4")[:17]
-    )
-    assert len(r10_window) == 50
-    assert set(r10_window) <= set(registry.QUERIES)
-    assert _module_names_ordered("round7b_tail") == _ROUND7B_TAIL
-
-
-#: The 9 modules holding the 44 queries without a driver CORRECTNESS
-#: row at round-11 open: the 43 never-checked round9/round10..round10g
-#: additions (VERDICT r10 ask #1) plus round11's freeze-exception
-#: constant-cell-size SemDeDup (ask #3).
-_R11_DEBT_MODULES = [
-    "round9",
-    "round10",
-    "round10b",
-    "round10c",
-    "round10d",
-    "round10e",
-    "round10f",
-    "round10g",
-    "round11",
-]
-
-
-def test_r11_window_is_debt_plus_r3_vintage_fill():
-    """r11 rotation (EXECUTED then; superseded by the r12 reorder): the
-    r11 window was the 44 queries lacking a driver row (round9 +
-    round10..round10g + the round11 freeze exception) + round3 (6).
-    After the r12 reorder those modules sit in the refresh pool; keep
-    the name list stable so CORRECTNESS_r11.json stays interpretable."""
-    _load_all()
-    debt = [n for m in _R11_DEBT_MODULES for n in _module_names_ordered(m)]
-    assert len(debt) == 44
-    r11_window = debt + _module_names_ordered("round3")
-    assert len(r11_window) == 50
-    assert set(r11_window) <= set(registry.QUERIES)
-
-
-def test_no_stale_rotation_notes():
-    survey = (REPO / "SURVEY.md").read_text()
-    assert "driver rows due r6" not in survey
-    reg = (
-        REPO / "featurestore_for_joycastle_java_spark" / "registry.py"
-    ).read_text()
-    assert "round7b (28" not in reg
-
-
-def test_r12_window_is_twolevel_plus_stale_modules():
-    """r12 rotation (EXECUTED): the driver's 50-row window leads with
-    round12's two-level SemDeDup (VERDICT r11 ask #2 — the second and
-    final freeze exception, the only registered query without a driver
-    row), then the staged r3/r4-vintage reorder — text (6) + dedup (7)
-    + similarity (2) + windows (5) + scalars (5) + r4-vintage
-    relational (18) + r6-vintage round5's first 6 = exactly 50.
-    round5's 7th query slips to the r13 fill."""
-    _load_all()
-    mods = [
-        "round12",
-        "text",
-        "dedup",
-        "similarity",
-        "windows",
-        "scalars",
-        "relational",
-    ]
-    counts = {m: len(_module_names_ordered(m)) for m in mods}
-    assert counts == {
-        "round12": 1,
-        "text": 6,
-        "dedup": 7,
-        "similarity": 2,
-        "windows": 5,
-        "scalars": 5,
-        "relational": 18,
+def test_every_query_lives_in_its_domain_module():
+    misplaced = {
+        name: fn.__module__
+        for name, fn in registry.QUERIES.items()
+        if fn.__module__
+        != f"{PKG}.catalog.{PREFIX_MODULE[name.split('_')[0]]}"
     }
-    expected = [n for m in mods for n in _module_names_ordered(m)]
-    expected += _module_names_ordered("round5")[:6]
-    window = list(registry.QUERIES)[:50]
-    assert window == expected
+    assert not misplaced
+    modules = {p.stem for p in (REPO / PKG / "catalog").glob("*.py")}
+    assert modules - {"__init__"} == set(PREFIX_MODULE.values())
+
+
+def test_no_round_stamped_catalog_module():
+    stamped = [
+        p.name
+        for p in (REPO / PKG / "catalog").iterdir()
+        if re.fullmatch(r"(round.*|.*_r\d+)\.py", p.name)
+    ]
+    assert not stamped
+
+
+def _write_correctness(root: Path, rounds: dict[int, list[str]]) -> None:
+    for n, names in rounds.items():
+        row = {"rows_match": True, "hash_match": True, "err": None}
+        (root / f"CORRECTNESS_r{n:02d}.json").write_text(
+            json.dumps({name: row for name in names})
+        )
+
+
+def test_driver_order_oldest_check_first(tmp_path):
+    # a: r1; b, d: r2 (b also at r1); c: r10; e, f: never checked;
+    # "retired" is listed but not registered
+    _write_correctness(
+        tmp_path,
+        {1: ["a", "b", "retired"], 2: ["b", "d"], 10: ["c", "retired"]},
+    )
+    (tmp_path / "CORRECTNESS_notes.json").write_text(json.dumps({"a": 1}))
+    names = ["d", "c", "f", "b", "a", "e"]
+    assert registry.driver_order(names, tmp_path) == [
+        "e",
+        "f",
+        "a",
+        "b",
+        "d",
+        "c",
+    ]
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert registry.driver_order(names, empty) == sorted(names)
+
+
+def test_driver_window_skips_newest_check_and_takes_oldest():
+    """The driver's 50-query window never re-checks the newest
+    CORRECTNESS file's names while an older-checked query waits, and it
+    holds every query whose last check is the oldest round."""
+    files = {
+        int(re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name).group(1)): p
+        for p in REPO.glob("CORRECTNESS_r*.json")
+    }
+    last = {}
+    for n in sorted(files):
+        for name in json.loads(files[n].read_text()):
+            last[name] = n
+    queries = list(__spark_entry__.queries())
+    window = queries[:50]
     assert len(set(window)) == 50
-    # round5's 7th query then leads the r13 fill pool.
-    assert list(registry.QUERIES)[50] == _module_names_ordered("round5")[6]
-
-
-def test_r13_window_arithmetic_holds():
-    """Pin the r13 plan (registry.py rotation comment): r13 moves
-    [round2, streaming, multimodal, training, extras, advanced] to the
-    head — 6+7+4+6+10+10 = 43 r6-vintage rows — plus a refresh fill of
-    round5's 7th query (the one row the r12 window could not hold once
-    the round12 freeze exception took its head slot) and the
-    then-oldest r10-vintage rows (round7b_tail 6) = exactly 50 distinct
-    registered names."""
-    mods = [
-        "round2",
-        "streaming",
-        "multimodal",
-        "training",
-        "extras",
-        "advanced",
-    ]
-    counts = {m: len(_module_names_ordered(m)) for m in mods}
-    assert counts == {
-        "round2": 6,
-        "streaming": 7,
-        "multimodal": 4,
-        "training": 6,
-        "extras": 10,
-        "advanced": 10,
-    }
-    planned = (
-        [n for m in mods for n in _module_names_ordered(m)]
-        + _module_names_ordered("round5")[6:]
-        + _ROUND7B_TAIL
-    )
-    assert len(planned) == 50
-    assert len(set(planned)) == 50
-    assert set(planned) <= set(registry.QUERIES)
+    newest = set(json.loads(files[max(files)].read_text()))
+    assert not set(window) & newest
+    oldest = min(last.get(n, 0) for n in queries)
+    stale = {n for n in queries if last.get(n, 0) == oldest}
+    assert stale <= set(window)
