@@ -13,6 +13,8 @@ import json
 import re
 from pathlib import Path
 
+import pytest
+
 import __spark_entry__
 from featurestore_for_joycastle_java_spark import registry
 
@@ -66,6 +68,70 @@ PREFIX_MODULE = {
 def _survey_section(start: str, end: str) -> str:
     s = (REPO / "SURVEY.md").read_text()
     return s[s.index(start) : s.index(end)]
+
+
+#: The queries SURVEY §2.12/§2.13 introduce, keyed by the batch that
+#: added them (the former round7/round7b/round7b_tail catalog modules,
+#: whose queries now live in their domain modules).
+_ROUND7_BATCHES = {
+    "round7": """
+        agg_approx_topk agg_hll_mergeable agg_kll_quantile_merge
+        agg_theta_audience_overlap dedup_containment_pairs
+        dedup_incremental_batch dedup_incremental_exact dedup_semdedup
+        diag_join_cardinality diag_key_skew diag_table_diff
+        er_customer_clusters er_golden_record feature_quantile_bins
+        graph_bfs_hops layout_bucketed_join layout_schema_evolution
+        layout_zorder_prune profile_null_patterns profile_observe_metrics
+        profile_table_stats quality_delete_propagation quality_expectations
+        sim_ivf_incremental sim_mips_topk sim_quantized_rerank
+        stream_incremental_dedup stream_late_drops stream_pit_enrich
+        text_phrase_match train_token_budget_mix udtf_table_arg_stats
+    """.split(),
+    "round7b": """
+        agg_abc_pareto agg_exact_median agg_moments_skew_kurtosis
+        agg_ordered_listagg agg_ratio_to_parent attrib_multitouch
+        dedup_same_vs_cross_source diag_table_checksum er_agreement_patterns
+        eval_avg_precision eval_js_divergence eval_lift_deciles
+        eval_spearman_corr feature_capped_running_sum feature_count_encoding
+        feature_crossed_hash feature_lag_matrix
+        feature_target_encoding_smoothed feature_time_decay_counts
+        geo_grid_hotspots graph_adamic_adar graph_assortativity
+        graph_clustering_coefficient graph_degree_distribution
+        interval_merge_overlaps join_right_outer layout_file_inventory
+        profile_column_entropy quality_duplicate_rate_by_source
+        quality_l_diversity quality_sequence_gaps quality_totals_reconcile
+        scalar_bitwise_funcs scd_cdc_apply seq_trigram_motifs
+        sim_cluster_purity sql_frontend_pivot stream_trending_topk
+        text_collocations_pmi text_lm_quality train_curation_funnel
+        train_curriculum_buckets train_mixture_temperature
+        train_preference_pairs ts_ohlc_hourly ts_punchcard
+        ts_weekday_seasonality ts_wow_growth window_rolling_zscore
+        window_running_distinct
+    """.split(),
+    "round7b_tail": """
+        sim_ivf_nprobe_curve sim_ivfpq_topk sim_knn_loo_accuracy
+        sim_matryoshka_prefix text_zipf_fit train_export_shards
+    """.split(),
+}
+
+
+@pytest.mark.parametrize(
+    ("module", "start", "end"),
+    [
+        ("round7", "### 2.12", "### 2.13"),
+        ("round7b", "### 2.13", "## 3. Query lifecycle"),
+        ("round7b_tail", "### 2.13", "## 3. Query lifecycle"),
+    ],
+)
+def test_round_sections_list_every_query(module, start, end):
+    names = _ROUND7_BATCHES[module]
+    assert set(names) <= set(registry.QUERIES), (
+        f"{module} batch names unregistered queries: "
+        f"{sorted(set(names) - set(registry.QUERIES))}"
+    )
+    sec = _survey_section(start, end)
+    missing = sorted(n for n in names if f"`{n}`" not in sec)
+    assert not missing, f"SURVEY section for {module} omits: {missing}"
 
 
 def test_survey_section2_names_every_query():
