@@ -592,7 +592,7 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentiles (linear-interpolation continuous quantiles) and
     median per group. Exact percentile needs the group's values together
     — one shuffle on the group key; at 100 TB prefer approx_percentile
-    (see agg_approx_percentile_bounded, catalog/round2.py, for the
+    (see agg_approx_percentile_bounded in this module for the
     bounded-error sketch-side check)."""
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(

@@ -323,7 +323,6 @@ def stream_pysource_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py), complete-mode groupBy into a memory sink,
     oracle regenerates the input in SQL. ``sf_dir`` unused — the source
     IS the data."""
-    from featurestore_for_joycastle_java_spark.catalog.streaming import _run
     from featurestore_for_joycastle_java_spark.operators.relational import exact_sum
     from featurestore_for_joycastle_java_spark.sources.pydatasource import (
         register_synthetic_source,
@@ -373,8 +372,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         exact_sum(F.col("value")).alias("sum_value"),
     )
-    from featurestore_for_joycastle_java_spark.catalog.streaming import _run
-
     return _run(spark, agg, "complete")
 
 
@@ -407,8 +404,6 @@ def stream_hourly_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = dedup.groupBy("hour_ts").agg(
         F.count(F.lit(1)).alias("n_active")
     )
-    from featurestore_for_joycastle_java_spark.catalog.streaming import _run
-
     out = _run(spark, agg, "complete")
     return out.select(
         F.date_format("hour_ts", "yyyy-MM-dd HH:mm:ss").alias("hour"),
@@ -902,8 +897,6 @@ def stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: counts are exact integers; rank ties break on
     event_type; the delta for a type's first window coalesces to the
     full count (new entrant = all growth)."""
-    from featurestore_for_joycastle_java_spark.catalog.streaming import _run
-
     from featurestore_for_joycastle_java_spark import streaming as ST
 
     src = ST.file_stream_source(spark, sf_dir)
@@ -1018,8 +1011,6 @@ def stream_quota_enforcement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(os.path.join(root, "*"))
     )
-    from featurestore_for_joycastle_java_spark.catalog.streaming import _run
-
     out = _run(
         spark,
         ST.quota_rate_limiter(stream, key_col="user_id", quota=67),

@@ -1170,8 +1170,8 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph-based ``text_textrank_keywords``; the two disagree exactly
     where RAKE's phrase-cohesion assumption and TextRank's centrality
     assumption diverge, which is why pipelines run both. Integer ppm
-    ratio, same 10-word closed-class stoplist as round10's Gopher rules
-    (one vocabulary contract across the text gates).
+    ratio, same 10-word closed-class stoplist as the Gopher rules,
+    ``_STOPWORDS`` (one vocabulary contract across the text gates).
 
     Plan shape: one posexplode, one per-document cumulative window
     (partition-parallel) assigns phrase ids, one (doc, phrase) count,

@@ -117,13 +117,20 @@ def demux_write(
     CMT:168 table-per-type) as ONE partitioned write.
 
     ``partitionBy(key_col)`` gives hive-layout dirs — the scalable analog of
-    table-per-type: downstream readers get partition pruning, and the write
-    parallelizes across all executors. No 1000-row manual buffering (CMT:35,
-    143-150): micro-batching/file-sizing is the engine's job. This also
-    fixes defect D2 (the reference dropped up to BATCH_SIZE-1 tail rows per
-    type at end-of-stream).
+    table-per-type: downstream readers get partition pruning. No 1000-row
+    manual buffering (CMT:35, 143-150): file sizing is the engine's job.
+    The rows go through one ``rebalance`` shuffle keyed by ``key_col``
+    first, so each route is written by as few tasks as its size needs:
+    with AQE on, a small input (one 1000-row micro-batch) is coalesced to
+    one file per route, and a route larger than
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` is split into
+    several files, so a large write keeps its parallelism; with AQE off
+    the hint is a hash repartition by ``key_col``, one file per route.
+    (Without the shuffle every input task would open a writer per route.)
+    This also fixes defect D2 (the reference dropped up to BATCH_SIZE-1 tail
+    rows per type at end-of-stream).
     """
-    df.write.partitionBy(key_col).format(fmt).mode(mode).save(out_dir)
+    df.hint("rebalance", key_col).write.partitionBy(key_col).format(fmt).mode(mode).save(out_dir)
 
 
 _DEMUX_DEFAULT_KEYS = object()

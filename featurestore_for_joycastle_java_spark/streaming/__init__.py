@@ -29,6 +29,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from featurestore_for_joycastle_java_spark.operators.ingest import demux_write
 from featurestore_for_joycastle_java_spark.operators.relational import exact_sum
 
 from featurestore_for_joycastle_java_spark.schemas import EVENTS
@@ -99,21 +100,22 @@ def demux_stream_sink(
     key_col: str = "event_type",
     checkpoint_dir: str | None = None,
 ):
-    """Ops #8-#12 streaming: per-micro-batch partitioned parquet write via
-    foreachBatch — the reference's per-type buffered inserts without the
-    races (D4) or tail loss (D2). Exactly-once: each micro-batch
-    OVERWRITES its own ``batch=<batch_id>`` subdirectory, so a batch
-    replayed after a failure between sink write and checkpoint commit
-    lands on top of its own partial output instead of appending a
-    duplicate (r1 used a plain append here, which was only
-    at-least-once). Readers scan ``out_dir`` and see ``batch`` +
+    """Ops #8-#12 streaming: each micro-batch goes through the batch
+    demux, ``operators.ingest.demux_write``, via foreachBatch — the
+    reference's per-type buffered inserts without the races (D4) or tail
+    loss (D2). A micro-batch is written as one parquet file per route
+    (``batch=<batch_id>/<key_col>=<route>/``), or several when a route is
+    larger than AQE's advisory partition size. Exactly-once: each
+    micro-batch OVERWRITES its own ``batch=<batch_id>`` subdirectory, so
+    a batch replayed after a failure between sink write and checkpoint
+    commit lands on top of its own partial output instead of appending a
+    duplicate; the route-to-task hash is deterministic, so the replay
+    writes the same layout. Readers scan ``out_dir`` and see ``batch`` +
     ``key_col`` as discovered partition columns."""
     checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="fs_ckpt_")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.partitionBy(key_col).mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
-        )
+        demux_write(batch_df, os.path.join(out_dir, f"batch={batch_id}"), key_col=key_col)
 
     return (
         stream_df.writeStream.foreachBatch(write_batch)
@@ -140,6 +142,8 @@ def jdbc_demux_stream_sink(
     with the reference's batchsize=1000 prepared-statement batching; the
     explicit ``keys`` list mirrors the reference's hardcoded EVENT_TYPES
     (CMT:30) and keeps the per-batch loop free of a distinct() action.
+    The micro-batch is persisted for the loop, so its source read and
+    upstream transforms run once per batch, not once per key.
 
     Delivery is at-least-once into JDBC (the reference's level, S1 in
     SEMANTICS.md): a replayed batch re-inserts. The exactly-once variant
@@ -149,14 +153,18 @@ def jdbc_demux_stream_sink(
     checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="fs_ckpt_")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        for k in keys:
-            jdbc_batched_sink(
-                batch_df.filter(F.col(key_col) == k),
-                url,
-                f"{table_prefix}{k}",
-                batchsize=batchsize,
-                **properties,
-            )
+        batch_df.persist()
+        try:
+            for k in keys:
+                jdbc_batched_sink(
+                    batch_df.filter(F.col(key_col) == k),
+                    url,
+                    f"{table_prefix}{k}",
+                    batchsize=batchsize,
+                    **properties,
+                )
+        finally:
+            batch_df.unpersist()
 
     return (
         stream_df.writeStream.foreachBatch(write_batch)

@@ -88,3 +88,31 @@ def test_stream_jdbc_demux_end_to_end(spark, sf_dir, derby_url, tmp_path):
         for t in want
     )
     assert total == ev.count()
+
+
+def test_stream_jdbc_demux_computes_each_batch_once(spark, sf_dir, derby_url, tmp_path):
+    # one micro-batch feeds one write per event type; the batch's source
+    # rows are evaluated once per batch, not once per key. The counting
+    # UDF is nondeterministic, so no key filter is pushed below it.
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import BooleanType
+
+    from featurestore_for_joycastle_java_spark import streaming as ST
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(_):
+        seen.add(1)
+        return True
+
+    counted = F.udf(count_row, BooleanType()).asNondeterministic()
+    src = ST.file_stream_source(spark, sf_dir).filter(counted("event_id"))
+    q = ST.jdbc_demux_stream_sink(
+        src, derby_url, checkpoint_dir=str(tmp_path / "ckpt"), **DERBY
+    )
+    q.awaitTermination()
+    ev = load_table(spark, sf_dir, "events")
+    assert seen.value == ev.count()
+    for r in ev.groupBy("event_type").count().collect():
+        back = spark.read.jdbc(derby_url, f"dwd_{r['event_type']}", properties=DERBY)
+        assert back.count() == r["count"], r["event_type"]

@@ -4,9 +4,17 @@ streaming form), bounded-state dedup."""
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
+import time
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from featurestore_for_joycastle_java_spark import streaming as ST
+from featurestore_for_joycastle_java_spark.operators.ingest import ingest_pipeline
 from featurestore_for_joycastle_java_spark.sources import load_table
 
 
@@ -81,6 +89,110 @@ def test_foreachbatch_demux_idempotent_replay(spark, sf_dir, tmp_path):
     replay.write.partitionBy("event_type").mode("overwrite").parquet(batch0)
     spark.catalog.refreshByPath(out)  # drop the cached file listing
     assert spark.read.parquet(out).count() == n_first
+
+
+def _write_event_files(src: str, n_files: int, rows_per_file: int, types: list[str]) -> Counter:
+    """Raw JSON event lines (all seven EVENT_FIELDS present) in ``n_files``
+    small text files, routes cycled through ``types``; returns the rows
+    per route the ingest pipeline must keep."""
+    os.makedirs(src)
+    want: Counter = Counter()
+    for f in range(n_files):
+        with open(os.path.join(src, f"part-{f:03d}.json"), "w") as fh:
+            for i in range(rows_per_file):
+                t = types[(f * rows_per_file + i) % len(types)]
+                want[t] += 1
+                rec = {
+                    "EventID": f"{f}-{i}",
+                    "PlayerID": f"p{i % 7}",
+                    "EventTimestamp": "2024-05-01T00:00:00Z",
+                    "EventType": t,
+                    "EventDetails": f"level {i}",
+                    "DeviceType": "ios",
+                    "Location": "US",
+                }
+                fh.write(json.dumps(rec) + "\n")
+    return want
+
+
+def _drain_demux(session, src: str, out: str, ckpt: str, files_per_trigger: int) -> None:
+    raw = session.readStream.option("maxFilesPerTrigger", files_per_trigger).text(src)
+    ST.demux_stream_sink(
+        ingest_pipeline(raw), out, key_col="EventType", checkpoint_dir=ckpt
+    ).awaitTermination()
+
+
+def _files_per_route(batch_dir: str) -> dict[str, int]:
+    return {
+        os.path.basename(d).split("=", 1)[1]: len(glob.glob(os.path.join(d, "*.parquet")))
+        for d in glob.glob(os.path.join(batch_dir, "EventType=*"))
+    }
+
+
+def _route_rows(session, out: str) -> dict[str, int]:
+    return {
+        r["EventType"]: r["count"]
+        for r in session.read.parquet(out).groupBy("EventType").count().collect()
+    }
+
+
+def test_demux_stream_sink_splits_a_large_route(spark, tmp_path):
+    # a route larger than AQE's advisory partition size is written by
+    # several tasks, so a large trigger keeps its write parallelism; the
+    # small advisory size lives on a session of its own
+    session = spark.newSession()
+    session.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4k")
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    want = _write_event_files(
+        src, n_files=4, rows_per_file=400, types=["SessionStart"] * 3 + ["Refund"]
+    )
+    _drain_demux(session, src, out, str(tmp_path / "ckpt"), files_per_trigger=4)
+    (batch,) = glob.glob(os.path.join(out, "batch=*"))
+    assert _files_per_route(batch)["SessionStart"] > 1
+    assert _route_rows(session, out) == want
+
+
+def _write_plan(spark, target: str) -> str:
+    """Final physical plan of the completed SQL execution that wrote
+    ``target``, read from the driver's SQL status store. The listener bus
+    fills the store asynchronously; the adaptive final-plan update comes
+    before the execution's end event, so a completed execution carries
+    its final plan."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    deadline = time.monotonic() + 30
+    while True:
+        n = store.executionsCount()
+        recent = store.executionsList(max(0, n - 50), 50)
+        for i in range(recent.size()):
+            e = recent.apply(i)
+            plan = e.physicalPlanDescription()
+            if e.completionTime().isDefined() and f"file:{target}," in plan:
+                return plan
+        assert time.monotonic() < deadline, f"no completed write of {target}"
+        time.sleep(0.1)
+
+
+def test_demux_stream_sink_one_file_per_route_per_batch(spark, tmp_path):
+    # several small files per trigger, so each micro-batch has several
+    # input partitions; the sink still writes each route once per batch,
+    # through one shuffle: the rebalance by route
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    types = ["SessionStart", "SessionEnd", "InAppPurchase", "LevelUp"]
+    want = _write_event_files(src, n_files=6, rows_per_file=40, types=types)
+    _drain_demux(spark, src, out, str(tmp_path / "ckpt"), files_per_trigger=3)
+    batches = sorted(glob.glob(os.path.join(out, "batch=*")))
+    assert len(batches) == 2
+    for b in batches:
+        assert _files_per_route(b) == {t: 1 for t in types}, b
+    assert _route_rows(spark, out) == want
+
+    plan = _write_plan(spark, batches[0])
+    assert "== Final Plan ==" in plan, plan
+    final = plan.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    exchanges = re.findall(r"Exchange \((\d+)\)", final)
+    assert len(exchanges) == 1, final
+    node = re.search(rf"^\({exchanges[0]}\) Exchange\n(.*?)\n\n", plan, re.S | re.M)
+    assert "REBALANCE_PARTITIONS_BY_COL" in node.group(1), node.group(1)
 
 
 def test_sessionize_boundary_gap_exactly_equal(spark, tmp_path):
