@@ -8,10 +8,7 @@ blocking metrics."""
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -26,7 +23,7 @@ from featurestore_for_joycastle_java_spark.operators.similarity import (
 )
 from featurestore_for_joycastle_java_spark.operators.text import shingles
 from featurestore_for_joycastle_java_spark.registry import query
-from featurestore_for_joycastle_java_spark.sources import load_table
+from featurestore_for_joycastle_java_spark.sources import build_once, load_table
 
 
 #: Cross-engine content fingerprint: md5 of the trimmed, lower-cased,
@@ -900,17 +897,6 @@ def dedup_hamming1_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: sf_dir -> persisted base-corpus signature parquet path (one write per
-#: process, atexit-cleaned — the "signatures live in storage" half of the
-#: incremental workflow).
-_SIG_SCRATCH: dict[str, str] = {}
-
-
-#: sf_dir -> persisted corpus fingerprint-index parquet path (the exact-
-#: dedup twin of _SIG_SCRATCH; one write per process, atexit-cleaned).
-_FP_SCRATCH: dict[str, str] = {}
-
-
 @query(
     "dedup_incremental_exact",
     oracle=f"""
@@ -960,10 +946,7 @@ def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
 
-    fp_path = _FP_SCRATCH.get(sf_dir)
-    if fp_path is None:
-        root = tempfile.mkdtemp(prefix="fs_fpidx_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    def build(root: str) -> str:
         fp_path = os.path.join(root, "fp_index")
         (
             docs.select(
@@ -974,8 +957,10 @@ def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(fp_path)
         )
-        _FP_SCRATCH[sf_dir] = fp_path
-    idx = spark.read.parquet(fp_path)
+        return fp_path
+
+    # the corpus index is persisted once per process
+    idx = spark.read.parquet(build_once(("fpidx", sf_dir), build))
 
     from pyspark.sql import Window
 
@@ -1301,16 +1286,15 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = docs.filter(F.col("doc_id") % 5 == 0)
     base = docs.filter(F.col("doc_id") % 5 != 0)
 
-    sig_path = _SIG_SCRATCH.get(sf_dir)
-    if sig_path is None:
-        root = tempfile.mkdtemp(prefix="fs_sigs_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    def build(root: str) -> str:
         sig_path = os.path.join(root, "base_sigs")
         D.minhash_signatures(
             base, "doc_id", "text", shingle_k=3, num_perm=64
         ).write.mode("overwrite").parquet(sig_path)
-        _SIG_SCRATCH[sf_dir] = sig_path
-    base_sigs = spark.read.parquet(sig_path)
+        return sig_path
+
+    # the corpus signatures are persisted once per process
+    base_sigs = spark.read.parquet(build_once(("sigs", sf_dir), build))
 
     return D.minhash_lsh_pairs_incremental(
         base,

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from featurestore_for_joycastle_java_spark.operators.ingest import (
     FIXTURE_EVENT_FIELDS,
+    completeness_filter,
     fixture_ingest,
 )
 from featurestore_for_joycastle_java_spark.operators.relational import (
@@ -102,7 +103,7 @@ def ingest_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Op #6: field-completeness validation (CMT:130-132) — count of rows
     surviving the all-fields-present filter."""
     events = load_table(spark, sf_dir, "events")
-    valid = events.na.drop(subset=FIXTURE_EVENT_FIELDS)
+    valid = completeness_filter(events, fields=FIXTURE_EVENT_FIELDS)
     return valid.agg(F.count(F.lit(1)).alias("n_valid"))
 
 

@@ -5,10 +5,7 @@ and schema evolution across written files."""
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -20,7 +17,12 @@ from featurestore_for_joycastle_java_spark.operators.ranks import (
     global_row_number,
 )
 from featurestore_for_joycastle_java_spark.registry import query
-from featurestore_for_joycastle_java_spark.sources import load_table, write_any
+from featurestore_for_joycastle_java_spark.sources import (
+    build_once,
+    load_table,
+    scratch_dir,
+    write_any,
+)
 
 
 # bits=17: the engine's own quality gate pins value < 1000, so
@@ -58,11 +60,6 @@ def layout_morton_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         y.alias("y"),
         morton_key(x, y, bits=17).cast("bigint").alias("morton"),
     )
-
-
-#: sf_dir -> already-written partitioned-events scratch path (see
-#: layout_partition_prune: one write per process, atexit-cleaned).
-_PART_SCRATCH: dict[str, str] = {}
 
 
 @query(
@@ -151,16 +148,15 @@ def layout_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.to_date("ts").alias("event_date"),
     )
-    # One scratch write per (process, sf_dir): repeated construction —
-    # plan lint, parametrized tests, bench warmup — reuses the layout
-    # instead of leaking a fresh mkdtemp per call; atexit removes it.
-    path = _PART_SCRATCH.get(sf_dir)
-    if path is None:
-        base = tempfile.mkdtemp(prefix="fs_part_")
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-        path = os.path.join(base, "events_by_date")
+
+    def build(root: str) -> str:
+        path = os.path.join(root, "events_by_date")
         write_any(ev, path, partition_by=["event_date"])
-        _PART_SCRATCH[sf_dir] = path
+        return path
+
+    # One scratch write per (process, sf_dir): repeated construction —
+    # plan lint, parametrized tests, bench warmup — reuses the layout.
+    path = build_once(("part", sf_dir), build)
     back = spark.read.parquet(path).filter(
         F.col("event_date") == F.lit("2024-01-15").cast("date")
     )
@@ -309,8 +305,7 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # spark-warehouse location outlives the (session-scoped) table
         # metadata, so a managed table would hit LOCATION_ALREADY_EXISTS
         # on the next process (caught by the r7 full-registry sweep)
-        root = tempfile.mkdtemp(prefix="fs_bkt_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        root = scratch_dir("fs_bkt_")
         for t in (lt, ot):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
         li = load_table(spark, sf_dir, "lineitem").select(
@@ -497,11 +492,6 @@ def layout_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: sf_dir -> scratch root holding the two heterogeneous-schema parquet
-#: batches (one write per process, atexit-cleaned).
-_EVOLVE_SCRATCH: dict[str, str] = {}
-
-
 @query(
     "layout_schema_evolution",
     # The batches are DERIVED from orders deterministically (even keys =
@@ -543,10 +533,8 @@ def layout_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined. Scratch batches are written once per process and
     atexit-cleaned (plan-lint eager list, tests/test_plan_lint.py).
     """
-    root = _EVOLVE_SCRATCH.get(sf_dir)
-    if root is None or not os.path.isdir(root):
-        root = tempfile.mkdtemp(prefix="fs_evolve_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+
+    def build(root: str) -> str:
         orders = load_table(spark, sf_dir, "orders")
         (
             orders.filter(F.col("o_orderkey") % 2 == 0)
@@ -560,8 +548,9 @@ def layout_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(os.path.join(root, "b2"))
         )
-        _EVOLVE_SCRATCH[sf_dir] = root
+        return root
 
+    root = build_once(("evolve", sf_dir), build)
     unified = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(root, "b1"), os.path.join(root, "b2")
     )

@@ -26,7 +26,6 @@ accumulators overflow only past ~1e13 rows per group."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -47,6 +46,7 @@ from featurestore_for_joycastle_java_spark.registry import query
 from featurestore_for_joycastle_java_spark.sources import (
     load_table,
     read_any,
+    scratch_dir,
     write_any,
 )
 
@@ -504,7 +504,7 @@ def formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     schema = "l_orderkey long, l_linenumber int, l_quantity double, l_returnflag string"
     out = None
-    base = tempfile.mkdtemp(prefix="fs_fmt_")
+    base = scratch_dir("fs_fmt_")
     for fmt in ("csv", "json", "orc"):
         path = os.path.join(base, fmt)
         write_any(li, path, fmt=fmt)

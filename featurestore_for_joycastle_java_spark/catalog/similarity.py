@@ -7,10 +7,7 @@ centroid drift, cluster purity, kNN accuracy, triplet margins)."""
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -22,7 +19,7 @@ from featurestore_for_joycastle_java_spark.operators.similarity import (
 )
 from featurestore_for_joycastle_java_spark.registry import query
 from featurestore_for_joycastle_java_spark.session import thread_target
-from featurestore_for_joycastle_java_spark.sources import load_table
+from featurestore_for_joycastle_java_spark.sources import build_once, load_table
 
 
 @query(
@@ -681,11 +678,6 @@ def sim_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(10)
 
 
-#: sf_dir -> (index_dir, cent_path) for the incremental IVF index (base
-#: assignments + centroid set persisted once per process; atexit-cleaned).
-_IVF_SCRATCH: dict[str, tuple[str, str]] = {}
-
-
 @query(
     "sim_ivf_incremental",
     # Same fully-replayable shape as sim_ivf_topk, with the centroid set
@@ -764,10 +756,7 @@ def sim_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = e.filter(F.col("vec_id") % 5 != 0)
     batch = e.filter(F.col("vec_id") % 5 == 0)
 
-    paths = _IVF_SCRATCH.get(sf_dir)
-    if paths is None:
-        root = tempfile.mkdtemp(prefix="fs_ivfidx_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    def build(root: str) -> str:
         cent_path = os.path.join(root, "centroids")
         base_seg = os.path.join(root, "seg_base")
         batch_seg = os.path.join(root, "seg_batch")
@@ -794,10 +783,11 @@ def sim_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_nearest_cell(c_new, stored, "vec_id").write.mode(
             "overwrite"
         ).parquet(batch_seg)
-        paths = (root, cent_path)
-        _IVF_SCRATCH[sf_dir] = paths
-    root, cent_path = paths
-    cents = spark.read.parquet(cent_path)
+        return root
+
+    # base assignments and the centroid set are persisted once per process
+    root = build_once(("ivfidx", sf_dir), build)
+    cents = spark.read.parquet(os.path.join(root, "centroids"))
     index = spark.read.parquet(os.path.join(root, "seg_base")).unionByName(
         spark.read.parquet(os.path.join(root, "seg_batch"))
     )

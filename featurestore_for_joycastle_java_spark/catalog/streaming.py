@@ -6,10 +6,7 @@ DuckDB. Batch/stream equivalence IS the check."""
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -24,7 +21,7 @@ from featurestore_for_joycastle_java_spark.operators.relational import (
 )
 from featurestore_for_joycastle_java_spark.registry import query
 from featurestore_for_joycastle_java_spark.session import narrow_shuffle_width
-from featurestore_for_joycastle_java_spark.sources import load_table
+from featurestore_for_joycastle_java_spark.sources import build_once, load_table
 
 
 #: Per-trigger progress of the most recent drains, appended by ``_run``
@@ -41,6 +38,9 @@ DRAIN_WIDTH = 4
 
 def _run(spark: SparkSession, stream_df: DataFrame, mode: str) -> DataFrame:
     """Drain a stream to a memory sink and return it as a batch DataFrame.
+    The sink's view is dropped once the frame is built: the frame keeps
+    the analyzed in-memory plan, so the drained rows live as long as the
+    frame does, not until the session ends.
 
     Stateful streaming cost scales with shuffle partitions — every partition
     gets its own state-store instance (and, for applyInPandasWithState, its
@@ -85,7 +85,9 @@ def _run(spark: SparkSession, stream_df: DataFrame, mode: str) -> DataFrame:
             )
     except Exception:  # progress is diagnostics — never fail the query
         pass
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @query(
@@ -411,11 +413,6 @@ def stream_hourly_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: sf_dir -> (dim_dir, out_dir) for the PIT-enrich composite (the dim
-#: maintenance + enrichment drains run once per process; atexit-cleaned).
-_PIT_SCRATCH: dict[str, tuple[str, str]] = {}
-
-
 @query(
     "stream_pit_enrich",
     # Leakage-free by construction: an event is enriched only with a
@@ -463,10 +460,8 @@ def stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi_asof_join on user_id — the dimension re-read each batch, no
     state held for the join side. At 100 TB both halves are the standard
     continuously-updated feature-serving pattern."""
-    paths = _PIT_SCRATCH.get(sf_dir)
-    if paths is None:
-        root = tempfile.mkdtemp(prefix="fs_pit_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+
+    def build(root: str) -> str:
         dim_dir = os.path.join(root, "dim")
         out_dir = os.path.join(root, "out")
 
@@ -495,10 +490,10 @@ def stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q2 = pit_enrich_stream_sink(clicks, dim_dir, out_dir)
         q2.awaitTermination()
-        _PIT_SCRATCH[sf_dir] = (dim_dir, out_dir)
-    else:
-        _, out_dir = paths
+        return out_dir
 
+    # both drains run once per process
+    out_dir = build_once(("pit", sf_dir), build)
     return spark.read.parquet(out_dir).select(
         "event_id", "user_id", "profile_value", "prof_ts_us"
     )
@@ -535,20 +530,7 @@ def pit_enrich_stream_sink(
             os.path.join(out_dir, f"b={batch_id}")
         )
 
-    return (
-        clicks.writeStream.foreachBatch(enrich_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or tempfile.mkdtemp(prefix="fs_ckpt_"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-#: sf_dir -> decisions dir for the streaming incremental dedup (drained
-#: once per process; atexit-cleaned).
-_SDEDUP_SCRATCH: dict[str, str] = {}
+    return ST.drain_each_batch(clicks, enrich_batch, checkpoint_dir)
 
 
 def _incremental_dedup_processor(idx_dir: str, out_dir: str):
@@ -569,9 +551,6 @@ def _incremental_dedup_processor(idx_dir: str, out_dir: str):
     from featurestore_for_joycastle_java_spark.operators.text import (
         fingerprint,
     )
-    from featurestore_for_joycastle_java_spark.streaming import (
-        _committed_versions,
-    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -584,12 +563,11 @@ def _incremental_dedup_processor(idx_dir: str, out_dir: str):
             .rowsBetween(Window.unboundedPreceding, -1)
         )
         pm = bfp.withColumn("pmin", F.min("doc_id").over(w))
-        prev = [v for v in _committed_versions(idx_dir) if v < batch_id]
-        if prev:
-            idx = sp.read.parquet(os.path.join(idx_dir, f"v={max(prev)}"))
-            j = pm.join(idx, "fp", "left")
-        else:
+        idx = ST.newest_snapshot(sp, idx_dir, below=batch_id)
+        if idx is None:
             j = pm.withColumn("keep_id", F.lit(None).cast("long"))
+        else:
+            j = pm.join(idx, "fp", "left")
         dup_of = F.least("keep_id", "pmin")
         dec = j.select(
             "doc_id",
@@ -603,12 +581,7 @@ def _incremental_dedup_processor(idx_dir: str, out_dir: str):
         accepted = dec.filter("accept").select(
             "fp", F.col("doc_id").alias("keep_id")
         )
-        new_idx = (
-            sp.read.parquet(os.path.join(idx_dir, f"v={max(prev)}"))
-            .unionByName(accepted)
-            if prev
-            else accepted
-        )
+        new_idx = accepted if idx is None else idx.unionByName(accepted)
         new_idx.write.mode("overwrite").parquet(
             os.path.join(idx_dir, f"v={batch_id}")
         )
@@ -669,10 +642,8 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index (at 100 TB: a Bloom-fronted key-value table; here the
     plain-parquet expression of it). The corpus is never rescanned —
     the index carries everything the stream needs."""
-    out_dir = _SDEDUP_SCRATCH.get(sf_dir)
-    if out_dir is None:
-        root = tempfile.mkdtemp(prefix="fs_sdedup_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+
+    def build(root: str) -> str:
         src_dir = os.path.join(root, "src")
         idx_dir = os.path.join(root, "idx")
         out_dir = os.path.join(root, "out")
@@ -689,30 +660,18 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             for fn in os.listdir(d):
                 os.utime(os.path.join(d, fn), (t, t))
 
-        process = _incremental_dedup_processor(idx_dir, out_dir)
-
         stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", "1")
             .parquet(os.path.join(src_dir, "*"))
         )
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="fs_ckpt_")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _SDEDUP_SCRATCH[sf_dir] = out_dir
+        ST.drain_each_batch(
+            stream, _incremental_dedup_processor(idx_dir, out_dir)
+        ).awaitTermination()
+        return out_dir
 
+    out_dir = build_once(("sdedup", sf_dir), build)  # one drain per process
     return spark.read.parquet(out_dir).select("doc_id", "dup_of", "accept")
-
-
-#: sf_dir -> (sink_dir, n_dropped) for the watermark-drop stream (one
-#: drain per process, atexit-cleaned).
-_LATE_SCRATCH: dict[str, tuple[str, int]] = {}
 
 
 @query(
@@ -788,10 +747,8 @@ def stream_late_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts are the ops signal for "our producers are later than the
     watermark budget".
     """
-    hit = _LATE_SCRATCH.get(sf_dir)
-    if hit is None or not os.path.isdir(hit[0]):
-        root = tempfile.mkdtemp(prefix="fs_late_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+
+    def build(root: str) -> str:
         src = os.path.join(root, "src")
         out = os.path.join(root, "out")
         os.makedirs(src)
@@ -851,14 +808,10 @@ def stream_late_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        dropped = sum(
-            op.get("numRowsDroppedByWatermark", 0)
-            for p in q.recentProgress
-            for op in p.get("stateOperators", [])
-        )
-        _LATE_SCRATCH[sf_dir] = (out, dropped)
-        hit = (out, dropped)
-    return spark.read.parquet(hit[0]).orderBy("window_start")
+        return out
+
+    out = build_once(("late", sf_dir), build)  # one drain per process
+    return spark.read.parquet(out).orderBy("window_start")
 
 
 # ---------------------------------------------- streaming trending top-k
@@ -962,54 +915,55 @@ def stream_quota_enforcement(spark: SparkSession, sf_dir: str) -> DataFrame:
     State is three scalars per user (see the operator docstring for the
     100 TB envelope and the ordering contract); the final emission per
     user wins by total-events-seen, a deterministic monotone tiebreak."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id"
-    )
-    max_id = ev.agg(F.max("event_id")).collect()[0][0]  # 1 scalar: batch
-    # boundaries for the 3-file source (the graph_bfs_hops precedent for
-    # single-scalar driver values)
-    cut1, cut2 = max_id // 3, 2 * max_id // 3
-    root = tempfile.mkdtemp(prefix="fs_quota_src_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    base_t = 1_700_000_000
-    # ONE partitioned pass builds all three batch files (r12 opt, guide
-    # §2.4: the previous three filter+coalesce(1) writes each re-scanned
-    # events single-threaded — 3 scans + 3 serial writes for one table).
-    # repartition(3, "__b") puts each batch id in exactly one task, so
-    # every __b=i directory holds exactly one parquet file; the files
-    # are then moved to the mtime-staged f0/f1/f2 layout the stream
-    # glob expects (partition-dir names would otherwise add a __b
-    # column under schema inference). Row order inside a file changes
-    # vs the coalesce(1) write, but the rate limiter sorts each batch
-    # group by (ts, event_id) in-worker, so admission is order-free.
-    # Measured (interleaved A/B, sf0.1, local[32]): 8.58 → 7.19 s.
-    stage = tempfile.mkdtemp(prefix="fs_quota_stage_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    b = (
-        F.when(F.col("event_id") <= cut1, 0)
-        .when(F.col("event_id") <= cut2, 1)
-        .otherwise(2)
-    )
-    (
-        ev.withColumn("__b", b)
-        .repartition(3, "__b")
-        .write.partitionBy("__b")
-        .mode("overwrite")
-        .parquet(stage)
-    )
-    for i in range(3):
-        d = os.path.join(root, f"f{i}")
-        os.makedirs(d, exist_ok=True)
-        srcd = os.path.join(stage, f"__b={i}")
-        files = [fn for fn in os.listdir(srcd) if fn.endswith(".parquet")]
-        assert len(files) == 1, files
-        dst = os.path.join(d, files[0])
-        os.rename(os.path.join(srcd, files[0]), dst)
-        os.utime(dst, (base_t + i * 100, base_t + i * 100))
+
+    def stage(root: str) -> str:
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id"
+        )
+        max_id = ev.agg(F.max("event_id")).collect()[0][0]  # 1 scalar: batch
+        # boundaries for the 3-file source (the graph_bfs_hops precedent
+        # for single-scalar driver values)
+        cut1, cut2 = max_id // 3, 2 * max_id // 3
+        src, parts = os.path.join(root, "src"), os.path.join(root, "parts")
+        base_t = 1_700_000_000
+        # ONE partitioned pass builds all three batch files (three
+        # filter+coalesce(1) writes would each re-scan events
+        # single-threaded). repartition(3, "__b") puts each batch id in
+        # exactly one task, so every __b=i directory holds exactly one
+        # parquet file; the files are then moved to the mtime-staged
+        # f0/f1/f2 layout the stream glob expects (partition-dir names
+        # would otherwise add a __b column under schema inference). Row
+        # order inside a file is free: the rate limiter sorts each batch
+        # group by (ts, event_id) in-worker.
+        b = (
+            F.when(F.col("event_id") <= cut1, 0)
+            .when(F.col("event_id") <= cut2, 1)
+            .otherwise(2)
+        )
+        (
+            ev.withColumn("__b", b)
+            .repartition(3, "__b")
+            .write.partitionBy("__b")
+            .mode("overwrite")
+            .parquet(parts)
+        )
+        for i in range(3):
+            d = os.path.join(src, f"f{i}")
+            os.makedirs(d, exist_ok=True)
+            srcd = os.path.join(parts, f"__b={i}")
+            files = [fn for fn in os.listdir(srcd) if fn.endswith(".parquet")]
+            assert len(files) == 1, files
+            dst = os.path.join(d, files[0])
+            os.rename(os.path.join(srcd, files[0]), dst)
+            os.utime(dst, (base_t + i * 100, base_t + i * 100))
+        return src
+
+    # the staging is a function of the fixture: once per process
+    src = build_once(("quota", sf_dir), stage)
     stream = (
         spark.readStream.schema("event_id long, ts timestamp, user_id long")
         .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "*"))
+        .parquet(os.path.join(src, "*"))
     )
     out = _run(
         spark,

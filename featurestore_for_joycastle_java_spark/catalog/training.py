@@ -19,7 +19,7 @@ from featurestore_for_joycastle_java_spark.operators.relational import (
 )
 from featurestore_for_joycastle_java_spark.operators.text import tokens
 from featurestore_for_joycastle_java_spark.registry import query
-from featurestore_for_joycastle_java_spark.sources import load_table
+from featurestore_for_joycastle_java_spark.sources import build_once, load_table
 
 
 @query(
@@ -1222,11 +1222,6 @@ def train_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- sharded export
 
-#: sf_dir -> export scratch dir (one write per process, atexit-cleaned —
-#: the same persist-once pattern as the dedup signature scratches).
-_EXPORT_SCRATCH: dict[str, str] = {}
-
-
 @query(
     "train_export_shards",
     # The manifest the engine reads back FROM THE FILES must equal the
@@ -1264,16 +1259,11 @@ def train_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine-friendly manifest agg using the `diag_table_checksum`
     summation. Eager at construction (once per process, atexit-cleaned
     scratch), listed in the plan-lint eager set."""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
-    out = _EXPORT_SCRATCH.get(sf_dir)
-    if out is None:
-        root = tempfile.mkdtemp(prefix="fs_export_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+
+    def build(root: str) -> str:
         out = os.path.join(root, "shards")
         (
             docs.select(
@@ -1287,8 +1277,10 @@ def train_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("shard_id")
             .text(out)
         )
-        _EXPORT_SCRATCH[sf_dir] = out
-    lines = spark.read.text(out)  # partition col shard_id discovered
+        return out
+
+    # written once per process; the read discovers partition col shard_id
+    lines = spark.read.text(build_once(("export", sf_dir), build))
     fp = F.conv(
         F.substring(F.md5(F.col("value")), 1, 10), 16, 10
     ).cast("decimal(38,0)")

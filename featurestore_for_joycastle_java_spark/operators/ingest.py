@@ -198,14 +198,18 @@ def fixture_ingest(events: DataFrame) -> DataFrame:
     """Reference pipeline over the fixture events table (already typed, so
     op #3 is a no-op). Extracts the first number in ``props`` for purchase/
     signup rows into ``event_value``; other rows keep their ``value``
-    (mirrors the keep-original branch, CMT:124)."""
-    extracted = F.regexp_extract(F.col("props"), NUMBER_PATTERN, 1)
-    with_value = events.withColumn(
-        "event_value",
-        F.when(
-            F.col("event_type").isin(*FIXTURE_EXTRACT_TYPES) & (extracted != F.lit("")),
-            extracted.cast("double"),
-        ).otherwise(F.col("value")),
+    (mirrors the keep-original branch, CMT:124). A regex match is a digit
+    string, so its cast is never null and the coalesce falls back to
+    ``value`` exactly where nothing was extracted."""
+    extracted = extract_numeric_feature(
+        events,
+        detail_col="props",
+        type_col="event_type",
+        event_types=FIXTURE_EXTRACT_TYPES,
+        out_col="event_value",
+    )
+    with_value = extracted.withColumn(
+        "event_value", F.coalesce(F.col("event_value"), F.col("value"))
     )
     valid = completeness_filter(with_value, fields=FIXTURE_EVENT_FIELDS)
     return valid.select(

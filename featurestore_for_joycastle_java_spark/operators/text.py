@@ -86,11 +86,6 @@ def _hits_in(tk: Column, stopwords: list[str]) -> Column:
     return F.size(F.filter(tk, lambda x: F.array_contains(arr, x)))
 
 
-def stopword_hits(col: Column, stopwords: list[str]) -> Column:
-    """How many tokens are in the stopword set (with repeats)."""
-    return _hits_in(tokens(col), stopwords)
-
-
 def quality_score(col: Column) -> Column:
     """Heuristic quality in [0,1]: length credit + stopword-presence credit
     - punctuation-spam penalty. Deterministic double arithmetic. The token

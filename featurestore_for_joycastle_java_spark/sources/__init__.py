@@ -9,14 +9,58 @@ reference has none, but the engine needs them — fixtures are parquet).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 import threading
 import weakref
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from featurestore_for_joycastle_java_spark.schemas import TABLE_NAMES
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh temp directory for the engine's own intermediate files
+    (staged sources, persisted indexes, stream checkpoints), removed when
+    the interpreter exits. The package's only ``mkdtemp``."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+#: (name, *parts) -> (root, value) for :func:`build_once`.
+_BUILT: dict[tuple, tuple[str, Any]] = {}
+
+
+def build_once(key: tuple, build: Callable[[str], Any]) -> Any:
+    """``build(root)`` run once per process and ``key`` in a fresh
+    ``scratch_dir("fs_<key[0]>_")``; later calls return its value. A key
+    whose root has vanished is built again. Two threads that miss
+    together each build into their own directory and the later store
+    wins, so a race costs one build, never a wrong answer."""
+    hit = _BUILT.get(key)
+    if hit is None or not os.path.isdir(hit[0]):
+        root = scratch_dir(f"fs_{key[0]}_")
+        hit = (root, build(root))
+        _BUILT[key] = hit
+    return hit[1]
+
+
+def read_nanos_as_long(spark: SparkSession) -> None:
+    """Read timestamp[ns] parquet (older fixtures' ``events.ts``) as long
+    nanos, which :func:`normalize_events_ts` converts. Writes the session
+    conf only when it is not already set, so a session from ``get_spark``
+    (which sets it at build time) sees no conf write."""
+    if spark.conf.get(_NANOS_AS_LONG, "false") != "true":
+        spark.conf.set(_NANOS_AS_LONG, "true")
+
 
 #: session -> {(absolute path, st_mtime_ns, st_size): inferred schema}.
 #: Weak keys: a dropped session takes its schemas with it, and a
@@ -31,8 +75,8 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     (session, file). Inference launches one footer-merge job; reads that
     pass the cached schema launch none. Two threads that miss together both
     infer and store the same schema, so a race costs a job, never a wrong
-    schema. Callers set the nanosAsLong conf first, as :func:`load_table`
-    does."""
+    schema. Callers call :func:`read_nanos_as_long` first, as
+    :func:`load_table` does."""
     st = os.stat(path)
     key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
     with _SCHEMAS_LOCK:
@@ -72,11 +116,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pushes them into the scan; verify with .explain →
     PushedFilters/ReadSchema).
 
-    The nanosAsLong legacy conf is set on every call, not only in the
-    session factory: a session built elsewhere must still read
-    timestamp[ns] ``events.ts`` as long nanos, which
-    :func:`normalize_events_ts` then converts."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    The nanosAsLong legacy conf is checked on every call, not only set in
+    the session factory: a session built elsewhere must still read
+    timestamp[ns] ``events.ts`` as long nanos (:func:`read_nanos_as_long`)."""
+    read_nanos_as_long(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":

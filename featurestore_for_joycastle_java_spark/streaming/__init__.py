@@ -25,7 +25,7 @@ horizon accordingly and prefer RocksDB state store on real clusters.
 from __future__ import annotations
 
 import os
-import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -34,24 +34,26 @@ from featurestore_for_joycastle_java_spark.operators.relational import exact_sum
 
 from featurestore_for_joycastle_java_spark.schemas import EVENTS
 from featurestore_for_joycastle_java_spark.sources import (
+    build_once,
     normalize_events_ts,
     parquet_schema,
+    read_nanos_as_long,
+    scratch_dir,
 )
 
 
-#: dir-of-symlinks cache: Spark's file stream source requires a DIRECTORY,
-#: fixtures are single read-only files — bridge with a tempdir symlink.
-_STREAM_DIRS: dict[str, str] = {}
-
-
 def _as_stream_dir(file_path: str) -> str:
+    """Spark's file stream source reads a DIRECTORY; fixtures are single
+    read-only files, so a file is streamed through a scratch directory
+    holding one symlink to it (made once per process and file)."""
     if os.path.isdir(file_path):
         return file_path
-    if file_path not in _STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix="fs_stream_src_")
-        os.symlink(file_path, os.path.join(d, os.path.basename(file_path)))
-        _STREAM_DIRS[file_path] = d
-    return _STREAM_DIRS[file_path]
+
+    def link(root: str) -> str:
+        os.symlink(file_path, os.path.join(root, os.path.basename(file_path)))
+        return root
+
+    return build_once(("stream_src", file_path), link)
 
 
 def file_stream_source(
@@ -67,7 +69,7 @@ def file_stream_source(
     per session and file by ``sources.parquet_schema`` (the same cache
     ``load_table`` uses), then ts is normalized to a session-local
     timestamp exactly like ``load_table`` does for batch."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    read_nanos_as_long(spark)
     path = os.path.join(sf_dir, "events.parquet")
     reader = spark.readStream.schema(parquet_schema(spark, path))
     if max_files_per_trigger:
@@ -94,6 +96,37 @@ def drain_to_memory(
     return q
 
 
+def drain_each_batch(
+    stream_df: DataFrame,
+    write_batch: Callable[[DataFrame, int], None],
+    checkpoint_dir: str | None = None,
+    available_now: bool = True,
+):
+    """Start ``stream_df`` with ``write_batch(batch_df, batch_id)`` run on
+    every micro-batch — the engine's one ``foreachBatch`` starter. The
+    checkpoint commits a batch's source offsets after its write, so a
+    sink that overwrites an output of its own ``batch_id`` is
+    exactly-once: a batch replayed after a failure between write and
+    commit lands on top of its own partial output. The default
+    checkpoint is a ``scratch_dir`` removed at exit, since nothing can
+    resume a fresh temp checkpoint; pass ``checkpoint_dir`` to resume a
+    drain across processes.
+
+    ``available_now`` drains what is available, then stops (the
+    reference's drain-then-stop, CMT:104-110). On a
+    SimpleDataSourceStreamReader it drains only the batch prefetched at
+    query start (its "available" horizon is one read() call): pass
+    ``available_now=False`` and stop() explicitly to pump a multi-batch
+    Python source (see tests); file and Kafka sources drain fully either
+    way."""
+    writer = stream_df.writeStream.foreachBatch(write_batch).option(
+        "checkpointLocation", checkpoint_dir or scratch_dir("fs_ckpt_")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def demux_stream_sink(
     stream_df: DataFrame,
     out_dir: str,
@@ -105,24 +138,17 @@ def demux_stream_sink(
     reference's per-type buffered inserts without the races (D4) or tail
     loss (D2). A micro-batch is written as one parquet file per route
     (``batch=<batch_id>/<key_col>=<route>/``), or several when a route is
-    larger than AQE's advisory partition size. Exactly-once: each
-    micro-batch OVERWRITES its own ``batch=<batch_id>`` subdirectory, so
-    a batch replayed after a failure between sink write and checkpoint
-    commit lands on top of its own partial output instead of appending a
-    duplicate; the route-to-task hash is deterministic, so the replay
-    writes the same layout. Readers scan ``out_dir`` and see ``batch`` +
-    ``key_col`` as discovered partition columns."""
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="fs_ckpt_")
+    larger than AQE's advisory partition size. Exactly-once
+    (:func:`drain_each_batch`): each micro-batch OVERWRITES its own
+    ``batch=<batch_id>`` subdirectory, and the route-to-task hash is
+    deterministic, so a replayed batch writes the same layout. Readers
+    scan ``out_dir`` and see ``batch`` + ``key_col`` as discovered
+    partition columns."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         demux_write(batch_df, os.path.join(out_dir, f"batch={batch_id}"), key_col=key_col)
 
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_each_batch(stream_df, write_batch, checkpoint_dir)
 
 
 def jdbc_demux_stream_sink(
@@ -150,8 +176,6 @@ def jdbc_demux_stream_sink(
     is the parquet ``demux_stream_sink`` (per-batch-id overwrite)."""
     from featurestore_for_joycastle_java_spark.sources import jdbc_batched_sink
 
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="fs_ckpt_")
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
@@ -166,12 +190,7 @@ def jdbc_demux_stream_sink(
         finally:
             batch_df.unpersist()
 
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_each_batch(stream_df, write_batch, checkpoint_dir)
 
 
 def tumbling_counts(
@@ -350,8 +369,6 @@ def scd1_upsert_stream_sink(
     input at one row per touched key."""
     from featurestore_for_joycastle_java_spark.operators.scd import scd1_upsert
 
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="fs_ckpt_")
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         payload = [c for c in batch_df.columns if c != key_col]
@@ -368,31 +385,13 @@ def scd1_upsert_stream_sink(
             )
             .select(key_col, *[F.col(f"__s.{c}").alias(c) for c in payload])
         )
-        prev = [
-            v
-            for v in _committed_versions(dim_dir)
-            if v < batch_id
-        ]
-        if prev:
-            dim = spark.read.parquet(os.path.join(dim_dir, f"v={max(prev)}"))
-            merged = scd1_upsert(dim, newest, key_col)
-        else:
-            merged = newest
+        dim = newest_snapshot(spark, dim_dir, below=batch_id)
+        merged = newest if dim is None else scd1_upsert(dim, newest, key_col)
         merged.write.mode("overwrite").parquet(
             os.path.join(dim_dir, f"v={batch_id}")
         )
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    # availableNow on a SimpleDataSourceStreamReader drains only the
-    # batch prefetched at query start (its "available" horizon is one
-    # read() call) — pass available_now=False and stop() explicitly to
-    # pump a multi-batch Python source (see tests); file/Kafka sources
-    # drain fully either way.
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_each_batch(stream_df, write_batch, checkpoint_dir, available_now)
 
 
 def _committed_versions(dim_dir: str) -> list[int]:
@@ -410,14 +409,28 @@ def _committed_versions(dim_dir: str) -> list[int]:
     ]
 
 
-def read_dim_latest(spark: SparkSession, dim_dir: str) -> DataFrame:
-    """Current dimension = the highest COMMITTED snapshot version under
-    ``dim_dir`` (see ``scd1_upsert_stream_sink``; versions without a
-    _SUCCESS marker are in-flight or aborted writes and are skipped)."""
-    versions = _committed_versions(dim_dir)
+def newest_snapshot(
+    spark: SparkSession, snap_dir: str, below: int | None = None
+) -> DataFrame | None:
+    """The highest COMMITTED snapshot version under ``snap_dir``, among
+    versions below ``below`` when it is given (the predecessor a batch
+    merges into); None when there is none. Versions without a _SUCCESS
+    marker are in-flight or aborted writes and are skipped."""
+    versions = [
+        v for v in _committed_versions(snap_dir) if below is None or v < below
+    ]
     if not versions:
+        return None
+    return spark.read.parquet(os.path.join(snap_dir, f"v={max(versions)}"))
+
+
+def read_dim_latest(spark: SparkSession, dim_dir: str) -> DataFrame:
+    """Current dimension = the newest committed snapshot under ``dim_dir``
+    (see ``scd1_upsert_stream_sink``)."""
+    dim = newest_snapshot(spark, dim_dir)
+    if dim is None:
         raise FileNotFoundError(f"no committed dimension snapshots under {dim_dir}")
-    return spark.read.parquet(os.path.join(dim_dir, f"v={max(versions)}"))
+    return dim
 
 
 def quota_rate_limiter(

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -19,18 +20,18 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
+    # saveAsTable targets (bucketed-join tests) land in a tempdir, never
+    # the repo, and the tempdir goes with the session
+    warehouse = tempfile.mkdtemp(prefix="fs_warehouse_")
     s = get_spark(
         app_name="featurestore-tests",
         master="local[8]",
         shuffle_partitions=8,
-        # saveAsTable targets (bucketed-join tests) land in a tempdir,
-        # never the repo
-        extra_conf={
-            "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="fs_warehouse_")
-        },
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
     )
     yield s
     s.stop()
+    shutil.rmtree(warehouse, ignore_errors=True)
 
 
 @pytest.fixture(scope="session")

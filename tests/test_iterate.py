@@ -175,3 +175,28 @@ def test_no_hand_rolled_checkpoint_loop():
         for call in _method_calls(stmt, {"localCheckpoint", "checkpoint"})
     ]
     assert not found, f"route these loops through fixpoint: {found}"
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def test_one_scratch_dir_and_one_drain_starter():
+    """Temp directories come from ``sources.scratch_dir`` (removed at
+    exit) and every ``foreachBatch`` sink starts in
+    ``streaming.drain_each_batch``."""
+    owners = {
+        "mkdtemp": (os.path.join("sources", "__init__.py"), "scratch_dir"),
+        "foreachBatch": (os.path.join("streaming", "__init__.py"), "drain_each_batch"),
+    }
+    found = [
+        f"{rel}:{call.lineno}"
+        for rel, tree in _modules()
+        for stmt in tree.body
+        for call in ast.walk(stmt)
+        if isinstance(call, ast.Call)
+        and _callee(call) in owners
+        and owners[_callee(call)] != (rel, getattr(stmt, "name", None))
+    ]
+    assert not found, f"use scratch_dir / drain_each_batch: {found}"

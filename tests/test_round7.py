@@ -10,6 +10,7 @@ tests/test_oracle_parity.py via registry parametrization.)
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 from pyspark.sql import functions as F
@@ -573,12 +574,15 @@ def test_stream_incremental_dedup_two_batches(spark, sf_dir):
     SEPARATE micro-batches (one decisions dir and one index version per
     batch), with the re-crawl batch resolving against the index built
     by the corpus batch — not a one-shot batch job in disguise."""
-    from featurestore_for_joycastle_java_spark.catalog import streaming
+    from featurestore_for_joycastle_java_spark import sources
 
-    # force a fresh drain for this check (per-process scratch caches)
-    streaming._SDEDUP_SCRATCH.pop(sf_dir, None)
-    out = QUERIES["stream_incremental_dedup"](spark, sf_dir)
-    out_dir = streaming._SDEDUP_SCRATCH[sf_dir]
+    # force a fresh drain for this check: build_once rebuilds a key whose
+    # scratch root is gone
+    key = ("sdedup", sf_dir)
+    if key in sources._BUILT:
+        shutil.rmtree(sources._BUILT[key][0])
+    QUERIES["stream_incremental_dedup"](spark, sf_dir)
+    out_dir = sources._BUILT[key][1]
     batch_dirs = sorted(
         d for d in os.listdir(out_dir) if d.startswith("b=")
     )
@@ -931,10 +935,10 @@ def test_schema_evolution_fill_null_contract(spark, sf_dir):
     """mergeSchema fill-null: a column absent from a batch reads as null
     exactly for that batch's rows, and per-row provenance confirms it
     (even keys lack o_orderstatus, odd keys lack o_custkey)."""
-    from featurestore_for_joycastle_java_spark.catalog import layout
+    from featurestore_for_joycastle_java_spark import sources
 
     QUERIES["layout_schema_evolution"](spark, sf_dir)  # builds scratch
-    root = layout._EVOLVE_SCRATCH[sf_dir]
+    root = sources._BUILT[("evolve", sf_dir)][1]
     unified = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(root, "b1"), os.path.join(root, "b2")
     )

@@ -86,6 +86,27 @@ def test_rewritten_file_infers_again(spark, tmp_path):
     assert [tuple(r) for r in got.collect()] == [(3, "x")]
 
 
+def test_shared_session_sees_no_nanos_conf_write(spark, sf_dir, monkeypatch):
+    """The nanosAsLong conf is written only where it is missing: a
+    ``get_spark`` session, which sets it at build time, sees no session
+    conf write from a batch or a stream read of the fixtures."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from featurestore_for_joycastle_java_spark.streaming import file_stream_source
+
+    writes = []
+    real_set = RuntimeConfig.set
+
+    def counting_set(self, key, value):
+        writes.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", counting_set)
+    load_table(spark, sf_dir, "events")
+    file_stream_source(spark, sf_dir)
+    assert writes == []
+
+
 def test_concurrent_loads_agree(spark, sf_dir, tmp_path):
     """The benchmark's warm pass resolves tables from several threads at
     once: a race may infer twice, never return a wrong schema."""
