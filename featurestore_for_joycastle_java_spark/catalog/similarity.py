@@ -13,6 +13,9 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from featurestore_for_joycastle_java_spark.operators import similarity as S
 from featurestore_for_joycastle_java_spark.operators.iterate import fixpoint
+from featurestore_for_joycastle_java_spark.operators.relational import (
+    top_k_per_group,
+)
 from featurestore_for_joycastle_java_spark.operators.similarity import (
     ivf_topk,
     srp_topk,
@@ -750,7 +753,6 @@ def sim_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_nearest_cell,
         cosine,
     )
-    from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "embeddings")
     base = e.filter(F.col("vec_id") % 5 != 0)
@@ -760,14 +762,7 @@ def sim_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent_path = os.path.join(root, "centroids")
         base_seg = os.path.join(root, "seg_base")
         batch_seg = os.path.join(root, "seg_batch")
-        cents = (
-            base.orderBy("vec_id")
-            .limit(16)
-            .select(
-                F.col("vec_id").alias("cent_id"),
-                as_double(F.col("embedding")).alias("__mv"),
-            )
-        )
+        cents = S.lowid_centroids(base, "vec_id", "embedding", 16)
         cents.write.mode("overwrite").parquet(cent_path)
         stored = spark.read.parquet(cent_path)
         c_base = base.select(
@@ -796,35 +791,15 @@ def sim_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         as_double(F.col("embedding")).alias("__qv"),
     )
-    scored_c = q.join(F.broadcast(cents)).select(
-        "query_id",
-        "__qv",
-        "cent_id",
-        cosine(F.col("__qv"), F.col("__mv")).alias("__cs"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__cs").desc(), F.col("cent_id")
-    )
-    probes = (
-        scored_c.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= 4)
-        .select("query_id", "cent_id", "__qv")
+    probes = S.ivf_probes(q, "query_id", "__qv", cents, 4).select(
+        "query_id", "cent_id", "__qv"
     )
     scored = index.join(F.broadcast(probes), "cent_id").select(
         "query_id",
         "vec_id",
         F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select(
-            "query_id", "vec_id", "cos_sim", F.col("rnk").cast("int").alias("rnk")
-        )
-    )
+    return S.top_k_by_cosine(scored, "query_id", "vec_id", 5)
 
 
 @query(
@@ -894,7 +869,6 @@ def sim_quantized_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         as_double,
         cosine,
     )
-    from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
@@ -927,29 +901,15 @@ def sim_quantized_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = q8.join(F.broadcast(qry)).select(
         "query_id", "vec_id", "qv", F.col("v").alias("cv"), approx.alias("approx")
     )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("vec_id")
-    )
-    cand = (
-        scored.withColumn("crn", F.row_number().over(wc))
-        .filter(F.col("crn") <= 20)
-        .select("query_id", "vec_id", "qv", "cv")
-    )
+    cand = top_k_per_group(
+        scored, ["query_id"], [F.col("approx").desc(), F.col("vec_id")], 20, "crn"
+    ).select("query_id", "vec_id", "qv", "cv")
     rer = cand.select(
         "query_id",
         "vec_id",
         F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id")
-    )
-    return (
-        rer.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select(
-            "query_id", "vec_id", "cos_sim", F.col("rnk").cast("int").alias("rnk")
-        )
-    )
+    return S.top_k_by_cosine(rer, "query_id", "vec_id", 5)
 
 
 @query(
@@ -1024,8 +984,6 @@ def sim_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("qv"),
         F.concat("v", F.array(F.lit(0.0))).alias("qa"),
     )
-    from pyspark.sql import Window
-
     scored = q.crossJoin(aug.select("vec_id", "v", "va")).select(
         "query_id",
         "vec_id",
@@ -1033,23 +991,17 @@ def sim_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "v",
         S.cosine(F.col("qa"), F.col("va")).alias("cos_aug"),
     )
-    w20 = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_aug"), "vec_id"
+    shortlist = top_k_per_group(
+        scored, ["query_id"], [F.desc("cos_aug"), "vec_id"], 20, "crank"
     )
-    shortlist = scored.withColumn(
-        "crank", F.row_number().over(w20)
-    ).filter(F.col("crank") <= 20)
     rerank = shortlist.select(
         "query_id",
         "vec_id",
         F.round(S.dot(F.col("qv"), F.col("v")), 6).alias("dot_r"),
     )
-    w5 = Window.partitionBy("query_id").orderBy(F.desc("dot_r"), "vec_id")
-    return (
-        rerank.withColumn("rnk", F.row_number().over(w5).cast("int"))
-        .filter(F.col("rnk") <= 5)
-        .select("query_id", "vec_id", "dot_r", "rnk")
-    )
+    return top_k_per_group(
+        rerank, ["query_id"], [F.desc("dot_r"), "vec_id"], 5, "rnk"
+    ).select("query_id", "vec_id", "dot_r", F.col("rnk").cast("int").alias("rnk"))
 
 
 # ---------------------------------------------------- cluster purity
@@ -1114,14 +1066,7 @@ def sim_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = emb.select(
         "vec_id", "label", as_double(F.col("embedding")).alias("__cv")
     )
-    cents = (
-        emb.orderBy("vec_id")
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("cent_id"),
-            as_double(F.col("embedding")).alias("__mv"),
-        )
-    )
+    cents = S.lowid_centroids(emb, "vec_id", "embedding", 16)
     assigned = assign_nearest_cell(
         e.select("vec_id", "__cv"), cents, "vec_id"
     ).select("vec_id", "cent_id")
@@ -1449,7 +1394,7 @@ def sim_knn_loo_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_norm,
     )
 
-    # r13 (guide §2.4 / the cosine_pairs precedent): norms are bound ONCE
+    # the cosine_pairs precedent: norms are bound ONCE
     # per row BEFORE the n² theta join, so each pair costs one zip_with
     # dot instead of three interpreted array folds (cosine() recomputes
     # both norms per pair — measured 2.6x on the pair sweep when
@@ -1485,11 +1430,8 @@ def sim_knn_loo_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "b_id",
         )
     )
-    w_n = Window.partitionBy("vec_id").orderBy(
-        F.col("cos").desc(), F.col("b_id")
-    )
-    top5 = p.withColumn("rn", F.row_number().over(w_n)).filter(
-        F.col("rn") <= 5
+    top5 = top_k_per_group(
+        p, ["vec_id"], [F.col("cos").desc(), F.col("b_id")], 5, "rn"
     )
     votes = top5.groupBy("vec_id", "true_label", "nbr_label").agg(
         F.count(F.lit(1)).alias("c")

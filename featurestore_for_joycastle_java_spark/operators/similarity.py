@@ -9,8 +9,11 @@ double-cast inputs, which is what makes exact oracles possible.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
+from featurestore_for_joycastle_java_spark.operators.relational import (
+    top_k_per_group,
+)
 from featurestore_for_joycastle_java_spark.session import thread_target
 
 
@@ -29,8 +32,69 @@ def l2_norm(a) -> Column:
     return F.sqrt(dot(a, a))
 
 
+def unit_vec(col) -> Column:
+    """L2-normalized double copy of an array column. On the unit sphere
+    squared-euclidean ordering equals cosine ordering
+    (||a-b||² = 2-2cosθ), which is what lets euclidean k-means and PQ
+    serve a cosine workload — unnormalized ADC measured 0.30 recall@5
+    vs 0.84+ after."""
+    return _l2_normalized(as_double(col))
+
+
+def _l2_normalized(v) -> Column:
+    """The double array ``v`` divided by its L2 norm, the norm bound ONCE
+    per row via the single-element-transform trick (no CSE across HOF
+    lambdas — see operators/text.py)."""
+    return F.element_at(
+        F.transform(
+            F.array(F.struct(v.alias("v"), l2_norm(v).alias("n"))),
+            lambda s: F.transform(s["v"], lambda x: x / s["n"]),
+        ),
+        1,
+    )
+
+
 def cosine(a, b) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
+
+
+def top_k_by_cosine(
+    scored: DataFrame, query_id_col: str, id_col: str, k: int
+) -> DataFrame:
+    """The last stage of every cosine top-k: per query, the ``k`` rows of
+    ``scored`` (query id, id, ``cos_sim``) with the highest cosine, ties
+    to the lower id, ranked 1..k in an int ``rnk``."""
+    return top_k_per_group(
+        scored, [query_id_col], [F.col("cos_sim").desc(), F.col(id_col)], k, "rnk"
+    ).select(query_id_col, id_col, "cos_sim", F.col("rnk").cast("int").alias("rnk"))
+
+
+def exact_rerank(
+    cand: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    k: int,
+) -> DataFrame:
+    """Exact cosine top-k over candidate (query id, id) pairs: join the
+    full query and corpus vectors back onto ``cand`` only, so exact math
+    runs on the candidates, never on the corpus × queries product."""
+    q = queries.select(
+        F.col(query_id_col), as_double(F.col(vec_col)).alias("__qv")
+    )
+    c = corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("__cv"))
+    scored = (
+        cand.join(F.broadcast(q), query_id_col)
+        .join(c, id_col)
+        .select(
+            query_id_col,
+            id_col,
+            F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim"),
+        )
+    )
+    return top_k_by_cosine(scored, query_id_col, id_col, k)
 
 
 def brute_force_topk(
@@ -58,14 +122,7 @@ def brute_force_topk(
         id_col,
         F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(query_id_col, id_col, "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return top_k_by_cosine(scored, query_id_col, id_col, k)
 
 
 #: Most (corpus row, query) pairs one ``brute_force_topk_arrow`` slice
@@ -174,11 +231,11 @@ def brute_force_topk_arrow(
     k: int = 5,
 ) -> DataFrame:
     """Exact top-k by cosine with the scoring pass vectorized — the
-    ground-truth stage of the recall harnesses (r13, VERDICT r12 ask #1,
-    guide §4.2): the |queries|·|corpus| HOF cosine folds become one
-    NumPy pass per Arrow batch against the collected query matrix; the
-    6dp round and the per-query (cos desc, id) window top-k stay in
-    Spark, identical to :func:`brute_force_topk`.
+    ground-truth stage of the recall harnesses: the |queries|·|corpus|
+    HOF cosine folds become one NumPy pass per Arrow batch against the
+    collected query matrix; the 6dp round and the per-query (cos desc,
+    id) window top-k stay in Spark, identical to
+    :func:`brute_force_topk`.
 
     Bit-identity: per pair the kernel replays ``dot(q, c) / (l2(q) *
     l2(c))`` as the identical IEEE float64 sequence — dims accumulate in
@@ -229,14 +286,7 @@ def brute_force_topk_arrow(
     scored = scored.select(
         query_id_col, id_col, F.round(F.col("__cos"), 6).alias("cos_sim")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(query_id_col, id_col, "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return top_k_by_cosine(scored, query_id_col, id_col, k)
 
 
 def cosine_pairs(
@@ -304,9 +354,8 @@ def kmeans_centroids(
     ``corpus_rows``: the corpus row count, when the caller already
     knows it (most do — they sized k ~ sqrt(n) from the same number).
     Sizing the sample fraction needs n; passing it here avoids an extra
-    full ``corpus.count()`` scan per index build (VERDICT r9 ask #4 —
-    one wasted 100 TB pass otherwise). Unknown → counted once,
-    documented cost.
+    full ``corpus.count()`` scan per index build (one wasted 100 TB
+    pass otherwise). Unknown → counted once, documented cost.
 
     ``target_cell_size`` (m̄): when set, OVERRIDES ``n_centroids`` with
     k = max(4, ceil(n / m̄)) — the constant-cell-size parametrization
@@ -333,22 +382,14 @@ def kmeans_centroids(
     # by cosine — on the unit sphere the two orders agree, so normalizing
     # before the fit makes the learned cells match the cosine geometry
     # (un-normalized fit measured 26pp worse recall on the fixtures).
-    # The norm is bound once per row via the single-element-transform
-    # trick (no CSE across HOF lambdas — see operators/text.py).
     v = as_double(F.col(vec_col))
-    normed = F.element_at(
-        F.transform(
-            F.array(F.struct(v.alias("v"), l2_norm(v).alias("n"))),
-            lambda s: F.transform(s["v"], lambda x: x / s["n"]),
-        ),
-        1,
-    )
+    normed = unit_vec(F.col(vec_col))
     # zero-norm vectors have no direction, so they cannot train a
     # spherical fit — and the normalize above would kill the fit on
     # them (ANSI: DIVIDE_BY_ZERO; legacy: null components into
     # array_to_vector). Excluded from the FIT ONLY; assignment still
-    # sees every row and returns cent_id NULL for them (the r12
-    # zero-norm contract shared by all three assignment paths). No-op
+    # sees every row and returns cent_id NULL for them (the zero-norm
+    # contract shared by both assignment paths). No-op
     # filter on vector sets without zero rows — the registered
     # queries' plans and results are unchanged.
     corpus = corpus.filter(l2_norm(v) > 0)
@@ -357,8 +398,8 @@ def kmeans_centroids(
         n = corpus_rows if corpus_rows is not None else corpus.count()
         # floor the sample target at ~40 points per centroid (FAISS's
         # own warn threshold) so a fit_sample chosen close to k can't
-        # hand the fit fewer points than centroids (ADVICE r8); the
-        # sample is seeded but partitioning-dependent (documented)
+        # hand the fit fewer points than centroids; the sample is
+        # seeded but partitioning-dependent (documented)
         target = max(fit_sample, 40 * n_centroids)
         if n > target:
             fit_src = corpus.sample(
@@ -375,7 +416,7 @@ def kmeans_centroids(
             raise  # a full-corpus fit failure is a real error
         # escalating to a full-corpus refit is exactly the O(n*k*iters)
         # cost fit_sample exists to avoid — surface the cause instead of
-        # silently paying it (ADVICE r9)
+        # silently paying it
         warnings.warn(
             f"sampled k-means fit failed ({exc!r}); refitting on the "
             "full corpus — 20 Lloyd passes over every row",
@@ -396,6 +437,36 @@ def kmeans_centroids(
     )
 
 
+def _cell_struct() -> Column:
+    """A centroid row as a fold element: (cent_id, __mv, __mn = |__mv|)."""
+    return F.struct(
+        F.col("cent_id"), F.col("__mv"), l2_norm(F.col("__mv")).alias("__mn")
+    )
+
+
+def _nearest_cell(cells: str) -> Column:
+    """cent_id of the cell in the array column ``cells`` (``_cell_struct``
+    values in cent_id order) with the highest cosine to the row's
+    ``__cv`` (norm ``__cn``). The fold keeps the FIRST max, so ties go to
+    the lowest cent_id. ``try_divide`` makes a zero-norm vector's cosine
+    NULL under both ANSI modes (plain ``/`` throws DIVIDE_BY_ZERO under
+    ANSI), so the fold never beats its init and the row keeps cent_id
+    NULL instead of killing the job."""
+    init = F.struct(
+        F.lit(-2.0).alias("cs"), F.lit(None).cast("long").alias("cent_id")
+    )
+
+    def fold(acc, cent):
+        cs = F.try_divide(
+            dot(F.col("__cv"), cent["__mv"]), F.col("__cn") * cent["__mn"]
+        )
+        return F.when(
+            cs > acc["cs"], F.struct(cs.alias("cs"), cent["cent_id"].alias("cent_id"))
+        ).otherwise(acc)
+
+    return F.aggregate(cells, init, fold)["cent_id"]
+
+
 def assign_nearest_cell(
     c: DataFrame, cents: DataFrame, id_col: str
 ) -> DataFrame:
@@ -413,36 +484,12 @@ def assign_nearest_cell(
     beats the init and the row comes back with cent_id NULL — retained,
     not dropped (the pair stage's null-rejecting equi-join then never
     drops it either: it is always a survivor)."""
-    cents_row = (
-        cents.select(
-            F.struct(
-                F.col("cent_id"), F.col("__mv"), l2_norm(F.col("__mv")).alias("__mn")
-            ).alias("c")
-        )
-        .agg(F.sort_array(F.collect_list("c")).alias("__cents"))
+    cents_row = cents.select(_cell_struct().alias("c")).agg(
+        F.sort_array(F.collect_list("c")).alias("__cents")
     )
     with_norm = c.withColumn("__cn", l2_norm(F.col("__cv")))
-    init = F.struct(
-        F.lit(-2.0).alias("cs"), F.lit(None).cast("long").alias("cent_id")
-    )
-
-    def fold(acc, cent):
-        # try_divide: a zero-norm vector yields NULL cosine under BOTH
-        # ANSI modes (plain `/` throws DIVIDE_BY_ZERO under ANSI), so
-        # the fold never beats the init and the row keeps cent_id NULL
-        # instead of killing the job — identical results for every
-        # nonzero norm (ADVICE r11)
-        cs = F.try_divide(
-            dot(F.col("__cv"), cent["__mv"]), F.col("__cn") * cent["__mn"]
-        )
-        return F.when(
-            cs > acc["cs"], F.struct(cs.alias("cs"), cent["cent_id"].alias("cent_id"))
-        ).otherwise(acc)
-
     return with_norm.join(F.broadcast(cents_row)).select(
-        id_col,
-        "__cv",
-        F.aggregate("__cents", init, fold)["cent_id"].alias("cent_id"),
+        id_col, "__cv", _nearest_cell("__cents").alias("cent_id")
     )
 
 
@@ -493,13 +540,14 @@ def kmeans_centroids_two_level(
     ratios were measuring saturation, not the asymptote. The shape IS
     O(n*2*sqrt(k)) = n^1.5 eventually; when it bites, the next
     escalation is a THIRD level (O(n*3*k^(1/3)) fold work — the same
-    split applied to the coarse stage). SRP-routed assignment
-    (``assign_nearest_cell_srp``) was implemented and MEASURED as the
-    alternative escalation and lost throughout this regime (alpha 1.59
-    vs 0.84 on identical fit/input — centroid code-bucket skew makes
-    its candidate volume grow with k; see its docstring for the
-    numbers and the bucket-capping condition under which it would
-    win).
+    split applied to the coarse stage). SRP-routed assignment was
+    implemented and MEASURED as the alternative escalation and lost at
+    every measured k (SCALETEST_r12: alpha 1.59 vs 0.84 uncapped on
+    identical fit/input, 1.8-5.0x slower with bucket capping through
+    k = 4096 — centroid code-bucket skew makes its candidate volume
+    grow with k, and its per-row candidate materialization costs more
+    than the two streamed folds), so it was removed; SURVEY.md keeps
+    the numbers.
 
     Returns ``(coarse, fine)``: coarse = (coarse_id, __mv); fine =
     (cent_id, coarse_id, __mv) with cent_id = coarse_id·k2 + sub_id,
@@ -529,15 +577,9 @@ def kmeans_centroids_two_level(
     if n > target:
         src = src.sample(fraction=min(1.0, 1.1 * target / n), seed=seed)
     v = as_double(F.col(vec_col))
-    nv = F.element_at(
-        F.transform(
-            F.array(F.struct(v.alias("v"), l2_norm(v).alias("n"))),
-            lambda s: F.transform(s["v"], lambda x: x / s["n"]),
-        ),
-        1,
-    )
     samp = src.select(
-        F.xxhash64(v.cast("array<double>")).alias("__rid"), nv.alias("__nv")
+        F.xxhash64(v.cast("array<double>")).alias("__rid"),
+        unit_vec(F.col(vec_col)).alias("__nv"),
     )
     assigned = assign_nearest_cell(
         samp.select(F.col("__rid"), F.col("__nv").alias("__cv")),
@@ -588,18 +630,7 @@ def kmeans_centroids_two_level(
         .select(
             "coarse_id",
             F.lit(0).cast("long").alias("sub_id"),
-            F.element_at(
-                F.transform(
-                    F.array(
-                        F.struct(
-                            F.col("__mv").alias("v"),
-                            l2_norm(F.col("__mv")).alias("n"),
-                        )
-                    ),
-                    lambda s: F.transform(s["v"], lambda x: x / s["n"]),
-                ),
-                1,
-            ).alias("__mv"),
+            _l2_normalized(F.col("__mv")).alias("__mv"),
         )
     )
     fine = fitted.unionByName(missed).select(
@@ -624,331 +655,35 @@ def assign_nearest_cell_two_level(
     NULL, so step 1 leaves coarse_id NULL) are KEPT: the groups join is
     a LEFT join, the missing ``__subs`` array makes the fold NULL, and
     the row emerges with cent_id NULL — exactly the flat
-    ``assign_nearest_cell`` behavior (ADVICE r11: an inner join here
-    silently dropped such rows and broke the every-vector-assigned
-    invariant)."""
+    ``assign_nearest_cell`` behavior (an inner join here would silently
+    drop such rows and break the every-vector-assigned invariant)."""
     step1 = assign_nearest_cell(
         c, coarse.select(F.col("coarse_id").alias("cent_id"), "__mv"), id_col
     ).select(id_col, "__cv", F.col("cent_id").alias("coarse_id"))
-    groups = fine.select(
-        "coarse_id",
-        F.struct(
-            F.col("cent_id"), F.col("__mv"), l2_norm(F.col("__mv")).alias("__mn")
-        ).alias("s"),
-    ).groupBy("coarse_id").agg(F.sort_array(F.collect_list("s")).alias("__subs"))
+    groups = (
+        fine.select("coarse_id", _cell_struct().alias("s"))
+        .groupBy("coarse_id")
+        .agg(F.sort_array(F.collect_list("s")).alias("__subs"))
+    )
     with_norm = step1.withColumn("__cn", l2_norm(F.col("__cv")))
-    init = F.struct(
-        F.lit(-2.0).alias("cs"), F.lit(None).cast("long").alias("cent_id")
-    )
-
-    def fold(acc, cent):
-        # try_divide — same zero-norm guard as assign_nearest_cell
-        cs = F.try_divide(
-            dot(F.col("__cv"), cent["__mv"]), F.col("__cn") * cent["__mn"]
-        )
-        return F.when(
-            cs > acc["cs"], F.struct(cs.alias("cs"), cent["cent_id"].alias("cent_id"))
-        ).otherwise(acc)
-
     return with_norm.join(F.broadcast(groups), "coarse_id", "left").select(
-        id_col,
-        "__cv",
-        F.aggregate("__subs", init, fold)["cent_id"].alias("cent_id"),
+        id_col, "__cv", _nearest_cell("__subs").alias("cent_id")
     )
 
 
-def assign_nearest_cell_srp(
-    c: DataFrame,
-    cents: DataFrame,
-    id_col: str,
-    n_tables: int = 8,
-    n_bits: int | None = None,
-    dim: int = 64,
-    bucket_cap: int | None = None,
+def lowid_centroids(
+    corpus: DataFrame, id_col: str, vec_col: str, n_centroids: int
 ) -> DataFrame:
-    """SRP-routed nearest-cell assignment — the documented escalation
-    PAST the two-level hierarchy (SCALETEST_r12: the O(n·2√k) two-stage
-    fold itself bends toward n^1.5 once k ≥ 512; this path's per-row
-    cost is CONSTANT in k). Each vector is encoded with the same
-    deterministic md5-parity SRP hyperplanes as ``srp_codes``
-    (``n_tables`` tables × ``n_bits`` sign bits), and the argmax-cosine
-    fold runs ONLY over the centroids sharing at least one
-    (table, code) bucket with the vector; a vector whose buckets are
-    all empty falls back to the full-k fold (rare — per-row branch,
-    paid only by those rows).
-
-    Still ZERO shuffle: the centroid side is tiny, so its codes,
-    per-table bucket arrays (length 2^n_bits, ``element_at`` is O(1) —
-    a MapType lookup would scan linearly), the encode hyperplanes, and
-    the full-fold fallback list all ride in ONE broadcast row; the
-    corpus pays one stateless per-row expression. Per-row work:
-    n_tables·n_bits dim-dots to encode (CONSTANT in k) + one dot per
-    candidate (expected n_tables·k/2^n_bits, duplicates across tables
-    re-scored rather than deduped — cheaper than a per-row distinct)
-    vs the flat fold's k dots / two-level's 2√k. Break-even against
-    two-level at default 8×8 is k ≈ 2·10³ (encode 64 dim-dots + ~32
-    candidates vs 2√k); at k = 10⁵ (the 100 TB constant-cell-size
-    regime) SRP folds ~100 dots where two-level folds 632.
-
-    Deterministic end to end (md5 hyperplanes, no seed, no sampling) —
-    stronger than the hierarchy, whose coarse fit samples. Approximate:
-    the routed cell can differ from the true argmax when no table
-    co-buckets the vector with its nearest centroid (P ≈
-    1-(1-(1-θ/π)^n_bits)^n_tables per the SRP collision law) —
-    SemDeDup containment stays exact under ANY assignment, only recall
-    moves (tested floor vs the exact fold). Ties: highest cosine, then
-    lowest cent_id (explicit tie clause — bucket traversal order is not
-    id order). Zero-norm vectors: ``try_divide`` makes every cosine
-    NULL, the fold never beats the init, cent_id comes back NULL —
-    identical to ``assign_nearest_cell``.
-
-    ``n_bits`` defaults to ~log2(k) − 1 (bucket population ~2, clamped
-    to [2, 16]) — MEASURED at sf0.01 (k = 16, 8 tables): bits=3 routes
-    85% of vectors to their exact-argmax cell and holds SemDeDup recall
-    at 0.434 vs the exact fold's 0.453, while bits=8 (pop 1/16) drops
-    to 0.66 agreement / 0.283 recall — oversized codes leave most
-    buckets empty, so near-dup pairs route to DIFFERENT sparse cells
-    (the non-monotone tables curve at fixed oversized bits is the
-    fallback masking this: fewer tables → more empty-bucket rows →
-    more exact full-fold fallbacks).
-
-    MEASURED VERDICT at scale (SCALETEST_r12 — both hypotheses run to
-    ground, same two-level fit and 32-way input in every comparison):
-    SRP routing LOSES to the two-level fold at every measurable k.
-    (1) Uncapped, k = n/125 through 64× (k 1024): 8.7/26.1/78.3 s
-    (α 1.59) vs 6.2/11.0/19.7 s (α 0.84) — the naive cost model
-    (encode constant in k, ~2·n_tables candidates) breaks on BUCKET
-    SKEW: centroids concentrate in code space (k = 1024, bits = 9: top
-    bucket 59 centroids, Σm²/k = 9.4 expected candidates per table),
-    so candidate volume grows ~linearly in k. (2) The skew remedy —
-    ``bucket_cap`` (≤ B centroids per bucket, most-aligned-with-bucket-
-    mean, measured nearly free for routing quality: agreement 0.846 at
-    cap 4 vs 0.850 uncapped at fixture scale) — was then measured at
-    EXTREME k, 64×/128×/256× = k 1024/2048/4096 (embeddings-only
-    inflation): 51.7/122.4/395.3 s (α 1.47) vs the fold's
-    28.4/44.1/78.5 s (α 0.74) — still a 1.8–5.0× loss, growing. The
-    arithmetic-dot model predicts near-parity at k = 4096 (120 vs 128
-    dots/row); what it misses is that this engine evaluates HOFs
-    interpreted, and the SRP path pays per-row CANDIDATE
-    MATERIALIZATION (flatten copies ~B·n_tables structs each holding a
-    64-double vector) plus two broadcast lookups, while the two-level
-    fold streams two in-place array folds. On an engine with
-    codegen'd/vectorized HOFs the crossover may exist; on Spark's
-    interpreted higher-order functions it is beyond any measurable k.
-    Keep ``assign_nearest_cell_two_level`` as the scale escalation
-    (still α 0.74 at k = 4096, 512k vectors); this operator remains
-    the DETERMINISTIC routing primitive (no sampling — the one
-    property the hierarchy can't offer) for callers that need exact
-    cross-run replayability of the assignment itself.
-
-    ``c``: (id_col, __cv double-array); ``cents``: (cent_id, __mv).
-    Returns (id_col, __cv, cent_id)."""
-    import math
-
-    if n_bits is None:
-        # cents is a k-row driver-built frame (kmeans_centroids returns
-        # createDataFrame rows) — count() is metadata-cheap
-        k = cents.count()
-        n_bits = min(16, max(2, math.ceil(math.log2(max(2, k))) - 1))
-    planes = srp_hyperplanes(n_tables, n_bits, dim)
-    spark = c.sparkSession
-    pdf = spark.createDataFrame(
-        [
-            (t, [(1 << b, planes[(t, b)]) for b in range(n_bits)])
-            for t in range(n_tables)
-        ],
-        "tbl int, planes array<struct<bv: bigint, pv: array<double>>>",
-    )
-    planes_row = pdf.select(F.struct("tbl", "planes").alias("p")).agg(
-        F.sort_array(F.collect_list("p")).alias("__ptabs")
-    )
-
-    def code_of(vec, tab):
-        return F.aggregate(
-            tab["planes"],
-            F.lit(0).cast("long"),
-            lambda acc, p: acc
-            + F.when(dot(vec, p["pv"]) > 0, p["bv"]).otherwise(
-                F.lit(0).cast("long")
-            ),
-        )
-
-    # centroid side (k rows — tiny): encode each centroid per table,
-    # group into per-table bucket ARRAYS of length 2^n_bits so the
-    # corpus-side lookup is element_at (O(1) array index, not a MapType
-    # linear scan). sort_array on (cent_id, ...) structs keeps bucket
-    # contents in cent_id order — deterministic traversal.
-    cstruct = F.struct(
-        F.col("cent_id"), F.col("__mv"), l2_norm(F.col("__mv")).alias("__mn")
-    )
-    coded = (
-        cents.join(F.broadcast(planes_row))
-        .select(
-            cstruct.alias("s"),
-            F.explode(
-                F.transform(
-                    F.col("__ptabs"),
-                    lambda t: F.struct(
-                        t["tbl"].alias("tbl"),
-                        code_of(F.col("__mv"), t).alias("code"),
-                    ),
-                )
-            ).alias("tc"),
-        )
-        .select(F.col("tc.tbl").alias("tbl"), F.col("tc.code").alias("code"), "s")
-    )
-    bucketed = coded.groupBy("tbl", "code").agg(
-        F.sort_array(F.collect_list("s")).alias("bucket")
-    )
-    if bucket_cap is not None:
-        # ``bucket_cap``: keep at most B centroids per bucket — the skew
-        # bound that restores O(n_tables·B) candidates per row when the
-        # centroid code distribution concentrates (the measured failure
-        # mode of the uncapped path, see the verdict below). Selection
-        # is deterministic and bucket-intrinsic: the B centroids most
-        # aligned with the bucket's mean unit direction (ties by
-        # cent_id) — a vector routed to this bucket is, by the routing
-        # itself, near that mean direction, so the retained centroids
-        # are the ones it would most plausibly pick. Computed once per
-        # bucket at build time over k-scale data, never per corpus row.
-        mean_dir = F.aggregate(
-            F.col("bucket"),
-            F.array_repeat(F.lit(0.0), dim),
-            lambda acc, s: F.zip_with(
-                acc,
-                s["__mv"],
-                # zero-norm centroid → contributes nothing (try_divide
-                # NULL coalesced to 0) instead of poisoning the mean
-                lambda a, x: a
-                + F.coalesce(F.try_divide(x, s["__mn"]), F.lit(0.0)),
-            ),
-        )
-        scored = F.transform(
-            F.col("bucket"),
-            lambda s: F.struct(
-                # ascending sort key = NEGATED alignment (zero-norm
-                # centroids get +inf so they sort last, never capped IN)
-                F.coalesce(
-                    -F.try_divide(
-                        dot(s["__mv"], F.col("__m")), s["__mn"]
-                    ),
-                    F.lit(float("inf")),
-                ).alias("ns"),
-                s["cent_id"].alias("cent_id"),
-                s["__mv"].alias("__mv"),
-                s["__mn"].alias("__mn"),
-            ),
-        )
-        bucketed = (
-            bucketed.withColumn("__m", mean_dir)
-            .select(
-                "tbl",
-                "code",
-                F.transform(
-                    F.slice(F.sort_array(scored), 1, bucket_cap),
-                    lambda x: F.struct(
-                        x["cent_id"].alias("cent_id"),
-                        x["__mv"].alias("__mv"),
-                        x["__mn"].alias("__mn"),
-                    ),
-                ).alias("bucket"),
-            )
-        )
-    per_table = (
-        bucketed.groupBy("tbl")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("code"), F.col("bucket")))
-            ).alias("bmap")
-        )
-        .select(
-            "tbl",
-            # dense O(1)-indexable bucket array: slot i+1 = code i
-            F.transform(
-                F.sequence(F.lit(0), F.lit(2**n_bits - 1)),
-                lambda i: F.coalesce(
-                    F.element_at(F.col("bmap"), i.cast("long")),
-                    F.array().cast(
-                        "array<struct<cent_id: bigint, __mv: array<double>,"
-                        " __mn: double>>"
-                    ),
-                ),
-            ).alias("buckets"),
-        )
-    )
-    all_row = cents.select(cstruct.alias("s")).agg(
-        F.sort_array(F.collect_list("s")).alias("__all")
-    )
-    tabs_row = (
-        per_table.join(F.broadcast(planes_row))
-        .select(
-            F.struct(
-                F.col("tbl"),
-                # planes for THIS table (same tbl order in both frames)
-                F.element_at(F.col("__ptabs"), F.col("tbl") + 1)["planes"].alias(
-                    "planes"
-                ),
-                F.col("buckets"),
-            ).alias("t")
-        )
-        .agg(F.sort_array(F.collect_list("t")).alias("__tabs"))
-    )
-
-    # The per-row encode is interpreted-HOF CPU (n_tables·n_bits dim-dots
-    # per vector): a low-partition input (one parquet file → one task)
-    # serializes it on a single core. Same file-metadata width guard as
-    # srp_codes — a no-op at real scale where inputs already arrive wide,
-    # and never paid when it buys nothing (measured here: the 64× curve
-    # probe ran the one-file fixture's encode on 1 of 32 cores without
-    # it).
-    sc_ctx = c.sparkSession.sparkContext
-    try:
-        n_files = len(c.inputFiles())
-    except Exception:
-        n_files = 0
-    if 0 < n_files < sc_ctx.defaultParallelism:
-        c = c.repartition(sc_ctx.defaultParallelism)
-
-    with_norm = c.withColumn("__cn", l2_norm(F.col("__cv")))
-    init = F.struct(
-        F.lit(-2.0).alias("cs"), F.lit(None).cast("long").alias("cent_id")
-    )
-
-    def fold(acc, cent):
-        cs = F.try_divide(
-            dot(F.col("__cv"), cent["__mv"]), F.col("__cn") * cent["__mn"]
-        )
-        better = (cs > acc["cs"]) | (
-            (cs == acc["cs"]) & (cent["cent_id"] < acc["cent_id"])
-        )
-        return F.when(
-            better, F.struct(cs.alias("cs"), cent["cent_id"].alias("cent_id"))
-        ).otherwise(acc)
-
-    cands = F.flatten(
-        F.transform(
-            F.col("__tabs"),
-            lambda t: F.element_at(
-                t["buckets"],
-                code_of(F.col("__cv"), t).cast("int") + 1,
-            ),
-        )
-    )
-    routed = F.aggregate(cands, init, fold)["cent_id"]
-    full = F.aggregate(F.col("__all"), init, fold)["cent_id"]
-    # coalesce, NOT when(size(cands)>0, ...): HOFs get no CSE, so a size
-    # probe would evaluate `cands` (the whole encode) a second time per
-    # row. coalesce short-circuits — the full-k fallback fold runs only
-    # for rows whose routed cent_id is NULL (empty buckets, or zero-norm
-    # vectors where the fallback is NULL too and the extra fold is the
-    # degenerate-row tax).
+    """The ``n_centroids`` lowest-id vectors as ``(cent_id, __mv)``: the
+    deterministic centroid set whose cell assignment replays exactly in
+    SQL (``ORDER BY id LIMIT n``), which is what gives the lowid IVF and
+    SemDeDup variants a full cross-engine oracle."""
     return (
-        with_norm.join(F.broadcast(tabs_row))
-        .join(F.broadcast(all_row))
+        corpus.orderBy(id_col)
+        .limit(n_centroids)
         .select(
-            id_col,
-            "__cv",
-            F.coalesce(routed, full).alias("cent_id"),
+            F.col(id_col).alias("cent_id"),
+            as_double(F.col(vec_col)).alias("__mv"),
         )
     )
 
@@ -1002,8 +737,8 @@ def semdedup_survivors(
     dedup it never chains A~B~C transitively, which is SemDeDup's
     documented semantics (per-cluster, direct-neighbor pruning).
 
-    ``target_cell_size`` (m̄): the constant-cell-size parametrization
-    (VERDICT r10 ask #3) — overrides ``n_centroids`` with
+    ``target_cell_size`` (m̄): the constant-cell-size parametrization —
+    overrides ``n_centroids`` with
     k = max(4, ceil(n / m̄)) so the Σm² pair stage stays LINEAR in n
     (Σm² ≈ n·m̄ for balanced cells), the remedy for the measured 16×
     bend of k ∝ √n (SCALETEST_r10: 2^1.57/octave). The n·k assignment
@@ -1052,14 +787,7 @@ def semdedup_survivors(
             corpus_rows=corpus_rows,
         )
     else:
-        cents = (
-            corpus.orderBy(id_col)
-            .limit(n_centroids)
-            .select(
-                F.col(id_col).alias("cent_id"),
-                as_double(F.col(vec_col)).alias("__mv"),
-            )
-        )
+        cents = lowid_centroids(corpus, id_col, vec_col, n_centroids)
     assigned = assign_nearest_cell(c, cents, id_col)
     return semdedup_survivors_from_assigned(assigned, id_col, threshold)
 
@@ -1075,7 +803,7 @@ def semdedup_survivors_from_assigned(
     ``assign_nearest_cell`` returns; semantics identical to the tail of
     ``semdedup_survivors``.
 
-    PRECONDITION (ADVICE r12): ``id_col`` must be unique in ``assigned``
+    PRECONDITION: ``id_col`` must be unique in ``assigned``
     — assign_nearest_cell emits exactly one row per input vector, and
     the survivor aggregate below groups by (id, cent_id), so duplicate
     ids would silently collapse to one output row (and a duplicate pair
@@ -1087,7 +815,7 @@ def semdedup_survivors_from_assigned(
     # expression stays dot/(na*nb) — the identical IEEE tree to
     # cosine(), so oracle parity is unaffected.
     #
-    # Shape (r12 opt, guide §2.4): ONE right-outer self-join on
+    # Shape: ONE right-outer self-join on
     # (cent_id, a.id < b.id, rounded cosine >= threshold) + a groupBy —
     # b survives iff it matched NO smaller-id neighbor. The earlier
     # inner-join → DISTINCT → left-join-back form paid an extra exchange
@@ -1120,6 +848,25 @@ def semdedup_survivors_from_assigned(
     return joined.groupBy(
         F.col(f"b.{id_col}").alias(id_col), F.col("b.cent_id").alias("cent_id")
     ).agg((F.count(F.col(f"a.{id_col}")) == F.lit(0)).alias("survivor"))
+
+
+def ivf_probes(
+    q: DataFrame, key: str, vcol: str, cents: DataFrame, n_probe: int
+) -> DataFrame:
+    """The IVF probe list: for each ``key`` row of ``q``, its ``n_probe``
+    nearest cells of ``cents`` (``(cent_id, __mv)``) by cosine of
+    ``vcol``, ties to the lower cent_id. Returns (key, vcol, cent_id,
+    __cs, __rn). The probe side is the (small) query batch, so a window
+    is fine here."""
+    scored = q.join(F.broadcast(cents)).select(
+        key,
+        vcol,
+        "cent_id",
+        cosine(F.col(vcol), F.col("__mv")).alias("__cs"),
+    )
+    return top_k_per_group(
+        scored, [key], [F.col("__cs").desc(), F.col("cent_id")], n_probe, "__rn"
+    )
 
 
 def ivf_topk(
@@ -1158,33 +905,12 @@ def ivf_topk(
             corpus, vec_col=vec_col, n_centroids=n_centroids, seed=seed
         )
     else:
-        cents = (
-            corpus.orderBy(id_col)
-            .limit(n_centroids)
-            .select(
-                F.col(id_col).alias("cent_id"),
-                as_double(F.col(vec_col)).alias("__mv"),
-            )
-        )
-
-    def nearest_cells(df: DataFrame, key: str, vcol: str, n: int) -> DataFrame:
-        scored = df.join(F.broadcast(cents)).select(
-            key,
-            vcol,
-            "cent_id",
-            cosine(F.col(vcol), F.col("__mv")).alias("__cs"),
-        )
-        w = Window.partitionBy(key).orderBy(F.col("__cs").desc(), F.col("cent_id"))
-        return scored.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") <= n
-        )
-
+        cents = lowid_centroids(corpus, id_col, vec_col, n_centroids)
     assigned = assign_nearest_cell(c, cents, id_col)
     q = queries.select(
         F.col(query_id_col), as_double(F.col(vec_col)).alias("__qv")
     )
-    # the probe side is the (small) query batch — a window is fine here
-    probes = nearest_cells(q, query_id_col, "__qv", n_probe).select(
+    probes = ivf_probes(q, query_id_col, "__qv", cents, n_probe).select(
         query_id_col, "cent_id", "__qv"
     )
     # broadcast the (tiny) probe list — the corpus-side cell scan stays
@@ -1194,14 +920,7 @@ def ivf_topk(
         id_col,
         F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(query_id_col, id_col, "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return top_k_by_cosine(scored, query_id_col, id_col, k)
 
 
 def lsh_topk(
@@ -1244,12 +963,9 @@ def lsh_topk(
         F.col(f"datasetB.{id_col}").alias(id_col),
         F.round("dist", 6).alias("dist"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("dist").asc(), F.col(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(query_id_col, id_col, "dist", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return top_k_per_group(
+        scored, [query_id_col], [F.col("dist").asc(), F.col(id_col)], k, "rnk"
+    ).select(query_id_col, id_col, "dist", F.col("rnk").cast("int").alias("rnk"))
 
 
 # --- Sign-random-projection (SRP) cosine LSH --------------------------------
@@ -1293,32 +1009,21 @@ def srp_codes(
     table, where bit b of ``code`` is sign(v · r[t][b]) for the
     deterministic hyperplane r.
 
-    Shape history: the r2 literal-unrolled fold spent ~20 s in
-    Catalyst/Janino at 16×6×64; r4 moved the planes into one broadcast
-    row folded by a nested HOF (zero shuffle, small plan); r13 replaces
-    the interpreted fold (n_tables·n_bits·dim ops per row, never
-    codegen'd) with a NumPy pass per Arrow batch — the planes are a pure
-    md5 spec, so they live in the task closure, the encode stays
-    stateless, per-row, ZERO shuffle, and every dot replays the fold's
-    IEEE sequence exactly (see the kernel comments; code equality with
-    the fold form is pinned in tests/test_opt_r13.py). NULL vectors and
-    wrong dims fail fast, as the guarded HOF form did — a silent
-    mis-dim would hash everything to code 0 and quadratic-join one
-    mega-bucket."""
+    The encode is one NumPy pass per Arrow batch, stateless, per-row,
+    ZERO shuffle. The planes are a pure md5 spec, so they ride in the
+    task closure, and nothing is plan-literal: Catalyst/Janino compile
+    cost does not grow with n_tables·n_bits·dim (a literal-unrolled
+    fold spent ~20 s there at 16×6×64). Every dot replays the HOF dot
+    fold's IEEE sequence exactly (see the kernel comments; code
+    equality with the fold form is pinned in tests/test_opt_r13.py).
+    NULL vectors and wrong dims fail fast — a silent mis-dim would
+    hash everything to code 0 and quadratic-join one mega-bucket."""
     planes = srp_hyperplanes(n_tables, n_bits, dim)
-    # r13 (guide §4.2): the encode was a nested HOF fold — n_tables ·
-    # n_bits interpreted dot folds of ``dim`` ops per row (4 096 ops/row
-    # at 8×8×64), never entering whole-stage codegen. The hyperplanes
-    # are a PURE md5 spec (no data dependence), so they ride in the task
-    # closure and one NumPy pass per Arrow batch computes every code:
-    # per plane the dot is the identical left-to-right float64 fold
-    # (a dim-loop over row-vectorized ops — NOT np.dot, which
+    # per plane the dot is the identical left-to-right float64 fold (a
+    # dim-loop over row-vectorized ops — NOT np.dot, which
     # reassociates), ±1.0 products are exact sign flips, the > 0 sign
     # and the power-of-two bit sums are exact integers — so every code
-    # equals the fold's and the DuckDB full-index replay is unaffected
-    # (pinned in tests/test_opt_r13.py). The r4 lesson stands in the new
-    # shape: nothing is plan-literal, so Catalyst/Janino compile cost
-    # does not grow with n_tables·n_bits·dim.
+    # equals the fold's and the DuckDB full-index replay holds.
     plane_mat = [
         planes[(t, b)] for t in range(n_tables) for b in range(n_bits)
     ]
@@ -1339,9 +1044,9 @@ def srp_codes(
                 continue
             if isinstance(col, pa.ChunkedArray):  # defensive
                 col = col.combine_chunks()
-            # dim contract, executor-side (fail fast — the HOF form
-            # raised here too): a NULL vector or a wrong length would
-            # otherwise hash to code 0 and quadratic-join a mega-bucket
+            # dim contract, executor-side (fail fast): a NULL vector or
+            # a wrong length would otherwise hash to code 0 and
+            # quadratic-join a mega-bucket
             if col.null_count:
                 raise ValueError(
                     f"srp_codes: expected {dim}-dim vectors, got NULL"
@@ -1379,17 +1084,17 @@ def srp_codes(
             )
 
     src = df.select(F.col(id_col), F.col(vec_col).alias("__v"))
-    # Encode throughput is CPU-bound: higher-order functions never enter
-    # whole-stage codegen, so each row pays n_tables·n_bits·dim interpreted
-    # ops. A low-partition input (one parquet file → one task) serializes
-    # that work on a single core — spread it to the cluster width first.
-    # At real scale inputs already arrive in ≥ parallelism partitions and
-    # this is a no-op; the guard keeps the repartition (a full exchange of
-    # the vectors) from ever being paid when it buys nothing. The probe is
-    # FILE metadata (inputFiles — a driver-side listing), not
-    # df.rdd.getNumPartitions(), which forces physical planning at call
-    # time and reads a pre-AQE width anyway (ADVICE r4); derived frames
-    # (inputFiles == []) skip the heuristic and keep their partitioning.
+    # Encode throughput is CPU-bound: each row pays n_tables·n_bits·dim
+    # multiply-adds in the kernel. A low-partition input (one parquet
+    # file → one task) serializes that work on a single core — spread it
+    # to the cluster width first. At real scale inputs already arrive in
+    # ≥ parallelism partitions and this is a no-op; the guard keeps the
+    # repartition (a full exchange of the vectors) from ever being paid
+    # when it buys nothing. The probe is FILE metadata (inputFiles — a
+    # driver-side listing), not df.rdd.getNumPartitions(), which forces
+    # physical planning at call time and reads a pre-AQE width anyway;
+    # derived frames (inputFiles == []) skip the heuristic and keep
+    # their partitioning.
     sc = df.sparkSession.sparkContext
     try:
         n_files = len(src.inputFiles())
@@ -1397,9 +1102,6 @@ def srp_codes(
         n_files = 0
     if 0 < n_files < sc.defaultParallelism:
         src = src.repartition(sc.defaultParallelism)
-
-    # per table: fold its planes in bit order, adding the bit value when
-    # sign(v·r) is positive — each dot is evaluated exactly once
     return src.mapInArrow(
         _encode, schema=f"{id_col} {id_type}, tbl int, code bigint"
     )
@@ -1430,7 +1132,7 @@ def srp_near_pairs(
     so an external engine can replay the ENTIRE index — buckets,
     candidates, verified scores."""
     # The codes table feeds BOTH sides of the bucket self-join; without a
-    # cache the (interpreted-HOF, CPU-heavy) encode runs twice. n_tables
+    # cache the (CPU-heavy) Arrow encode runs twice. n_tables
     # rows of (id, tbl, code) per vector — a sliver of the input — so the
     # storage cost is trivial. Same lifetime note as minhash_lsh_pairs:
     # blocks persist until the returned plan is GC'd, LRU-evictable
@@ -1504,46 +1206,10 @@ def srp_topk(
         .select(query_id_col, id_col)
         .distinct()
     )
-    q = queries.select(
-        F.col(query_id_col), as_double(F.col(vec_col)).alias("__qv")
-    )
-    c = corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("__cv"))
-    scored = (
-        cand.join(F.broadcast(q), query_id_col)
-        .join(c, id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(query_id_col, id_col, "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return exact_rerank(cand, corpus, queries, id_col, vec_col, query_id_col, k)
 
 
 # --- Product quantization (IVF-PQ's compression half) ------------------------
-
-
-def unit_vec(col) -> Column:
-    """L2-normalized copy of an array column, norm bound ONCE per row via
-    the single-element-transform trick (no CSE across HOF lambdas). On
-    the unit sphere squared-euclidean ordering equals cosine ordering
-    (||a-b||² = 2-2cosθ), which is what lets euclidean PQ serve a cosine
-    workload — unnormalized ADC measured 0.30 recall@5 vs 0.84+ after."""
-    v = as_double(col)
-    return F.element_at(
-        F.transform(
-            F.array(F.struct(v.alias("v"), l2_norm(v).alias("n"))),
-            lambda s: F.transform(s["v"], lambda x: x / s["n"]),
-        ),
-        1,
-    )
 
 
 def pq_codebooks(
@@ -1561,20 +1227,20 @@ def pq_codebooks(
     only m·k tiny centroid vectors come back to the driver.
 
     The ``m`` subspace fits are INDEPENDENT jobs over disjoint column
-    slices, so (r12 opt, guide §2.6) they run from a thread pool — each
-    fit is many short driver-blocking jobs (k-means|| init + Lloyd
-    rounds), and overlapping them back-fills the scheduling gaps and
-    per-job tails that serial fits leave idle. Pool width = ``m`` capped
-    at 16 (r13: width 4 → 16 measured 6.4 → 3.9 s on the m=16 fit —
+    slices, so they run from a thread pool — each fit is many short
+    driver-blocking jobs (k-means|| init + Lloyd rounds), and
+    overlapping them back-fills the scheduling gaps and per-job tails
+    that serial fits leave idle. Pool width = ``m`` capped
+    at 16 (width 4 → 16 measured 6.4 → 3.9 s on the m=16 fit —
     the fits are driver-latency-bound, so wider overlap keeps paying
     until every fit is in flight). Each fit keeps its own seed
     (``seed + s``) and its own input slice, so concurrency changes
     nothing about what any fit computes. Worker threads are wrapped by
     ``session.thread_target`` so the caller's job group /
     scheduler-pool local properties propagate under pinned-thread mode
-    (ADVICE r12: cancellation of the k-means jobs must not escape the
-    caller's job group). The unit-normalized corpus is cached ONCE
-    (guide §5: reused m times, recomputed otherwise — each ML fit would
+    (cancellation of the k-means jobs must not escape the caller's job
+    group). The unit-normalized corpus is cached ONCE (reused m times,
+    recomputed otherwise — each ML fit would
     re-scan the parquet and re-run the normalize fold), materialized
     before the pool starts so the concurrent fits read a built cache,
     and unpersisted before returning (the returned codebook frame is a
@@ -1620,7 +1286,7 @@ def pq_codebooks(
 def _pq_books_row(codebooks: DataFrame):
     """Codebooks as ONE broadcast row: array over subspaces (sub_id
     order) of entry arrays (code order) — the same one-broadcast-row
-    shape as ivf_topk's centroids and srp_codes' planes."""
+    shape as ``assign_nearest_cell``'s centroids."""
     entries = (
         codebooks.groupBy("sub_id")
         .agg(
@@ -1643,6 +1309,50 @@ def _sq_dist(a, b) -> Column:
     )
 
 
+def _pq_query_tables(
+    q: DataFrame, query_id_col: str, qcol: str, books: DataFrame, sub_d: int
+) -> DataFrame:
+    """Each query's ADC table: per subspace, the squared distance from
+    the query's unit subvector (``qcol`` of ``q``) to every codebook
+    entry. Returns (query id, ``__tabs``) — |queries| tiny rows."""
+
+    def table_for(sub):
+        subvec = F.slice(F.col(qcol), sub["sub_id"] * sub_d + 1, sub_d)
+        return F.transform(sub["entries"], lambda e: _sq_dist(subvec, e["__cb"]))
+
+    return q.join(F.broadcast(_pq_books_row(books))).select(
+        query_id_col,
+        F.transform(F.col("__books"), table_for).alias("__tabs"),
+    )
+
+
+def _adc_shortlist(
+    scan: DataFrame, query_id_col: str, id_col: str, shortlist: int
+) -> DataFrame:
+    """The ``shortlist`` ids per query with the smallest ADC distance,
+    ties to the lower id. ``scan`` pairs each candidate's PQ ``codes``
+    with its query's ``__tabs``; the distance is the sum of the m table
+    lookups (no per-pair vector math). Returns (query id, id,
+    ``adc_dist``, ``__rn``)."""
+    adc = F.aggregate(
+        F.zip_with(
+            F.col("codes"),
+            F.col("__tabs"),
+            lambda c, t: F.element_at(t, c + 1),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    scored = scan.select(query_id_col, id_col, F.round(adc, 6).alias("adc_dist"))
+    return top_k_per_group(
+        scored,
+        [query_id_col],
+        [F.col("adc_dist").asc(), F.col(id_col)],
+        shortlist,
+        "__rn",
+    )
+
+
 def pq_encode(
     corpus: DataFrame,
     codebooks: DataFrame,
@@ -1657,10 +1367,10 @@ def pq_encode(
     small ints (~32× at 64-dim float/m=8), which is what lets a 100 TB
     embedding corpus live in memory for ADC scanning. Zero shuffle: the
     m·k codebook entries ride in the task closure, one NumPy pass per
-    Arrow batch (r13, guide §4.2: the per-row HOF form paid m·k
-    interpreted subspace folds per vector — 1 024 fold steps/row at
-    m=16/k=16 — for math NumPy does in a handful of vectorized ops; the
-    argmin replays the fold bit-exactly, see the kernel comments).
+    Arrow batch (a per-row HOF form pays m·k interpreted subspace folds
+    per vector — 1 024 fold steps/row at m=16/k=16 — for math NumPy
+    does in a handful of vectorized ops; the argmin replays the fold
+    bit-exactly, see the kernel comments).
 
     ``codebooks`` is collected at construction — it is m·k tiny centroid
     rows (a local relation in every catalog path: ``pq_codebooks`` ends
@@ -1792,68 +1502,14 @@ def pq_topk(
     vs brute force (the ``sim_ivf_kmeans_recall`` pattern)."""
     books = pq_codebooks(corpus, vec_col, m=m, k=n_codes, dim=dim, seed=seed)
     corpus_codes = pq_encode(corpus, books, id_col, vec_col, m=m, dim=dim)
-
-    sub_d = dim // m
     q = queries.select(
         F.col(query_id_col), unit_vec(F.col(vec_col)).alias("__qv")
     )
-
-    def table_for(sub):
-        subvec = F.slice(F.col("__qv"), sub["sub_id"] * sub_d + 1, sub_d)
-        return F.transform(sub["entries"], lambda e: _sq_dist(subvec, e["__cb"]))
-
-    qtabs = (
-        q.join(F.broadcast(_pq_books_row(books)))
-        .select(
-            query_id_col,
-            F.transform(F.col("__books"), table_for).alias("__tabs"),
-        )
+    qtabs = _pq_query_tables(q, query_id_col, "__qv", books, dim // m)
+    cand = _adc_shortlist(
+        corpus_codes.join(F.broadcast(qtabs)), query_id_col, id_col, shortlist
     )
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("__tabs"),
-            lambda c, t: F.element_at(t, c + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = corpus_codes.join(F.broadcast(qtabs)).select(
-        query_id_col,
-        id_col,
-        F.round(adc, 6).alias("adc_dist"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_dist").asc(), F.col(id_col)
-    )
-    cand = scored.withColumn("__rn", F.row_number().over(w)).filter(
-        F.col("__rn") <= shortlist
-    )
-    # exact re-rank on the shortlist only: join back the full vectors
-    # for shortlist·|queries| rows, never the corpus
-    qv = queries.select(
-        F.col(query_id_col), as_double(F.col(vec_col)).alias("__qv")
-    )
-    cv = corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("__cv"))
-    reranked = (
-        cand.join(F.broadcast(qv), query_id_col)
-        .join(cv, id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim"),
-        )
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        reranked.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= k)
-        .select(
-            query_id_col, id_col, "cos_sim", F.col("rnk").cast("int").alias("rnk")
-        )
-    )
+    return exact_rerank(cand, corpus, queries, id_col, vec_col, query_id_col, k)
 
 
 def ivfpq_topk(
@@ -1887,103 +1543,35 @@ def ivfpq_topk(
     correctness is a recall bound vs brute force, the
     ``sim_pq_recall`` pattern."""
     # --- IVF half: lowid centroids, zero-shuffle assignment, probes
-    cents = (
-        corpus.orderBy(id_col)
-        .limit(n_centroids)
-        .select(
-            F.col(id_col).alias("cent_id"),
-            as_double(F.col(vec_col)).alias("__mv"),
-        )
-    )
+    cents = lowid_centroids(corpus, id_col, vec_col, n_centroids)
     c = corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("__cv"))
     assigned = assign_nearest_cell(c, cents, id_col).select(
         id_col, "cent_id"
     )
-
     q = queries.select(
         F.col(query_id_col), as_double(F.col(vec_col)).alias("__qv")
     )
-    probe_scored = q.join(F.broadcast(cents)).select(
-        query_id_col,
-        "cent_id",
-        cosine(F.col("__qv"), F.col("__mv")).alias("__cs"),
-    )
-    w_p = Window.partitionBy(query_id_col).orderBy(
-        F.col("__cs").desc(), F.col("cent_id")
-    )
-    probes = (
-        probe_scored.withColumn("__rn", F.row_number().over(w_p))
-        .filter(F.col("__rn") <= n_probe)
-        .select(query_id_col, "cent_id")
+    probes = ivf_probes(q, query_id_col, "__qv", cents, n_probe).select(
+        query_id_col, "cent_id"
     )
 
     # --- PQ half: encode once, per-query ADC tables
     books = pq_codebooks(corpus, vec_col, m=m, k=n_codes, dim=dim, seed=seed)
     corpus_codes = pq_encode(corpus, books, id_col, vec_col, m=m, dim=dim)
     cell_codes = corpus_codes.join(assigned, id_col)
-
-    sub_d = dim // m
     qn = queries.select(
         F.col(query_id_col), unit_vec(F.col(vec_col)).alias("__qn")
     )
-
-    def table_for(sub):
-        subvec = F.slice(F.col("__qn"), sub["sub_id"] * sub_d + 1, sub_d)
-        return F.transform(
-            sub["entries"], lambda e: _sq_dist(subvec, e["__cb"])
-        )
-
-    qtabs = qn.join(F.broadcast(_pq_books_row(books))).select(
-        query_id_col,
-        F.transform(F.col("__books"), table_for).alias("__tabs"),
-    )
+    qtabs = _pq_query_tables(qn, query_id_col, "__qn", books, dim // m)
     # probe list x ADC tables: one small broadcast frame keyed by cell,
     # so the code scan joins on cent_id and each query reads ONLY its
     # probed cells — the corpus-side scan stays shuffle-free
     probe_tabs = probes.join(qtabs, query_id_col)
-
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("__tabs"),
-            lambda cd, t: F.element_at(t, cd + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    cand = _adc_shortlist(
+        cell_codes.join(F.broadcast(probe_tabs), "cent_id"),
+        query_id_col,
+        id_col,
+        shortlist,
     )
-    scored = cell_codes.join(F.broadcast(probe_tabs), "cent_id").select(
-        query_id_col, id_col, F.round(adc, 6).alias("adc_dist")
-    )
-    w_s = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_dist").asc(), F.col(id_col)
-    )
-    cand = scored.withColumn("__rn", F.row_number().over(w_s)).filter(
-        F.col("__rn") <= shortlist
-    )
-
     # --- exact re-rank on shortlist·|queries| rows only
-    cv = corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("__cv"))
-    reranked = (
-        cand.join(F.broadcast(q), query_id_col)
-        .join(cv, id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w_r = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        reranked.withColumn("rnk", F.row_number().over(w_r))
-        .filter(F.col("rnk") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            "cos_sim",
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+    return exact_rerank(cand, corpus, queries, id_col, vec_col, query_id_col, k)

@@ -200,3 +200,50 @@ def test_one_scratch_dir_and_one_drain_starter():
         and owners[_callee(call)] != (rel, getattr(stmt, "name", None))
     ]
     assert not found, f"use scratch_dir / drain_each_batch: {found}"
+
+
+def test_one_copy_of_each_vector_search_stage():
+    """In the similarity modules each vector-search stage is written once:
+    a top-n per key (``row_number`` over a window, kept by ``<=``) runs
+    through ``relational.top_k_per_group``, and the lowid-centroid
+    ``limit``, the argmax-cosine ``fold`` and the L2-normalize lambda
+    appear once each."""
+    sim = {
+        rel: tree
+        for rel, tree in _modules()
+        if rel
+        in (os.path.join("operators", "similarity.py"), os.path.join("catalog", "similarity.py"))
+    }
+    top_n = [
+        f"{rel}:{call.lineno}"
+        for rel, tree in sim.items()
+        for call in _method_calls(tree, {"filter"})
+        if isinstance(call.func.value, ast.Call)
+        and _callee(call.func.value) == "withColumn"
+        and any(
+            isinstance(c, ast.Call) and _callee(c) == "row_number"
+            for c in ast.walk(call.func.value)
+        )
+        and call.args
+        and isinstance(call.args[0], ast.Compare)
+        and isinstance(call.args[0].ops[0], ast.LtE)
+    ]
+    assert not top_n, f"use top_k_per_group: {top_n}"
+    nodes = [n for tree in sim.values() for n in ast.walk(tree)]
+    limits = [
+        c
+        for c in nodes
+        if isinstance(c, ast.Call)
+        and _callee(c) == "limit"
+        and [getattr(a, "id", None) for a in c.args] == ["n_centroids"]
+    ]
+    folds = [n for n in nodes if isinstance(n, ast.FunctionDef) and n.name == "fold"]
+    normalizers = [
+        n
+        for n in nodes
+        if isinstance(n, ast.Lambda)
+        and isinstance(n.body, ast.BinOp)
+        and isinstance(n.body.op, ast.Div)
+        and isinstance(n.body.right, ast.Subscript)
+    ]
+    assert (len(limits), len(folds), len(normalizers)) == (1, 1, 1)

@@ -484,49 +484,3 @@ def test_cosine_pairs_matches_numpy_reference(spark, vecs):
             # but Hypothesis explores) would differ by exactly 1e-6
             # (ADVICE r9)
             assert abs(got[(a, b)] - round(dot / (na * nb), 6)) <= 1e-6
-
-
-# Small non-degenerate embedding vectors: integer components keep the
-# exact-argmax Python reference float-safe (dot products are exact ints).
-_vec = st.lists(
-    st.integers(min_value=-5, max_value=5), min_size=4, max_size=4
-).map(lambda xs: [float(x) for x in xs])
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    st.lists(_vec, min_size=1, max_size=12),
-    st.lists(_vec.filter(lambda v: any(v)), min_size=1, max_size=6),
-)
-def test_srp_assignment_total_and_valid(spark, vecs, cents):
-    """SRP-routed assignment (r12): for ARBITRARY vectors and non-zero
-    centroid sets — uncapped and capped — the output is total (one row
-    per input), cent_ids are drawn from the centroid set, zero-norm
-    vectors (and only those) come back NULL, and whenever the router
-    returns a cell it is a genuine member cell (the Python reference
-    recomputes membership). Routing may differ from exact argmax (that
-    is its contract); totality and domain must never."""
-    from featurestore_for_joycastle_java_spark.operators.similarity import (
-        assign_nearest_cell_srp,
-    )
-
-    c = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)], "vec_id long, __cv array<double>"
-    )
-    cdf = spark.createDataFrame(
-        [(j, v) for j, v in enumerate(cents)], "cent_id long, __mv array<double>"
-    )
-    for cap in (None, 2):
-        got = {
-            r["vec_id"]: r["cent_id"]
-            for r in assign_nearest_cell_srp(
-                c, cdf, "vec_id", n_tables=2, n_bits=2, dim=4, bucket_cap=cap
-            ).collect()
-        }
-        assert set(got) == set(range(len(vecs)))  # total: every row, once
-        valid_ids = set(range(len(cents)))
-        for i, v in enumerate(vecs):
-            if not any(v):  # zero-norm: NULL, never dropped
-                assert got[i] is None, (cap, i)
-            else:
-                assert got[i] in valid_ids, (cap, i, got[i])

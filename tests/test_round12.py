@@ -63,115 +63,6 @@ def test_two_level_assign_keeps_zero_norm_vectors(spark):
     assert surv[3] is True and len(surv) == 3
 
 
-def test_srp_routed_assignment_quality_and_determinism(spark, sf_dir):
-    """SRP-routed nearest-cell assignment (the documented escalation
-    past the two-level fold, SCALETEST_r12): every vector assigned
-    (fallback covers empty buckets), deterministic (md5 hyperplanes, no
-    seed), routed-vs-exact agreement well above chance at the adaptive
-    n_bits default, and SemDeDup containment exact under the routed
-    assignment (a same-cell pair IS a global pair for ANY routing)."""
-    from pyspark.sql import functions as F
-
-    from featurestore_for_joycastle_java_spark.operators.similarity import (
-        as_double,
-        assign_nearest_cell,
-        assign_nearest_cell_srp,
-        cosine_pairs,
-        kmeans_centroids,
-        semdedup_survivors_from_assigned,
-    )
-    from featurestore_for_joycastle_java_spark.sources import load_table
-
-    e = load_table(spark, sf_dir, "embeddings")
-    n = e.count()
-    k = max(4, -(-n // 32))
-    c = e.select(F.col("vec_id"), as_double(F.col("embedding")).alias("__cv"))
-    cents = kmeans_centroids(e, n_centroids=k, corpus_rows=n)
-    srp = assign_nearest_cell_srp(c, cents, "vec_id")
-    rows = srp.collect()
-    assert len(rows) == n
-    assert all(r["cent_id"] is not None for r in rows)  # fallback covers
-    assert {r["cent_id"] for r in rows} <= set(range(k))
-    # deterministic: second build identical (no seed, no sampling)
-    again = assign_nearest_cell_srp(c, cents, "vec_id").collect()
-    assert sorted((r["vec_id"], r["cent_id"]) for r in rows) == sorted(
-        (r["vec_id"], r["cent_id"]) for r in again
-    )
-    # routed-vs-exact agreement: measured 0.85 at sf0.01 with the
-    # adaptive bits default; floor 0.5 (chance is ~1/k ~ 0.06) so a
-    # routing regression can't hide, partitioning can't flip it
-    exact = assign_nearest_cell(c, cents, "vec_id")
-    agree = (
-        exact.select("vec_id", F.col("cent_id").alias("a"))
-        .join(srp.select("vec_id", F.col("cent_id").alias("b")), "vec_id")
-        .agg(F.avg(F.when(F.col("a") == F.col("b"), 1.0).otherwise(0.0)))
-        .collect()[0][0]
-    )
-    assert agree >= 0.5
-    # bucket_cap: the skew bound keeps every row assigned and barely
-    # moves routing (measured 0.846 vs 0.850 agreement at cap 4);
-    # floor it loosely and pin determinism
-    capped = assign_nearest_cell_srp(c, cents, "vec_id", bucket_cap=4)
-    crows = capped.collect()
-    assert len(crows) == n
-    assert all(r["cent_id"] is not None for r in crows)
-    cagree = (
-        exact.select("vec_id", F.col("cent_id").alias("a"))
-        .join(capped.select("vec_id", F.col("cent_id").alias("b")), "vec_id")
-        .agg(F.avg(F.when(F.col("a") == F.col("b"), 1.0).otherwise(0.0)))
-        .collect()[0][0]
-    )
-    assert cagree >= 0.5
-    # containment through the routed assignment: every cell-local drop
-    # is a genuine global near-dup (exact by semantics)
-    g = (
-        cosine_pairs(e, "vec_id", "embedding", 0.4)
-        .select(F.col("id_b").alias("vec_id"))
-        .distinct()
-        .withColumn("__g", F.lit(True))
-    )
-    sd = semdedup_survivors_from_assigned(srp, "vec_id")
-    escaped = (
-        sd.join(g, "vec_id", "left")
-        .filter(~F.col("survivor") & F.col("__g").isNull())
-        .count()
-    )
-    assert escaped == 0
-
-
-def test_srp_routed_assignment_zero_norm_and_tiny_cells(spark):
-    """Edge semantics: a zero-norm vector keeps cent_id NULL (parity
-    with both other assignment paths), and a vector whose buckets are
-    all empty still gets assigned via the full-fold fallback."""
-    from featurestore_for_joycastle_java_spark.operators.similarity import (
-        assign_nearest_cell_srp,
-    )
-
-    dim = 64
-    cents = spark.createDataFrame(
-        [(0, [1.0] + [0.0] * (dim - 1)), (1, [0.0, 1.0] + [0.0] * (dim - 2))],
-        "cent_id long, __mv array<double>",
-    )
-    c = spark.createDataFrame(
-        [
-            (1, [1.0] + [0.0] * (dim - 1)),
-            (2, [0.0] * dim),  # zero norm
-            (3, [-1.0] * dim),  # far from both cells — may need fallback
-        ],
-        "vec_id long, __cv array<double>",
-    )
-    # n_tables=1 maximizes the empty-bucket chance for row 3
-    got = {
-        r["vec_id"]: r["cent_id"]
-        for r in assign_nearest_cell_srp(
-            c, cents, "vec_id", n_tables=1, n_bits=4
-        ).collect()
-    }
-    assert got[1] == 0
-    assert got[2] is None
-    assert got[3] in (0, 1)  # assigned SOMEWHERE — fallback guarantees
-
-
 def test_semdedup_kmeans_survives_zero_norm_corpus(spark):
     """The k-means FIT normalizes vectors, so a corpus containing a
     zero-norm vector used to kill the whole query (ANSI DIVIDE_BY_ZERO

@@ -1,7 +1,9 @@
 """Physical-plan audit artifact: one JSON row per (lazily-constructed)
 registered query summarizing the plan shapes that matter at 100 TB —
 exchange count, join strategies, window presence, Python execution,
-cartesians, whole-stage-codegen presence.
+cartesians, whole-stage-codegen presence — plus ``plan_md5``, a digest
+of the normalized optimized logical plan, so checking that a refactor
+left every plan unchanged is a diff of two audit files.
 
 Writes PLANAUDIT_r{N}.json so physical-design claims ("no unintended
 cartesians", "small dims broadcast", "hot paths stay in codegen") are a
@@ -15,13 +17,33 @@ Usage: python tools/plan_audit.py [out.json] [sf_dir]
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import io
 import json
 import os
+import re
 import sys
+import tempfile
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
+
+
+def plan_md5(df) -> str:
+    """md5 of ``df``'s optimized logical plan with the per-process
+    numbering taken out: expression ids (``#123``, ``#45L``) become
+    ``#``, lambda-variable suffixes (``x_17``) become ``x_``, the
+    ``plan_id`` of exchanges inside cached relations is dropped, and a
+    scratch directory's random suffix (``fs_sigs_26kn6pvf``) is cut. Two
+    constructions of the same query, in one process or two, digest
+    equal; a change to the plan's operators or expressions does not."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    plan = re.sub(r"#\d+L?", "#", plan)
+    plan = re.sub(r"(lambda \w+?)_\d+", r"\1_", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
+    tmp = re.escape(tempfile.gettempdir())
+    plan = re.sub(tmp + r"/([\w.-]*?)[a-z0-9_]{8}(?=[/\]\s,]|$)", r"<tmp>/\1", plan)
+    return hashlib.md5(plan.encode()).hexdigest()
 
 
 def main() -> int:
@@ -58,6 +80,7 @@ def main() -> int:
                 df.explain("formatted")
             p = buf.getvalue()
             rows[name] = {
+                "plan_md5": plan_md5(df),
                 "exchanges": p.count("Exchange ("),
                 "windows": p.count("Window ("),
                 "bhj": p.count("BroadcastHashJoin ("),
