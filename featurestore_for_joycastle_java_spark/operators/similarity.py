@@ -55,7 +55,11 @@ def _l2_normalized(v) -> Column:
 
 
 def cosine(a, b) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    """NULL when either norm is zero (``try_divide``: plain ``/`` throws
+    DIVIDE_BY_ZERO under ANSI), as DuckDB's ``x / 0.0`` is, so a
+    zero-norm vector ranks last (DESC NULLS LAST) and fails every
+    ``>= threshold`` instead of killing the job."""
+    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
 def top_k_by_cosine(
@@ -200,13 +204,18 @@ def _topk_arrow_scores(batches, qids, qvecs, qid_arrow, d, id_col, query_id_col)
                 dots = dots + x[:, j, None] * qm[None, :, j]
                 cn_acc = cn_acc + x[:, j] * x[:, j]
             cn = np.sqrt(cn_acc)
+            # cosine replay: dot / (qn * cn) — query norm is the left
+            # factor of the denominator, as in cosine()
+            den = qn[None, :] * cn[:, None]
             with np.errstate(invalid="ignore", divide="ignore"):
-                # cosine replay: dot / (qn * cn) — query norm is the
-                # left factor of the denominator, as in cosine()
-                c_block = dots / (qn[None, :] * cn[:, None])
+                c_block = dots / den
             block = np.full((nv, nq), np.nan)
             block[:, qmask] = c_block
             cos[valid, :] = block
+            # try_divide replay: a zero denominator scores null
+            zero = np.zeros((nv, nq), dtype=bool)
+            zero[:, qmask] = den == 0
+            null_mask[valid, :] |= zero
         rep = np.repeat(np.arange(n), nq)
         til = np.tile(np.arange(nq), n)
         cos_flat = pa.array(
@@ -302,9 +311,10 @@ def cosine_pairs(
     Norms are bound ONCE per row before the pair join, so each pair
     costs one zip_with dot instead of three array folds (Spark HOFs are
     interpreted per element — measured 2.6x on the 2M-pair sf0.1 sweep).
-    The per-pair expression stays dot/(na*nb), the identical IEEE tree
-    to ``cosine()``, so 6dp-rounded oracle parity is unaffected (same
-    argument as ``semdedup_survivors``)."""
+    The per-pair expression stays try_divide(dot, na*nb), the identical
+    IEEE tree to ``cosine()``, so 6dp-rounded oracle parity is
+    unaffected (same argument as ``semdedup_survivors``) and a pair with
+    a zero-norm side scores NULL and is filtered out."""
     e = df.select(
         F.col(id_col), as_double(F.col(vec_col)).alias("__v")
     ).withColumn("__n", l2_norm(F.col("__v")))
@@ -315,8 +325,10 @@ def cosine_pairs(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
             F.round(
-                dot(F.col("a.__v"), F.col("b.__v"))
-                / (F.col("a.__n") * F.col("b.__n")),
+                F.try_divide(
+                    dot(F.col("a.__v"), F.col("b.__v")),
+                    F.col("a.__n") * F.col("b.__n"),
+                ),
                 6,
             ).alias("cos_sim"),
         )
@@ -812,8 +824,8 @@ def semdedup_survivors_from_assigned(
     must deduplicate ids first."""
     # norms bound ONCE per row (O(n) folds); the pair verify then costs
     # one zip_with dot per pair instead of three array folds. The
-    # expression stays dot/(na*nb) — the identical IEEE tree to
-    # cosine(), so oracle parity is unaffected.
+    # expression stays try_divide(dot, na*nb) — the identical IEEE tree
+    # to cosine(), so oracle parity is unaffected.
     #
     # Shape: ONE right-outer self-join on
     # (cent_id, a.id < b.id, rounded cosine >= threshold) + a groupBy —
@@ -826,9 +838,9 @@ def semdedup_survivors_from_assigned(
     # only other exchange. Measured interleaved A/B at sf0.1:
     # 2.87 → 1.98 s on dedup_semdedup. Zero-norm rows (cent_id NULL)
     # never match the null-rejecting equi-join, so the right outer keeps
-    # them as unmatched survivors — the same retention contract as
-    # before; the cosine `/` is only evaluated on candidate matches,
-    # where both norms are nonzero by construction.
+    # them as unmatched survivors; an assignment that does put a
+    # zero-norm vector in a cell scores its pairs NULL (try_divide), so
+    # it still matches nothing and survives.
     withn = assigned.withColumn("__cn", l2_norm(F.col("__cv")))
     a, b = withn.alias("a"), withn.alias("b")
     joined = a.join(
@@ -837,8 +849,10 @@ def semdedup_survivors_from_assigned(
         & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
         & (
             F.round(
-                dot(F.col("a.__cv"), F.col("b.__cv"))
-                / (F.col("a.__cn") * F.col("b.__cn")),
+                F.try_divide(
+                    dot(F.col("a.__cv"), F.col("b.__cv")),
+                    F.col("a.__cn") * F.col("b.__cn"),
+                ),
                 6,
             )
             >= F.lit(threshold)
@@ -1168,7 +1182,11 @@ def srp_near_pairs(
         F.col("__v").alias("__vb"),
         F.col("__n").alias("__nb"),
     )
-    cos = dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))
+    # try_divide: zero vectors share code 0 in every table, so their
+    # pairs are candidates; they score NULL and fail the threshold
+    cos = F.try_divide(
+        dot(F.col("__va"), F.col("__vb")), F.col("__na") * F.col("__nb")
+    )
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")

@@ -294,3 +294,70 @@ def test_topk_arrow_slices_bound_pairs_and_keep_bits(monkeypatch):
     assert max(b.num_rows for b in capped) <= 7
     assert len(capped) == 9 + 3
     assert columns(capped) == columns(whole)
+
+
+def test_zero_norm_vectors_score_null_in_every_cosine_operator(spark):
+    """A zero vector has no cosine: it scores NULL (DuckDB's ``x / 0.0``),
+    ranks last and fails every ``>= threshold`` — it never kills the job
+    under ANSI mode. Zero rows sit among the corpus (ids 5 and 7, which
+    share SRP code 0 in every table) and among the queries (id 101)."""
+    from featurestore_for_joycastle_java_spark.operators.similarity import (
+        as_double,
+        brute_force_topk_arrow,
+        cosine_pairs,
+        semdedup_survivors_from_assigned,
+        srp_near_pairs,
+    )
+
+    zero = [0.0] * 8
+    vecs = {i: [float((i * 7 + j * 3) % 5 - 2) for j in range(8)] for i in range(10)}
+    vecs[5] = vecs[7] = zero
+    c = spark.createDataFrame(sorted(vecs.items()), "vec_id long, embedding array<double>")
+    q = spark.createDataFrame(
+        [(100, vecs[1]), (101, zero), (102, vecs[8])],
+        "query_id long, embedding array<double>",
+    )
+
+    def cos(a, b):
+        na, nb = (sum(x * x for x in v) ** 0.5 for v in (a, b))
+        return None if na * nb == 0 else sum(x * y for x, y in zip(a, b)) / (na * nb)
+
+    exact = sorted(map(tuple, brute_force_topk(c, q, k=10).collect()))
+    for qid in (100, 101, 102):
+        ranked = sorted((r for r in exact if r[0] == qid), key=lambda r: r[3])
+        nulls = [r[1] for r in ranked if r[2] is None]
+        want = list(range(10)) if qid == 101 else [5, 7]
+        assert nulls == want and [r[1] for r in ranked[-len(want):]] == want
+    assert sorted(map(tuple, brute_force_topk_arrow(c, q, k=10).collect())) == exact
+
+    ivf = sorted(map(tuple, ivf_topk(c, q, k=10, n_centroids=4, n_probe=4).collect()))
+    assert [r for r in ivf if r[0] != 101] == [
+        r for r in exact if r[0] != 101 and r[1] not in (5, 7)
+    ]
+    assert [(r[1], r[2]) for r in ivf if r[0] == 101] == [
+        (i, None) for i in range(10) if i not in (5, 7)
+    ]
+
+    pairs = {(r.id_a, r.id_b): r.cos_sim for r in cosine_pairs(c, threshold=-1.0).collect()}
+    live = [i for i in range(10) if i not in (5, 7)]
+    assert set(pairs) == {(a, b) for a in live for b in live if a < b}
+    srp = srp_near_pairs(c, threshold=-1.0, n_tables=2, n_bits=2, dim=8).collect()
+    assert srp and all(pairs[(r.id_a, r.id_b)] == r.cos_sim for r in srp)
+
+    one_cell = c.select(
+        "vec_id",
+        as_double(F.col("embedding")).alias("__cv"),
+        F.lit(0).cast("long").alias("cent_id"),
+    )
+    got = {
+        r.vec_id: r.survivor
+        for r in semdedup_survivors_from_assigned(one_cell, threshold=0.99).collect()
+    }
+    want = {
+        b: not any(
+            cos(vecs[a], vecs[b]) is not None and round(cos(vecs[a], vecs[b]), 6) >= 0.99
+            for a in range(b)
+        )
+        for b in range(10)
+    }
+    assert got == want and got[5] and got[7]
