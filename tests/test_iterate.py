@@ -208,12 +208,8 @@ def test_one_copy_of_each_vector_search_stage():
     through ``relational.top_k_per_group``, and the lowid-centroid
     ``limit``, the argmax-cosine ``fold`` and the L2-normalize lambda
     appear once each."""
-    sim = {
-        rel: tree
-        for rel, tree in _modules()
-        if rel
-        in (os.path.join("operators", "similarity.py"), os.path.join("catalog", "similarity.py"))
-    }
+    homes = {os.path.join(d, "similarity.py") for d in ("operators", "catalog")}
+    sim = {rel: tree for rel, tree in _modules() if rel in homes}
     top_n = [
         f"{rel}:{call.lineno}"
         for rel, tree in sim.items()

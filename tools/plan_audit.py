@@ -36,7 +36,9 @@ def plan_md5(df) -> str:
     ``plan_id`` of exchanges inside cached relations is dropped, and a
     scratch directory's random suffix (``fs_sigs_26kn6pvf``) is cut. Two
     constructions of the same query, in one process or two, digest
-    equal; a change to the plan's operators or expressions does not."""
+    equal; a change to the plan's operators or expressions does not.
+    Fields the plan string omits are not seen: ``/`` and ``try_divide``
+    print alike, as ``(a / b)``."""
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     plan = re.sub(r"#\d+L?", "#", plan)
     plan = re.sub(r"(lambda \w+?)_\d+", r"\1_", plan)
