@@ -139,11 +139,7 @@ def asof_nearest_error_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup — 'what was the user doing around the failure'). Implemented
     as ONE shuffle: tagged union windowed ascending and descending over
     the same user partitioning, then per-row distance arithmetic; see
-    ``operators.asof.asof_join_nearest``."""
-    from featurestore_for_joycastle_java_spark.operators.asof import (
-        asof_join_nearest,
-    )
-
+    ``operators.asof.asof_join(direction="nearest")``."""
     ev = load_table(spark, sf_dir, "events").withColumn(
         "t_us", F.unix_micros(F.col("ts"))
     )
@@ -165,13 +161,14 @@ def asof_nearest_error_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__prev_t").isNull() | (F.col("__prev_t") != F.col("t_us")))
         .select(F.col("event_id").alias("nearest_click_id"), "user_id", "t_us")
     )
-    out = asof_join_nearest(
+    out = asof_join(
         errors,
         clicks,
         on=["user_id"],
         left_ts="t_us",
         right_ts="t_us",
         right_cols=["nearest_click_id"],
+        direction="nearest",
     )
     return out.select("event_id", "user_id", "nearest_click_id", "t_us_matched")
 

@@ -2,7 +2,8 @@
 that plain SQL engines special-case (DuckDB ASOF JOIN; Spark has no native
 ASOF as of 4.x, SURVEY.md §7.3).
 
-The as-of join here is the union+window pattern, chosen for 100 TB scale:
+Every as-of join here is one tagged-union fill (``_tagged_fill``), the
+union+window pattern chosen for 100 TB scale:
 
     tag left/right → union → window over (key, order by ts, side)
         → last(right payload, ignorenulls) → keep left rows
@@ -13,16 +14,18 @@ The as-of join here is the union+window pattern, chosen for 100 TB scale:
   ignorenulls=True)` over an unbounded-preceding frame fills each left row
   with the most recent right payload — exactly "the latest feature value
   known at event time" (backward direction), leakage-free.
-- Skew: one hot entity serializes into one task. Mitigation (r5,
-  implemented): ``asof_join_bucketed`` splits the window's partitioning
-  key to (key, time-bucket) and stitches cross-bucket matches from a
-  bucket-granular carry frame — semantics identical, hot keys spread
-  across their time range. ``multi_asof_join`` joins ONE left spine to N
-  feature frames in a single shuffle (the training-set assembly read).
+- Skew: one hot entity serializes into one task. ``asof_join_bucketed``
+  splits the window's partitioning key to (key, time-bucket) and
+  stitches cross-bucket matches from a bucket-granular carry frame —
+  semantics identical, hot keys spread across their time range.
+  ``multi_asof_join`` joins ONE left spine to N feature frames in a
+  single shuffle (the training-set assembly read).
 
-Direction semantics (matching DuckDB ASOF for the oracle):
+Direction semantics (pandas ``merge_asof`` vocabulary; backward and
+forward match DuckDB ASOF for the oracle):
 - backward: match the latest right row with r.ts <= l.ts (ties included);
-- forward:  match the earliest right row with r.ts >= l.ts (ties included).
+- forward:  match the earliest right row with r.ts >= l.ts (ties included);
+- nearest:  the closer of the two, backward winning exact-distance ties.
 
 If multiple right rows share one (key, ts), which one wins is undefined in
 both engines — deduplicate the right side first (max_by/arg_max) when the
@@ -31,9 +34,91 @@ timestamp isn't unique per key.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 _SIDE = "__asof_side"
+_TS = "__asof_ts"
+_SUFFIX = "_matched"
+#: scan orders per direction: False scans ts ascending (the backward
+#: fill), True descending (the forward fill)
+_ORDERS = {"backward": (False,), "forward": (True,), "nearest": (False, True)}
+
+
+def _tagged_fill(
+    left: DataFrame,
+    rights: list[tuple[DataFrame, str, list]],
+    on: list[str],
+    left_ts: str,
+    descending: tuple[bool, ...] = (False,),
+) -> DataFrame:
+    """The one as-of fill behind every join in this module.
+
+    ``rights`` holds ``(frame, ts, fields)``: each right row carries
+    ``struct(*fields)`` as ONE payload, filled with a single
+    ``last(ignorenulls)`` — filling each column independently would let
+    a NULL payload value on the matched row pull a STALE value from an
+    earlier right row, pairing fields of two different right rows. A
+    right row with a NULL ts carries NO payload: a NULL ts can never
+    satisfy l.ts >= r.ts / <= r.ts — DuckDB ASOF matches nothing — but
+    it sorts first/last in the window and would otherwise fill a
+    half-row.
+
+    Left rows are tagged 1 and right rows 0, so at equal ts the right
+    rows come first and ties match in either scan order. Each entry of
+    ``descending`` is one scan order; every fill shares the one
+    ``partitionBy(on)``, so Catalyst plans ONE Exchange however many
+    rights and orders there are (one Window operator per order).
+
+    Returns the left rows — ``on``, ``left_ts``, the other left columns,
+    as many as ``left`` has — followed by one struct column ``__f{j}`` per (scan order, right),
+    order-major: ``j = order index * len(rights) + right index``."""
+    rest = [c for c in left.columns if c not in on and c != left_ts]
+    frames = [
+        left.select(*on, F.col(left_ts).alias(_TS), F.lit(1).alias(_SIDE), *rest)
+    ]
+    for i, (right, right_ts, fields) in enumerate(rights):
+        payload = F.when(F.col(right_ts).isNotNull(), F.struct(*fields))
+        frames.append(
+            right.select(
+                *on,
+                F.col(right_ts).alias(_TS),
+                F.lit(0).alias(_SIDE),
+                payload.alias(f"__p{i}"),
+            )
+        )
+    union = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+    )
+    fills = []
+    for desc in descending:
+        ts = F.col(_TS).desc() if desc else F.col(_TS).asc()
+        w = (
+            Window.partitionBy(*on)
+            .orderBy(ts, F.col(_SIDE).asc())
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        fills += [
+            F.last(f"__p{i}", ignorenulls=True).over(w)
+            for i in range(len(rights))
+        ]
+    fill_cols = [f"__f{j}" for j in range(len(fills))]
+    return (
+        union.select("*", *[f.alias(n) for f, n in zip(fills, fill_cols)])
+        .filter(F.col(_SIDE) == 1)
+        .select(*on, F.col(_TS).alias(left_ts), *rest, *fill_cols)
+    )
+
+
+def _payload_names(
+    left: DataFrame, right_cols: list[str], right_ts: str
+) -> list[str]:
+    """Output names of an as-of payload: each right column, suffixed
+    ``_matched`` if it collides with a left column, then the matched
+    right timestamp ``<right_ts>_matched``."""
+    names = [c + _SUFFIX if c in left.columns else c for c in right_cols]
+    return [*names, right_ts + _SUFFIX]
 
 
 def asof_join(
@@ -44,95 +129,59 @@ def asof_join(
     right_ts: str,
     right_cols: list[str],
     direction: str = "backward",
-    suffix: str = "_matched",
     tolerance: int | None = None,
 ) -> DataFrame:
     """As-of join: every left row + the right payload as of its timestamp.
 
-    ``right_cols`` are the payload columns to carry over (renamed with
-    ``suffix`` if they collide with left columns). The matched right
-    timestamp is exposed as ``<right_ts><suffix>``. Left rows with no
+    ``right_cols`` are the payload columns to carry over (suffixed
+    ``_matched`` if they collide with left columns). The matched right
+    timestamp is exposed as ``<right_ts>_matched``. Left rows with no
     qualifying right row keep nulls (left-outer semantics).
 
-    ``tolerance`` (pandas ``merge_asof(tolerance=...)``, r5): maximum
-    allowed |l.ts - r.ts| for a match — the bounded-staleness contract a
-    feature store serves ("use the latest value, but never older than
-    X"). Matches beyond it are nulled wholesale (payload + matched ts
-    together — atomic, never a half-expired row). Requires NUMERIC
-    timestamps (epoch seconds/µs) so the distance is exact integer math;
-    the plan cost is unchanged (one post-fill comparison per row)."""
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction}")
+    ``direction="nearest"`` (pandas ``merge_asof(direction='nearest')``,
+    which neither Spark nor DuckDB ships natively) takes the temporally
+    CLOSEST right payload, backward winning exact-distance ties. It is
+    still ONE shuffle, not two joins: the backward and forward fills run
+    over the same (key) partitioning — Catalyst plans a single exchange
+    with two Window operators (the second sorts within partitions, no
+    re-shuffle) — and per-row arithmetic then picks the closer side.
+
+    ``tolerance`` (pandas ``merge_asof(tolerance=...)``): maximum allowed
+    |l.ts - r.ts| for a match — the bounded-staleness contract a feature
+    store serves ("use the latest value, but never older than X"). It
+    applies to the chosen match in every direction (for nearest, after
+    the side is picked). Matches beyond it are nulled wholesale (payload
+    + matched ts together — atomic, never a half-expired row).
+
+    Nearest and tolerance require NUMERIC timestamps (epoch seconds/µs)
+    so the distance is exact integer math — callers convert with
+    ``unix_micros`` first (the contract the oracles replay); the plan
+    cost is one post-fill comparison per row."""
+    if direction not in _ORDERS:
+        raise ValueError(
+            f"direction must be backward|forward|nearest, got {direction}"
+        )
     if tolerance is not None and tolerance < 0:
         raise ValueError(f"tolerance must be >= 0, got {tolerance}")
 
-    ts = "__asof_ts"
-    out_names = {c: (c + suffix if c in left.columns else c) for c in right_cols}
-    matched_ts = right_ts + suffix
+    names = _payload_names(left, right_cols, right_ts)
+    matched_ts = names[-1]
+    fields = [F.col(c).alias(n) for c, n in zip([*right_cols, right_ts], names)]
+    orders = _ORDERS[direction]
+    filled = _tagged_fill(left, [(right, right_ts, fields)], on, left_ts, orders)
 
-    left_cols = [c for c in left.columns]
-    l = left.select(
-        *on,
-        F.col(left_ts).alias(ts),
-        F.lit(1).alias(_SIDE),
-        *[F.col(c) for c in left_cols if c not in on],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(out_names[c]) for c in right_cols],
-        F.lit(None).cast(right.schema[right_ts].dataType).alias(matched_ts),
-    )
-    r = right.select(
-        *on,
-        F.col(right_ts).alias(ts),
-        F.lit(0).alias(_SIDE),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_cols if c not in on],
-        *[F.col(c).alias(out_names[c]) for c in right_cols],
-        F.col(right_ts).alias(matched_ts),
-    )
-    # The payload travels as ONE struct per right row (non-null struct
-    # even when members are null), filled with a single last(ignorenulls)
-    # — filling each column independently would let a NULL payload value
-    # on the matched row pull a STALE value from an earlier right row,
-    # pairing fields of two different right rows (r4 review fix). Right
-    # rows with a NULL timestamp carry NO payload (r5 review fix): a
-    # NULL ts can never satisfy l.ts >= r.ts / <= r.ts — DuckDB ASOF
-    # matches nothing — but they sort first/last in the window and would
-    # otherwise fill a half-row (payload with null matched ts).
-    payload = F.when(
-        (F.col(_SIDE) == 0) & F.col(matched_ts).isNotNull(),
-        F.struct(
-            *[F.col(out_names[c]) for c in right_cols],
-            F.col(matched_ts).alias(matched_ts),
-        ),
-    )
-    unioned = l.unionByName(r).withColumn("__p", payload)
-
-    # backward scans time ascending (right rows first at equal ts so ties
-    # match); forward scans descending with the same tie rule.
-    if direction == "backward":
-        w = Window.partitionBy(*on).orderBy(F.col(ts).asc(), F.col(_SIDE).asc())
-    else:
-        w = Window.partitionBy(*on).orderBy(F.col(ts).desc(), F.col(_SIDE).asc())
-    w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    filled = unioned.select(
-        "*", F.last("__p", ignorenulls=True).over(w).alias("__f")
-    )
+    t, m = F.col(left_ts), F.col("__f0")
+    if direction == "nearest":
+        b_ts, f_ts = m[matched_ts], F.col("__f1")[matched_ts]
+        use_b = b_ts.isNotNull() & (f_ts.isNull() | ((t - b_ts) <= (f_ts - t)))
+        m = F.when(use_b, m).otherwise(F.col("__f1"))
     if tolerance is not None:
         # one condition gates payload AND matched ts — a match either
         # survives whole or nulls whole (same atomicity rule as the fill)
-        fresh = F.abs(F.col(ts) - F.col("__f." + matched_ts)) <= F.lit(
-            tolerance
-        )
-        filled = filled.withColumn(
-            "__f", F.when(fresh, F.col("__f"))
-        )
-    result = filled.filter(F.col(_SIDE) == 1).select(
-        *on,
-        F.col(ts).alias(left_ts),
-        *[c for c in left_cols if c not in on and c != left_ts],
-        *[F.col("__f." + out_names[c]).alias(out_names[c]) for c in right_cols],
-        F.col("__f." + matched_ts).alias(matched_ts),
+        m = F.when(F.abs(t - m[matched_ts]) <= F.lit(tolerance), m)
+    return filled.select(
+        *filled.columns[: len(left.columns)], *[m[n].alias(n) for n in names]
     )
-    return result
 
 
 def sessionize(
@@ -162,102 +211,6 @@ def sessionize(
     return df.withColumn(session_col, F.sum(is_new).over(running))
 
 
-def asof_join_nearest(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_ts: str,
-    right_ts: str,
-    right_cols: list[str],
-    suffix: str = "_matched",
-) -> DataFrame:
-    """Nearest-in-time as-of join (pandas ``merge_asof(direction=
-    'nearest')`` — which neither Spark nor DuckDB ships natively): every
-    left row takes the temporally CLOSEST right payload, backward winning
-    exact-distance ties.
-
-    ONE shuffle, not two joins: the tagged union is windowed twice over
-    the same (key) partitioning — ascending for the backward fill,
-    descending for the forward fill; Catalyst plans a single exchange
-    with two Window operators (the second sorts within partitions, no
-    re-shuffle). Per-row arithmetic then picks the closer side.
-
-    Timestamps must be NUMERIC (epoch µs/seconds) so the distance
-    comparison is exact integer math — callers convert with
-    ``unix_micros`` first (same contract the oracle replays)."""
-    ts = "__asof_ts"
-    out_names = {c: (c + suffix if c in left.columns else c) for c in right_cols}
-    matched_ts = right_ts + suffix
-
-    left_cols = list(left.columns)
-    l = left.select(
-        *on,
-        F.col(left_ts).alias(ts),
-        F.lit(1).alias(_SIDE),
-        *[F.col(c) for c in left_cols if c not in on],
-        *[
-            F.lit(None).cast(right.schema[c].dataType).alias(out_names[c])
-            for c in right_cols
-        ],
-        F.lit(None).cast(right.schema[right_ts].dataType).alias(matched_ts),
-    )
-    r = right.select(
-        *on,
-        F.col(right_ts).alias(ts),
-        F.lit(0).alias(_SIDE),
-        *[
-            F.lit(None).cast(left.schema[c].dataType).alias(c)
-            for c in left_cols
-            if c not in on
-        ],
-        *[F.col(c).alias(out_names[c]) for c in right_cols],
-        F.col(right_ts).alias(matched_ts),
-    )
-    # one struct per right row, filled once per direction — see
-    # asof_join's payload notes (per-column fills could mix rows; NULL-ts
-    # right rows carry no payload)
-    payload = F.when(
-        (F.col(_SIDE) == 0) & F.col(matched_ts).isNotNull(),
-        F.struct(
-            *[F.col(out_names[c]) for c in right_cols],
-            F.col(matched_ts).alias(matched_ts),
-        ),
-    )
-    unioned = l.unionByName(r).withColumn("__p", payload)
-
-    w_b = (
-        Window.partitionBy(*on)
-        .orderBy(F.col(ts).asc(), F.col(_SIDE).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_f = (
-        Window.partitionBy(*on)
-        .orderBy(F.col(ts).desc(), F.col(_SIDE).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = unioned.select(
-        "*",
-        F.last("__p", ignorenulls=True).over(w_b).alias("__b"),
-        F.last("__p", ignorenulls=True).over(w_f).alias("__f"),
-    )
-    b_ts, f_ts = F.col("__b." + matched_ts), F.col("__f." + matched_ts)
-    use_b = b_ts.isNotNull() & (
-        f_ts.isNull() | ((F.col(ts) - b_ts) <= (f_ts - F.col(ts)))
-    )
-    return filled.filter(F.col(_SIDE) == 1).select(
-        *on,
-        F.col(ts).alias(left_ts),
-        *[c for c in left_cols if c not in on and c != left_ts],
-        *[
-            F.when(use_b, F.col("__b." + out_names[c]))
-            .otherwise(F.col("__f." + out_names[c]))
-            .alias(out_names[c])
-            for c in right_cols
-        ],
-        F.when(use_b, b_ts).otherwise(f_ts).alias(matched_ts),
-    )
-
-
 def multi_asof_join(
     left: DataFrame,
     rights: list[tuple[DataFrame, str, list[str], str]],
@@ -273,82 +226,43 @@ def multi_asof_join(
     from the left's columns (pre-alias them); each right's matched
     timestamp is exposed as ``<tag>_ts_matched``.
 
-    Plan shape: tag all N+1 frames, union, then N independent
+    Plan shape: the N-right ``_tagged_fill`` — N independent
     ``last(payload_struct, ignorenulls)`` fills over the SAME window
-    spec — Catalyst plans ONE Exchange (on the key) and ONE Window
-    operator evaluating all N fills in a single pass. A per-feature
-    asof_join chain would shuffle the spine N times; this shuffles the
-    union once, which at 100 TB is the difference between N fact-table
-    exchanges and one.
+    spec, which Catalyst plans as ONE Exchange (on the key) and ONE
+    Window operator evaluating all N fills in a single pass. A
+    per-feature asof_join chain would shuffle the spine N times; this
+    shuffles the union once, which at 100 TB is the difference between
+    N fact-table exchanges and one.
 
     Direction is backward-inclusive (latest right row with r.ts <= l.ts,
     DuckDB ASOF semantics); per-right ties at one (key, ts) are
     undefined in both engines — dedup each right first (same contract as
-    ``asof_join``). Payloads travel as one struct per right row so a
-    null payload value can never pair with another row's timestamp."""
-    ts = "__asof_ts"
-    left_cols = list(left.columns)
-    taken = set(left_cols)
+    ``asof_join``)."""
+    taken = set(left.columns)
+    names = []
     for _, _, cols, tag in rights:
         # the generated matched-ts name participates in the uniqueness
-        # check too (r5 review fix: duplicate tags — or a left column
-        # named like one — would emit ambiguous output columns)
-        for c in [*cols, f"{tag}_ts_matched"]:
+        # check too: duplicate tags — or a left column named like one —
+        # would emit ambiguous output columns
+        names.append([*cols, f"{tag}_ts{_SUFFIX}"])
+        for c in names[-1]:
             if c in taken:
                 raise ValueError(f"duplicate payload column: {c}")
             taken.add(c)
 
-    frames = [
-        left.select(
-            *on,
-            F.col(left_ts).alias(ts),
-            F.lit(1).alias(_SIDE),
-            *[F.col(c) for c in left_cols if c not in on and c != left_ts],
-        )
-    ]
-    for i, (right, right_ts, cols, tag) in enumerate(rights):
-        frames.append(
-            right.select(
-                *on,
-                F.col(right_ts).alias(ts),
-                F.lit(0).alias(_SIDE),
-                # NULL-ts right rows carry no payload (see asof_join)
-                F.when(
-                    F.col(right_ts).isNotNull(),
-                    F.struct(
-                        *[F.col(c) for c in cols],
-                        F.col(right_ts).alias(f"{tag}_ts_matched"),
-                    ),
-                ).alias(f"__p{i}"),
-            )
-        )
-    u = frames[0]
-    for fr in frames[1:]:
-        u = u.unionByName(fr, allowMissingColumns=True)
-
-    w = (
-        Window.partitionBy(*on)
-        .orderBy(F.col(ts).asc(), F.col(_SIDE).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = u.select(
-        "*",
-        *[
-            F.last(f"__p{i}", ignorenulls=True).over(w).alias(f"__f{i}")
-            for i in range(len(rights))
+    filled = _tagged_fill(
+        left,
+        [
+            (right, right_ts, [*cols, F.col(right_ts).alias(ns[-1])])
+            for (right, right_ts, cols, _), ns in zip(rights, names)
         ],
+        on,
+        left_ts,
     )
-    out_cols: list = [
-        *on,
-        F.col(ts).alias(left_ts),
-        *[c for c in left_cols if c not in on and c != left_ts],
-    ]
-    for i, (_, _, cols, tag) in enumerate(rights):
-        out_cols += [F.col(f"__f{i}.{c}").alias(c) for c in cols]
-        out_cols.append(
-            F.col(f"__f{i}.{tag}_ts_matched").alias(f"{tag}_ts_matched")
-        )
-    return filled.filter(F.col(_SIDE) == 1).select(*out_cols)
+    return filled.select(
+        *filled.columns[: len(left.columns)],
+        *[F.col(f"__f{i}")[n].alias(n) for i, ns in enumerate(names) for n in ns],
+    )
 
 
 def asof_join_bucketed(
@@ -359,7 +273,6 @@ def asof_join_bucketed(
     right_ts: str,
     right_cols: list[str],
     bucket_width: int,
-    suffix: str = "_matched",
 ) -> DataFrame:
     """Skew-mitigated backward as-of join: result-identical to
     ``asof_join(direction="backward")``, but the big window partitions by
@@ -409,70 +322,43 @@ def asof_join_bucketed(
     and the dedup-right contract match ``asof_join`` (ties only arise
     within a bucket, where the inner as-of applies the same rule)."""
     bkt = "__asof_bkt"
-    out_names = {c: (c + suffix if c in left.columns else c) for c in right_cols}
-    matched_ts = right_ts + suffix
+    names = _payload_names(left, right_cols, right_ts)
+    matched_ts = names[-1]
 
     lb = left.withColumn(bkt, F.floor(F.col(left_ts) / F.lit(bucket_width)))
     rb = right.withColumn(bkt, F.floor(F.col(right_ts) / F.lit(bucket_width)))
 
     # (a) within-bucket as-of: the heavy window, partitioned on (key, bucket)
-    within = asof_join(
-        lb, rb, on + [bkt], left_ts, right_ts, right_cols, "backward", suffix
-    )
+    within = asof_join(lb, rb, on + [bkt], left_ts, right_ts, right_cols)
 
     # (b) carry frame: latest right payload per (key, bucket), exposed to
     # every LATER left bucket. Right buckets enter the fill at sort key
     # (bkt + 1) so a left bucket b sees exactly the right buckets < b.
+    # NULL-ts right rows can never match and their bucket is NULL
+    # anyway — drop them before the carry aggregation.
     payload_t = F.struct(
-        *[F.col(c).alias(out_names[c]) for c in right_cols],
-        F.col(right_ts).alias(matched_ts),
+        *[F.col(c).alias(n) for c, n in zip([*right_cols, right_ts], names)]
     )
-    # NULL-ts right rows can never match (see asof_join) and their bucket
-    # is NULL anyway — drop them before the carry aggregation
-    r_latest = rb.filter(F.col(right_ts).isNotNull()).groupBy(*on, bkt).agg(
-        F.max_by(payload_t, F.col(right_ts)).alias("__carry")
+    r_latest = (
+        rb.filter(F.col(right_ts).isNotNull())
+        .groupBy(*on, bkt)
+        .agg(F.max_by(payload_t, F.col(right_ts)).alias("__carry"))
+        .withColumn(bkt, F.col(bkt) + 1)
     )
-    l_buckets = lb.select(*on, bkt).distinct()
-    carry_u = l_buckets.select(
-        *on, F.col(bkt), F.col(bkt).alias("__k"), F.lit(1).alias(_SIDE)
-    ).unionByName(
-        r_latest.select(
-            *on,
-            F.col(bkt),
-            (F.col(bkt) + 1).alias("__k"),
-            F.lit(0).alias(_SIDE),
-            "__carry",
-        ),
-        allowMissingColumns=True,
-    )
-    w_c = (
-        Window.partitionBy(*on)
-        .orderBy(F.col("__k").asc(), F.col(_SIDE).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carry = (
-        carry_u.select(
-            *on, bkt, _SIDE, F.last("__carry", ignorenulls=True).over(w_c).alias("__c")
-        )
-        .filter(F.col(_SIDE) == 1)
-        .select(*on, bkt, "__c")
-    )
+    carry = _tagged_fill(
+        lb.select(*on, bkt).distinct(), [(r_latest, bkt, ["__carry"])], on, bkt
+    ).select(*on, bkt, F.col("__f0.__carry").alias("__c"))
 
     # stitch: within-bucket match wins; else the carry — the matched ts
     # is the non-null witness of a real within match (payload values may
     # legitimately be null on a matched row). The join is NULL-SAFE on
-    # the keys (r5 review fix): Window.partitionBy groups NULL keys into
-    # one partition, so the plain as-of matches them — a null-unsafe
-    # equi-join here would silently drop their cross-bucket carry.
-    from functools import reduce as _reduce
-
+    # the keys: Window.partitionBy groups NULL keys into one partition,
+    # so the plain as-of matches them — a null-unsafe equi-join here
+    # would silently drop their cross-bucket carry.
     w_al, c_al = within.alias("__wb"), carry.alias("__cb")
-    cond = _reduce(
+    cond = reduce(
         lambda a, b: a & b,
-        [
-            F.col(f"__wb.{c}").eqNullSafe(F.col(f"__cb.{c}"))
-            for c in on + [bkt]
-        ],
+        [F.col(f"__wb.{c}").eqNullSafe(F.col(f"__cb.{c}")) for c in on + [bkt]],
     )
     stitched = w_al.join(c_al, cond, "left")
     has_within = F.col(f"__wb.{matched_ts}").isNotNull()
@@ -485,10 +371,10 @@ def asof_join_bucketed(
             if c not in on and c != left_ts and c != bkt
         ],
         *[
-            F.when(has_within, F.col(f"__wb.{out_names[c]}"))
-            .otherwise(F.col(f"__cb.__c.{out_names[c]}"))
-            .alias(out_names[c])
-            for c in right_cols
+            F.when(has_within, F.col(f"__wb.{n}"))
+            .otherwise(F.col(f"__cb.__c.{n}"))
+            .alias(n)
+            for n in names[:-1]
         ],
         F.coalesce(
             F.col(f"__wb.{matched_ts}"), F.col(f"__cb.__c.{matched_ts}")

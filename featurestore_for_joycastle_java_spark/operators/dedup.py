@@ -165,17 +165,9 @@ def token_jaccard_pairs(
             b,
             (F.col("a.tok") == F.col("b.tok"))
             & (F.col("a.id") < F.col("b.id"))
-            # length-band prune: J(A,B) ≥ t forces the sizes within a
-            # factor t of each other — evaluated per pair-token row
-            # pre-shuffle, so hopeless pairs never reach the aggregation.
-            # The EMITTED condition is on the 6dp-ROUNDED jaccard, which
-            # admits unrounded J down to t - 5e-7 — so the prune uses
-            # (t - 5e-7), making it exactly necessary for the final
-            # filter (r4, ADVICE fix: a pair at J = t - 4e-7 rounds up
-            # to t and must survive the prune). The extra 1e-9 absorbs
-            # double rounding of t·n at exact boundaries (t·max == min).
-            & (F.col("a.n_toks") * (threshold - 5e-7) <= F.col("b.n_toks") + 1e-9)
-            & (F.col("b.n_toks") * (threshold - 5e-7) <= F.col("a.n_toks") + 1e-9),
+            # evaluated per pair-token row pre-shuffle, so hopeless
+            # pairs never reach the aggregation
+            & _length_band(threshold),
         )
         .groupBy(
             F.col("a.id").alias("id_a"),
@@ -185,13 +177,32 @@ def token_jaccard_pairs(
         )
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    jac = F.round(
+    return inter.select("id_a", "id_b", _jaccard_6dp().alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
+
+
+def _length_band(threshold: float):
+    """Length-band prune of a self-join of (``id``, ``n_toks``) frames
+    aliased ``a``/``b``: J(A,B) ≥ t forces the sizes within a factor t of
+    each other. The EMITTED condition is on the 6dp-ROUNDED jaccard,
+    which admits unrounded J down to t - 5e-7 — so the prune uses
+    (t - 5e-7), making it exactly necessary for the final filter (a pair
+    at J = t - 4e-7 rounds up to t and must survive the prune). The extra
+    1e-9 absorbs double rounding of t·n at exact boundaries (t·max ==
+    min)."""
+    return (
+        F.col("a.n_toks") * (threshold - 5e-7) <= F.col("b.n_toks") + 1e-9
+    ) & (F.col("b.n_toks") * (threshold - 5e-7) <= F.col("a.n_toks") + 1e-9)
+
+
+def _jaccard_6dp():
+    """Token-set Jaccard from ``n_inter``, ``n_a`` and ``n_b``, rounded
+    to 6 dp (the oracles' rounding)."""
+    return F.round(
         F.col("n_inter")
         / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
         6,
-    )
-    return inter.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
     )
 
 
@@ -236,10 +247,7 @@ def _bitmask_jaccard_pairs(
     )
     pairs = a.join(
         F.broadcast(b),
-        (F.col("a.id") < F.col("b.id"))
-        # same prune + slack as the inverted-index path (see above)
-        & (F.col("a.n_toks") * (threshold - 5e-7) <= F.col("b.n_toks") + 1e-9)
-        & (F.col("b.n_toks") * (threshold - 5e-7) <= F.col("a.n_toks") + 1e-9),
+        (F.col("a.id") < F.col("b.id")) & _length_band(threshold),
     ).select(
         F.col("a.id").alias("id_a"),
         F.col("b.id").alias("id_b"),
@@ -247,14 +255,9 @@ def _bitmask_jaccard_pairs(
         F.col("a.n_toks").alias("n_a"),
         F.col("b.n_toks").alias("n_b"),
     )
-    jac = F.round(
-        F.col("n_inter")
-        / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-        6,
-    )
     return (
         pairs.filter(F.col("n_inter") >= 1)
-        .select("id_a", "id_b", jac.alias("jaccard"))
+        .select("id_a", "id_b", _jaccard_6dp().alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -383,11 +386,16 @@ def minhash_signatures(
     Seedless (xxhash64 is deterministic) → identical output every run."""
     from featurestore_for_joycastle_java_spark.operators.text import shingles
 
+    return _min_hashes(
+        df, F.col(id_col), shingles(F.col(text_col), shingle_k), num_perm
+    )
+
+
+def _min_hashes(df: DataFrame, id_col, shingle_arr, num_perm: int) -> DataFrame:
+    """(id, m0..m{num_perm-1}): the MinHash signature of each row's
+    shingle array."""
     base = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(shingles(F.col(text_col), shingle_k)).alias("s"),
-        )
+        df.select(id_col.alias("id"), F.explode(shingle_arr).alias("s"))
         # hash the string ONCE; permutations rehash the 8-byte long
         .select("id", F.xxhash64("s").alias("h"))
     )
@@ -428,7 +436,6 @@ def minhash_lsh_pairs(
 
     if num_perm % n_bands:
         raise ValueError("num_perm must be divisible by n_bands")
-    r = num_perm // n_bands
 
     # The shingle table feeds three plan branches (signatures + both sides
     # of the verify join) — cache it once instead of re-tokenizing 3×.
@@ -444,31 +451,8 @@ def minhash_lsh_pairs(
         .filter(F.size("sh") > 0)
         .cache()
     )
-    base = sh.select("id", F.explode("sh").alias("s")).select(
-        "id", F.xxhash64("s").alias("h")
-    )
-    mins = [
-        F.min(F.xxhash64(F.lit(i), F.col("h"))).alias(f"m{i}")
-        for i in range(num_perm)
-    ]
-    sig = base.groupBy("id").agg(*mins)
-
-    bands = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band_idx"),
-                        F.xxhash64(
-                            *[F.col(f"m{bi * r + j}") for j in range(r)]
-                        ).alias("band_hash"),
-                    )
-                    for bi in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "band.band_idx", "band.band_hash")
+    sig = _min_hashes(sh, F.col("id"), F.col("sh"), num_perm)
+    bands = _sig_bands(sig, num_perm, n_bands)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -481,17 +465,7 @@ def minhash_lsh_pairs(
         .distinct()
     )
 
-    sa = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("__sh_a"))
-    sb = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("__sh_b"))
-    n_inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
-    n_union = F.size("__sh_a") + F.size("__sh_b") - n_inter
-    dist = F.round(F.lit(1.0) - n_inter / n_union.cast("double"), 6)
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", dist.alias("jaccard_dist"))
-        .filter(F.col("jaccard_dist") <= max_jaccard_distance)
-    )
+    return _verify_shingle_jaccard(cand, sh, max_jaccard_distance)
 
 
 def _sig_bands(sig: DataFrame, num_perm: int, n_bands: int) -> DataFrame:
@@ -514,6 +488,26 @@ def _sig_bands(sig: DataFrame, num_perm: int, n_bands: int) -> DataFrame:
             )
         ).alias("band"),
     ).select("id", "band.band_idx", "band.band_hash")
+
+
+def _verify_shingle_jaccard(
+    cand: DataFrame, sh: DataFrame, max_jaccard_distance: float
+) -> DataFrame:
+    """The exact verify of MinHash candidates: join both members'
+    shingle arrays (``sh``: id, sh) onto the (id_a, id_b) pairs of
+    ``cand`` and keep those whose 6dp-rounded shingle-set Jaccard
+    distance is ``<= max_jaccard_distance``."""
+    sa = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("__sh_a"))
+    sb = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("__sh_b"))
+    n_inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
+    n_union = F.size("__sh_a") + F.size("__sh_b") - n_inter
+    dist = F.round(F.lit(1.0) - n_inter / n_union.cast("double"), 6)
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select("id_a", "id_b", dist.alias("jaccard_dist"))
+        .filter(F.col("jaccard_dist") <= max_jaccard_distance)
+    )
 
 
 def minhash_lsh_pairs_incremental(
@@ -619,17 +613,7 @@ def minhash_lsh_pairs_incremental(
         .filter(F.size("sh") > 0)
         .cache()
     )
-    sa = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("__sh_a"))
-    sb = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("__sh_b"))
-    n_inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
-    n_union = F.size("__sh_a") + F.size("__sh_b") - n_inter
-    dist = F.round(F.lit(1.0) - n_inter / n_union.cast("double"), 6)
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", dist.alias("jaccard_dist"))
-        .filter(F.col("jaccard_dist") <= max_jaccard_distance)
-    )
+    return _verify_shingle_jaccard(cand, sh, max_jaccard_distance)
 
 
 # --- Connected components (near-dup clusters) -------------------------------

@@ -1271,7 +1271,12 @@ def pq_codebooks(
     if dim % m:
         raise ValueError("dim must be divisible by m")
     sub_d = dim // m
-    normed = corpus.select(unit_vec(F.col(vec_col)).alias("__nv")).cache()
+    # zero-norm rows have no direction to fit (the k-means rule)
+    normed = (
+        corpus.filter(l2_norm(as_double(F.col(vec_col))) > 0)
+        .select(unit_vec(F.col(vec_col)).alias("__nv"))
+        .cache()
+    )
     try:
         normed.count()  # build the cache once, before the pool
 
@@ -1328,14 +1333,20 @@ def _sq_dist(a, b) -> Column:
 
 
 def _pq_query_tables(
-    q: DataFrame, query_id_col: str, qcol: str, books: DataFrame, sub_d: int
+    queries: DataFrame, query_id_col: str, vec_col: str, books: DataFrame, sub_d: int
 ) -> DataFrame:
     """Each query's ADC table: per subspace, the squared distance from
-    the query's unit subvector (``qcol`` of ``q``) to every codebook
-    entry. Returns (query id, ``__tabs``) — |queries| tiny rows."""
+    the query's unit subvector to every codebook entry. A zero-norm
+    query has no direction, so its tables are NULL. Returns (query id,
+    ``__tabs``) — |queries| tiny rows."""
+    v = F.col(vec_col)
+    q = queries.select(
+        F.col(query_id_col),
+        F.when(l2_norm(as_double(v)) > 0, unit_vec(v)).alias("__qv"),
+    )
 
     def table_for(sub):
-        subvec = F.slice(F.col(qcol), sub["sub_id"] * sub_d + 1, sub_d)
+        subvec = F.slice(F.col("__qv"), sub["sub_id"] * sub_d + 1, sub_d)
         return F.transform(sub["entries"], lambda e: _sq_dist(subvec, e["__cb"]))
 
     return q.join(F.broadcast(_pq_books_row(books))).select(
@@ -1350,13 +1361,15 @@ def _adc_shortlist(
     """The ``shortlist`` ids per query with the smallest ADC distance,
     ties to the lower id. ``scan`` pairs each candidate's PQ ``codes``
     with its query's ``__tabs``; the distance is the sum of the m table
-    lookups (no per-pair vector math). Returns (query id, id,
-    ``adc_dist``, ``__rn``)."""
+    lookups (no per-pair vector math). A row without a code (-1: a NULL
+    or zero-norm vector) and a zero-norm query's NULL tables give a NULL
+    distance, which ranks last. Returns (query id, id, ``adc_dist``,
+    ``__rn``)."""
     adc = F.aggregate(
         F.zip_with(
             F.col("codes"),
             F.col("__tabs"),
-            lambda c, t: F.element_at(t, c + 1),
+            lambda c, t: F.when(c >= 0, F.element_at(t, c + 1)),
         ),
         F.lit(0.0),
         lambda acc, x: acc + x,
@@ -1365,7 +1378,7 @@ def _adc_shortlist(
     return top_k_per_group(
         scored,
         [query_id_col],
-        [F.col("adc_dist").asc(), F.col(id_col)],
+        [F.col("adc_dist").asc_nulls_last(), F.col(id_col)],
         shortlist,
         "__rn",
     )
@@ -1451,12 +1464,13 @@ def pq_encode(
                 take = starts[:, None] + np.arange(dim)[None, :]
                 x = flat[take].astype(np.float64)
                 # unit_vec replay: norm = sqrt(left fold of x*x), then
-                # per-element x / norm — the identical IEEE sequence
+                # per-element x / norm — the identical IEEE sequence; a
+                # zero row turns NaN and keeps code -1, like a NULL row
                 acc = np.zeros(nv)
                 for j in range(dim):
                     acc = acc + x[:, j] * x[:, j]
-                xn = x / np.sqrt(acc)[:, None]
                 with np.errstate(invalid="ignore", divide="ignore"):
+                    xn = x / np.sqrt(acc)[:, None]
                     for s in range(m):
                         off = s * sub_d
                         best_d = np.full(nv, np.inf)
@@ -1520,10 +1534,7 @@ def pq_topk(
     vs brute force (the ``sim_ivf_kmeans_recall`` pattern)."""
     books = pq_codebooks(corpus, vec_col, m=m, k=n_codes, dim=dim, seed=seed)
     corpus_codes = pq_encode(corpus, books, id_col, vec_col, m=m, dim=dim)
-    q = queries.select(
-        F.col(query_id_col), unit_vec(F.col(vec_col)).alias("__qv")
-    )
-    qtabs = _pq_query_tables(q, query_id_col, "__qv", books, dim // m)
+    qtabs = _pq_query_tables(queries, query_id_col, vec_col, books, dim // m)
     cand = _adc_shortlist(
         corpus_codes.join(F.broadcast(qtabs)), query_id_col, id_col, shortlist
     )
@@ -1577,10 +1588,7 @@ def ivfpq_topk(
     books = pq_codebooks(corpus, vec_col, m=m, k=n_codes, dim=dim, seed=seed)
     corpus_codes = pq_encode(corpus, books, id_col, vec_col, m=m, dim=dim)
     cell_codes = corpus_codes.join(assigned, id_col)
-    qn = queries.select(
-        F.col(query_id_col), unit_vec(F.col(vec_col)).alias("__qn")
-    )
-    qtabs = _pq_query_tables(qn, query_id_col, "__qn", books, dim // m)
+    qtabs = _pq_query_tables(queries, query_id_col, vec_col, books, dim // m)
     # probe list x ADC tables: one small broadcast frame keyed by cell,
     # so the code scan joins on cent_id and each query reads ONLY its
     # probed cells — the corpus-side scan stays shuffle-free

@@ -287,9 +287,7 @@ def test_zscore_flags_only_outliers(spark, tmp_path):
 def test_asof_nearest_prefers_closer_and_breaks_ties_backward(spark):
     """Nearest-in-time: closer side wins; exact ties go backward; a left
     row with matches on only one side takes that side."""
-    from featurestore_for_joycastle_java_spark.operators.asof import (
-        asof_join_nearest,
-    )
+    from featurestore_for_joycastle_java_spark.operators.asof import asof_join
 
     left = spark.createDataFrame(
         [(1, 100), (2, 205), (3, 10)], "event_id bigint, t_us bigint"
@@ -300,13 +298,14 @@ def test_asof_nearest_prefers_closer_and_breaks_ties_backward(spark):
     ).withColumn("user_id", F.lit(1))
     out = {
         r["event_id"]: r
-        for r in asof_join_nearest(
+        for r in asof_join(
             left,
             right,
             on=["user_id"],
             left_ts="t_us",
             right_ts="t_us",
             right_cols=["rid"],
+            direction="nearest",
         ).collect()
     }
     # event 1 at t=100: backward 90 (d=10) vs forward 110 (d=10) — tie -> backward

@@ -243,3 +243,20 @@ def test_one_copy_of_each_vector_search_stage():
         and isinstance(n.body.right, ast.Subscript)
     ]
     assert (len(limits), len(folds), len(normalizers)) == (1, 1, 1)
+
+
+def test_one_as_of_fill():
+    """Every as-of join in ``operators/asof.py`` runs through one
+    tagged-union fill: ``unionByName`` and ``last`` are called only in
+    ``_tagged_fill``, so the NULL-timestamp and one-struct payload rules
+    live in one place."""
+    tree = dict(_modules())[os.path.join("operators", "asof.py")]
+    calls = {
+        (getattr(stmt, "name", None), call.lineno)
+        for stmt in tree.body
+        for call in ast.walk(stmt)
+        if isinstance(call, ast.Call) and _callee(call) in {"unionByName", "last"}
+    }
+    outside = sorted(c for c in calls if c[0] != "_tagged_fill")
+    assert not outside, f"route these through _tagged_fill: {outside}"
+    assert calls, "the as-of fill is gone"

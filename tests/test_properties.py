@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import re
 from decimal import Decimal
+from functools import reduce
 
 from hypothesis import given, settings, strategies as st
 
@@ -184,52 +185,102 @@ _asof_rows = st.lists(
 )
 
 
-def _py_asof_backward(left_rows, right_map):
-    """Python reference: for (k, t) return the right value at the
-    largest right ts' <= t for that key, else None."""
+def _py_asof(left_rows, right_map, direction="backward", tolerance=None):
+    """Python reference: for each left (k, t), the (value, ts) of the
+    right row of key k matched in ``direction`` — backward: largest ts'
+    <= t; forward: smallest ts' >= t; nearest: the closer of those two,
+    backward on equal distance — or (None, None) when there is none or
+    its |t - ts'| exceeds ``tolerance``."""
     out = []
     for k, t in left_rows:
-        cands = [(ts, v) for (kk, ts), v in right_map.items() if kk == k and ts <= t]
-        out.append((k, t, max(cands)[1] if cands else None))
+        rows = sorted((ts, v) for (kk, ts), v in right_map.items() if kk == k)
+        b = max((r for r in rows if r[0] <= t), default=None)
+        f = min((r for r in rows if r[0] >= t), default=None)
+        if direction == "backward":
+            m = b
+        elif direction == "forward":
+            m = f
+        else:
+            m = b if b is not None and (f is None or t - b[0] <= f[0] - t) else f
+        if m is None or (tolerance is not None and abs(t - m[0]) > tolerance):
+            out.append((None, None))
+        else:
+            out.append((m[1], m[0]))
     return out
 
 
 @settings(**_SETTINGS)
-@given(_asof_rows, _asof_rows, st.sampled_from([7, 50, 1000]))
-def test_bucketed_asof_matches_python_reference(spark, lrows, rrows, width):
-    """asof_join_bucketed == plain backward as-of == a Python reference,
-    for random key/ts structures and bucket widths spanning many-buckets
-    through one-bucket regimes (right side deduped per (key, ts) — the
+@given(
+    _asof_rows,
+    _asof_rows,
+    st.sampled_from([7, 50, 1000]),
+    _asof_rows,
+    st.one_of(st.none(), st.integers(min_value=0, max_value=100)),
+)
+def test_bucketed_asof_matches_python_reference(
+    spark, lrows, rrows, width, r2rows, tol
+):
+    """Every as-of operator against an independent Python reference, for
+    random key/ts structures: ``asof_join`` in each direction with a
+    drawn tolerance, ``asof_join_bucketed`` at bucket widths spanning
+    many-buckets through one-bucket regimes, and a two-right
+    ``multi_asof_join`` (right sides deduped per (key, ts) — the
     operator contract)."""
     from featurestore_for_joycastle_java_spark.operators.asof import (
         asof_join,
         asof_join_bucketed,
+        multi_asof_join,
     )
 
     right_map = {}
     for i, (k, t) in enumerate(rrows):  # last write wins -> unique (k, t)
         right_map[(k, t)] = float(i)
+    r2_map = {(k, t): float(1000 + i) for i, (k, t) in enumerate(r2rows)}
     left = spark.createDataFrame(
         [(k, t, i) for i, (k, t) in enumerate(lrows)], "k long, t long, i long"
     )
     right = spark.createDataFrame(
         [(k, t, v) for (k, t), v in right_map.items()], "k long, t long, v double"
     )
-    want = sorted(
-        (k, t, i, v)
-        for (k, t, v), (_, _, i) in zip(
-            _py_asof_backward(lrows, right_map),
-            [(k, t, i) for i, (k, t) in enumerate(lrows)],
-        )
+    r2 = spark.createDataFrame(
+        [(k, t, v) for (k, t), v in r2_map.items()], "k long, t long, w double"
     )
-    for df in (
-        asof_join(left, right, ["k"], "t", "t", ["v"], "backward"),
-        asof_join_bucketed(left, right, ["k"], "t", "t", ["v"], width),
-    ):
+
+    cases = {
+        d: asof_join(left, right, ["k"], "t", "t", ["v"], d, tolerance=tol)
+        for d in ("backward", "forward", "nearest")
+    }
+    cases["bucketed"] = asof_join_bucketed(left, right, ["k"], "t", "t", ["v"], width)
+    cases["multi"] = multi_asof_join(
+        left, [(right, "t", ["v"], "a"), (r2, "t", ["w"], "b")], ["k"], "t"
+    ).withColumnRenamed("a_ts_matched", "t_matched")
+    # one Spark job for all five operators keeps the property cheap
+    rows = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [df.withColumn("case", F.lit(c)) for c, df in cases.items()],
+    ).collect()
+
+    def check(case, cols, *matches):
         got = sorted(
-            (r["k"], r["t"], r["i"], r["v"]) for r in df.collect()
+            tuple(r[c] for c in ["k", "t", "i", *cols])
+            for r in rows
+            if r["case"] == case
         )
-        assert got == want, f"width={width}: {got} != {want}"
+        want = sorted(
+            (k, t, i, *[x for m in ms for x in m])
+            for (k, t), i, ms in zip(lrows, range(len(lrows)), zip(*matches))
+        )
+        assert got == want, (case, width, tol)
+
+    for d in ("backward", "forward", "nearest"):
+        check(d, ["v", "t_matched"], _py_asof(lrows, right_map, d, tol))
+    check("bucketed", ["v", "t_matched"], _py_asof(lrows, right_map))
+    check(
+        "multi",
+        ["v", "t_matched", "w", "b_ts_matched"],
+        _py_asof(lrows, right_map),
+        _py_asof(lrows, r2_map),
+    )
 
 
 @settings(**_SETTINGS)
@@ -262,10 +313,8 @@ def test_multi_asof_matches_python_reference(spark, lrows, r1rows, r2rows):
     got = sorted((r["k"], r["t"], r["i"], r["f1"], r["f2"]) for r in out.collect())
     want = sorted(
         (k, t, i, w1, w2)
-        for ((k, t, w1), (_, _, w2), (_, _, i)) in zip(
-            _py_asof_backward(lrows, m1),
-            _py_asof_backward(lrows, m2),
-            [(k, t, i) for i, (k, t) in enumerate(lrows)],
+        for ((k, t), (w1, _), (w2, _), i) in zip(
+            lrows, _py_asof(lrows, m1), _py_asof(lrows, m2), range(len(lrows))
         )
     )
     assert got == want

@@ -361,3 +361,37 @@ def test_zero_norm_vectors_score_null_in_every_cosine_operator(spark):
         for b in range(10)
     }
     assert got == want and got[5] and got[7]
+
+
+def test_zero_norm_vectors_in_pq_operators(spark):
+    """PQ keeps the zero-norm contract: a zero corpus row stays out of the
+    codebook fit, scores NULL and ranks after every nonzero row; a zero
+    query scores NULL. With a shortlist covering the whole corpus the ADC
+    stage prunes nothing, so ``pq_topk`` must equal ``brute_force_topk``
+    and ``ivfpq_topk`` (every cell probed) must equal ``ivf_topk``."""
+    import random
+
+    from featurestore_for_joycastle_java_spark.operators.similarity import (
+        ivfpq_topk,
+        pq_topk,
+    )
+
+    rng = random.Random(7)
+    vecs = [(i, [rng.uniform(-1.0, 1.0) for _ in range(8)]) for i in range(40)]
+    zero = [0.0] * 8
+    c = spark.createDataFrame(vecs + [(40, zero)], "vec_id long, embedding array<double>")
+    q = spark.createDataFrame(
+        [(100, vecs[3][1]), (101, zero), (102, vecs[17][1])],
+        "query_id long, embedding array<double>",
+    )
+    exact = sorted(map(tuple, brute_force_topk(c, q, k=41).collect()))
+    assert [r[1] for r in exact if r[0] != 101 and r[2] is None] == [40, 40]
+    assert all(r[2] is None for r in exact if r[0] == 101)
+
+    pq = pq_topk(c, q, k=41, m=2, n_codes=4, dim=8, shortlist=50)
+    assert sorted(map(tuple, pq.collect())) == exact
+    ivfpq = ivfpq_topk(
+        c, q, k=41, n_centroids=4, n_probe=4, m=2, n_codes=4, dim=8, shortlist=50
+    )
+    ivf = ivf_topk(c, q, k=41, n_centroids=4, n_probe=4)
+    assert sorted(map(tuple, ivfpq.collect())) == sorted(map(tuple, ivf.collect()))

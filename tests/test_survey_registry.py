@@ -147,7 +147,6 @@ _ALLOWED_UNREGISTERED = {
     "agg_approx_distinct",  # retired r3 (SURVEY §2.5): weaker twin of _bounded
     "sim_lsh_topk",  # retired rows-only duty (SURVEY §2.5/§2.6)
     "dedup_simhash_pairs",  # retired rows-only duty (SURVEY §2.5/§2.6)
-    "asof_join_nearest",  # operator fn, operators/asof.py
     "asof_join_bucketed",  # operator fn, operators/asof.py
 }
 

@@ -6,13 +6,16 @@ the given scale factor, printing one line per query and a final failure
 list. Rows-only queries (no oracle) get a count-executes check.
 
 Usage:
-    python tools/driver_sim.py [sf_dir] [first_n] [skip_n]
+    python tools/driver_sim.py [sf_dir] [first_n] [skip_n] [name ...]
 
     sf_dir   defaults to /root/testdata/sf0.01 (the driver's gate SF)
     first_n  limit to the first N registered queries (the driver's
-             correctness window records 50); default = all
+             correctness window records 50); default (or 0) = all
     skip_n   skip the first N queries (resume a long sweep — e.g. the
              sf0.1 sweep, whose quadratic DuckDB oracles run ~1 h total)
+    name     check only these queries, in this order (first_n/skip_n
+             then apply to this list) — e.g.
+             ``driver_sim.py /root/testdata/sf0.001 0 0 asof_backward_purchase_click``
 """
 
 from __future__ import annotations
@@ -98,7 +101,8 @@ def main() -> int:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     qs, oracles = E.queries(), E.oracle_sql()
-    names = list(qs)[:first_n] if first_n else list(qs)
+    names = sys.argv[4:] or list(qs)
+    names = names[:first_n] if first_n else names
     names = names[skip_n:]
     capped_dir = _capped_sf_dir(sf, cap) if cap else None
     fails: list[str] = []
