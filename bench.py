@@ -28,8 +28,8 @@ from featurestore_for_joycastle_java_spark.registry import BENCH_SKIP, QUERIES
 def _host_cpu_jiffies() -> dict[str, int]:
     """Aggregate jiffies from /proc/stat's first line — notably STEAL
     (time the hypervisor ran someone else while this VM wanted CPU).
-    Added r10: the round-10 box showed steal ~= user cumulatively, which
-    uniformly inflated every query ~1.4x vs r9 and produced 2-3x swings
+    One host showed steal ~= user cumulatively, which uniformly inflated
+    every query ~1.4x against the previous run and produced 2-3x swings
     on identical back-to-back isolated runs. Recording the steal delta
     across the suite turns that from unattributable drift into committed
     evidence. Zeros on non-Linux (best effort)."""
@@ -81,10 +81,10 @@ def main() -> None:
     spark.range(1_000_000).selectExpr("sum(id)").write.format("noop").mode(
         "overwrite"
     ).save()
-    # Fixture identity (r4): per-table row count + schema hash recorded in
-    # the artifact, so cross-round per-query ratios are attributable —
-    # the r2→r3 CC "regression" was confounded by a silent fixture regen
-    # (denser near-dup graph) that nothing on disk recorded.
+    # Fixture identity: per-table row count + schema hash recorded in
+    # the artifact, so per-query ratios across runs are attributable —
+    # one connected-components "regression" was confounded by a silent
+    # fixture regen (denser near-dup graph) that nothing on disk recorded.
     fixture: dict[str, dict[str, object]] = {}
     for f in sorted(os.listdir(sf_dir)):
         if f.endswith(".parquet"):
@@ -98,7 +98,7 @@ def main() -> None:
             }
 
     # Streaming queries append per-trigger progress here (catalog/
-    # streaming.DRAIN_PROGRESS); recording it per query makes cross-round
+    # streaming.DRAIN_PROGRESS); recording it per query makes run-to-run
     # stream_* drift attributable to a phase (state commit / empty
     # finalization batch / planning) instead of a bare wall delta.
     from featurestore_for_joycastle_java_spark.catalog import streaming as CS
@@ -121,9 +121,9 @@ def main() -> None:
         spark.catalog.clearCache()
         return dt
 
-    # Host-speed canary (r10): a fixed pure-JVM aggregation, timed min-of-2
+    # Host-speed canary: a fixed pure-JVM aggregation, timed min-of-2
     # after the warmup. It has no I/O, no Python, no fixture dependence —
-    # its cross-round ratio IS the host-speed ratio, so a suite-total move
+    # its ratio across runs IS the host-speed ratio, so a suite-total move
     # that matches the canary move is the box, not the code. Paired with
     # the /proc/stat steal delta across the suite (see _host_cpu_jiffies).
     def _canary() -> float:
@@ -185,15 +185,15 @@ def main() -> None:
     def flagged(n: str, t_now: float) -> dict[str, float] | None:
         # >1.5x slowdowns that also cost >0.3s absolute — sub-second
         # jitter at suite scale is noise, a 1.5x on a multi-second query
-        # is rot (r2 shipped a 2.3x CC regression nobody caught in-round)
+        # is rot (a 2.3x CC regression once shipped unnoticed)
         t_old = prior.get("queries", {}).get(n) if prior_same_sf else None
         if t_old and t_now > 1.5 * t_old and t_now - t_old > 0.3:
             return {"prior": t_old, "now": t_now, "ratio": round(t_now / t_old, 2)}
         return None
 
-    # Noise control (r4): a single-shot number in a contended suite flags
-    # false regressions (r3: dedup_pipeline_lsh 8.2s in-suite vs 4.4s warm
-    # same-session). Any flagged query gets TWO more runs; the recorded
+    # Noise control: a single-shot number in a contended suite flags
+    # false regressions (dedup_pipeline_lsh once read 8.2s in-suite vs
+    # 4.4s warm same-session). Any flagged query gets TWO more runs; the recorded
     # time becomes the median of the three, and the flag stands only if
     # the median still clears the gate.
     regressions: dict[str, dict[str, float]] = {}
@@ -206,12 +206,11 @@ def main() -> None:
         if flagged(n, timings[n]) is not None:
             rerun(n)
 
-    # Top-10 medians (r13, VERDICT r12 ask #2): the 10 slowest queries
-    # define the printed one-line summary AND most of PERF's per-query
-    # comparisons, yet each was a single shot — one hypervisor-steal
-    # burst during any of them defined the round (both r12 driver runs
-    # landed in 13-19% steal windows and read as regressions on
-    # untouched code). Every top-10 query now gets TWO more runs and
+    # Top-10 medians: the 10 slowest queries define the printed one-line
+    # summary AND most of PERF's per-query comparisons, so a single shot
+    # each let one hypervisor-steal burst during any of them define the
+    # run (two runs that landed in 13-19% steal windows read as
+    # regressions on untouched code). Every top-10 query now gets TWO more runs and
     # records the median; the raw runs stay in rerun_medians so the
     # single-shot numbers remain committed evidence. Queries already
     # median-ed by the regression gate are not re-run. The gate is
@@ -223,12 +222,13 @@ def main() -> None:
         if n not in reruns:
             rerun(n)
 
-    # Cross-round drift (VERDICT r4): the per-round gate compares only
-    # against HEAD, so a sub-gate slowdown each round ratchets invisibly
-    # (stream_stream_join 2.70 -> 4.28 s over two rounds, each step under
-    # 1.5x). bench_history.json keeps the last rounds' full per-query maps
-    # (committed); current timings are ALSO compared against the OLDEST
-    # retained round at the same sf, flagged at the same 1.5x/0.3s gate.
+    # Drift across runs: the regression gate compares only against HEAD,
+    # so a sub-gate slowdown per change ratchets invisibly
+    # (stream_stream_join went 2.70 -> 4.28 s over two changes, each step
+    # under 1.5x). bench_history.json keeps the last runs' full per-query
+    # maps (committed); current timings are ALSO compared against the
+    # OLDEST retained run at the same sf, flagged at the same 1.5x/0.3s
+    # gate.
     hist_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "bench_history.json"
     )
@@ -248,12 +248,12 @@ def main() -> None:
     same_sf = [h for h in history if h.get("sf") == sf_val]
     if same_sf:
         oldest = same_sf[0]
-        # Same noise control as the regression gate (r4): the suite has
-        # grown ~15% in query count since the oldest retained round, so
+        # Same noise control as the regression gate: the suite has
+        # grown ~15% in query count since the oldest retained run, so
         # per-query in-suite contention biases sub-2s queries upward and
-        # a DIFFERENT handful crosses the 1.5x line on every run (r7b
-        # close: 9, then 1, then 4 flags across three back-to-back runs,
-        # disjoint sets). A drift flag must survive a median-of-3 before
+        # a DIFFERENT handful crosses the 1.5x line on every run (9, then
+        # 1, then 4 flags across three back-to-back runs, disjoint
+        # sets). A drift flag must survive a median-of-3 before
         # it is recorded; the rerun median also becomes the recorded
         # time, consistent with the regression path.
         for n in names:
@@ -275,9 +275,9 @@ def main() -> None:
         "%Y-%m-%d"
     )
     history = history + [{"label": label, "sf": sf_val, "queries": timings}]
-    # retain the last 6 rounds PER scale factor — a shared window would
+    # retain the last 6 runs PER scale factor — a shared window would
     # let frequent runs at one SF silently evict the other SF's drift
-    # baseline (r5 review fix)
+    # baseline
     by_sf: dict = {}
     for h in history:
         by_sf.setdefault(h.get("sf"), []).append(h)
@@ -285,19 +285,19 @@ def main() -> None:
     with open(hist_path, "w") as fh:
         json.dump({"rounds": history}, fh, indent=1, sort_keys=True)
 
-    # VERDICT r11 ask #4: the bench-skipped queries (recall/verification
-    # harnesses — quadratic ground truth or fit-heavy by design, which
-    # is WHY they are skipped at sf0.1) get ONE committed timing each at
-    # sf0.01 per round, so no registered query is a timing blind spot.
+    # The bench-skipped queries (recall/verification harnesses —
+    # quadratic ground truth or fit-heavy by design, which is WHY they
+    # are skipped at sf0.1) get ONE committed timing each at sf0.01 per
+    # run, so no registered query is a timing blind spot.
     # Single-shot, separate artifact key, no regression gate — these are
     # correctness harnesses, not performance surfaces; the gate lives on
     # the benched suite.
     skip_sf_dir = os.environ.get(
         "SPARK_GRAFT_SKIP_SF_DIR", "/root/testdata/sf0.01"
     )
-    # r13 (VERDICT r12 asks #2/#8): a single cold shot per probe breathed
-    # with host-steal bursts (the r12 PQ-fit claim was unconfirmable from
-    # the committed single shots — one landed at 38.6 s mid-burst).
+    # A single cold shot per probe breathed with host-steal bursts (a
+    # PQ-fit speed claim was unconfirmable from committed single shots —
+    # one landed at 38.6 s mid-burst).
     # Median-of-3 per probe; all raw runs stay in the artifact
     # (skipped_probe_runs), so run 1 keeps the old cold-shot semantics
     # (first-touch init included) and the median is the committed number.
@@ -317,8 +317,8 @@ def main() -> None:
             skipped_probes[name] = statistics.median(runs)
 
     # Full per-query map goes to a file; the one printed line stays compact
-    # (the driver captures a bounded amount of stdout — r1's 108-entry line
-    # got tail-truncated to "parsed": null).
+    # (a reader that keeps a bounded amount of stdout tail-truncated a
+    # 108-entry line to "parsed": null).
     full = {
         "metric": "bench_suite_total",
         "value": total,

@@ -953,7 +953,7 @@ def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fingerprint(F.col("text")).alias("fp"), F.col("doc_id")
             )
             .groupBy("fp")
-            .agg(F.min("doc_id").alias("base_min"))
+            .agg(F.min("doc_id").alias("keep_id"))
             .write.mode("overwrite")
             .parquet(fp_path)
         )
@@ -961,23 +961,8 @@ def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the corpus index is persisted once per process
     idx = spark.read.parquet(build_once(("fpidx", sf_dir), build))
-
-    from pyspark.sql import Window
-
-    bfp = _recrawl_batch(docs).select(
-        "doc_id", fingerprint(F.col("text")).alias("fp")
-    )
-    w = (
-        Window.partitionBy("fp")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    pm = bfp.withColumn("pmin", F.min("doc_id").over(w))
-    dup_of = F.least("base_min", "pmin")  # both engines skip NULL args
-    return pm.join(idx, "fp", "left").select(
-        "doc_id",
-        dup_of.alias("dup_of"),
-        dup_of.isNull().alias("accept"),
+    return D.exact_dedup_incremental(_recrawl_batch(docs), idx).select(
+        "doc_id", "dup_of", "accept"
     )
 
 

@@ -16,6 +16,9 @@ from featurestore_for_joycastle_java_spark.catalog.dedup import _recrawl_batch
 from featurestore_for_joycastle_java_spark.operators.asof import (
     multi_asof_join,
 )
+from featurestore_for_joycastle_java_spark.operators.dedup import (
+    exact_dedup_incremental,
+)
 from featurestore_for_joycastle_java_spark.operators.relational import (
     exact_sum,
 )
@@ -25,7 +28,7 @@ from featurestore_for_joycastle_java_spark.sources import build_once, load_table
 
 
 #: Per-trigger progress of the most recent drains, appended by ``_run``
-#: and harvested by bench.py into its artifact — so cross-round drift on
+#: and harvested by bench.py into its artifact — so run-to-run drift on
 #: ``stream_*`` queries is attributable to a phase (state commit, empty
 #: finalization batch, planning) instead of a bare wall-clock delta.
 #: Callers clear it between queries.
@@ -168,8 +171,8 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts as overlap), so streaming agrees with batch sessionize's
     gap-`>` rule — pinned empirically by
     tests/test_streaming.py::test_sessionize_boundary_gap_exactly_equal
-    (r1 documented the opposite; fixture data never hits the boundary so
-    the old `>=` oracle still passed)."""
+    (fixture data never hits the boundary, so an oracle with `>=` passes
+    too — the test is what decides it)."""
     src = ST.file_stream_source(spark, sf_dir)
     agg = ST.session_counts(src, gap="30 minutes", watermark="2 hours")
     out = _run(spark, agg, "complete")
@@ -546,35 +549,10 @@ def _incremental_dedup_processor(idx_dir: str, out_dir: str):
     ``tests/test_round7.py::test_stream_incremental_dedup_out_of_order``.
     Factored out of ``stream_incremental_dedup`` so that test drives the
     exact production processor."""
-    from pyspark.sql import Window
-
-    from featurestore_for_joycastle_java_spark.operators.text import (
-        fingerprint,
-    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        bfp = batch_df.select(
-            "doc_id", fingerprint(F.col("text")).alias("fp")
-        )
-        w = (
-            Window.partitionBy("fp")
-            .orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        pm = bfp.withColumn("pmin", F.min("doc_id").over(w))
-        idx = ST.newest_snapshot(sp, idx_dir, below=batch_id)
-        if idx is None:
-            j = pm.withColumn("keep_id", F.lit(None).cast("long"))
-        else:
-            j = pm.join(idx, "fp", "left")
-        dup_of = F.least("keep_id", "pmin")
-        dec = j.select(
-            "doc_id",
-            "fp",
-            dup_of.alias("dup_of"),
-            dup_of.isNull().alias("accept"),
-        )
+        idx = ST.newest_snapshot(batch_df.sparkSession, idx_dir, below=batch_id)
+        dec = exact_dedup_incremental(batch_df, idx)
         dec.select("doc_id", "dup_of", "accept").write.mode(
             "overwrite"
         ).parquet(os.path.join(out_dir, f"b={batch_id}"))
@@ -644,27 +622,13 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index carries everything the stream needs."""
 
     def build(root: str) -> str:
-        src_dir = os.path.join(root, "src")
         idx_dir = os.path.join(root, "idx")
         out_dir = os.path.join(root, "out")
-        os.makedirs(src_dir)
-
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        f1 = os.path.join(src_dir, "f1")
-        f2 = os.path.join(src_dir, "f2")
-        docs.coalesce(1).write.parquet(f1)
-        _recrawl_batch(docs).coalesce(1).write.parquet(f2)
-        # deterministic arrival order: f1 strictly older than f2
-        base_t = 1_700_000_000
-        for d, t in ((f1, base_t), (f2, base_t + 100)):
-            for fn in os.listdir(d):
-                os.utime(os.path.join(d, fn), (t, t))
-
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(os.path.join(src_dir, "*"))
+        batches = docs.withColumn("__b", F.lit(0)).unionByName(
+            _recrawl_batch(docs).withColumn("__b", F.lit(1))
         )
+        stream = ST.staged_file_stream(spark, ("sdedup_src", sf_dir), batches, 2)
         ST.drain_each_batch(
             stream, _incremental_dedup_processor(idx_dir, out_dir)
         ).awaitTermination()
@@ -726,9 +690,10 @@ GROUP BY 1 ORDER BY 1
 """,
 )
 def stream_late_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermark late-data accounting: a 3-batch file stream drains
-    through a 1-hour tumbling count with a 30-minute watermark in APPEND
-    mode, and the sink shows exactly which data survived: rows later
+    """Watermark late-data accounting: a 3-batch staged file stream
+    (``streaming.staged_file_stream``) drains through a 1-hour tumbling
+    count with a 30-minute watermark in APPEND mode into ``_run``'s
+    memory sink, and the sink shows exactly which data survived: rows later
     than the watermark whose WINDOW is already closed are dropped (the
     07:xx batch-3 stragglers), rows equally "late" whose window is still
     open are counted (the 09:05-09:24 stragglers — lateness is decided
@@ -747,71 +712,42 @@ def stream_late_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts are the ops signal for "our producers are later than the
     watermark budget".
     """
-
-    def build(root: str) -> str:
-        src = os.path.join(root, "src")
-        out = os.path.join(root, "out")
-        os.makedirs(src)
-        ev = load_table(spark, sf_dir, "events").select("event_id")
-        m = "make_interval(0, 0, 0, 0, 0, CAST(%s AS INT), 0)"
-        b1 = ev.filter("event_id < 600 AND event_id % 3 <> 2").selectExpr(
-            "TIMESTAMP '2026-01-01 08:00:00' + "
-            + m % "event_id % 120"
-            + " AS ts"
+    ev = load_table(spark, sf_dir, "events").select("event_id")
+    m = "make_interval(0, 0, 0, 0, 0, CAST(%s AS INT), 0)"
+    b1 = ev.filter("event_id < 600 AND event_id % 3 <> 2").selectExpr(
+        "0 AS __b",
+        "TIMESTAMP '2026-01-01 08:00:00' + " + m % "event_id % 120" + " AS ts",
+    )
+    b2 = ev.filter("event_id = 2").selectExpr(
+        "1 AS __b", "TIMESTAMP '2026-01-01 09:59:00' AS ts"
+    )
+    b3 = ev.filter(
+        "event_id < 600 AND event_id % 3 = 2 AND event_id <> 2"
+    ).selectExpr(
+        "2 AS __b",
+        "CASE WHEN event_id % 9 = 2 THEN "
+        "TIMESTAMP '2026-01-01 07:00:00' + " + m % "event_id % 50"
+        + " WHEN event_id % 9 = 5 THEN "
+        "TIMESTAMP '2026-01-01 09:05:00' + " + m % "event_id % 20"
+        + " ELSE TIMESTAMP '2026-01-01 10:30:00' + "
+        + m % "event_id % 80"
+        + " END AS ts",
+    )
+    stream = ST.staged_file_stream(
+        spark, ("late", sf_dir), b1.union(b2).union(b3), 3
+    )
+    agg = (
+        stream.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
+                "window_start"
+            ),
+            "n_events",
         )
-        b2 = ev.filter("event_id = 2").selectExpr(
-            "TIMESTAMP '2026-01-01 09:59:00' AS ts"
-        )
-        b3 = ev.filter(
-            "event_id < 600 AND event_id % 3 = 2 AND event_id <> 2"
-        ).selectExpr(
-            "CASE WHEN event_id % 9 = 2 THEN "
-            "TIMESTAMP '2026-01-01 07:00:00' + " + m % "event_id % 50"
-            + " WHEN event_id % 9 = 5 THEN "
-            "TIMESTAMP '2026-01-01 09:05:00' + " + m % "event_id % 20"
-            + " ELSE TIMESTAMP '2026-01-01 10:30:00' + "
-            + m % "event_id % 80"
-            + " END AS ts"
-        )
-        base_t = 1_700_000_000
-        for i, b in enumerate((b1, b2, b3)):
-            d = os.path.join(src, f"f{i}")
-            b.coalesce(1).write.parquet(d)
-            for fn in os.listdir(d):
-                os.utime(
-                    os.path.join(d, fn), (base_t + i * 100, base_t + i * 100)
-                )
-        stream = (
-            spark.readStream.schema("ts timestamp")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(os.path.join(src, "*"))
-        )
-        agg = (
-            stream.withWatermark("ts", "30 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
-                    "window_start"
-                ),
-                "n_events",
-            )
-        )
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option(
-                "checkpointLocation", os.path.join(root, "ck")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return out
-
-    out = build_once(("late", sf_dir), build)  # one drain per process
-    return spark.read.parquet(out).orderBy("window_start")
+    )
+    return _run(spark, agg, "append").orderBy("window_start")
 
 
 # ---------------------------------------------- streaming trending top-k
@@ -900,10 +836,10 @@ def stream_quota_enforcement(spark: SparkSession, sf_dir: str) -> DataFrame:
     was reached is recorded — the rate-limiter/entitlement gate every
     ingestion edge runs, and a shape watermarked windows cannot express
     ('first N EVER per key' has no window). Runs as a REAL 3-micro-batch
-    drain: events split into three event-id-range files with staged
-    mtimes (ts is monotone in event_id on this fixture — verified on all
-    three SFs, zero disorder rows — so file order is event-time order) and
-    maxFilesPerTrigger = 1, so the quota state genuinely carries across
+    drain: events split into three event-id-range batches through
+    ``streaming.staged_file_stream`` (ts is monotone in event_id on this
+    fixture — verified on all three SFs, zero disorder rows — so batch
+    order is event-time order), so the quota state genuinely carries across
     batch commits, users straddle batch boundaries, and the
     quota_reached_ts lands mid-stream for heavy users. The oracle
     replays the admission declaratively as a per-user (ts, event_id)
@@ -916,54 +852,19 @@ def stream_quota_enforcement(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB envelope and the ordering contract); the final emission per
     user wins by total-events-seen, a deterministic monotone tiebreak."""
 
-    def stage(root: str) -> str:
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id"
-        )
-        max_id = ev.agg(F.max("event_id")).collect()[0][0]  # 1 scalar: batch
-        # boundaries for the 3-file source (the graph_bfs_hops precedent
-        # for single-scalar driver values)
-        cut1, cut2 = max_id // 3, 2 * max_id // 3
-        src, parts = os.path.join(root, "src"), os.path.join(root, "parts")
-        base_t = 1_700_000_000
-        # ONE partitioned pass builds all three batch files (three
-        # filter+coalesce(1) writes would each re-scan events
-        # single-threaded). repartition(3, "__b") puts each batch id in
-        # exactly one task, so every __b=i directory holds exactly one
-        # parquet file; the files are then moved to the mtime-staged
-        # f0/f1/f2 layout the stream glob expects (partition-dir names
-        # would otherwise add a __b column under schema inference). Row
-        # order inside a file is free: the rate limiter sorts each batch
-        # group by (ts, event_id) in-worker.
-        b = (
-            F.when(F.col("event_id") <= cut1, 0)
-            .when(F.col("event_id") <= cut2, 1)
-            .otherwise(2)
-        )
-        (
-            ev.withColumn("__b", b)
-            .repartition(3, "__b")
-            .write.partitionBy("__b")
-            .mode("overwrite")
-            .parquet(parts)
-        )
-        for i in range(3):
-            d = os.path.join(src, f"f{i}")
-            os.makedirs(d, exist_ok=True)
-            srcd = os.path.join(parts, f"__b={i}")
-            files = [fn for fn in os.listdir(srcd) if fn.endswith(".parquet")]
-            assert len(files) == 1, files
-            dst = os.path.join(d, files[0])
-            os.rename(os.path.join(srcd, files[0]), dst)
-            os.utime(dst, (base_t + i * 100, base_t + i * 100))
-        return src
-
-    # the staging is a function of the fixture: once per process
-    src = build_once(("quota", sf_dir), stage)
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, user_id long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(src, "*"))
+    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
+    # Three event-id-range batches. The cuts are a scalar subquery, so
+    # only the staging job computes them; a repeat call runs no job
+    # before its drain. Row order inside a batch is free: the rate
+    # limiter sorts each batch group by (ts, event_id) in-worker.
+    max_id = ev.select(F.max("event_id")).scalar()
+    b = (
+        F.when(F.col("event_id") <= F.floor(max_id / 3), 0)
+        .when(F.col("event_id") <= F.floor(max_id * 2 / 3), 1)
+        .otherwise(2)
+    )
+    stream = ST.staged_file_stream(
+        spark, ("quota", sf_dir), ev.withColumn("__b", b), 3
     )
     out = _run(
         spark,

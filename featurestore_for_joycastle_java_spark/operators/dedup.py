@@ -49,6 +49,33 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def exact_dedup_incremental(
+    batch: DataFrame, index: DataFrame | None
+) -> DataFrame:
+    """Resolve one batch of ``(doc_id, text)`` against a fingerprint
+    ``index`` of ``(fp, keep_id)`` keepers (``None``: nothing indexed yet).
+    Returns ``doc_id, fp, dup_of, accept``: ``dup_of`` is the smaller of
+    the index's keeper and the lowest earlier batch id with the same
+    fingerprint (index beats batch, earlier batch row beats later), and
+    ``accept`` means no match anywhere. Cost: one batch-sized window plus
+    one hash join of the batch's fingerprints against the index."""
+    bfp = batch.select("doc_id", fingerprint(F.col("text")).alias("fp"))
+    w = (
+        Window.partitionBy("fp")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    pm = bfp.withColumn("pmin", F.min("doc_id").over(w))
+    if index is None:
+        j = pm.withColumn("keep_id", F.lit(None).cast("long"))
+    else:
+        j = pm.join(index, "fp", "left")
+    dup_of = F.least("keep_id", "pmin")  # both engines skip NULL args
+    return j.select(
+        "doc_id", "fp", dup_of.alias("dup_of"), dup_of.isNull().alias("accept")
+    )
+
+
 def token_jaccard_pairs(
     df: DataFrame,
     id_col: str,

@@ -53,13 +53,19 @@ def build_once(key: tuple, build: Callable[[str], Any]) -> Any:
     return hit[1]
 
 
+def enable_conf(spark: SparkSession, key: str) -> None:
+    """Set the boolean session conf ``key`` to true where it is not
+    already, so a session from ``get_spark`` (which sets the engine's
+    confs at build time) sees no conf write, while a session built
+    elsewhere still gets the conf the engine needs."""
+    if spark.conf.get(key, "false") != "true":
+        spark.conf.set(key, "true")
+
+
 def read_nanos_as_long(spark: SparkSession) -> None:
     """Read timestamp[ns] parquet (older fixtures' ``events.ts``) as long
-    nanos, which :func:`normalize_events_ts` converts. Writes the session
-    conf only when it is not already set, so a session from ``get_spark``
-    (which sets it at build time) sees no conf write."""
-    if spark.conf.get(_NANOS_AS_LONG, "false") != "true":
-        spark.conf.set(_NANOS_AS_LONG, "true")
+    nanos, which :func:`normalize_events_ts` converts."""
+    enable_conf(spark, _NANOS_AS_LONG)
 
 
 #: session -> {(absolute path, st_mtime_ns, st_size): inferred schema}.

@@ -25,6 +25,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from featurestore_for_joycastle_java_spark.sources import enable_conf
+
 #: Knuth's multiplicative hash constant (2^32 / phi) — public domain math.
 MULT = 2654435761
 _TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -91,7 +93,7 @@ class _SyntheticReader(DataSourceReader):
             # some pushed filters carry no value (IsNotNull, ...); the
             # exact `type is int` check also declines bool (a bool IS an
             # int in Python — absorbing EqualTo(col, True) as lo/hi=1..2
-            # would be wrong in principle, ADVICE r4)
+            # would be wrong in principle)
             if attr == ("event_id",) and type(
                 getattr(f, "value", None)
             ) is int:
@@ -123,8 +125,8 @@ class _SyntheticReader(DataSourceReader):
         ]
 
     def read(self, partition: _RangePartition):
-        """Arrow-batch reads (r13, guide §4.3): yielding pyarrow
-        RecordBatches instead of per-row tuples skips the per-row
+        """Arrow-batch reads: yielding pyarrow RecordBatches instead of
+        per-row tuples skips the per-row
         pickle/unpickle on the worker boundary — the documented right
         shape for a bulk connector (Spark 4 Python Data Source "Arrow
         Batch Support"). The arithmetic is the exact integer rule of
@@ -188,32 +190,20 @@ class SyntheticEventsDataSource(DataSource):
         return _SyntheticStreamReader(self.options)
 
 
-def register_synthetic_source(spark, configure_pushdown: bool = True) -> None:
+def register_synthetic_source(spark) -> None:
     """Idempotent registration (re-registering the same name is fine).
 
-    ``configure_pushdown=True`` (default) also enables Python-source
-    filter pushdown (``spark.sql.python.filterPushdown.enabled``, a
-    runtime-settable SQL conf, default false in Spark 4): with it off, a
-    reader that implements ``pushFilters`` fails planning outright — and
-    the driver contract runs on a VANILLA session (no engine configs),
-    so the source must carry its own prerequisite there. NOTE this is a
-    session-global conf affecting every Python data source planned
-    afterwards (it changes no semantics for sources that don't push,
-    only whether pushFilters is consulted); sessions that manage the
-    conf themselves — ``get_spark`` sets it in ``_DEFAULT_CONF`` — can
-    pass ``configure_pushdown=False`` for a side-effect-free
-    registration (ADVICE r4)."""
-    if configure_pushdown:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    elif (
-        spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
-        != "true"
-    ):
-        raise RuntimeError(
-            "synthetic_events implements pushFilters, which requires "
-            "spark.sql.python.filterPushdown.enabled=true; enable it or "
-            "call register_synthetic_source(spark) to let it set the conf"
-        )
+    Also enables Python-source filter pushdown
+    (``spark.sql.python.filterPushdown.enabled``, a runtime-settable SQL
+    conf, default false in Spark 4) where the session lacks it: with it
+    off, a reader that implements ``pushFilters`` fails planning
+    outright — and a session built without the engine's confs must
+    still plan it, so the source carries its own prerequisite there. NOTE this is a session-global conf affecting every Python
+    data source planned afterwards (it changes no semantics for sources
+    that don't push, only whether pushFilters is consulted); a session
+    that already has it — ``get_spark`` sets it in ``_DEFAULT_CONF`` —
+    sees no conf write (``sources.enable_conf``)."""
+    enable_conf(spark, "spark.sql.python.filterPushdown.enabled")
     spark.dataSource.register(SyntheticEventsDataSource)
 
 

@@ -4,8 +4,9 @@
 Mapping to the reference (SURVEY.md §2.1):
 - "seek to 0, poll until empty, then stop" (CMT:93-110)  →
   ``trigger(availableNow=True)`` — drain everything, then terminate;
-- ``max.poll.records=1000`` (CMT:52) → ``maxOffsetsPerTrigger`` /
-  ``maxFilesPerTrigger`` (bounded micro-batches);
+- ``max.poll.records=1000`` (CMT:52) → bounded micro-batches:
+  ``maxOffsetsPerTrigger`` on Kafka, and :func:`staged_file_stream` for
+  the catalog's multi-batch queries (one staged file per trigger);
 - per-event-type buffered inserts (CMT:36-150) → ``foreachBatch`` with a
   partitioned write — and unlike the reference, the tail is never lost
   (defect D2) and offsets+sink commit together via checkpointing
@@ -24,10 +25,12 @@ horizon accordingly and prefer RocksDB state store on real clusters.
 
 from __future__ import annotations
 
+import glob
 import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from featurestore_for_joycastle_java_spark.operators.ingest import demux_write
 from featurestore_for_joycastle_java_spark.operators.relational import exact_sum
@@ -56,11 +59,7 @@ def _as_stream_dir(file_path: str) -> str:
     return build_once(("stream_src", file_path), link)
 
 
-def file_stream_source(
-    spark: SparkSession,
-    sf_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def file_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-based stand-in for the Kafka topic: stream the events table.
 
     The fixture's ts varies by generation — timestamp[ns] (read as long
@@ -72,9 +71,48 @@ def file_stream_source(
     read_nanos_as_long(spark)
     path = os.path.join(sf_dir, "events.parquet")
     reader = spark.readStream.schema(parquet_schema(spark, path))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return normalize_events_ts(reader.parquet(_as_stream_dir(path)))
+
+
+def staged_file_stream(
+    spark: SparkSession, key: tuple, batches: DataFrame, n_batches: int
+) -> DataFrame:
+    """A bounded multi-batch stream: the rows of ``batches`` whose integer
+    ``__b`` column is ``i`` arrive as micro-batch ``i``, for ``i`` in
+    ``range(n_batches)`` — the file-source stand-in for the reference's
+    ``max.poll.records`` polls (CMT:52).
+
+    ``batches`` is written in ONE partitioned job, so a source that cuts
+    every batch out of one table scans that table once (a write per batch
+    would re-scan it per batch). ``repartition(n_batches, "__b")`` puts
+    each batch in exactly one task, so each ``__b=i`` directory holds
+    exactly one file. Each file then moves to a directory of its own
+    (the partition directory names would otherwise add ``__b`` back
+    under schema inference), with mtimes 100 s apart, and the stream
+    reads one file per trigger in mtime order. Staging runs once per
+    process and ``key`` (``sources.build_once``); the stream's schema is
+    ``batches``' own without ``__b``."""
+
+    def stage(root: str) -> str:
+        parts, src = os.path.join(root, "parts"), os.path.join(root, "src")
+        batches.repartition(n_batches, "__b").write.partitionBy("__b").parquet(parts)
+        for i in range(n_batches):
+            files = glob.glob(os.path.join(parts, f"__b={i}", "*.parquet"))
+            if len(files) != 1:
+                raise RuntimeError(f"batch {i} staged {len(files)} files, not 1")
+            dst = os.path.join(src, f"f{i}", os.path.basename(files[0]))
+            os.makedirs(os.path.dirname(dst))
+            os.rename(files[0], dst)
+            t = 1_700_000_000 + 100 * i
+            os.utime(dst, (t, t))
+        return src
+
+    schema = StructType([f for f in batches.schema if f.name != "__b"])
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(os.path.join(build_once(key, stage), "*"))
+    )
 
 
 def drain_to_memory(
@@ -374,8 +412,8 @@ def scd1_upsert_stream_sink(
         payload = [c for c in batch_df.columns if c != key_col]
         # ONE max_by over a struct of the whole payload — independent
         # per-column max_by calls could stitch fields of two different
-        # input rows on an order_col tie (same non-atomic-payload bug
-        # class as the r4 asof struct-fill fix)
+        # input rows on an order_col tie (the non-atomic-payload bug
+        # class the as-of joins' struct fill also avoids)
         newest = (
             batch_df.groupBy(key_col)
             .agg(
@@ -451,8 +489,8 @@ def quota_rate_limiter(
     SHUFFLE order, so each batch's rows are sorted by (ts, id) before
     the quota is applied; across batches the admission decision is
     correct as long as the source delivers batches in event-time order
-    (file sources with staged mtimes + maxFilesPerTrigger do; a Kafka
-    topic partitioned by key with in-partition ordering does too).
+    (``staged_file_stream`` does; a Kafka topic partitioned by key with
+    in-partition ordering does too).
 
     State per key is four scalars (admitted, denied, reached-at micros,
     reached flag — the flag is its own field because every long value
@@ -467,16 +505,16 @@ def quota_rate_limiter(
     def update(key: tuple, pdfs, state: GroupState):
         # Reached-ness lives in its OWN boolean field: any sentinel
         # inside the long domain collides with some legitimate
-        # timestamp (r = -1 fixed the epoch-0 case but a quota reached
-        # at epoch minus 1 microsecond stores exactly -1 — ADVICE r11),
-        # and pre-epoch event times store negative micros legally.
+        # timestamp (r = -1 would cover the epoch-0 case, but a quota
+        # reached at epoch minus 1 microsecond stores exactly -1), and
+        # pre-epoch event times store negative micros legally.
         a, d, r, reached = (
             state.get if state.exists else (0, 0, 0, False)
         )
         batch = pd.concat(list(pdfs), ignore_index=True)
         batch = batch.sort_values([ts_col, id_col], kind="mergesort")
-        # Closed form of the per-row loop (r12 opt, guide §4.2 — batch
-        # arithmetic instead of a Python row loop): the first
+        # Closed form of the per-row loop (batch arithmetic instead of
+        # a Python row loop): the first
         # (quota - a) sorted rows are admitted, the rest denied, and
         # the quota is reached exactly at the (quota - a)th admitted
         # row when this batch crosses it.
@@ -502,7 +540,7 @@ def quota_rate_limiter(
         )
 
     # The output key column inherits the input's type (string user ids
-    # are as valid as longs — ADVICE r10: the type was hardcoded long).
+    # are as valid as longs).
     key_type = stream_df.schema[key_col].dataType.simpleString()
     return stream_df.groupBy(key_col).applyInPandasWithState(
         update,

@@ -202,6 +202,27 @@ def test_one_scratch_dir_and_one_drain_starter():
     assert not found, f"use scratch_dir / drain_each_batch: {found}"
 
 
+def test_one_staged_stream_source_and_one_home_for_stream_starts():
+    """Multi-batch file sources are staged in
+    ``streaming.staged_file_stream``, the only place that sets file
+    mtimes or ``maxFilesPerTrigger``, and every streaming query starts
+    in the ``streaming`` package."""
+    home = os.path.join("streaming", "__init__.py")
+    found = [
+        f"{rel}:{node.lineno}"
+        for rel, tree in _modules()
+        for stmt in tree.body
+        for node in ast.walk(stmt)
+        if (
+            (isinstance(node, ast.Call) and _callee(node) == "utime")
+            or (isinstance(node, ast.Constant) and node.value == "maxFilesPerTrigger")
+        )
+        and (rel, getattr(stmt, "name", None)) != (home, "staged_file_stream")
+        or (isinstance(node, ast.Attribute) and node.attr == "writeStream" and rel != home)
+    ]
+    assert not found, f"use staged_file_stream / the streaming starters: {found}"
+
+
 def test_one_copy_of_each_vector_search_stage():
     """In the similarity modules each vector-search stage is written once:
     a top-n per key (``row_number`` over a window, kept by ``<=``) runs

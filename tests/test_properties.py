@@ -284,43 +284,6 @@ def test_bucketed_asof_matches_python_reference(
 
 
 @settings(**_SETTINGS)
-@given(_asof_rows, _asof_rows, _asof_rows)
-def test_multi_asof_matches_python_reference(spark, lrows, r1rows, r2rows):
-    """multi_asof_join fills each right independently with backward-
-    inclusive semantics — against the same Python reference per right."""
-    from featurestore_for_joycastle_java_spark.operators.asof import (
-        multi_asof_join,
-    )
-
-    m1 = {}
-    for i, (k, t) in enumerate(r1rows):
-        m1[(k, t)] = float(i)
-    m2 = {}
-    for i, (k, t) in enumerate(r2rows):
-        m2[(k, t)] = float(1000 + i)
-    left = spark.createDataFrame(
-        [(k, t, i) for i, (k, t) in enumerate(lrows)], "k long, t long, i long"
-    )
-    r1 = spark.createDataFrame(
-        [(k, t, v) for (k, t), v in m1.items()], "k long, t long, f1 double"
-    )
-    r2 = spark.createDataFrame(
-        [(k, t, v) for (k, t), v in m2.items()], "k long, t long, f2 double"
-    )
-    out = multi_asof_join(
-        left, [(r1, "t", ["f1"], "a"), (r2, "t", ["f2"], "b")], ["k"], "t"
-    )
-    got = sorted((r["k"], r["t"], r["i"], r["f1"], r["f2"]) for r in out.collect())
-    want = sorted(
-        (k, t, i, w1, w2)
-        for ((k, t), (w1, _), (w2, _), i) in zip(
-            lrows, _py_asof(lrows, m1), _py_asof(lrows, m2), range(len(lrows))
-        )
-    )
-    assert got == want
-
-
-@settings(**_SETTINGS)
 @given(
     st.lists(
         st.integers(min_value=0, max_value=500), min_size=1, max_size=40

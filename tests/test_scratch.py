@@ -16,7 +16,8 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 
 from featurestore_for_joycastle_java_spark import registry
-from featurestore_for_joycastle_java_spark.sources import build_once
+from featurestore_for_joycastle_java_spark.catalog.streaming import DRAIN_PROGRESS
+from featurestore_for_joycastle_java_spark.sources import build_once, load_table
 from tests.oracle import compare
 
 registry.load_catalog()
@@ -83,6 +84,19 @@ def test_repeat_stream_query_makes_no_new_scratch_dir(spark, sf_dir):
     before = _fs_dirs()
     q(spark, sf_dir)
     assert _fs_dirs() - before == set()
+
+
+def test_repeat_late_drops_drains_again_but_stages_nothing_new(spark, sf_dir):
+    """The late-drops stream stages its three batches once per process,
+    yet every call drains them again through the memory sink."""
+    q = registry.QUERIES["stream_late_drops"]
+    q(spark, sf_dir)
+    before = _fs_dirs()
+    DRAIN_PROGRESS.clear()
+    q(spark, sf_dir)
+    assert _fs_dirs() - before == set()
+    staged = load_table(spark, sf_dir, "events").filter("event_id < 600").count()
+    assert sum(p["input_rows"] or 0 for p in DRAIN_PROGRESS) == staged
 
 
 def test_stream_query_leaves_no_memory_sink_view(spark, sf_dir):

@@ -87,11 +87,15 @@ def test_rewritten_file_infers_again(spark, tmp_path):
 
 
 def test_shared_session_sees_no_nanos_conf_write(spark, sf_dir, monkeypatch):
-    """The nanosAsLong conf is written only where it is missing: a
-    ``get_spark`` session, which sets it at build time, sees no session
-    conf write from a batch or a stream read of the fixtures."""
+    """The nanosAsLong and Python-source pushdown confs are written only
+    where they are missing: a ``get_spark`` session, which sets them at
+    build time, sees no session conf write from a batch or a stream read
+    of the fixtures, or from registering the synthetic source."""
     from pyspark.sql.conf import RuntimeConfig
 
+    from featurestore_for_joycastle_java_spark.sources.pydatasource import (
+        register_synthetic_source,
+    )
     from featurestore_for_joycastle_java_spark.streaming import file_stream_source
 
     writes = []
@@ -104,6 +108,7 @@ def test_shared_session_sees_no_nanos_conf_write(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(RuntimeConfig, "set", counting_set)
     load_table(spark, sf_dir, "events")
     file_stream_source(spark, sf_dir)
+    register_synthetic_source(spark)
     assert writes == []
 
 
