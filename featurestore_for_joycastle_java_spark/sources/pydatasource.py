@@ -126,10 +126,9 @@ class _SyntheticReader(DataSourceReader):
 
     def read(self, partition: _RangePartition):
         """Arrow-batch reads: yielding pyarrow RecordBatches instead of
-        per-row tuples skips the per-row
-        pickle/unpickle on the worker boundary — the documented right
-        shape for a bulk connector (Spark 4 Python Data Source "Arrow
-        Batch Support"). The arithmetic is the exact integer rule of
+        per-row tuples skips the per-row pickle/unpickle on the worker
+        boundary — the documented right shape for a bulk connector
+        (Spark 4 Python Data Source "Arrow Batch Support"). The arithmetic is the exact integer rule of
         ``synth_row``: uint64 products wrap mod 2^64, and since 2^32
         divides 2^64, ``(i*MULT) mod 2^64 mod 2^32`` equals the
         unbounded ``(i*MULT) mod 2^32`` — bit-identical rows for ANY
@@ -198,10 +197,11 @@ def register_synthetic_source(spark) -> None:
     conf, default false in Spark 4) where the session lacks it: with it
     off, a reader that implements ``pushFilters`` fails planning
     outright — and a session built without the engine's confs must
-    still plan it, so the source carries its own prerequisite there. NOTE this is a session-global conf affecting every Python
-    data source planned afterwards (it changes no semantics for sources
-    that don't push, only whether pushFilters is consulted); a session
-    that already has it — ``get_spark`` sets it in ``_DEFAULT_CONF`` —
+    still plan it, so the source carries its own prerequisite there.
+    NOTE this is a session-global conf affecting every Python data
+    source planned afterwards (it changes no semantics for sources that
+    don't push, only whether pushFilters is consulted); a session that
+    already has it — ``get_spark`` sets it in ``_DEFAULT_CONF`` —
     sees no conf write (``sources.enable_conf``)."""
     enable_conf(spark, "spark.sql.python.filterPushdown.enabled")
     spark.dataSource.register(SyntheticEventsDataSource)

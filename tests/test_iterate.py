@@ -214,11 +214,21 @@ def test_one_staged_stream_source_and_one_home_for_stream_starts():
         for stmt in tree.body
         for node in ast.walk(stmt)
         if (
-            (isinstance(node, ast.Call) and _callee(node) == "utime")
-            or (isinstance(node, ast.Constant) and node.value == "maxFilesPerTrigger")
+            (
+                (isinstance(node, ast.Call) and _callee(node) == "utime")
+                or (
+                    isinstance(node, ast.Constant)
+                    and node.value == "maxFilesPerTrigger"
+                )
+            )
+            and (rel, getattr(stmt, "name", None))
+            != (home, "staged_file_stream")
         )
-        and (rel, getattr(stmt, "name", None)) != (home, "staged_file_stream")
-        or (isinstance(node, ast.Attribute) and node.attr == "writeStream" and rel != home)
+        or (
+            isinstance(node, ast.Attribute)
+            and node.attr == "writeStream"
+            and rel != home
+        )
     ]
     assert not found, f"use staged_file_stream / the streaming starters: {found}"
 
