@@ -304,10 +304,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness anchor for LSH similarity. zip_with+aggregate cosine is
     bit-identical to DuckDB list_inner_product (verified empirically),
     so the oracle is exact."""
-    from featurestore_for_joycastle_java_spark.operators.similarity import (
-        cosine_pairs,
-    )
-
     e = load_table(spark, sf_dir, "embeddings")
     return cosine_pairs(e, threshold=0.4)
 
@@ -464,7 +460,6 @@ def dedup_pipeline_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     min doc_id tiebreak). Same clustering + retention code path as the LSH
     pipeline, so the stages LSH can't oracle-check get their exact check
     here; the oracle replays every stage as a recursive CTE + window."""
-    from featurestore_for_joycastle_java_spark.operators import dedup as D
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents").filter(
@@ -1122,8 +1117,6 @@ def _er_records_and_clusters(spark, sf_dir):
     """Shared ER pipeline: (records, record->cluster labels). Blocking,
     compound scoring, and CC exactly as documented on
     ``er_customer_clusters``."""
-    from featurestore_for_joycastle_java_spark.operators import dedup as D
-
     cust = load_table(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("record_id"),

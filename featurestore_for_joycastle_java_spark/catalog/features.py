@@ -340,7 +340,6 @@ def feature_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         grouped_row_number,
         ntile_from_rank,
     )
-    from featurestore_for_joycastle_java_spark.operators.relational import exact_sum
 
     p = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
@@ -604,8 +603,6 @@ def feature_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≡ 'interval containing t'): one user_id shuffle, no interval range
     join, no explode. Clicks before the user's first purchase get null
     (left-outer)."""
-    from featurestore_for_joycastle_java_spark.operators.asof import asof_join
-
     ev = load_table(spark, sf_dir, "events").withColumn(
         "t_us", F.unix_micros(F.col("ts"))
     )
@@ -2234,10 +2231,6 @@ def feature_lag_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed/partitioned feature tables make shuffle-free; sums use the
     order-independent exact-decimal path shared with
     ``feature_daily_user``."""
-    from featurestore_for_joycastle_java_spark.operators.relational import (
-        exact_sum,
-    )
-
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(
         "user_id", F.date_trunc("day", F.col("ts")).alias("day")

@@ -369,7 +369,6 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from featurestore_for_joycastle_java_spark.operators.graphs import (
         bfs,
-        cosupply_edges,
     )
 
     e = cosupply_edges(spark, sf_dir).localCheckpoint(eager=True)
@@ -429,11 +428,6 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     SUM; anti-join drops adjacent pairs; deterministic top-50 orders by
     the ROUNDED score with (u, v) tiebreak on both engines. deg(z) >= 2
     for every wedge center, so ln is always positive."""
-    from featurestore_for_joycastle_java_spark.operators.graphs import (
-        cosupply_edges,
-        degrees,
-    )
-
     e = cosupply_edges(spark, sf_dir)
     adj = e.select(
         F.col("u").alias("x"), F.col("v").alias("y")
@@ -501,11 +495,6 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: degree frame is node-sized (one combine-friendly
     count), binning is a projection, the histogram is <= 64 rows."""
-    from featurestore_for_joycastle_java_spark.operators.graphs import (
-        cosupply_edges,
-        degrees,
-    )
-
     deg = degrees(cosupply_edges(spark, sf_dir))
     return (
         deg.select(
@@ -567,10 +556,6 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     static plan instead of six times. Degrees are small exact integers
     in double (means/products exact until astronomically large sums);
     the final correlation rounds on both sides."""
-    from featurestore_for_joycastle_java_spark.operators.graphs import (
-        cosupply_edges,
-    )
-
     e = cosupply_edges(spark, sf_dir)
     w2 = Window.partitionBy("x")
     j = (
@@ -650,11 +635,6 @@ def graph_clustering_coefficient(
     list (each triangle counted once, the standard Sigma deg^2-bounded
     enumeration); wedges in closed form from the degree frame (integer
     d(d-1)/2 — exact); one 1-row cross of two scalars."""
-    from featurestore_for_joycastle_java_spark.operators.graphs import (
-        cosupply_edges,
-        degrees,
-    )
-
     e = cosupply_edges(spark, sf_dir)
     e1 = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = e.select(F.col("u").alias("b2"), F.col("v").alias("c"))
@@ -908,8 +888,6 @@ def graph_closeness_multi_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (root, node, hops)."""
     from featurestore_for_joycastle_java_spark.operators.graphs import (
         bfs,
-        cosupply_edges,
-        degrees,
     )
 
     e = cosupply_edges(spark, sf_dir).localCheckpoint(eager=True)

@@ -140,7 +140,6 @@ def pysource_synthetic_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle regenerates the identical input from ``range(n)`` and
     the match verifies the CONNECTOR (planning, generation, schema), not
     just the aggregation. ``sf_dir`` is unused — the source IS the data."""
-    from featurestore_for_joycastle_java_spark.operators.relational import exact_sum
     from featurestore_for_joycastle_java_spark.sources.pydatasource import (
         register_synthetic_source,
     )

@@ -417,10 +417,6 @@ def layout_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     Z-ORDER WRITE itself at 100 TB is exactly this global sort); file
     stats are one map-side-combined groupBy per layout to an O(files)
     frame; the summary aggregates the metadata frame."""
-    from featurestore_for_joycastle_java_spark.operators.ranks import (
-        global_row_number,
-    )
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", F.hour("ts").alias("hr")
     )

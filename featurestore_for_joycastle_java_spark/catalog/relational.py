@@ -792,8 +792,6 @@ def agg_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure map-side bucketing + one combined aggregation — the bucket id
     is arithmetic on the row, so the shuffle carries one row per
     (type, bucket), not per event."""
-    from featurestore_for_joycastle_java_spark.operators.relational import exact_sum
-
     ev = load_table(spark, sf_dir, "events")
     bucket = F.floor(F.col("value") / 5.0)
     return ev.groupBy(

@@ -175,7 +175,6 @@ def sim_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixed-centroid variant whose index replays exactly in SQL."""
     from featurestore_for_joycastle_java_spark.operators.similarity import (
         brute_force_topk_arrow,
-        ivf_topk,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -639,9 +638,6 @@ def sim_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from featurestore_for_joycastle_java_spark.catalog.text import (
         text_bm25_topk,
     )
-    from featurestore_for_joycastle_java_spark.operators import (
-        similarity as S,
-    )
 
     lex = text_bm25_topk(spark, sf_dir).select(
         "doc_id",
@@ -954,10 +950,6 @@ def sim_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The augmentation is one narrow column appended at index-build time,
     and unlocks all of them for inner-product retrieval unchanged.
     """
-    from featurestore_for_joycastle_java_spark.operators import (
-        similarity as S,
-    )
-
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", S.as_double(F.col("embedding")).alias("v")
     )
@@ -1283,7 +1275,6 @@ def sim_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     only add candidates; a violation means probe routing is broken)."""
     from featurestore_for_joycastle_java_spark.operators.similarity import (
         brute_force_topk_arrow,
-        ivf_topk,
     )
 
     e = load_table(spark, sf_dir, "embeddings")

@@ -24,7 +24,7 @@ from featurestore_for_joycastle_java_spark.operators.relational import (
 )
 from featurestore_for_joycastle_java_spark.registry import query
 from featurestore_for_joycastle_java_spark.session import narrow_shuffle_width
-from featurestore_for_joycastle_java_spark.sources import build_once, load_table
+from featurestore_for_joycastle_java_spark.sources import load_table, scratch_dir
 
 
 #: Per-trigger progress of the most recent drains, appended by ``_run``
@@ -328,7 +328,6 @@ def stream_pysource_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py), complete-mode groupBy into a memory sink,
     oracle regenerates the input in SQL. ``sf_dir`` unused — the source
     IS the data."""
-    from featurestore_for_joycastle_java_spark.operators.relational import exact_sum
     from featurestore_for_joycastle_java_spark.sources.pydatasource import (
         register_synthetic_source,
     )
@@ -463,40 +462,36 @@ def stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi_asof_join on user_id — the dimension re-read each batch, no
     state held for the join side. At 100 TB both halves are the standard
     continuously-updated feature-serving pattern."""
+    # both drains run on every call, into this call's own directory
+    root = scratch_dir("fs_pit_")
+    dim_dir = os.path.join(root, "dim")
+    out_dir = os.path.join(root, "out")
 
-    def build(root: str) -> str:
-        dim_dir = os.path.join(root, "dim")
-        out_dir = os.path.join(root, "out")
-
-        # stream #1: maintain the profile dimension off the purchase
-        # stream (key user_id, order = event-time with event_id tiebreak)
-        purchases = (
-            ST.file_stream_source(spark, sf_dir)
-            .filter(F.col("event_type") == "purchase")
-            .select(
-                "user_id",
-                F.col("value").alias("profile_value"),
-                F.col("ts").alias("dim_ts"),
-                F.struct(F.col("ts"), F.col("event_id")).alias("__ord"),
-            )
+    # stream #1: maintain the profile dimension off the purchase
+    # stream (key user_id, order = event-time with event_id tiebreak)
+    purchases = (
+        ST.file_stream_source(spark, sf_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            "user_id",
+            F.col("value").alias("profile_value"),
+            F.col("ts").alias("dim_ts"),
+            F.struct(F.col("ts"), F.col("event_id")).alias("__ord"),
         )
-        q1 = ST.scd1_upsert_stream_sink(
-            purchases, dim_dir, key_col="user_id", order_col="__ord"
-        )
-        q1.awaitTermination()
+    )
+    q1 = ST.scd1_upsert_stream_sink(
+        purchases, dim_dir, key_col="user_id", order_col="__ord"
+    )
+    q1.awaitTermination()
 
-        # stream #2: enrich clicks per micro-batch against the committed
-        # dimension (read inside foreachBatch → always the newest
-        # committed snapshot, never a partial write)
-        clicks = ST.file_stream_source(spark, sf_dir).filter(
-            F.col("event_type") == "click"
-        )
-        q2 = pit_enrich_stream_sink(clicks, dim_dir, out_dir)
-        q2.awaitTermination()
-        return out_dir
-
-    # both drains run once per process
-    out_dir = build_once(("pit", sf_dir), build)
+    # stream #2: enrich clicks per micro-batch against the committed
+    # dimension (read inside foreachBatch → always the newest
+    # committed snapshot, never a partial write)
+    clicks = ST.file_stream_source(spark, sf_dir).filter(
+        F.col("event_type") == "click"
+    )
+    q2 = pit_enrich_stream_sink(clicks, dim_dir, out_dir)
+    q2.awaitTermination()
     return spark.read.parquet(out_dir).select(
         "event_id", "user_id", "profile_value", "prof_ts_us"
     )
@@ -620,21 +615,19 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index (at 100 TB: a Bloom-fronted key-value table; here the
     plain-parquet expression of it). The corpus is never rescanned —
     the index carries everything the stream needs."""
-
-    def build(root: str) -> str:
-        idx_dir = os.path.join(root, "idx")
-        out_dir = os.path.join(root, "out")
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        batches = docs.withColumn("__b", F.lit(0)).unionByName(
-            _recrawl_batch(docs).withColumn("__b", F.lit(1))
-        )
-        stream = ST.staged_file_stream(spark, ("sdedup_src", sf_dir), batches, 2)
-        ST.drain_each_batch(
-            stream, _incremental_dedup_processor(idx_dir, out_dir)
-        ).awaitTermination()
-        return out_dir
-
-    out_dir = build_once(("sdedup", sf_dir), build)  # one drain per process
+    # only the staging is cached; the drain runs on every call, into this
+    # call's own directory
+    root = scratch_dir("fs_sdedup_")
+    idx_dir = os.path.join(root, "idx")
+    out_dir = os.path.join(root, "out")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    batches = docs.withColumn("__b", F.lit(0)).unionByName(
+        _recrawl_batch(docs).withColumn("__b", F.lit(1))
+    )
+    stream = ST.staged_file_stream(spark, ("sdedup_src", sf_dir), batches, 2)
+    ST.drain_each_batch(
+        stream, _incremental_dedup_processor(idx_dir, out_dir)
+    ).awaitTermination()
     return spark.read.parquet(out_dir).select("doc_id", "dup_of", "accept")
 
 
@@ -786,8 +779,6 @@ def stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: counts are exact integers; rank ties break on
     event_type; the delta for a type's first window coalesces to the
     full count (new entrant = all growth)."""
-    from featurestore_for_joycastle_java_spark import streaming as ST
-
     src = ST.file_stream_source(spark, sf_dir)
     agg = ST.tumbling_counts(src, window="1 hour", watermark="2 hours")
     out = _run(spark, agg, "complete")

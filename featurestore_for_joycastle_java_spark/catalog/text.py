@@ -415,8 +415,6 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan of the corpus. The quality-gate shape a 100 TB pretraining
     pipeline runs over every document. Docs with < 2 tokens have no
     bigrams and are excluded (structural, both engines)."""
-    from featurestore_for_joycastle_java_spark.operators.text import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", tokens(F.col("text")).alias("tk")).filter(
         F.size("tk") >= 2
@@ -525,7 +523,6 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤3 term contributions in FIXED term order (sorted-struct fold — the
     EWMA pattern) so the float sum is bit-deterministic."""
     docs = load_table(spark, sf_dir, "documents")
-    from featurestore_for_joycastle_java_spark.operators import text as T
 
     terms = ["spark", "stream", "join"]
     q = spark.createDataFrame(

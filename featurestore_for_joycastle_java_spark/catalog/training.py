@@ -371,7 +371,6 @@ def train_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup-across-filtered-out-docs) would hide."""
     from featurestore_for_joycastle_java_spark.operators.text import (
         fingerprint,
-        tokens,
     )
     from pyspark.sql import Window
 
@@ -505,8 +504,6 @@ def train_corpus_prep_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stage-ordering bugs (sample-before-dedup, dedup across gated-out
     docs, survivor picked before clustering) all flip the card and fail
     the value hash."""
-    from featurestore_for_joycastle_java_spark.operators.text import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     # the gated scan feeds three plan branches (LSH signature build, CC
     # node set, retention join) — cache it once instead of re-tokenizing
@@ -1176,7 +1173,6 @@ def train_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     two are proven equivalent in tests/test_round7.py)."""
     from featurestore_for_joycastle_java_spark.operators.text import (
         fingerprint,
-        tokens,
     )
 
     docs = load_table(spark, sf_dir, "documents")

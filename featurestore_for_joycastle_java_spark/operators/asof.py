@@ -189,10 +189,10 @@ def sessionize(
     key_cols: list[str],
     ts_col: str,
     gap_seconds: int,
-    session_col: str = "session_id",
 ) -> DataFrame:
     """Gap-based sessionization (batch): a new session starts when the gap
-    since the entity's previous event exceeds ``gap_seconds``.
+    since the entity's previous event exceeds ``gap_seconds``; the
+    per-entity session number lands in ``session_id``.
 
     lag + cumulative-sum over one window: a single shuffle on the entity
     key. Epoch seconds keep the arithmetic integer-exact (oracle parity and
@@ -208,7 +208,7 @@ def sessionize(
     running = Window.partitionBy(*key_cols).orderBy(epoch).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    return df.withColumn(session_col, F.sum(is_new).over(running))
+    return df.withColumn("session_id", F.sum(is_new).over(running))
 
 
 def multi_asof_join(

@@ -14,7 +14,7 @@ visible/testable rather than cost-model-internal).
 
 Everything stays JVM-side and codegen-friendly: the filter is built with
 ``xxhash64`` + ``bit_or`` aggregation into a word-indexed bitmap map
-(one row, broadcast), and the probe is ``k`` map lookups + bit tests per
+(one row, broadcast), and the probe is k = 3 map lookups + bit tests per
 fact row — no Python, no UDF, no collect. False positives are possible
 (callers keep their exact join afterwards — the oracle-checked result is
 therefore bloom-independent); false negatives are impossible, which the
@@ -28,15 +28,15 @@ from pyspark.sql import Column, DataFrame, functions as F
 __all__ = ["bloom_build", "bloom_prune"]
 
 
-def _positions(key: Column, num_bits: int, k: int) -> list[Column]:
-    """k bit positions for ``key``: pmod(xxhash64(key, seed), m).
+def _positions(key: Column, num_bits: int) -> list[Column]:
+    """The k = 3 bit positions for ``key``: pmod(xxhash64(key, seed), m).
 
     Seeds enter as an extra hashed column, the standard way to derive a
     hash family from one 64-bit hash. ``pmod`` keeps positions
     non-negative (xxhash64 is signed).
     """
     return [
-        F.pmod(F.xxhash64(key, F.lit(i)), F.lit(num_bits)) for i in range(k)
+        F.pmod(F.xxhash64(key, F.lit(i)), F.lit(num_bits)) for i in range(3)
     ]
 
 
@@ -52,7 +52,7 @@ def _bit_test(word: Column, bit: Column) -> Column:
 
 
 def bloom_build(
-    small: DataFrame, key: str, *, num_bits: int = 1 << 17, k: int = 3
+    small: DataFrame, key: str, *, num_bits: int = 1 << 17
 ) -> DataFrame:
     """One-row DataFrame holding the Bloom bitmap of ``small[key]``.
 
@@ -65,7 +65,7 @@ def bloom_build(
     probes).
     """
     pos = small.select(
-        F.explode(F.array(*_positions(F.col(key), num_bits, k))).alias("pos")
+        F.explode(F.array(*_positions(F.col(key), num_bits))).alias("pos")
     ).distinct()
     words = pos.groupBy(
         F.floor(F.col("pos") / F.lit(64)).cast("long").alias("w")
@@ -92,7 +92,6 @@ def bloom_prune(
     small_key: str,
     *,
     num_bits: int = 1 << 17,
-    k: int = 3,
 ) -> DataFrame:
     """Rows of ``big`` whose ``big_key`` *may* appear in
     ``small[small_key]`` — a superset of the exact semi join (no false
@@ -103,9 +102,9 @@ def bloom_prune(
     KiB default) so the probe is a stateless per-row expression inside
     whole-stage codegen.
     """
-    bloom = bloom_build(small, small_key, num_bits=num_bits, k=k)
+    bloom = bloom_build(small, small_key, num_bits=num_bits)
     probe = None
-    for pos in _positions(F.col(big_key), num_bits, k):
+    for pos in _positions(F.col(big_key), num_bits):
         word = F.coalesce(
             F.element_at(
                 F.col("__bloom__"), F.floor(pos / F.lit(64)).cast("long")

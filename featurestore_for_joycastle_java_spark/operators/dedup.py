@@ -82,7 +82,6 @@ def token_jaccard_pairs(
     text_col: str,
     threshold: float,
     small_vocab_max: int | None = None,
-    bitmask_max_docs: int = 50_000,
     tokenizer=tokens,
 ) -> DataFrame:
     """Exact token-set Jaccard over all pairs sharing ≥1 token, via an
@@ -140,7 +139,7 @@ def token_jaccard_pairs(
 
     GATING (r5, measurement-derived): the bitmask path is taken only when
     ALL hold — (a) ``n_vocab ≤ small_vocab_max`` (mask fits a few longs);
-    (b) ``n_docs ≤ bitmask_max_docs`` (the broadcast mask table stays a
+    (b) ``n_docs ≤ 50 000`` (the broadcast mask table stays a
     few MB); (c) the PAIR-COUNT heuristic ``n_docs² ≤ 2·Σ_tok df_tok²`` —
     the bitmask's nested-loop evaluates ~n²/2 codegen long-ANDs while the
     inverted index shuffles ~Σdf²/2 pair-token rows, and a shuffled row
@@ -174,7 +173,7 @@ def token_jaccard_pairs(
             F.countDistinct("id").alias("d"),
         ).first()
         n_vocab, n_docs = stats["v"], stats["d"]
-        if 0 < n_vocab <= small_vocab_max and n_docs <= bitmask_max_docs:
+        if 0 < n_vocab <= small_vocab_max and n_docs <= 50_000:
             sum_df2 = (
                 toks.groupBy("tok")
                 .agg(F.count(F.lit(1)).alias("df"))
@@ -438,11 +437,10 @@ def minhash_lsh_pairs(
     id_col: str,
     text_col: str,
     max_jaccard_distance: float = 0.4,
-    shingle_k: int = 3,
     num_perm: int = 64,
     n_bands: int = 16,
 ) -> DataFrame:
-    """Near-dup pairs via Catalyst-native MinHash LSH over k-token
+    """Near-dup pairs via Catalyst-native MinHash LSH over 3-token
     shingles, the 100 TB dedup path:
 
     1. signature: ``num_perm`` minhashes per doc (one explode + one agg);
@@ -473,7 +471,7 @@ def minhash_lsh_pairs(
     # eager unpersist here is impossible: the plan is returned lazily.
     sh = (
         df.select(
-            F.col(id_col).alias("id"), shingles(F.col(text_col), shingle_k).alias("sh")
+            F.col(id_col).alias("id"), shingles(F.col(text_col)).alias("sh")
         )
         .filter(F.size("sh") > 0)
         .cache()

@@ -36,10 +36,9 @@ from pyspark.sql import DataFrame
 __all__ = ["gram_cells"]
 
 
-def gram_cells(
-    e: DataFrame, vec_col: str = "embedding", upper_only: bool = True
-) -> DataFrame:
-    """Per-task partial Gram cells of ``floor(val·1e6)`` int vectors.
+def gram_cells(e: DataFrame, upper_only: bool = True) -> DataFrame:
+    """Per-task partial Gram cells of the ``floor(val·1e6)`` int vectors
+    in ``e.embedding``.
 
     Returns (i int, j int, g decimal(38,0)) with 1-based dimension
     indices and ONE partial row per (task, cell); callers finish with
@@ -119,6 +118,6 @@ def gram_cells(
             names=["i", "j", "g"],
         )
 
-    return e.select(vec_col).mapInArrow(
+    return e.select("embedding").mapInArrow(
         _partials, schema="i int, j int, g decimal(38,0)"
     )

@@ -67,10 +67,7 @@ def _narrowed(loop):
 def pagerank_int(
     edges: DataFrame,
     *,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 5,
-    damping_pct: int = 85,
 ) -> DataFrame:
     """Integer PageRank over a directed edge list → (node, rank_micro).
 
@@ -78,10 +75,11 @@ def pagerank_int(
     symmetrize beforehand for undirected semantics). Nodes with no
     out-edges contribute nothing (their rank leaks — standard
     simplification); nodes with no in-edges settle at the teleport
-    floor. ``damping_pct`` is an integer percentage so the damping step
+    floor. The damping is an integer percentage (85) so the damping step
     stays in integer arithmetic.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    damping_pct = 85
+    e = edges.select("src", "dst")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ed = e.join(deg, "src").cache()
     nodes = (
@@ -123,8 +121,6 @@ def pagerank_int(
 def hits_int(
     edges: DataFrame,
     *,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 3,
 ) -> DataFrame:
     """Integer-deterministic HITS (Kleinberg 1999, "Authoritative
@@ -157,7 +153,7 @@ def hits_int(
     that action persists the raw sums, and the next half-step divides by
     the max as a literal. So every half-step runs inside this call, and
     no broadcast timeout has to cover a chain of them."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).cache()
+    e = edges.select("src", "dst").cache()
     # the initial hubs as raw sums with max S: normalized, all are S
     h0 = (
         e.select(F.col("src").alias("node"))
@@ -202,8 +198,6 @@ def hits_int(
 def label_propagation(
     edges: DataFrame,
     *,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 3,
 ) -> DataFrame:
     """Deterministic synchronous label propagation (Raghavan et al. 2007,
@@ -223,14 +217,16 @@ def label_propagation(
     semantics symmetrize ``edges`` first (the same contract as
     :func:`pagerank_int`).
 
-    Scale shape mirrors the other iterative ops here: the edge frame is
-    cached and joined by src once per round (co-partitioned after the
-    first shuffle), the (node, label) frequency count is ONE hash
-    aggregate with map-side combine, the argmax-with-tiebreak is a
-    second aggregate over it — ``max(struct(count, -label))`` — NOT a
-    window, so no per-node sort materializes. k rounds = O(k·|E|), with
+    Scale shape: the edge frame is cached and joined by src once per
+    round; as in :func:`hits_int`, the cached edges are not partitioned
+    by the join key, so every round's sort-merge join re-shuffles them
+    (``Exchange hashpartitioning(src)`` over the cached scan; a small
+    edge frame is broadcast instead). The (node, label) frequency count
+    is ONE hash aggregate with map-side combine, the argmax-with-tiebreak
+    is a second aggregate over it — ``max(struct(count, -label))`` — NOT
+    a window, so no per-node sort materializes. k rounds = O(k·|E|), with
     a per-round checkpoint keeping lineage flat."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).cache()
+    e = edges.select("src", "dst").cache()
     lbl = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))

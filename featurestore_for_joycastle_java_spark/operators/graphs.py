@@ -21,15 +21,13 @@ from featurestore_for_joycastle_java_spark.sources import load_table
 __all__ = ["cosupply_edges", "degrees", "triangle_counts", "kcore_edges", "bfs"]
 
 
-def cosupply_edges(
-    spark: SparkSession, sf_dir: str, min_qty: float = 49.0
-) -> DataFrame:
+def cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected co-supply edge list (u < v by supplier key):
     suppliers are adjacent iff they both ship the same part in a bulk
-    lineitem (``l_quantity >= min_qty``). Columns: ``u``, ``v``."""
+    lineitem (``l_quantity >= 49``). Columns: ``u``, ``v``."""
     bip = (
         load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") >= F.lit(min_qty))
+        .filter(F.col("l_quantity") >= F.lit(49.0))
         .select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
         .distinct()
     )

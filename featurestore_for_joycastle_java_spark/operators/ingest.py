@@ -31,7 +31,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import StructType
 
 from featurestore_for_joycastle_java_spark.schemas import (
     EVENT_FIELDS,
@@ -41,19 +40,16 @@ from featurestore_for_joycastle_java_spark.schemas import (
 )
 
 
-def parse_events(
-    df: DataFrame,
-    value_col: str = "value",
-    schema: StructType = GAME_EVENT_SCHEMA,
-) -> DataFrame:
-    """Op #3: JSON string -> typed struct (CMT:114's fastjson Map parse).
+def parse_events(df: DataFrame) -> DataFrame:
+    """Op #3: JSON string ``value`` -> typed struct (CMT:114's fastjson Map
+    parse).
 
-    ``from_json`` with an explicit schema reproduces dynamic-in/fixed-out:
+    ``from_json`` with ``GAME_EVENT_SCHEMA`` reproduces dynamic-in/fixed-out:
     declared fields surface, absent keys -> null, extra keys dropped. Runs
     JVM-side inside whole-stage codegen — no Python in the loop.
     """
     return df.select(
-        F.from_json(F.col(value_col).cast("string"), schema).alias("j")
+        F.from_json(F.col("value").cast("string"), GAME_EVENT_SCHEMA).alias("j")
     ).select("j.*")
 
 
@@ -62,7 +58,6 @@ def extract_numeric_feature(
     detail_col: str = "EventDetails",
     type_col: str = "EventType",
     event_types: tuple[str, ...] = EXTRACT_EVENT_TYPES,
-    pattern: str = NUMBER_PATTERN,
     out_col: str = "EventValue",
 ) -> DataFrame:
     """Ops #4+#5: gated first-match numeric extraction (CMT:115-127).
@@ -79,7 +74,7 @@ def extract_numeric_feature(
     Note the reference recompiled the Pattern per record (CMT:121); codegen
     compiles it once per task here.
     """
-    extracted = F.regexp_extract(F.col(detail_col), pattern, 1)
+    extracted = F.regexp_extract(F.col(detail_col), NUMBER_PATTERN, 1)
     return df.withColumn(
         out_col,
         F.when(
@@ -100,18 +95,16 @@ def completeness_filter(df: DataFrame, fields: list[str] = EVENT_FIELDS) -> Data
     return df.na.drop(subset=fields)
 
 
-def project_fields(df: DataFrame, fields: list[str] = EVENT_FIELDS, extra: list[str] | None = None) -> DataFrame:
+def project_fields(df: DataFrame, extra: list[str] | None = None) -> DataFrame:
     """Op #7: fixed-order projection of the declared fields (CMT:135-138),
     plus any engine-added columns (e.g. the extracted EventValue)."""
-    return df.select(*fields, *(extra or []))
+    return df.select(*EVENT_FIELDS, *(extra or []))
 
 
 def demux_write(
     df: DataFrame,
     out_dir: str,
     key_col: str = "EventType",
-    fmt: str = "parquet",
-    mode: str = "overwrite",
 ) -> None:
     """Ops #8+#12: route rows to per-event-type outputs (CMT:36,140 buffers;
     CMT:168 table-per-type) as ONE partitioned write.
@@ -130,7 +123,7 @@ def demux_write(
     This also fixes defect D2 (the reference dropped up to BATCH_SIZE-1 tail
     rows per type at end-of-stream).
     """
-    df.hint("rebalance", key_col).write.partitionBy(key_col).format(fmt).mode(mode).save(out_dir)
+    df.hint("rebalance", key_col).write.partitionBy(key_col).mode("overwrite").parquet(out_dir)
 
 
 _DEMUX_DEFAULT_KEYS = object()
@@ -164,13 +157,7 @@ def demux_tables(
     return {t: df.filter(F.col(key_col) == t) for t in keys}
 
 
-def ingest_pipeline(
-    raw: DataFrame,
-    value_col: str = "value",
-    schema: StructType = GAME_EVENT_SCHEMA,
-    fields: list[str] = EVENT_FIELDS,
-    event_types: tuple[str, ...] = EXTRACT_EVENT_TYPES,
-) -> DataFrame:
+def ingest_pipeline(raw: DataFrame) -> DataFrame:
     """The reference's entire main() (CMT:43-160) as one composed plan.
 
     Input: raw records with a JSON-string column (Kafka value or file).
@@ -179,10 +166,10 @@ def ingest_pipeline(
     reference's hand-orderings (filter-before-buffer, cheap-gate-before-
     regex; SURVEY.md §4.1) fall out of predicate pushdown for free.
     """
-    parsed = parse_events(raw, value_col=value_col, schema=schema)
-    extracted = extract_numeric_feature(parsed, event_types=event_types)
-    valid = completeness_filter(extracted, fields=fields)
-    return project_fields(valid, fields=fields, extra=["EventValue"])
+    parsed = parse_events(raw)
+    extracted = extract_numeric_feature(parsed)
+    valid = completeness_filter(extracted)
+    return project_fields(valid, extra=["EventValue"])
 
 
 # --- Fixture-proxy pipeline -------------------------------------------------

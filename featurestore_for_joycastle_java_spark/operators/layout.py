@@ -80,16 +80,15 @@ def cluster_by_morton(
     df: DataFrame,
     x_col: Column,
     y_col: Column,
-    n_partitions: int = 8,
     bits: int = 16,
 ) -> DataFrame:
     """Physically cluster rows along the Z-curve: add the Morton key,
-    range-partition on it (sampled range boundaries — one extra pass,
-    same as any repartitionByRange), and sort within partitions so
-    row-group min/max stats are tight. Writing the result with
+    range-partition on it into 8 partitions (sampled range boundaries —
+    one extra pass, same as any repartitionByRange), and sort within
+    partitions so row-group min/max stats are tight. Writing the result with
     ``.write.parquet`` yields the file layout that 2-D box predicates
     prune against."""
     keyed = df.withColumn("morton", morton_key(x_col, y_col, bits))
-    return keyed.repartitionByRange(n_partitions, "morton").sortWithinPartitions(
+    return keyed.repartitionByRange(8, "morton").sortWithinPartitions(
         "morton"
     )

@@ -46,10 +46,10 @@ DECODED_SCHEMA = StructType(
 )
 
 
-def attach_blob(df: DataFrame, text_col: str = "text", blob_col: str = "blob") -> DataFrame:
-    """Materialize a binary column (fixtures have no real images; utf-8
-    bytes of the text stand in — the plumbing is identical)."""
-    return df.withColumn(blob_col, F.encode(F.col(text_col), "utf-8"))
+def attach_blob(df: DataFrame) -> DataFrame:
+    """Materialize a binary column ``blob`` (fixtures have no real images;
+    utf-8 bytes of ``text`` stand in — the plumbing is identical)."""
+    return df.withColumn("blob", F.encode(F.col("text"), "utf-8"))
 
 
 def decode_image(blob: bytes):
@@ -78,28 +78,26 @@ def _fake_meta(blob: bytes) -> tuple[int, int, int, float]:
     return width, height, n_channels, feat_mean
 
 
-def fake_decode_features(
-    df: DataFrame, id_col: str = "doc_id", blob_col: str = "blob"
-) -> DataFrame:
+def fake_decode_features(df: DataFrame) -> DataFrame:
     """The decode/feature-extract stage over mapInPandas: Arrow batches in,
     Arrow batches out, schema fixed by DECODED_SCHEMA. Swapping
     `_fake_meta` for a real decoder changes nothing on the Spark side."""
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            metas = [_fake_meta(b) for b in pdf[blob_col]]
+            metas = [_fake_meta(b) for b in pdf["blob"]]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "width": [m[0] for m in metas],
                     "height": [m[1] for m in metas],
                     "n_channels": [m[2] for m in metas],
-                    "blob_len": [len(b) for b in pdf[blob_col]],
+                    "blob_len": [len(b) for b in pdf["blob"]],
                     "feat_mean": [m[3] for m in metas],
                 }
             )
 
-    return df.select(id_col, blob_col).mapInPandas(decode_batches, DECODED_SCHEMA)
+    return df.select("doc_id", "blob").mapInPandas(decode_batches, DECODED_SCHEMA)
 
 
 #: Output schema of the (stubbed) resize stage.
@@ -147,28 +145,23 @@ def fake_resize(df: DataFrame, max_dim: int = 224) -> DataFrame:
     )
 
 
-def frame_sample_plan(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    blob_col: str = "blob",
-    n_frames: int = 4,
-) -> DataFrame:
+def frame_sample_plan(df: DataFrame, n_frames: int = 4) -> DataFrame:
     """Video frame-sampling plumbing: explode each blob into n_frames
     (frame extraction itself stubbed — frames are deterministic slices of
     the blob). Shows the blob→rows fan-out shape: posexplode keeps frame
     index, blobs never enter a shuffle key."""
     frame_idx = F.sequence(F.lit(0), F.lit(n_frames - 1))
     exploded = df.select(
-        id_col, blob_col, F.posexplode(frame_idx).alias("pos", "frame_no")
+        "doc_id", "blob", F.posexplode(frame_idx).alias("pos", "frame_no")
     )
     frame_len = F.greatest(
-        (F.octet_length(blob_col) / n_frames).cast("int"), F.lit(1)
+        (F.octet_length("blob") / n_frames).cast("int"), F.lit(1)
     )
     return exploded.select(
-        id_col,
+        "doc_id",
         "frame_no",
         F.substring(
-            F.col(blob_col).cast("string"),
+            F.col("blob").cast("string"),
             (F.col("frame_no") * frame_len + 1).cast("int"),
             frame_len,
         ).alias("frame_bytes_preview"),

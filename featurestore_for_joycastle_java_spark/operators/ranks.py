@@ -118,8 +118,7 @@ def grouped_row_number(
     The input shuffles once (the rank window's hashpartitioning on
     group+bucket); the per-group stats and the |groups| x ``n_buckets``
     offsets frames are broadcast, so callers must keep ``group_cols``
-    low-cardinality (same precondition as ``grouped_prefix_sum``'s
-    default ``broadcast_offsets=True``)."""
+    low-cardinality (the same precondition as ``grouped_prefix_sum``)."""
     v = F.col(value_col).cast("double")
     stats = df.groupBy(*group_cols).agg(
         F.min(v).alias("_lo"), F.max(v).alias("_hi")
@@ -179,8 +178,6 @@ def grouped_prefix_sum(
     value_col: str,
     out_col: str = "running_sum",
     tiebreak_cols: list[str] | None = None,
-    n_buckets: int = 32,
-    broadcast_offsets: bool = True,
 ) -> DataFrame:
     """Exact per-group running sum ``SUM(value) OVER (PARTITION BY grp
     ORDER BY order_col ROWS UNBOUNDED PRECEDING..CURRENT ROW)`` without
@@ -193,20 +190,18 @@ def grouped_prefix_sum(
     per group: range-bucket on the order column within each group's own
     min/max, run the ordinary hash-partitioned running sum within
     (group, bucket), then prefix-sum the per-(group, bucket) totals —
-    that window is partitioned per group over <= ``n_buckets`` rows —
-    and add the offset back. The fact shuffles once (on group+bucket).
+    that window is partitioned per group over <= 32 rows — and add the
+    offset back. The fact shuffles once (on group+bucket).
 
     Bucket monotonicity: equal order values share a bucket (range floor
     of the order value), so tiebreak columns never cross buckets — the
     same contract as ``global_row_number``.
 
-    PRECONDITION for the default ``broadcast_offsets=True``: the operator
-    targets FEW HUGE groups (the TB-sized-group case above), so the
-    offsets frame is |groups| × ``n_buckets`` rows and safely broadcast.
-    For a high-cardinality ``group_cols`` call (where a plain partitioned
-    window would have been fine anyway), pass ``broadcast_offsets=False``
-    to let the optimizer pick the join strategy instead of forcing a
-    driver-side collect of a large offsets frame."""
+    PRECONDITION: the operator targets FEW HUGE groups (the TB-sized-group
+    case above), so the offsets frame is |groups| × 32 rows and safely
+    broadcast. A high-cardinality ``group_cols`` wants a plain
+    partitioned window instead."""
+    n_buckets = 32
     tiebreak_cols = list(tiebreak_cols or [])
     v = F.col(order_col).cast("double")
     stats = df.groupBy(*group_cols).agg(
@@ -247,10 +242,8 @@ def grouped_prefix_sum(
         F.coalesce(F.sum("_bsum").over(w_pfx), F.lit(0)).alias("_offset"),
     )
 
-    if broadcast_offsets:
-        offsets = F.broadcast(offsets)
     return (
-        running.join(offsets, [*group_cols, "_bucket"])
+        running.join(F.broadcast(offsets), [*group_cols, "_bucket"])
         .withColumn(out_col, F.col("_offset") + F.col("_run_in"))
         .drop("_bucket", "_run_in", "_offset", "_lo", "_hi")
     )

@@ -70,13 +70,11 @@ def top_k_per_group(
     )
 
 
-def broadcast_join(
-    fact: DataFrame, dim: DataFrame, on, how: str = "inner"
-) -> DataFrame:
-    """Join with an explicit broadcast hint on the dimension side — the
-    fact side never shuffles. Use only for genuinely small dims (fits in
-    every executor); for borderline sizes let AQE decide instead."""
-    return fact.join(F.broadcast(dim), on, how)
+def broadcast_join(fact: DataFrame, dim: DataFrame, on) -> DataFrame:
+    """Inner join with an explicit broadcast hint on the dimension side —
+    the fact side never shuffles. Use only for genuinely small dims (fits
+    in every executor); for borderline sizes let AQE decide instead."""
+    return fact.join(F.broadcast(dim), on, "inner")
 
 
 def write_bucketed(
@@ -85,9 +83,8 @@ def write_bucketed(
     bucket_cols: list[str],
     n_buckets: int,
     sort_cols: list[str] | None = None,
-    fmt: str = "parquet",
 ) -> None:
-    """Persist as a bucketed (and optionally sorted) table: rows are
+    """Persist as a bucketed (and optionally sorted) parquet table: rows are
     hash-distributed into ``n_buckets`` files per partition by
     ``bucket_cols``.
 
@@ -97,7 +94,7 @@ def write_bucketed(
     saved on every subsequent join, amortizing the one-time bucketed
     write. ``sort_cols`` additionally pre-sorts within buckets so
     sort-merge joins skip their sort step."""
-    writer = df.write.format(fmt).mode("overwrite").bucketBy(n_buckets, *bucket_cols)
+    writer = df.write.format("parquet").mode("overwrite").bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table_name)
@@ -108,24 +105,20 @@ def salted_join(
     dim: DataFrame,
     on: list[str],
     n_salt: int = 16,
-    how: str = "inner",
     salt_source: str | None = None,
 ) -> DataFrame:
-    """Skew-resistant equi-join: spread each hot fact key over ``n_salt``
-    shuffle partitions by appending a deterministic salt (xxhash64 of
-    ``salt_source``, a high-cardinality fact column), and replicate the
-    dim side ×``n_salt`` so every salted fact row still finds its match.
+    """Skew-resistant inner equi-join: spread each hot fact key over
+    ``n_salt`` shuffle partitions by appending a deterministic salt
+    (xxhash64 of ``salt_source``, a high-cardinality fact column), and
+    replicate the dim side ×``n_salt`` so every salted fact row still
+    finds its match.
 
-    Result is row-identical to ``fact.join(dim, on, how)`` — only the
+    Result is row-identical to ``fact.join(dim, on)`` — only the
     physical shuffle distribution changes. Use when BOTH sides are too big
     to broadcast AND fact keys are skewed (one key ≫ others would pin a
     single reducer); AQE's skew-join split handles sort-merge skew
     automatically, but salting also fixes skewed hash aggregations and
-    works under any join strategy. Supports inner/left joins (dim
-    replication breaks right/full semantics — every dim row would appear
-    n_salt times unmatched)."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
+    works under any join strategy."""
     if salt_source is None:
         raise ValueError("salt_source (a high-cardinality fact column) is required")
     salted_fact = fact.withColumn(
@@ -134,7 +127,7 @@ def salted_join(
     salted_dim = dim.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
     )
-    return salted_fact.join(salted_dim, [*on, "__salt"], how).drop("__salt")
+    return salted_fact.join(salted_dim, [*on, "__salt"], "inner").drop("__salt")
 
 
 def rolling_time_window(
@@ -143,7 +136,6 @@ def rolling_time_window(
     ts_col: str,
     window_seconds: int,
     aggs: dict[str, Column],
-    epoch_col: str = "_epoch_s",
 ) -> DataFrame:
     """Rolling event-time window per entity (e.g. 7-day spend per user) —
     the feature-store staple. Range frame over epoch seconds: peers with
@@ -153,13 +145,13 @@ def rolling_time_window(
     partition sorts locally by time. Skewed entities (one user = billions
     of rows) would need pre-bucketing by (entity, time-bucket); at that
     point switch to the streaming path (streaming/windows)."""
-    with_epoch = df.withColumn(epoch_col, F.unix_timestamp(F.col(ts_col)))
+    with_epoch = df.withColumn("_epoch_s", F.unix_timestamp(F.col(ts_col)))
     w = (
         Window.partitionBy(*partition_by)
-        .orderBy(epoch_col)
+        .orderBy("_epoch_s")
         .rangeBetween(-window_seconds, 0)
     )
     out = with_epoch.select(
         "*", *[expr.over(w).alias(name) for name, expr in aggs.items()]
     )
-    return out.drop(epoch_col)
+    return out.drop("_epoch_s")

@@ -16,6 +16,10 @@ from featurestore_for_joycastle_java_spark.operators.relational import (
 )
 from featurestore_for_joycastle_java_spark.session import thread_target
 
+#: The columns every top-k entry point reads: the corpus id, the vector
+#: (on both sides) and the query id.
+_ID_COL, _VEC_COL, _QID_COL = "vec_id", "embedding", "query_id"
+
 
 def as_double(col) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -104,9 +108,6 @@ def exact_rerank(
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     k: int = 5,
 ) -> DataFrame:
     """Exact top-k by cosine: broadcast the (small) query set against the
@@ -118,15 +119,15 @@ def brute_force_topk(
     Ranking key is (rounded cosine desc, id) → deterministic under ties.
     For corpus-×-corpus workloads use lsh_topk / IVF instead."""
     q = queries.select(
-        F.col(query_id_col), as_double(F.col(vec_col)).alias("__qv")
+        F.col(_QID_COL), as_double(F.col(_VEC_COL)).alias("__qv")
     )
-    c = corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("__cv"))
+    c = corpus.select(F.col(_ID_COL), as_double(F.col(_VEC_COL)).alias("__cv"))
     scored = c.join(F.broadcast(q)).select(
-        query_id_col,
-        id_col,
+        _QID_COL,
+        _ID_COL,
         F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim"),
     )
-    return top_k_by_cosine(scored, query_id_col, id_col, k)
+    return top_k_by_cosine(scored, _QID_COL, _ID_COL, k)
 
 
 #: Most (corpus row, query) pairs one ``brute_force_topk_arrow`` slice
@@ -234,9 +235,6 @@ def _topk_arrow_scores(batches, qids, qvecs, qid_arrow, d, id_col, query_id_col)
 def brute_force_topk_arrow(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     k: int = 5,
 ) -> DataFrame:
     """Exact top-k by cosine with the scoring pass vectorized — the
@@ -267,7 +265,7 @@ def brute_force_topk_arrow(
     from pyspark.sql.pandas.types import to_arrow_type
 
     q_rows = queries.select(
-        F.col(query_id_col), as_double(F.col(vec_col)).alias("__qv")
+        F.col(_QID_COL), as_double(F.col(_VEC_COL)).alias("__qv")
     ).collect()
     qids = [r[0] for r in q_rows]
     qvecs = [r[1] for r in q_rows]
@@ -277,25 +275,25 @@ def brute_force_topk_arrow(
             f"brute_force_topk_arrow requires uniform query dims; saw {sorted(dims)}"
         )
     d = dims.pop() if dims else None
-    qid_type = dict(queries.dtypes)[query_id_col]
-    id_type = dict(corpus.dtypes)[id_col]
+    qid_type = dict(queries.dtypes)[_QID_COL]
+    id_type = dict(corpus.dtypes)[_ID_COL]
     # the declared Arrow type of the query ids: pa.array would infer int64
     # for any integer ids and mismatch an int/smallint output column
-    qid_arrow = to_arrow_type(queries.schema[query_id_col].dataType)
+    qid_arrow = to_arrow_type(queries.schema[_QID_COL].dataType)
 
     def _score(batches):
         return _topk_arrow_scores(
-            batches, qids, qvecs, qid_arrow, d, id_col, query_id_col
+            batches, qids, qvecs, qid_arrow, d, _ID_COL, _QID_COL
         )
 
-    scored = corpus.select(F.col(id_col), F.col(vec_col)).mapInArrow(
+    scored = corpus.select(F.col(_ID_COL), F.col(_VEC_COL)).mapInArrow(
         _score,
-        schema=f"{query_id_col} {qid_type}, {id_col} {id_type}, __cos double",
+        schema=f"{_QID_COL} {qid_type}, {_ID_COL} {id_type}, __cos double",
     )
     scored = scored.select(
-        query_id_col, id_col, F.round(F.col("__cos"), 6).alias("cos_sim")
+        _QID_COL, _ID_COL, F.round(F.col("__cos"), 6).alias("cos_sim")
     )
-    return top_k_by_cosine(scored, query_id_col, id_col, k)
+    return top_k_by_cosine(scored, _QID_COL, _ID_COL, k)
 
 
 def cosine_pairs(
@@ -341,15 +339,13 @@ def kmeans_centroids(
     vec_col: str = "embedding",
     n_centroids: int = 16,
     seed: int = 42,
-    max_iter: int = 20,
     fit_sample: int | None = None,
     corpus_rows: int | None = None,
-    target_cell_size: int | None = None,
 ) -> DataFrame:
     """Real IVF centroids: seeded distributed k-means|| over the corpus
     (``pyspark.ml.clustering.KMeans``). Returns ``(cent_id, __mv)`` with
     cent_id = cluster index. The fit is a few passes over the data
-    (k-means|| init + ``max_iter`` Lloyd rounds), all executor-side; only
+    (k-means|| init + 20 Lloyd rounds), all executor-side; only
     the k centroid vectors come back to the driver. Deterministic for a
     fixed seed + input.
 
@@ -367,27 +363,11 @@ def kmeans_centroids(
     knows it (most do — they sized k ~ sqrt(n) from the same number).
     Sizing the sample fraction needs n; passing it here avoids an extra
     full ``corpus.count()`` scan per index build (one wasted 100 TB
-    pass otherwise). Unknown → counted once, documented cost.
-
-    ``target_cell_size`` (m̄): when set, OVERRIDES ``n_centroids`` with
-    k = max(4, ceil(n / m̄)) — the constant-cell-size parametrization
-    (SCALETEST_r10 finding: k ∝ √n bends the Σm² pair stage to
-    ~Θ(n^1.5); holding m̄ constant keeps it linear). The k-means fit
-    with a per-centroid-bounded sample then costs O(64·k²·d) per Lloyd
-    pass — broadcast-free GEMM-shaped compute, but super-linear in k;
-    at large k the escalation is ``kmeans_centroids_two_level`` (√k
-    coarse cells, then per-cell sub-fits + two-stage assignment) —
-    measured in SCALETEST_r11: fit+assign α 1.66 flat vs 0.93
-    two-level at k = n/125 through 16×."""
+    pass otherwise). Unknown → counted once, documented cost."""
     import warnings
 
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
-
-    if target_cell_size is not None:
-        n = corpus_rows if corpus_rows is not None else corpus.count()
-        corpus_rows = n
-        n_centroids = max(4, -(-n // target_cell_size))
 
     # fit on L2-NORMALIZED vectors (spherical k-means approximation):
     # Spark's KMeans minimizes euclidean distance, but IVF assignment is
@@ -419,7 +399,7 @@ def kmeans_centroids(
             )
     feat = fit_src.select(array_to_vector(normed).alias("features"))
     km = KMeans(
-        k=n_centroids, seed=seed, maxIter=max_iter, initMode="k-means||"
+        k=n_centroids, seed=seed, maxIter=20, initMode="k-means||"
     )
     try:
         centers = km.fit(feat).clusterCenters()
@@ -510,8 +490,6 @@ def kmeans_centroids_two_level(
     vec_col: str = "embedding",
     n_centroids: int = 256,
     seed: int = 42,
-    max_iter: int = 20,
-    points_per_centroid: int = 64,
     corpus_rows: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Hierarchical (two-level) IVF centroids — the extreme-k escalation
@@ -526,7 +504,7 @@ def kmeans_centroids_two_level(
     - coarse fit: seeded k-means|| on a per-centroid-bounded sample —
       O(sample₁·√k) per pass;
     - sub-fits: ONE distributed pass — a seeded sample of
-      ~``points_per_centroid``·k rows is coarse-assigned (broadcast
+      ~64·k rows is coarse-assigned (broadcast
       fold over √k) and each coarse group fits its k2 sub-centroids
       with a seeded NumPy spherical Lloyd inside ``applyInPandas``
       (groups are sample-bounded, never corpus-sized); coarse cells
@@ -574,8 +552,7 @@ def kmeans_centroids_two_level(
         vec_col=vec_col,
         n_centroids=k1,
         seed=seed,
-        max_iter=max_iter,
-        fit_sample=points_per_centroid * k1,
+        fit_sample=64 * k1,
         corpus_rows=n,
     ).select(F.col("cent_id").alias("coarse_id"), "__mv")
 
@@ -584,7 +561,7 @@ def kmeans_centroids_two_level(
     # are excluded from the FIT sample for the same reason as the flat
     # fit (no direction; the normalize would divide by zero) —
     # assignment still sees them and returns cent_id NULL.
-    target = points_per_centroid * k1 * k2
+    target = 64 * k1 * k2
     src = corpus.filter(l2_norm(as_double(F.col(vec_col))) > 0)
     if n > target:
         src = src.sample(fraction=min(1.0, 1.1 * target / n), seed=seed)
@@ -608,7 +585,7 @@ def kmeans_centroids_two_level(
         k2_eff = min(k2, len(x))
         rng = np.random.RandomState((seed * 1_000_003 + cid) % (2**31))
         cents = x[rng.choice(len(x), size=k2_eff, replace=False)].copy()
-        for _ in range(max_iter):
+        for _ in range(20):
             lab = (x @ cents.T).argmax(1)
             new = cents.copy()
             for j in range(k2_eff):
@@ -755,8 +732,8 @@ def semdedup_survivors(
     (Σm² ≈ n·m̄ for balanced cells), the remedy for the measured 16×
     bend of k ∝ √n (SCALETEST_r10: 2^1.57/octave). The n·k assignment
     fold grows instead, but it is zero-shuffle per-row broadcast
-    compute; see ``kmeans_centroids`` for the fit-cost trade and the
-    extreme-k escalation. Requires ``centroids="kmeans"`` (constant
+    compute; see ``kmeans_centroids_two_level`` for the fit-cost trade
+    and the extreme-k escalation. Requires ``centroids="kmeans"`` (constant
     cell size is meaningless without data-adaptive, balanced cells).
 
     ``two_level``: with ``centroids="kmeans"``, fit and assign through
@@ -766,7 +743,7 @@ def semdedup_survivors(
     total super-linear (SCALETEST_r11). Fold work drops to O(n·2√k);
     the pair stage is identical. ``fit_sample`` is ignored on this
     path — the hierarchy sizes its own per-centroid-bounded samples
-    (``points_per_centroid`` on ``kmeans_centroids_two_level``)."""
+    (64 points per centroid, ``kmeans_centroids_two_level``)."""
     if target_cell_size is not None:
         if centroids != "kmeans":
             raise ValueError(
@@ -886,14 +863,10 @@ def ivf_probes(
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
     centroids: str = "lowid",
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) index — the other
     standard ANN scale path next to LSH:
@@ -913,41 +886,34 @@ def ivf_topk(
 
     Deterministic end-to-end (seeded fit, no sampling, ties broken by
     id). Recall vs brute force asserted in tests."""
-    c = corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("__cv"))
+    c = corpus.select(F.col(_ID_COL), as_double(F.col(_VEC_COL)).alias("__cv"))
     if centroids == "kmeans":
         cents = kmeans_centroids(
-            corpus, vec_col=vec_col, n_centroids=n_centroids, seed=seed
+            corpus, vec_col=_VEC_COL, n_centroids=n_centroids
         )
     else:
-        cents = lowid_centroids(corpus, id_col, vec_col, n_centroids)
-    assigned = assign_nearest_cell(c, cents, id_col)
+        cents = lowid_centroids(corpus, _ID_COL, _VEC_COL, n_centroids)
+    assigned = assign_nearest_cell(c, cents, _ID_COL)
     q = queries.select(
-        F.col(query_id_col), as_double(F.col(vec_col)).alias("__qv")
+        F.col(_QID_COL), as_double(F.col(_VEC_COL)).alias("__qv")
     )
-    probes = ivf_probes(q, query_id_col, "__qv", cents, n_probe).select(
-        query_id_col, "cent_id", "__qv"
+    probes = ivf_probes(q, _QID_COL, "__qv", cents, n_probe).select(
+        _QID_COL, "cent_id", "__qv"
     )
     # broadcast the (tiny) probe list — the corpus-side cell scan stays
     # shuffle-free, exactly like the brute-force path
     scored = assigned.join(F.broadcast(probes), "cent_id").select(
-        query_id_col,
-        id_col,
+        _QID_COL,
+        _ID_COL,
         F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim"),
     )
-    return top_k_by_cosine(scored, query_id_col, id_col, k)
+    return top_k_by_cosine(scored, _QID_COL, _ID_COL, k)
 
 
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     k: int = 5,
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 8,
-    distance_threshold: float = 10.0,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k via BucketedRandomProjectionLSH (Euclidean
     buckets): candidates from equal-bucket joins only — near-linear, the
@@ -957,29 +923,29 @@ def lsh_topk(
     from pyspark.ml.functions import array_to_vector
 
     c = corpus.select(
-        F.col(id_col), array_to_vector(as_double(F.col(vec_col))).alias("features")
+        F.col(_ID_COL), array_to_vector(as_double(F.col(_VEC_COL))).alias("features")
     )
     q = queries.select(
-        F.col(query_id_col),
-        array_to_vector(as_double(F.col(vec_col))).alias("features"),
+        F.col(_QID_COL),
+        array_to_vector(as_double(F.col(_VEC_COL))).alias("features"),
     )
     lsh = BucketedRandomProjectionLSH(
         inputCol="features",
         outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
+        bucketLength=2.0,
+        numHashTables=8,
+        seed=42,
     )
     model = lsh.fit(c)
-    pairs = model.approxSimilarityJoin(q, c, distance_threshold, distCol="dist")
+    pairs = model.approxSimilarityJoin(q, c, 10.0, distCol="dist")
     scored = pairs.select(
-        F.col(f"datasetA.{query_id_col}").alias(query_id_col),
-        F.col(f"datasetB.{id_col}").alias(id_col),
+        F.col(f"datasetA.{_QID_COL}").alias(_QID_COL),
+        F.col(f"datasetB.{_ID_COL}").alias(_ID_COL),
         F.round("dist", 6).alias("dist"),
     )
     return top_k_per_group(
-        scored, [query_id_col], [F.col("dist").asc(), F.col(id_col)], k, "rnk"
-    ).select(query_id_col, id_col, "dist", F.col("rnk").cast("int").alias("rnk"))
+        scored, [_QID_COL], [F.col("dist").asc(), F.col(_ID_COL)], k, "rnk"
+    ).select(_QID_COL, _ID_COL, "dist", F.col("rnk").cast("int").alias("rnk"))
 
 
 # --- Sign-random-projection (SRP) cosine LSH --------------------------------
@@ -1198,9 +1164,6 @@ def srp_near_pairs(
 def srp_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     k: int = 5,
     n_tables: int = 8,
     n_bits: int = 8,
@@ -1217,14 +1180,14 @@ def srp_topk(
     what lets a DuckDB oracle replay the ENTIRE index: same buckets, same
     candidates, same scores — unlike the seeded-JVM BRP path
     (``lsh_topk``), which gets only a recall check."""
-    c_codes = srp_codes(corpus, id_col, vec_col, n_tables, n_bits, dim)
-    q_codes = srp_codes(queries, query_id_col, vec_col, n_tables, n_bits, dim)
+    c_codes = srp_codes(corpus, _ID_COL, _VEC_COL, n_tables, n_bits, dim)
+    q_codes = srp_codes(queries, _QID_COL, _VEC_COL, n_tables, n_bits, dim)
     cand = (
         q_codes.join(c_codes, ["tbl", "code"])
-        .select(query_id_col, id_col)
+        .select(_QID_COL, _ID_COL)
         .distinct()
     )
-    return exact_rerank(cand, corpus, queries, id_col, vec_col, query_id_col, k)
+    return exact_rerank(cand, corpus, queries, _ID_COL, _VEC_COL, _QID_COL, k)
 
 
 # --- Product quantization (IVF-PQ's compression half) ------------------------
@@ -1236,7 +1199,6 @@ def pq_codebooks(
     m: int = 8,
     k: int = 16,
     dim: int = 64,
-    seed: int = 42,
 ) -> DataFrame:
     """Per-subspace PQ codebooks: split each vector into ``m`` contiguous
     ``dim/m``-dim subvectors and fit seeded k-means(``k``) in every
@@ -1252,7 +1214,7 @@ def pq_codebooks(
     at 16 (width 4 → 16 measured 6.4 → 3.9 s on the m=16 fit —
     the fits are driver-latency-bound, so wider overlap keeps paying
     until every fit is in flight). Each fit keeps its own seed
-    (``seed + s``) and its own input slice, so concurrency changes
+    (``42 + s``) and its own input slice, so concurrency changes
     nothing about what any fit computes. Worker threads are wrapped by
     ``session.thread_target`` so the caller's job group /
     scheduler-pool local properties propagate under pinned-thread mode
@@ -1287,7 +1249,7 @@ def pq_codebooks(
                 ).alias("features")
             )
             model = KMeans(
-                k=k, seed=seed + s, maxIter=20, initMode="k-means||"
+                k=k, seed=42 + s, maxIter=20, initMode="k-means||"
             ).fit(feat)
             return [
                 (s, c, [float(x) for x in ctr])
@@ -1502,14 +1464,10 @@ def pq_encode(
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     k: int = 5,
     m: int = 8,
     n_codes: int = 16,
     dim: int = 64,
-    seed: int = 42,
     shortlist: int = 50,
 ) -> DataFrame:
     """Approximate top-k via PQ the way production systems run it —
@@ -1532,28 +1490,24 @@ def pq_topk(
     deployments always pair PQ with a re-rank stage. JVM-seeded
     codebooks ⇒ no cross-engine replay; correctness is a recall bound
     vs brute force (the ``sim_ivf_kmeans_recall`` pattern)."""
-    books = pq_codebooks(corpus, vec_col, m=m, k=n_codes, dim=dim, seed=seed)
-    corpus_codes = pq_encode(corpus, books, id_col, vec_col, m=m, dim=dim)
-    qtabs = _pq_query_tables(queries, query_id_col, vec_col, books, dim // m)
+    books = pq_codebooks(corpus, _VEC_COL, m=m, k=n_codes, dim=dim)
+    corpus_codes = pq_encode(corpus, books, _ID_COL, _VEC_COL, m=m, dim=dim)
+    qtabs = _pq_query_tables(queries, _QID_COL, _VEC_COL, books, dim // m)
     cand = _adc_shortlist(
-        corpus_codes.join(F.broadcast(qtabs)), query_id_col, id_col, shortlist
+        corpus_codes.join(F.broadcast(qtabs)), _QID_COL, _ID_COL, shortlist
     )
-    return exact_rerank(cand, corpus, queries, id_col, vec_col, query_id_col, k)
+    return exact_rerank(cand, corpus, queries, _ID_COL, _VEC_COL, _QID_COL, k)
 
 
 def ivfpq_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
     m: int = 8,
     n_codes: int = 16,
     dim: int = 64,
-    seed: int = 42,
     shortlist: int = 50,
 ) -> DataFrame:
     """IVF-PQ composed — the full faiss production stack in one plan
@@ -1572,32 +1526,32 @@ def ivfpq_topk(
     correctness is a recall bound vs brute force, the
     ``sim_pq_recall`` pattern."""
     # --- IVF half: lowid centroids, zero-shuffle assignment, probes
-    cents = lowid_centroids(corpus, id_col, vec_col, n_centroids)
-    c = corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("__cv"))
-    assigned = assign_nearest_cell(c, cents, id_col).select(
-        id_col, "cent_id"
+    cents = lowid_centroids(corpus, _ID_COL, _VEC_COL, n_centroids)
+    c = corpus.select(F.col(_ID_COL), as_double(F.col(_VEC_COL)).alias("__cv"))
+    assigned = assign_nearest_cell(c, cents, _ID_COL).select(
+        _ID_COL, "cent_id"
     )
     q = queries.select(
-        F.col(query_id_col), as_double(F.col(vec_col)).alias("__qv")
+        F.col(_QID_COL), as_double(F.col(_VEC_COL)).alias("__qv")
     )
-    probes = ivf_probes(q, query_id_col, "__qv", cents, n_probe).select(
-        query_id_col, "cent_id"
+    probes = ivf_probes(q, _QID_COL, "__qv", cents, n_probe).select(
+        _QID_COL, "cent_id"
     )
 
     # --- PQ half: encode once, per-query ADC tables
-    books = pq_codebooks(corpus, vec_col, m=m, k=n_codes, dim=dim, seed=seed)
-    corpus_codes = pq_encode(corpus, books, id_col, vec_col, m=m, dim=dim)
-    cell_codes = corpus_codes.join(assigned, id_col)
-    qtabs = _pq_query_tables(queries, query_id_col, vec_col, books, dim // m)
+    books = pq_codebooks(corpus, _VEC_COL, m=m, k=n_codes, dim=dim)
+    corpus_codes = pq_encode(corpus, books, _ID_COL, _VEC_COL, m=m, dim=dim)
+    cell_codes = corpus_codes.join(assigned, _ID_COL)
+    qtabs = _pq_query_tables(queries, _QID_COL, _VEC_COL, books, dim // m)
     # probe list x ADC tables: one small broadcast frame keyed by cell,
     # so the code scan joins on cent_id and each query reads ONLY its
     # probed cells — the corpus-side scan stays shuffle-free
-    probe_tabs = probes.join(qtabs, query_id_col)
+    probe_tabs = probes.join(qtabs, _QID_COL)
     cand = _adc_shortlist(
         cell_codes.join(F.broadcast(probe_tabs), "cent_id"),
-        query_id_col,
-        id_col,
+        _QID_COL,
+        _ID_COL,
         shortlist,
     )
     # --- exact re-rank on shortlist·|queries| rows only
-    return exact_rerank(cand, corpus, queries, id_col, vec_col, query_id_col, k)
+    return exact_rerank(cand, corpus, queries, _ID_COL, _VEC_COL, _QID_COL, k)

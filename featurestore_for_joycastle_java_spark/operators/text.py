@@ -35,18 +35,18 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def char_ngrams(col: Column, n: int = 3) -> Column:
-    """Distinct character n-grams of the lowercased text (the n-gram
+def char_ngrams(col: Column) -> Column:
+    """Distinct character 3-grams of the lowercased text (the n-gram
     Jaccard dedup input — catches near-dups word tokenization misses:
     typos, spacing, inflection). Sequence+substr, no explode; a text
-    shorter than ``n`` yields an empty set (the sequence(1,0)-descends
+    shorter than 3 yields an empty set (the sequence(1,0)-descends
     guard, same trap as ``shingles``). The lowered string binds ONCE via
     the single-element transform (no CSE across HOF lambdas)."""
 
     def build(s: Column) -> Column:
-        n_pos = F.length(s) - (n - 1)
+        n_pos = F.length(s) - 2
         grams = F.transform(
-            F.sequence(F.lit(1), n_pos), lambda i: s.substr(i, F.lit(n))
+            F.sequence(F.lit(1), n_pos), lambda i: s.substr(i, F.lit(3))
         )
         return F.array_distinct(
             F.when(n_pos >= 1, grams).otherwise(

@@ -164,10 +164,10 @@ def read_any(
     return reader.options(**options).load(path)
 
 
-def write_any(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite", partition_by: list[str] | None = None, **options) -> None:
-    """Uniform writer. ``partition_by`` gives hive-style layout so downstream
-    scans get partition pruning on those keys."""
-    writer = df.write.format(fmt).mode(mode)
+def write_any(df: DataFrame, path: str, fmt: str = "parquet", partition_by: list[str] | None = None, **options) -> None:
+    """Uniform overwriting writer. ``partition_by`` gives hive-style layout
+    so downstream scans get partition pruning on those keys."""
+    writer = df.write.format(fmt).mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if fmt == "csv":

@@ -232,18 +232,15 @@ def jdbc_demux_stream_sink(
 
 
 def tumbling_counts(
-    stream_df: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    group_cols: tuple[str, ...] = ("event_type",),
+    stream_df: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
 ) -> DataFrame:
-    """Watermarked tumbling-window aggregation. Late data beyond the
-    watermark is dropped; state per (window × group) is freed once the
-    watermark passes the window end."""
+    """Watermarked tumbling-window aggregation on ``ts`` per
+    ``event_type``. Late data beyond the watermark is dropped; state per
+    (window × event type) is freed once the watermark passes the window
+    end."""
     return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window), *group_cols)
+        stream_df.withWatermark("ts", watermark)
+        .groupBy(F.window(F.col("ts"), window), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             exact_sum(F.col("value")).alias("sum_value"),
@@ -252,47 +249,36 @@ def tumbling_counts(
 
 
 def sliding_counts(
-    stream_df: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
+    stream_df: DataFrame, window: str = "1 hour", slide: str = "30 minutes"
 ) -> DataFrame:
-    """Sliding windows: each event lands in window/slide overlapping
-    windows (state multiplies accordingly — keep the ratio small)."""
+    """Sliding windows on ``ts`` (2-hour watermark): each event lands in
+    window/slide overlapping windows (state multiplies accordingly — keep
+    the ratio small)."""
     return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window, slide))
+        stream_df.withWatermark("ts", "2 hours")
+        .groupBy(F.window(F.col("ts"), window, slide))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
 
 
 def session_counts(
-    stream_df: DataFrame,
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    key_cols: tuple[str, ...] = ("user_id",),
+    stream_df: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
 ) -> DataFrame:
-    """Session windows (gap-merged) per entity — the streaming twin of
-    operators.asof.sessionize; a session closes when the watermark passes
-    last_event + gap."""
+    """Session windows (gap-merged on ``ts``) per ``user_id`` — the
+    streaming twin of operators.asof.sessionize; a session closes when the
+    watermark passes last_event + gap."""
     return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap), *key_cols)
+        stream_df.withWatermark("ts", watermark)
+        .groupBy(F.session_window(F.col("ts"), gap), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
 
 
-def stateful_user_totals(
-    stream_df: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
+def stateful_user_totals(stream_df: DataFrame) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``: per-user
-    running (count, sum) carried across micro-batches in explicit group
-    state — the arbitrary-stateful-processing escape hatch for logic
-    watermarked windows can't express.
+    running (count, sum of ``value``) carried across micro-batches in
+    explicit group state — the arbitrary-stateful-processing escape hatch
+    for logic watermarked windows can't express.
 
     Emits the updated running totals for every group seen in a batch
     (append mode). State is two scalars per active user — at 100 TB the
@@ -305,11 +291,11 @@ def stateful_user_totals(
         n, s = state.get if state.exists else (0, 0.0)
         for pdf in pdfs:
             n += len(pdf)
-            s += float(pdf[value_col].sum())
+            s += float(pdf["value"].sum())
         state.update((n, s))
         yield pd.DataFrame(
             {
-                key_col: [key[0]],
+                "user_id": [key[0]],
                 "n_events": [n],
                 "sum_value": [round(s, 4)],
             }
@@ -318,11 +304,11 @@ def stateful_user_totals(
     # the output key column inherits the input's type (string user ids
     # are as valid as longs — the quota_rate_limiter fix, applied to
     # the whole stateful family)
-    key_type = stream_df.schema[key_col].dataType.simpleString()
-    return stream_df.groupBy(key_col).applyInPandasWithState(
+    key_type = stream_df.schema["user_id"].dataType.simpleString()
+    return stream_df.groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType=(
-            f"{key_col} {key_type}, n_events long, sum_value double"
+            f"user_id {key_type}, n_events long, sum_value double"
         ),
         stateStructType="n long, s double",
         outputMode="append",
@@ -331,14 +317,12 @@ def stateful_user_totals(
 
 
 def dedup_within_watermark(
-    stream_df: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
+    stream_df: DataFrame, keys: list[str], watermark: str = "1 hour"
 ) -> DataFrame:
-    """Streaming exact dedup with bounded state: duplicates arriving
-    within the watermark horizon are dropped; state ages out beyond it."""
-    return stream_df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+    """Streaming exact dedup with bounded state on ``ts``: duplicates
+    arriving within the watermark horizon are dropped; state ages out
+    beyond it."""
+    return stream_df.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         keys
     )
 
@@ -351,12 +335,11 @@ def stream_stream_interval_join(
     left_ts: str,
     right_ts: str,
     within: str = "1 hour",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Watermarked stream-stream inner join: right events joined to left
     events with the same key where ``left_ts <= right_ts <= left_ts +
-    within``. Column names must already be distinct across the two sides
-    (rename before calling).
+    within``, each side under a 2-hour watermark. Column names must
+    already be distinct across the two sides (rename before calling).
 
     Both sides carry watermarks and the join condition bounds event time
     in both directions, so each side's buffered state is freed once the
@@ -364,8 +347,8 @@ def stream_stream_interval_join(
     O(rate x (within + watermark)) per side, never unbounded. This is the
     streaming shape of the as-of/range join family: at 100 TB/day the
     join shuffles both streams on the key once per micro-batch."""
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
+    lw = left.withWatermark(left_ts, "2 hours")
+    rw = right.withWatermark(right_ts, "2 hours")
     return lw.join(
         rw,
         F.expr(
@@ -475,8 +458,6 @@ def quota_rate_limiter(
     stream_df: DataFrame,
     key_col: str = "user_id",
     quota: int = 50,
-    ts_col: str = "ts",
-    id_col: str = "event_id",
 ) -> DataFrame:
     """Streaming per-key quota enforcement via ``applyInPandasWithState``
     — the rate-limiter every ingestion edge runs: each key's first
@@ -486,7 +467,7 @@ def quota_rate_limiter(
     the arbitrary-stateful escape hatch used the way the API intends.
 
     Correctness under micro-batching: rows of one batch-group arrive in
-    SHUFFLE order, so each batch's rows are sorted by (ts, id) before
+    SHUFFLE order, so each batch's rows are sorted by (ts, event_id) before
     the quota is applied; across batches the admission decision is
     correct as long as the source delivers batches in event-time order
     (``staged_file_stream`` does; a Kafka topic partitioned by key with
@@ -512,7 +493,7 @@ def quota_rate_limiter(
             state.get if state.exists else (0, 0, 0, False)
         )
         batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values([ts_col, id_col], kind="mergesort")
+        batch = batch.sort_values(["ts", "event_id"], kind="mergesort")
         # Closed form of the per-row loop (batch arithmetic instead of
         # a Python row loop): the first
         # (quota - a) sorted rows are admitted, the rest denied, and
@@ -523,7 +504,7 @@ def quota_rate_limiter(
         d += m - adm
         if adm and a + adm == quota:
             r = int(
-                pd.Timestamp(batch[ts_col].iloc[adm - 1]).value // 1000
+                pd.Timestamp(batch["ts"].iloc[adm - 1]).value // 1000
             )  # micros
             reached = True
         a += adm

@@ -291,3 +291,65 @@ def test_one_as_of_fill():
     outside = sorted(c for c in calls if c[0] != "_tagged_fill")
     assert not outside, f"route these through _tagged_fill: {outside}"
     assert calls, "the as-of fill is gone"
+
+
+#: The one option no call site sets: the Kafka source's per-trigger bound
+#: is a deployment setting (the reference's ``max.poll.records``).
+_UNSET_OK = {("kafka_stream_source", "max_offsets_per_trigger")}
+
+
+def test_every_operator_option_is_set_by_some_caller():
+    """A defaulted parameter of a module-level function outside
+    ``catalog/`` is an option; one that no call site in the repo sets
+    has one value in use and belongs in the function body as a constant.
+    A call that passes ``*args`` or ``**kwargs`` counts as setting every
+    parameter."""
+    repo = os.path.dirname(PKG)
+    paths = [
+        os.path.join(root, f)
+        for d in ("tools", "perfbench", "tests")
+        for root, _, files in os.walk(os.path.join(repo, d))
+        for f in files
+        if f.endswith(".py")
+    ] + [os.path.join(repo, f) for f in os.listdir(repo) if f.endswith(".py")]
+    pkg = list(_modules())
+    trees = [tree for _, tree in pkg]
+    for path in paths:
+        with open(path) as fh:
+            trees.append(ast.parse(fh.read()))
+    calls: dict[str | None, list[ast.Call]] = {}
+    for tree in trees:
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                calls.setdefault(_callee(node), []).append(node)
+
+    def sets(call: ast.Call, pos: int | None, name: str) -> bool:
+        return (
+            any(isinstance(a, ast.Starred) for a in call.args)
+            or any(k.arg in (None, name) for k in call.keywords)
+            or (pos is not None and len(call.args) > pos)
+        )
+
+    unset = []
+    for rel, tree in pkg:
+        if rel.startswith("catalog" + os.sep):
+            continue
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            a = fn.args
+            params = a.posonlyargs + a.args
+            first = len(params) - len(a.defaults)
+            options = [(i, p.arg) for i, p in enumerate(params) if i >= first]
+            options += [
+                (None, p.arg)
+                for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                if d is not None
+            ]
+            unset += [
+                f"{rel}:{fn.lineno} {fn.name}({name})"
+                for pos, name in options
+                if (fn.name, name) not in _UNSET_OK
+                and not any(sets(c, pos, name) for c in calls.get(fn.name, []))
+            ]
+    assert not unset, f"no caller sets these options; make them constants: {unset}"

@@ -10,8 +10,8 @@ tests/test_oracle_parity.py via registry parametrization.)
 from __future__ import annotations
 
 import os
-import shutil
 import time
+from urllib.parse import urlparse
 
 from pyspark.sql import functions as F
 
@@ -574,15 +574,9 @@ def test_stream_incremental_dedup_two_batches(spark, sf_dir):
     SEPARATE micro-batches (one decisions dir and one index version per
     batch), with the re-crawl batch resolving against the index built
     by the corpus batch — not a one-shot batch job in disguise."""
-    from featurestore_for_joycastle_java_spark import sources
-
-    # force a fresh drain for this check: build_once rebuilds a key whose
-    # scratch root is gone
-    key = ("sdedup", sf_dir)
-    if key in sources._BUILT:
-        shutil.rmtree(sources._BUILT[key][0])
-    QUERIES["stream_incremental_dedup"](spark, sf_dir)
-    out_dir = sources._BUILT[key][1]
+    # every call drains into its own directory: <root>/out/b=<id>/part-*
+    files = QUERIES["stream_incremental_dedup"](spark, sf_dir).inputFiles()
+    out_dir = os.path.dirname(os.path.dirname(urlparse(files[0]).path))
     batch_dirs = sorted(
         d for d in os.listdir(out_dir) if d.startswith("b=")
     )
